@@ -94,21 +94,22 @@ object CommitWriter {
   }
 
   /** SCD1 upsert of `updates` into the dimension stored at `path`,
-    * committed crash-safely.
+    * committed crash-safely. The target's schema comes from its footer
+    * ([[DriverSchema.parquet]]), so reading it starts no job.
     */
   def scd1InPlace(spark: SparkSession, path: String, updates: DataFrame,
                   pk: String, broadcastUpdates: Boolean = false): Unit =
     overwriteAtomic(
-      Merge.scd1(spark.read.parquet(path), updates, pk, broadcastUpdates),
+      Merge.scd1(DriverSchema.parquet(spark, path), updates, pk, broadcastUpdates),
       path)
 
   /** SCD2 merge of `updates` into the dimension stored at `path`,
-    * committed crash-safely.
+    * committed crash-safely; the target is read as in [[scd1InPlace]].
     */
   def scd2InPlace(spark: SparkSession, path: String, updates: DataFrame,
                   pk: String, attrCols: Seq[String],
                   loadDate: java.sql.Date): Unit =
     overwriteAtomic(
-      Merge.scd2(spark.read.parquet(path), updates, pk, attrCols, loadDate),
+      Merge.scd2(DriverSchema.parquet(spark, path), updates, pk, attrCols, loadDate),
       path)
 }

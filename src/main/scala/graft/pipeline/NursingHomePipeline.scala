@@ -2,10 +2,13 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{Cleaning, Joins, Split, Stamping}
+import graft.ops.{Cleaning, DriverSchema, Joins, Split, Stamping}
 
 /** The reference pipeline end-to-end, Spark-first (SURVEY.md §3):
   * ingest → universal cleaning → archive raw → validate staging →
@@ -15,6 +18,15 @@ import graft.ops.{Cleaning, Joins, Split, Stamping}
   *  - validation BLOCKS (the reference's never did, §3.1.5);
   *  - the provider frame is persisted before its 5-way fan-out (the
   *    reference re-scans staging parquet per output, §3.3);
+  *  - independent writes overlap: the raw domains clean concurrently and
+  *    the five provider outputs are written concurrently, each on a fresh
+  *    thread via [[Runner.fanOut]] (the reference loops over them);
+  *  - the stages issue only the jobs that write data: CSV headers and
+  *    Parquet footers are read on the driver ([[DriverSchema]]) instead
+  *    of by Spark's schema-inference jobs, and the empty-domain test is
+  *    a row count observed on the staging write, not a separate probe;
+  *  - a delivered release without rows leaves no staging output, where
+  *    the reference's `continue` kept an earlier run's;
   *  - per-domain cleaning failures quarantine to the error zone and the
   *    run continues (C2 semantics preserved).
   */
@@ -22,67 +34,81 @@ final class NursingHomePipeline(spark: SparkSession, lake: Lake,
                                 idStrategy: Stamping.IdStrategy = Stamping.Monotonic,
                                 clock: Option[LocalDate] = None) {
 
+  private def readCsv(path: String, schema: StructType): DataFrame =
+    spark.read.option("header", true).schema(schema).csv(path)
+
+  private def staged(domain: String): DataFrame =
+    DriverSchema.parquet(spark, lake.stagingDomain(domain))
+
   /** Stage 2 (`nh-etl-universal-cleaning.py:70-102`): for each raw
-    * domain: CSV all-string read → normalize names → rename map → trim →
-    * stamp → staging parquet. Empty domains skipped; failures routed to
-    * the error zone.
+    * domain, concurrently: CSV all-string read → normalize names →
+    * rename map → trim → stamp → staging parquet. Empty domains skipped;
+    * failures routed to the error zone.
     */
   def universalCleaning(): Seq[(String, String)] =
-    Catalog.domains(lake.raw).map { domain =>
-      val path = lake.rawDomain(domain)
-      try {
-        val df = spark.read.option("header", true).csv(path)
-        if (df.isEmpty) { // df.isEmpty (head-based), not rdd.isEmpty (§4)
+    Runner.fanOut(Catalog.domains(lake.raw))(cleanDomain)
+
+  /** One domain of stage 2: a single job, the staging write. Its row
+    * count is observed on the write; a release without rows has its
+    * output removed. A domain with nothing delivered (no file, or only
+    * blank ones, as after a manifest-skipped re-delivery) is not touched,
+    * so an earlier run's output stays. Both are reported `skipped-empty`.
+    */
+  private def cleanDomain(domain: String): (String, String) = {
+    val path = lake.rawDomain(domain)
+    val out = new Path(lake.stagingDomain(domain))
+    try DriverSchema.csvHeader(spark, path) match {
+      case None => domain -> "skipped-empty"
+      case Some(schema) =>
+        val rows = Observation()
+        Stamping.stamp(Cleaning.universalClean(readCsv(path, schema)),
+          idStrategy, clock)
+          .observe(rows, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(out.toString)
+        if (rows.get("rows") != 0L) domain -> "staged"
+        else {
+          out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(out, true)
           domain -> "skipped-empty"
-        } else {
-          val cleaned = Stamping.stamp(
-            Cleaning.universalClean(df), idStrategy, clock)
-          cleaned.write.mode("overwrite").parquet(lake.stagingDomain(domain))
-          domain -> "staged"
         }
-      } catch {
-        case e: Exception =>
-          try {
-            spark.read.option("header", true).csv(path)
-              .write.mode("overwrite").parquet(lake.errorDomain(domain))
-          } catch { case _: Exception => () }
-          domain -> s"error: ${e.getMessage}"
-      }
+    } catch {
+      case e: Exception =>
+        try DriverSchema.csvHeader(spark, path).foreach(schema =>
+          readCsv(path, schema).write.mode("overwrite")
+            .parquet(lake.errorDomain(domain)))
+        catch { case _: Exception => () }
+        domain -> s"error: ${e.getMessage}"
     }
+  }
 
   /** Stage 5a (`nh-etl-provider-transform.py`): vertical split of the
     * wide provider table into 5 dims with 2 broadcast left-joins.
-    * The source frame is persisted once for the fan-out; each output is
-    * stamped and written to the transform zone.
+    * The source frame is persisted once for the fan-out; the outputs are
+    * written concurrently, each but `facility` stamped first.
     */
   def providerTransform(): Seq[String] = {
-    val df = spark.read.parquet(lake.stagingDomain("provider_info"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val df = staged("provider_info").persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // facility: explicit 23-col projection, written as-is (`:36-62`)
-      Split.Facility(df).write.mode("overwrite")
-        .parquet(lake.transformDomain("facility"))
-
-      val surveySummary = Split.guardedDrop(
-        spark.read.parquet(lake.stagingDomain("survey_summary")),
+      val surveySummary = Split.guardedDrop(staged("survey_summary"),
         Split.DropCols)
-      val penaltiesExt = Split.guardedDrop(
-        spark.read.parquet(lake.stagingDomain("penalties")),
+      val penaltiesExt = Split.guardedDrop(staged("penalties"),
         Split.DropCols)
+      def stamped(frame: DataFrame) = Stamping.stamp(frame, idStrategy, clock)
 
       val outputs: Seq[(String, DataFrame)] = Seq(
-        "staffing" -> Split.Staffing(df),
-        "rating" -> Split.Rating(df),
-        "surveys" -> Joins.leftEnrich(Split.Surveys(df), surveySummary,
-          Split.Pk),
-        "penalties" -> Joins.leftEnrich(Split.Penalties(df), penaltiesExt,
-          Split.Pk))
+        // facility: explicit 23-col projection, written as-is (`:36-62`)
+        "facility" -> Split.Facility(df),
+        "staffing" -> stamped(Split.Staffing(df)),
+        "rating" -> stamped(Split.Rating(df)),
+        "surveys" -> stamped(Joins.leftEnrich(Split.Surveys(df),
+          surveySummary, Split.Pk)),
+        "penalties" -> stamped(Joins.leftEnrich(Split.Penalties(df),
+          penaltiesExt, Split.Pk)))
 
-      outputs.map { case (name, frame) =>
-        Stamping.stamp(frame, idStrategy, clock)
-          .write.mode("overwrite").parquet(lake.transformDomain(name))
+      Runner.fanOut(outputs) { case (name, frame) =>
+        frame.write.mode("overwrite").parquet(lake.transformDomain(name))
         name
-      } :+ "facility"
+      }
     } finally df.unpersist()
   }
 
@@ -92,7 +118,7 @@ final class NursingHomePipeline(spark: SparkSession, lake: Lake,
     */
   def qualityTransform(): String = {
     val domain = "qualitymsr_mds"
-    val df = spark.read.parquet(lake.stagingDomain(domain))
+    val df = staged(domain)
     try {
       val projected = Split.Quality(
         Split.guardedDrop(df,

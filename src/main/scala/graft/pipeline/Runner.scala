@@ -1,8 +1,6 @@
 package graft.pipeline
 
 import java.time.Instant
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 
 /** In-process DAG runner (SURVEY.md §2.7 C3/C9, §2.8 W3/W4) — the engine
@@ -37,30 +35,49 @@ object Runner {
 
   /** Execute nodes in order; a failed stage short-circuits the rest
     * (typed Fail states per stage in the reference). Parallel stages run
-    * on the given EC and all must succeed.
+    * concurrently via [[fanOut]] and all must succeed.
     */
-  def run(nodes: Seq[Node])(implicit
-      ec: ExecutionContext = ExecutionContext.global): RunResult = {
+  def run(nodes: Seq[Node]): RunResult = {
     val log = Seq.newBuilder[EtlLogRecord]
 
-    def exec(stage: Stage): Boolean = Try(stage.run()) match {
+    def exec(stage: Stage): EtlLogRecord = Try(stage.run()) match {
       case Success(msg) =>
-        log += EtlLogRecord(stage.name, "SUCCESS", msg, Instant.now.toString)
-        true
+        EtlLogRecord(stage.name, "SUCCESS", msg, Instant.now.toString)
       case Failure(e) =>
-        log += EtlLogRecord(stage.name, "FAILED",
+        EtlLogRecord(stage.name, "FAILED",
           Option(e.getMessage).getOrElse(e.getClass.getName),
           Instant.now.toString)
-        false
     }
 
     val ok = nodes.foldLeft(true) {
       case (false, _) => false // short-circuit after first failure
-      case (true, Single(s)) => exec(s)
-      case (true, Par(stages)) =>
-        val fs = stages.map(s => Future(exec(s)))
-        Await.result(Future.sequence(fs), Duration.Inf).forall(identity)
+      case (true, node) =>
+        val records = node match {
+          case Single(s) => Seq(exec(s))
+          case Par(stages) => fanOut(stages)(exec)
+        }
+        log ++= records
+        records.forall(_.status == "SUCCESS")
     }
     RunResult(ok, log.result())
+  }
+
+  /** Apply `f` to every element of `xs` concurrently, one fresh thread
+    * per element, and wait for all of them. A fresh thread inherits the
+    * caller's Spark local properties (job group, description, scheduler
+    * pool) and active session as they are at this call; a pooled thread
+    * would keep the ones of whichever call created it. Results come back
+    * in input order; the first failure in input order is rethrown once
+    * every thread has finished, so no job outlives the call.
+    */
+  def fanOut[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val results = new Array[Try[B]](xs.size)
+    val threads = xs.zipWithIndex.map { case (x, i) =>
+      new Thread(() =>
+        results(i) = try Success(f(x)) catch { case e: Throwable => Failure(e) })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    results.toSeq.map(_.get)
   }
 }
