@@ -117,8 +117,8 @@ def gen_skew(out, n_rows=20_000_000, domain=100_000, s=2.0):
     drawn from a Zipf(s) law over [0, domain) — at s=2.0 the hottest
     key carries ~60% of all rows, the operational "one key >>
     everything" straggler profile saltedJoin exists for — plus
-    skew_dim, a uniform (key, attr) dimension. graft.SkewBench joins
-    them plain vs salted and reports wall time + partition spread.
+    skew_dim, a uniform (key, attr) dimension, for timing a plain vs
+    a salted join (Scale.saltedJoin) and its partition spread.
     """
     rng = np.random.default_rng(7)
     ranks = np.arange(1, domain + 1, dtype=np.float64)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints TWO JSON lines: the full per-query map (also persisted to
@@ -20,17 +19,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runsN = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // compiled-code cache sizing (see GraftSession.codegenCacheEntries):
-      // caches deterministic generated Java code, never data or results
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Contamination tripwire (VERDICT r12 #6): a bench started on a busy
     // box produces a misleading artifact that is only caught at judge

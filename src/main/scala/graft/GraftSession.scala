@@ -1,355 +1,170 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray, Expression, ExpressionInfo, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.types.{Decimal, DoubleType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.expressions.{BloomAgg, BloomContains, BloomMergeAgg, Cms, CmsAgg, CmsEstimate, CosineSim, DotProduct, HllAgg, HllMergeAgg, HllStateAgg, KmvDistinctAgg, KmvMergeAgg, KmvStateAgg, KqMergeAgg, KqQuantile, KqStateAgg, MinHashSig, ShingleHashes, SimHash64, SortedArrayJaccard, SortedArrayOverlap, TopKByAgg, UnicodeNormalize, UnicodeNormalizeImpl, ZOrderKey}
+import graft.expressions.{BloomAgg, BloomContains, BloomMergeAgg, Cms, CmsAgg, CmsEstimate, CosineSim, DotProduct, HllAgg, HllMergeAgg, HllStateAgg, KmvDistinctAgg, KmvMergeAgg, KmvStateAgg, KqMergeAgg, KqQuantile, KqStateAgg, MinHashSig, PushdownBarrier, ShingleHashes, SimHash64, SortedArrayJaccard, SortedArrayOverlap, TopKByAgg, UnicodeNormalize, UnicodeNormalizeImpl, ZOrderKey}
 
-/** Session extension registering the engine's native expressions for SQL
-  * use (`SELECT simhash64(text) FROM docs`), via the standard
-  * `SparkSessionExtensions` hook:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  */
-/** SQL builders shared by [[GraftExtensions]] and [[GraftFunctions]].
-  * Each validates arity and parses optional integer-literal parameters —
-  * a call like `minhash_sig(text, 5, 32)` configures the expression
-  * instead of silently running with the defaults, and an over-arity call
-  * errors instead of being ignored.
+/** The engine's native SQL functions, one row per name. Each builder
+  * validates arity and parses optional integer-literal parameters — a
+  * call like `minhash_sig(text, 5, 32)` configures the expression instead
+  * of silently running with the defaults, and an over-arity call errors
+  * instead of being ignored. [[GraftExtensions]] injects this table at
+  * session build time and [[GraftFunctions]] registers it at run time.
   */
 private[graft] object GraftBuilders {
-  import org.apache.spark.sql.catalyst.expressions.Expression
+  type Builder = Seq[Expression] => Expression
 
-  private def checkArity(fn: String, exprs: Seq[Expression], min: Int,
-                         max: Int): Unit =
-    if (exprs.length < min || exprs.length > max)
-      throw new IllegalArgumentException(
-        s"$fn expects $min to $max arguments, got ${exprs.length}")
+  /** A call's arguments; `fn` names the function in error messages. */
+  final class Args(fn: String, val exprs: Seq[Expression]) {
+    def apply(pos: Int): Expression = exprs(pos)
 
-  private def intLit(fn: String, e: Expression, pos: Int): Int =
-    (if (e.foldable) e.eval() else null) match {
+    private def literal(pos: Int): Any =
+      if (exprs(pos).foldable) exprs(pos).eval() else null
+
+    private def bad(pos: Int, kind: String, got: Any) =
+      new IllegalArgumentException(
+        s"$fn: argument ${pos + 1} must be $kind literal, got $got")
+
+    def int(pos: Int): Int = literal(pos) match {
       case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be an integer literal, got $other")
+      case other => throw bad(pos, "an integer", other)
     }
 
-  private def optInt(fn: String, exprs: Seq[Expression], pos: Int,
-                     default: Int): Int =
-    if (exprs.length > pos) intLit(fn, exprs(pos), pos) else default
+    def optInt(pos: Int, default: Int): Int =
+      if (exprs.length > pos) int(pos) else default
 
-  private def dblLit(fn: String, e: Expression, pos: Int): Double =
-    (if (e.foldable) e.eval() else null) match {
+    def double(pos: Int): Double = literal(pos) match {
       case n: Number => n.doubleValue()
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${pos + 1} must be a numeric literal, got $other")
+      case d: Decimal => d.toDouble
+      case other => throw bad(pos, "a numeric", other)
     }
 
-  def simhash64(exprs: Seq[Expression]): Expression = {
-    checkArity("simhash64", exprs, 1, 1)
-    SimHash64(exprs.head)
-  }
-  def minhashSig(exprs: Seq[Expression]): Expression = {
-    checkArity("minhash_sig", exprs, 1, 3)
-    MinHashSig(exprs.head, optInt("minhash_sig", exprs, 1, 3),
-      optInt("minhash_sig", exprs, 2, 16))
-  }
-  def shingleHashes(exprs: Seq[Expression]): Expression = {
-    checkArity("shingle_hashes", exprs, 1, 2)
-    ShingleHashes(exprs.head, optInt("shingle_hashes", exprs, 1, 3))
-  }
-  def sortedArrayJaccard(exprs: Seq[Expression]): Expression = {
-    checkArity("sorted_array_jaccard", exprs, 2, 2)
-    SortedArrayJaccard(exprs(0), exprs(1))
-  }
-  def sortedArrayOverlap(exprs: Seq[Expression]): Expression = {
-    checkArity("sorted_array_overlap", exprs, 2, 2)
-    SortedArrayOverlap(exprs(0), exprs(1))
-  }
-  def cosineSim(exprs: Seq[Expression]): Expression = {
-    checkArity("cosine_sim", exprs, 2, 2)
-    CosineSim(exprs(0), exprs(1))
-  }
-  def dotProduct(exprs: Seq[Expression]): Expression = {
-    checkArity("dot_product", exprs, 2, 2)
-    DotProduct(exprs(0), exprs(1))
-  }
-  def topKBy(exprs: Seq[Expression]): TopKByAgg = {
-    checkArity("top_k_by", exprs, 3, 3)
-    TopKByAgg(exprs(0), exprs(1), intLit("top_k_by", exprs(2), 2))
-  }
-  def pushdownBarrier(exprs: Seq[Expression]): Expression = {
-    checkArity("pushdown_barrier", exprs, 1, 1)
-    graft.expressions.PushdownBarrier(exprs.head)
-  }
-  def kmvDistinct(exprs: Seq[Expression]): KmvDistinctAgg = {
-    checkArity("kmv_distinct", exprs, 2, 2)
-    KmvDistinctAgg(
-      org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(exprs.head), 42L),
-      intLit("kmv_distinct", exprs(1), 1))
-  }
-  def kmvState(exprs: Seq[Expression]): KmvStateAgg = {
-    checkArity("kmv_state", exprs, 2, 2)
-    KmvStateAgg(
-      org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(exprs.head), 42L),
-      intLit("kmv_state", exprs(1), 1))
-  }
-  def kmvMergeEst(exprs: Seq[Expression]): KmvMergeAgg = {
-    checkArity("kmv_merge_est", exprs, 1, 1)
-    KmvMergeAgg(exprs.head)
-  }
-  def hllDistinct(exprs: Seq[Expression]): HllAgg = {
-    checkArity("hll_distinct", exprs, 1, 1)
-    HllAgg(
-      org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(exprs.head), 42L))
-  }
-  def hllState(exprs: Seq[Expression]): HllStateAgg = {
-    checkArity("hll_state", exprs, 1, 1)
-    HllStateAgg(
-      org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(exprs.head), 42L))
-  }
-  def hllMergeEst(exprs: Seq[Expression]): HllMergeAgg = {
-    checkArity("hll_merge_est", exprs, 1, 1)
-    HllMergeAgg(exprs.head)
-  }
-  def bloomAgg(exprs: Seq[Expression]): BloomAgg = {
-    checkArity("bloom_agg", exprs, 3, 3)
-    import org.apache.spark.sql.catalyst.expressions.XxHash64
-    BloomAgg(XxHash64(Seq(exprs.head), 42L), XxHash64(Seq(exprs.head), 43L),
-      intLit("bloom_agg", exprs(1), 1), intLit("bloom_agg", exprs(2), 2))
-  }
-  def bloomContains(exprs: Seq[Expression]): Expression = {
-    checkArity("bloom_contains", exprs, 2, 2)
-    import org.apache.spark.sql.catalyst.expressions.{CreateArray, XxHash64}
-    BloomContains(exprs.head,
-      CreateArray(Seq(XxHash64(Seq(exprs(1)), 42L),
-        XxHash64(Seq(exprs(1)), 43L))))
-  }
-  def bloomMerge(exprs: Seq[Expression]): BloomMergeAgg = {
-    checkArity("bloom_merge", exprs, 1, 1)
-    BloomMergeAgg(exprs.head)
-  }
-  def cmsState(exprs: Seq[Expression]): CmsAgg = {
-    checkArity("cms_state", exprs, 3, 3)
-    CmsAgg(Cms.rowHashExprsOf(exprs.head, intLit("cms_state", exprs(1), 1)),
-      intLit("cms_state", exprs(2), 2))
-  }
-  def cmsEstimate(exprs: Seq[Expression]): Expression = {
-    checkArity("cms_estimate", exprs, 3, 3)
-    import org.apache.spark.sql.catalyst.expressions.CreateArray
-    CmsEstimate(exprs.head,
-      CreateArray(Cms.rowHashExprsOf(exprs(1),
-        intLit("cms_estimate", exprs(2), 2))))
-  }
-  def kqState(exprs: Seq[Expression]): KqStateAgg = {
-    checkArity("kq_state", exprs, 3, 8)
-    import org.apache.spark.sql.catalyst.expressions.{Cast, XxHash64}
-    import org.apache.spark.sql.types.DoubleType
-    KqStateAgg(XxHash64(exprs.drop(2), 42L),
-      Cast(exprs.head, DoubleType), intLit("kq_state", exprs(1), 1))
-  }
-  def kqQuantile(exprs: Seq[Expression]): Expression = {
-    checkArity("kq_quantile", exprs, 2, 2)
-    KqQuantile(exprs.head, dblLit("kq_quantile", exprs(1), 1))
-  }
-  def kqMerge(exprs: Seq[Expression]): KqMergeAgg = {
-    checkArity("kq_merge", exprs, 1, 1)
-    KqMergeAgg(exprs.head)
-  }
-  def zorderKey(exprs: Seq[Expression]): Expression = {
-    checkArity("zorder_key", exprs, 2, 7)
-    import org.apache.spark.sql.catalyst.expressions.{Cast, CreateArray}
-    import org.apache.spark.sql.types.LongType
-    ZOrderKey(CreateArray(exprs.tail.map(e => Cast(e, LongType))),
-      intLit("zorder_key", exprs.head, 0))
+    def optString(pos: Int, default: String): String =
+      if (exprs.length <= pos) default
+      else literal(pos) match {
+        case s: UTF8String => s.toString
+        case other => throw bad(pos, "a string", other)
+      }
   }
 
-  def unicodeNormalize(exprs: Seq[Expression]): Expression = {
-    checkArity("unicode_normalize", exprs, 1, 2)
-    val form =
-      if (exprs.length < 2) "NFC"
-      else (if (exprs(1).foldable) exprs(1).eval() else null) match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-        case other => throw new IllegalArgumentException(
-          "unicode_normalize: argument 2 must be a string literal " +
-            s"(NFC|NFD|NFKC|NFKD), got $other")
-      }
-    UnicodeNormalize(exprs.head, UnicodeNormalizeImpl.formOrdinal(form))
-  }
+  private def fn(name: String, min: Int, max: Int)(
+      build: Args => Expression): (String, Builder) =
+    name -> { exprs =>
+      if (exprs.length < min || exprs.length > max)
+        throw new IllegalArgumentException(
+          s"$name expects $min to $max arguments, got ${exprs.length}")
+      build(new Args(name, exprs))
+    }
+
+  /** The seeded row hash the sketch functions key on. */
+  private def xx(e: Expression, seed: Long = 42L): Expression =
+    XxHash64(Seq(e), seed)
+
+  val functions: Seq[(String, Builder)] = Seq(
+    fn("simhash64", 1, 1)(a => SimHash64(a(0))),
+    fn("minhash_sig", 1, 3)(a =>
+      MinHashSig(a(0), a.optInt(1, 3), a.optInt(2, 16))),
+    fn("shingle_hashes", 1, 2)(a => ShingleHashes(a(0), a.optInt(1, 3))),
+    fn("sorted_array_jaccard", 2, 2)(a => SortedArrayJaccard(a(0), a(1))),
+    fn("sorted_array_overlap", 2, 2)(a => SortedArrayOverlap(a(0), a(1))),
+    fn("cosine_sim", 2, 2)(a => CosineSim(a(0), a(1))),
+    fn("dot_product", 2, 2)(a => DotProduct(a(0), a(1))),
+    fn("top_k_by", 3, 3)(a => TopKByAgg(a(0), a(1), a.int(2))),
+    fn("pushdown_barrier", 1, 1)(a => PushdownBarrier(a(0))),
+    fn("kmv_distinct", 2, 2)(a => KmvDistinctAgg(xx(a(0)), a.int(1))),
+    fn("kmv_state", 2, 2)(a => KmvStateAgg(xx(a(0)), a.int(1))),
+    fn("kmv_merge_est", 1, 1)(a => KmvMergeAgg(a(0))),
+    fn("hll_distinct", 1, 1)(a => HllAgg(xx(a(0)))),
+    fn("hll_state", 1, 1)(a => HllStateAgg(xx(a(0)))),
+    fn("hll_merge_est", 1, 1)(a => HllMergeAgg(a(0))),
+    fn("bloom_agg", 3, 3)(a =>
+      BloomAgg(xx(a(0)), xx(a(0), 43L), a.int(1), a.int(2))),
+    fn("bloom_contains", 2, 2)(a =>
+      BloomContains(a(0), CreateArray(Seq(xx(a(1)), xx(a(1), 43L))))),
+    fn("bloom_merge", 1, 1)(a => BloomMergeAgg(a(0))),
+    fn("cms_state", 3, 3)(a =>
+      CmsAgg(Cms.rowHashExprsOf(a(0), a.int(1)), a.int(2))),
+    fn("cms_estimate", 3, 3)(a =>
+      CmsEstimate(a(0), CreateArray(Cms.rowHashExprsOf(a(1), a.int(2))))),
+    fn("zorder_key", 2, 7)(a =>
+      ZOrderKey(CreateArray(a.exprs.tail.map(e => Cast(e, LongType))),
+        a.int(0))),
+    fn("kq_state", 3, 8)(a =>
+      KqStateAgg(XxHash64(a.exprs.drop(2), 42L), Cast(a(0), DoubleType),
+        a.int(1))),
+    fn("kq_quantile", 2, 2)(a => KqQuantile(a(0), a.double(1))),
+    fn("kq_merge", 1, 1)(a => KqMergeAgg(a(0))),
+    fn("unicode_normalize", 1, 2)(a => UnicodeNormalize(a(0),
+      UnicodeNormalizeImpl.formOrdinal(a.optString(1, "NFC")))))
 }
 
+/** Session extension registering the engine's plan rules and its native
+  * expressions for SQL use (`SELECT simhash64(text) FROM docs`), via the
+  * standard `SparkSessionExtensions` hook. [[GraftSession.builder]] adds
+  * it; a session built elsewhere can load it with
+  * `spark.sql.extensions=graft.GraftExtensions`.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
     // plan rewrite: windowed inequality joins -> bucketed equi-join
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     // custom operator: AsOfJoinNode -> partition-local merge exec
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      GraftBuilders.simhash64 _))
-    e.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      GraftBuilders.minhashSig _))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes"), GraftBuilders.shingleHashes _))
-    e.injectFunction((FunctionIdentifier("sorted_array_jaccard"),
-      info("sorted_array_jaccard"), GraftBuilders.sortedArrayJaccard _))
-    e.injectFunction((FunctionIdentifier("sorted_array_overlap"),
-      info("sorted_array_overlap"), GraftBuilders.sortedArrayOverlap _))
-    e.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      GraftBuilders.cosineSim _))
-    e.injectFunction((FunctionIdentifier("dot_product"), info("dot_product"),
-      GraftBuilders.dotProduct _))
-    e.injectFunction((FunctionIdentifier("top_k_by"), info("top_k_by"),
-      exprs => GraftBuilders.topKBy(exprs)))
-    e.injectFunction((FunctionIdentifier("pushdown_barrier"),
-      info("pushdown_barrier"), GraftBuilders.pushdownBarrier _))
-    e.injectFunction((FunctionIdentifier("kmv_distinct"),
-      info("kmv_distinct"), exprs => GraftBuilders.kmvDistinct(exprs)))
-    e.injectFunction((FunctionIdentifier("kmv_state"),
-      info("kmv_state"), exprs => GraftBuilders.kmvState(exprs)))
-    e.injectFunction((FunctionIdentifier("kmv_merge_est"),
-      info("kmv_merge_est"), exprs => GraftBuilders.kmvMergeEst(exprs)))
-    e.injectFunction((FunctionIdentifier("hll_distinct"),
-      info("hll_distinct"), exprs => GraftBuilders.hllDistinct(exprs)))
-    e.injectFunction((FunctionIdentifier("hll_state"),
-      info("hll_state"), exprs => GraftBuilders.hllState(exprs)))
-    e.injectFunction((FunctionIdentifier("hll_merge_est"),
-      info("hll_merge_est"), exprs => GraftBuilders.hllMergeEst(exprs)))
-    e.injectFunction((FunctionIdentifier("bloom_agg"),
-      info("bloom_agg"), exprs => GraftBuilders.bloomAgg(exprs)))
-    e.injectFunction((FunctionIdentifier("bloom_contains"),
-      info("bloom_contains"), GraftBuilders.bloomContains _))
-    e.injectFunction((FunctionIdentifier("bloom_merge"),
-      info("bloom_merge"), exprs => GraftBuilders.bloomMerge(exprs)))
-    e.injectFunction((FunctionIdentifier("cms_state"),
-      info("cms_state"), exprs => GraftBuilders.cmsState(exprs)))
-    e.injectFunction((FunctionIdentifier("cms_estimate"),
-      info("cms_estimate"), GraftBuilders.cmsEstimate _))
-    e.injectFunction((FunctionIdentifier("zorder_key"),
-      info("zorder_key"), GraftBuilders.zorderKey _))
-    e.injectFunction((FunctionIdentifier("kq_state"),
-      info("kq_state"), exprs => GraftBuilders.kqState(exprs)))
-    e.injectFunction((FunctionIdentifier("kq_quantile"),
-      info("kq_quantile"), GraftBuilders.kqQuantile _))
-    e.injectFunction((FunctionIdentifier("kq_merge"),
-      info("kq_merge"), exprs => GraftBuilders.kqMerge(exprs)))
-    e.injectFunction((FunctionIdentifier("unicode_normalize"),
-      info("unicode_normalize"), GraftBuilders.unicodeNormalize _))
+    GraftBuilders.functions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
+    }
   }
 }
 
 /** Runtime registration for an already-running session (notebooks,
   * shells) — same functions as [[GraftExtensions]], no restart needed.
+  * Temp-function builders must return a complete expression, so the
+  * aggregates are wrapped here; the injected builders leave that to the
+  * analyzer.
   */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      GraftBuilders.simhash64 _, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      GraftBuilders.minhashSig _, "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      GraftBuilders.shingleHashes _, "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_array_jaccard",
-      GraftBuilders.sortedArrayJaccard _, "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_array_overlap",
-      GraftBuilders.sortedArrayOverlap _, "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      GraftBuilders.cosineSim _, "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      GraftBuilders.dotProduct _, "scala_udf")
-    reg.createOrReplaceTempFunction("top_k_by",
-      exprs => GraftBuilders.topKBy(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("pushdown_barrier",
-      GraftBuilders.pushdownBarrier _, "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_distinct",
-      exprs => GraftBuilders.kmvDistinct(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_state",
-      exprs => GraftBuilders.kmvState(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("kmv_merge_est",
-      exprs => GraftBuilders.kmvMergeEst(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("hll_distinct",
-      exprs => GraftBuilders.hllDistinct(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("hll_state",
-      exprs => GraftBuilders.hllState(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("hll_merge_est",
-      exprs => GraftBuilders.hllMergeEst(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => GraftBuilders.bloomAgg(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_contains",
-      GraftBuilders.bloomContains _, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_merge",
-      exprs => GraftBuilders.bloomMerge(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("cms_state",
-      exprs => GraftBuilders.cmsState(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("cms_estimate",
-      GraftBuilders.cmsEstimate _, "scala_udf")
-    reg.createOrReplaceTempFunction("zorder_key",
-      GraftBuilders.zorderKey _, "scala_udf")
-    reg.createOrReplaceTempFunction("kq_state",
-      exprs => GraftBuilders.kqState(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("kq_quantile",
-      GraftBuilders.kqQuantile _, "scala_udf")
-    reg.createOrReplaceTempFunction("kq_merge",
-      exprs => GraftBuilders.kqMerge(exprs).toAggregateExpression(),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("unicode_normalize",
-      GraftBuilders.unicodeNormalize _, "scala_udf")
+    GraftBuilders.functions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, exprs => build(exprs) match {
+        case agg: AggregateFunction => agg.toAggregateExpression()
+        case other => other
+      }, "scala_udf")
+    }
   }
 }
 
-/** Canonical session factory with the engine's scale-tuned defaults.
-  * Local mode sizes shuffle partitions to the core count; cluster mode
-  * (any non-local master) keeps AQE coalescing in charge instead of a
-  * static 200.
+/** The one session factory: every main, the benchmark and the test suite
+  * build their `SparkSession` here, so production, benchmark, oracle and
+  * tests run one configuration — [[GraftExtensions]] plus the defaults
+  * below. Shuffle partitions follow the master: N for `local[N]` (or
+  * `local[N,F]`), the machine's processors for `local` and `local[*]`,
+  * and Spark's 200 for any other master, where AQE coalescing sizes
+  * them at run time.
   */
 object GraftSession {
-  /** Generated-code cache size (spark.sql.codegen.cache.maxEntries; static
-    * conf, Spark default 100). This engine's surface compiles thousands of
-    * distinct whole-stage-codegen sources per pass over its queries; at the
-    * 100-entry default the LRU thrashes and every repetition re-pays driver-
-    * side Janino compilation for every stage (measured on the 20 most
-    * expensive queries: 65.2 s → 51.3 s at 8192, runs=3 medians). The cache
-    * is keyed on the generated JAVA SOURCE TEXT — a deterministic function
-    * of the physical plan — so this caches compiled code the way the JVM
-    * caches JIT output, never data, results, or anything input-dependent.
-    * Scale-independent: any multi-query deployment repeats plan shapes.
-    * Env-overridable for memory-constrained drivers (compiled classes live
-    * in metaspace; ~8k entries is a few hundred MB at worst).
-    */
-  val codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+  private val LocalMaster = """local(?:\[(\d+|\*)(?:\s*,\s*\d+)?\])?""".r
 
-  def builder(master: String = "local[*]",
-              shufflePartitions: Option[Int] = None): SparkSession.Builder = {
-    val cores =
-      if (master.startsWith("local")) Runtime.getRuntime.availableProcessors()
-      else 200
+  private[graft] def shufflePartitions(master: String): Int = master match {
+    case LocalMaster(n) if n != null && n != "*" => n.toInt
+    case LocalMaster(_) => Runtime.getRuntime.availableProcessors()
+    case _ => 200
+  }
+
+  def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions)
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions",
-        shufflePartitions.getOrElse(cores).toString)
+        shufflePartitions(master).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -357,6 +172,15 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS); read as long + convert
       // (Tables.load) instead of failing the scan
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
-  }
+      // Generated-code cache size (static conf, Spark default 100). This
+      // engine's surface compiles thousands of distinct whole-stage-codegen
+      // sources per pass over its queries; at the 100-entry default the LRU
+      // thrashes and every repetition re-pays driver-side Janino
+      // compilation for every stage (measured on the 20 most expensive
+      // queries: 65.2 s → 51.3 s at 8192, runs=3 medians). The cache is
+      // keyed on the generated Java source text — a deterministic function
+      // of the physical plan — so it caches compiled code the way the JVM
+      // caches JIT output, never data or results. Compiled classes live in
+      // metaspace; ~8k entries is a few hundred MB at worst.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
 }

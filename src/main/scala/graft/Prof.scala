@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query cost breakdown (optimization guide §1: measure first).
   * For each named query reports, in one CSV line:
@@ -19,15 +18,7 @@ object Prof {
     val nameCsv = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var jobs = 0

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass gate statistics for the langid+quality corpus gate
-  * (VERDICT r12 #8): the MixBench isolation table showed the gate stage
+  * (VERDICT r12 #8): a stage-isolated timing (README history, commit
+  * 9405a3b) showed the gate stage
   * — a map-only scan computing `TextFunctions.langId` and
   * `TextFunctions.qualityScore` — dominating the composed training-mix
   * pipeline at 162.7 s of 229.2 at 500k docs. The legacy column

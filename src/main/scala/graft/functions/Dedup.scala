@@ -55,19 +55,6 @@ object Dedup {
 
   // ---------------- MinHash + LSH ----------------
 
-  /** MinHash signature: for each of `numHashes` seeded permutations,
-    * the minimum xxhash64(seed ⊕ shingle) over the document's shingles.
-    * One array column of `numHashes` longs per doc; map-only.
-    */
-  def minHashSignature(text: Column, shingleN: Int, numHashes: Int): Column = {
-    val sh = shingles(text, shingleN)
-    val hashes = (0 until numHashes).map { seed =>
-      aggregate(sh, lit(Long.MaxValue),
-        (acc, s) => least(acc, xxhash64(lit(seed), s)))
-    }
-    array(hashes: _*)
-  }
-
   /** MinHash signature frame: `(doc_id, sig)`, one array of `numHashes`
     * longs per doc, map-only. This is also the PERSISTED FINGERPRINT
     * STORE shape for [[incrementalCandidates]]: 8·numHashes bytes per
@@ -120,8 +107,8 @@ object Dedup {
     // exactly once on first use and serves all three references from
     // the persisted blocks (GC-cleaned by the context cleaner, so
     // nothing lingers in the cache manager — the same hygiene argument
-    // as [[connectedComponents]]'s per-round checkpoints). Measured at
-    // the 500k-doc MixBench fixture this is the difference between one
+    // as [[connectedComponents]]'s per-round checkpoints). Measured on
+    // the 500k-doc training-mix corpus this is the difference between one
     // and three corpus-wide text passes in the dedup stage. Trade-off
     // (accepted repo-wide): checkpointed partitions lost to executor
     // failure are not lineage-recoverable; the stage re-runs instead.
@@ -2061,33 +2048,6 @@ object Dedup {
   }
 
   // ---------------- SimHash ----------------
-
-  /** 64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by
-    * token-hash bits; sign of the sum sets the output bit. Single
-    * fold over the token array — map-only, codegen'd.
-    */
-  def simHash(text: Column): Column =
-    simHashImpl(transform(tokens(text), t => xxhash64(t)))
-
-  /** Actual SimHash fold (kept separate for clarity/testing).
-    * Shift amounts must be Scala Ints, so the 64 bit positions are
-    * unrolled driver-side into literal arrays.
-    */
-  private def simHashImpl(hashes: Column): Column = {
-    val counts = aggregate(hashes,
-      array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc,
-        array((0 until 64).map { i =>
-          when(shiftright(h, i).bitwiseAND(lit(1L)) === 1, lit(1))
-            .otherwise(lit(-1))
-        }: _*),
-        (a, b) => a + b))
-    val powers = array((0 until 64).map(i => lit(1L << i)): _*)
-    aggregate(
-      zip_with(counts, powers,
-        (c, p) => when(c > 0, p).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Hamming distance between two 64-bit SimHashes. */
   def hammingDistance(a: Column, b: Column): Column =

@@ -171,12 +171,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
-  /** 64-bit rolling-style fingerprint using xxhash64 over the canonical
-    * form (cheaper than md5; native codegen'd expression).
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
-
   /** PII scrub: emails, IPv4 addresses, phone-shaped numbers, and long
     * digit runs replaced by typed placeholder tokens. Patterns live in
     * the Java-regex ∩ RE2 common subset (no backrefs, no lookaround) so

@@ -72,18 +72,6 @@ object Scale {
         graft.functions.ExactGrid.eRatio(col("max_cnt") * col("n_keys"),
           col("n_rows"), 10000L))
 
-  /** Write a frame bucketed by a join key so future joins on that key are
-    * shuffle-free (bucket-local). Bucketing requires the table catalog
-    * (`saveAsTable`), not a bare path.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Pre-partition two frames identically so a subsequent join is a
     * zero-shuffle zip of co-located partitions (both sides exchange once,
     * reusable across multiple joins/aggregations on the same key).

@@ -33,8 +33,8 @@ class ScaleSpec extends SparkSpec {
     // the join's exchange while staying immune to AQE coalescing and
     // broadcast thresholds, so the test needs NO session-conf
     // mutation (the shared test session races under parallel suites).
-    // The measured wall-time twin lives in graft.SkewBench /
-    // BENCH_NOTES on the 20M-row zipf fixture.
+    // The measured wall-time twin (plain vs salted join on the 20M-row
+    // zipf fixture) is recorded in BENCH_NOTES.
     val salts = 64
     val left = spark.range(90000).select(lit(1L).as("k"), col("id").as("v"))
       .union(spark.range(10000).select((col("id") + 2).as("k"),

@@ -14,35 +14,38 @@ class RangeJoinRewriteSpec extends SparkSpec {
     "SELECT l.lid, r.rid FROM rj_l l JOIN rj_r r " +
       "ON r.rt BETWEEN l.t - 10 AND l.t"
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations = Seq(RangeJoinRewrite)
+  // the shared session is built by GraftSession.builder, which injects
+  // the rule; the naive plan is the same query with the rule excluded
+  private def withoutRule[A](f: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, RangeJoinRewrite.ruleName)
     try f
-    finally spark.experimental.extraOptimizations = Nil
+    finally spark.conf.unset(key)
   }
 
   test("rewrites the key-less interval join to a bucketed equi-join") {
     left.createOrReplaceTempView("rj_l")
     right.createOrReplaceTempView("rj_r")
-    val naivePlan = spark.sql(sql).queryExecution.executedPlan.toString
+    val naivePlan = withoutRule {
+      spark.sql(sql).queryExecution.executedPlan.toString
+    }
     assert(naivePlan.contains("BroadcastNestedLoopJoin") ||
       naivePlan.contains("CartesianProduct"),
       s"fixture no longer plans as a pairing blow-up:\n$naivePlan")
-    withRule {
-      val plan = spark.sql(sql).queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"),
-        s"rule did not fire:\n$plan")
-      assert(plan.contains("__rj_bucket"), "expected the bucket join key")
-    }
+    val plan = spark.sql(sql).queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"),
+      s"rule did not fire:\n$plan")
+    assert(plan.contains("__rj_bucket"), "expected the bucket join key")
   }
 
   test("rewritten join returns exactly the naive join's rows") {
     left.createOrReplaceTempView("rj_l")
     right.createOrReplaceTempView("rj_r")
-    val naive = spark.sql(sql).as[(Long, Long)].collect().toSet
-    val rewritten = withRule {
+    val naive = withoutRule {
       spark.sql(sql).as[(Long, Long)].collect().toSet
     }
+    val rewritten = spark.sql(sql).as[(Long, Long)].collect().toSet
     assert(rewritten == naive && naive.nonEmpty,
       s"rewrite changed results: $rewritten vs $naive")
     // window semantics spot checks: t=100 pairs rt=95 (in window),
@@ -55,19 +58,17 @@ class RangeJoinRewriteSpec extends SparkSpec {
   test("joins the rule doesn't understand are left untouched") {
     left.createOrReplaceTempView("rj_l")
     right.createOrReplaceTempView("rj_r")
-    withRule {
-      // keyed join with residual range: Spark's hash join handles it
-      val keyed = spark.sql(
-        "SELECT l.lid FROM rj_l l JOIN rj_r r " +
-          "ON l.lid % 3 = r.rid % 3 AND r.rt <= l.t AND r.rt >= l.t - 10")
-      assert(!keyed.queryExecution.executedPlan.toString
-        .contains("__rj_bucket"))
-      // one-sided inequality (unbounded window): untouched
-      val unbounded = spark.sql(
-        "SELECT l.lid FROM rj_l l JOIN rj_r r ON r.rt <= l.t")
-      assert(!unbounded.queryExecution.executedPlan.toString
-        .contains("__rj_bucket"))
-      assert(unbounded.count() > 0)
-    }
+    // keyed join with residual range: Spark's hash join handles it
+    val keyed = spark.sql(
+      "SELECT l.lid FROM rj_l l JOIN rj_r r " +
+        "ON l.lid % 3 = r.rid % 3 AND r.rt <= l.t AND r.rt >= l.t - 10")
+    assert(!keyed.queryExecution.executedPlan.toString
+      .contains("__rj_bucket"))
+    // one-sided inequality (unbounded window): untouched
+    val unbounded = spark.sql(
+      "SELECT l.lid FROM rj_l l JOIN rj_r r ON r.rt <= l.t")
+    assert(!unbounded.queryExecution.executedPlan.toString
+      .contains("__rj_bucket"))
+    assert(unbounded.count() > 0)
   }
 }
