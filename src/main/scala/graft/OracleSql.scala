@@ -257,7 +257,7 @@ object OracleSql {
     * DuckDB twin of `graft.functions.ExactGrid.eRatio` (integer
     * half-up, one exact division, no round(DOUBLE, n) tail).
     */
-  private def eRatioE(a: String, b: String, scale: Long): String =
+  private[graft] def eRatioE(a: String, b: String, scale: Long): String =
     s"(CAST((2 * ($a) * $scale + ($b)) // (2 * ($b)) AS DOUBLE) / $scale.0)"
 
   /** Oracle for `dedup_minhash`: LSH candidates with signature-agreement
@@ -1773,7 +1773,7 @@ object OracleSql {
 
   /** Oracle for `ml_logreg_cv`: [[mlLogregTrain]] unrolled per fold —
     * train CTEs filtered to fold <> f, the eval pass to fold = f,
-    * 3-row UNION ALL result. Mirrors the SparkEntry CV loop exactly.
+    * 3-row UNION ALL result. Mirrors the `ml_logreg_cv` builder loop exactly.
     */
   def mlLogregCv(folds: Int = 3, iters: Int = 3): String = {
     def z(w: String) =
@@ -1843,7 +1843,7 @@ object OracleSql {
     * self-looped near-dup edge set, min-hop dedup, then per-vertex
     * reach counts at each hop — the exact ground truth the engine's
     * bitmap-state propagation must reproduce. Mirrors the
-    * `graph_neighborhood` bitmap loop in [[graft.SparkEntry]].
+    * `graph_neighborhood` bitmap loop in [[graft.queries.GraphQueries]].
     */
   def graphNeighborhood(numHashes: Int = 16, rowsPerBand: Int = 2,
                         hops: Int = 3): String =

@@ -1140,7 +1140,6 @@ object Dedup {
     var edges = PlanBridge.localCheckpointStatsBarrier(edges0,
       eager = false)
     val verts = sym(edges).select(col("src").as("id")).distinct()
-    val dbg = sys.env.contains("SPARK_GRAFT_SL_DEBUG")
     var state = checksum(edges)
     var converged = false
     var i = 0
@@ -1151,25 +1150,19 @@ object Dedup {
     // remaining rounds would reach (the rewiring rounds preserve the
     // vertex partition).
     while (!converged && state._1 > ccLocalMax && i < maxIter) {
-      val tR = System.nanoTime()
       val next = PlanBridge.localCheckpointStatsBarrier(
         smallStar(largeStar(edges)), eager = false)
       val ns = checksum(next)
-      if (dbg) System.err.println(s"[star] round ${i + 1} n=${ns._1}" +
-        s" ms=${(System.nanoTime() - tR) / 1000000}")
       edges = next
       converged = ns == state
       state = ns
       i += 1
     }
     if (!converged && state._1 <= ccLocalMax) {
-      val tL = System.nanoTime()
       if (state._1 > 0)
         edges = PlanBridge.localCheckpointStatsBarrier(
           localMinLabels(edges), eager = false)
       converged = true
-      if (dbg) System.err.println(s"[star] local endgame n=${state._1}" +
-        s" ms=${(System.nanoTime() - tL) / 1000000}")
     }
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(

@@ -77,12 +77,8 @@ object Multimodal {
     * per-media_id and order-free, so layout is invisible to every
     * checked value.
     */
-  private def spread(df: DataFrame): DataFrame = {
-    val par = math.max(1,
-      df.sparkSession.sparkContext.defaultParallelism)
-    if (df.rdd.getNumPartitions >= par) df
-    else df.repartition(par, col("doc_id"))
-  }
+  private def spread(df: DataFrame): DataFrame =
+    graft.Tables.spread(df, "doc_id")
 
   /** One decoded feature row per media item. */
   final case class MediaFeatures(media_id: Long, n_bytes: Long,
@@ -159,18 +155,31 @@ object Multimodal {
     */
   object ImageCodec {
 
-    // ImageIO defaults to useCache=true: every ImageIO.read/write wraps
-    // its stream in a DISK-backed FileCacheImage{Input,Output}Stream —
-    // a temp file created, written and deleted per call. The fixtures
-    // decode tens of thousands of sub-50-px blobs per query, all from
-    // in-memory byte arrays, so the cache is pure syscall overhead
-    // (guide §1.2 per-task work: measured ~10 ms/frame with the temp
-    // file vs ~1 ms without at sf0.1 video sampling). Decode semantics
-    // are IDENTICAL — same readers, same sniffing, same pixels; only
-    // the stream buffering moves to memory. Set once per JVM (executor
-    // and driver share the JVM in local mode; the object initializer
-    // runs wherever the codec is first touched).
-    javax.imageio.ImageIO.setUseCache(false)
+    // ImageIO defaults to useCache=true: ImageIO.read/write given a
+    // plain stream wraps it in a DISK-backed FileCacheImage{Input,
+    // Output}Stream — a temp file created, written and deleted per
+    // call. The fixtures decode tens of thousands of sub-50-px blobs
+    // per query, all from in-memory byte arrays, so the cache is pure
+    // syscall overhead (guide §1.2 per-task work: measured ~10 ms/frame
+    // with the temp file vs ~1 ms without at sf0.1 video sampling). The
+    // codec hands ImageIO memory-cached streams itself, so the
+    // JVM-wide useCache setting stays the caller's. Decode semantics
+    // are IDENTICAL — same readers, same sniffing, same pixels.
+    private[multimodal] def read(
+        bytes: Array[Byte]): java.awt.image.BufferedImage =
+      javax.imageio.ImageIO.read(
+        new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(bytes)))
+
+    private def write(img: java.awt.image.BufferedImage,
+                      format: String): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      try require(javax.imageio.ImageIO.write(img, format, out),
+        s"no ImageIO writer for format=$format")
+      finally out.close()
+      bos.toByteArray
+    }
 
     def width(id: Long): Int = 16 + (id % 32).toInt
     def height(id: Long): Int = 16 + ((id * 7) % 32).toInt
@@ -292,10 +301,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, format, bos),
-        s"no ImageIO writer for format=$format")
-      bos.toByteArray
+      write(img, format)
     }
 
     /** Gray value at (x, y) of a decoded image, resolving palette
@@ -318,8 +324,7 @@ object Multimodal {
       * 8-bit gray PNG round-trips bit-exact.
       */
     def decodeStats(id: Long, bytes: Array[Byte]): ImageStats = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
+      val img = read(bytes)
       require(img != null, s"media_id=$id: not a decodable image")
       val w = img.getWidth
       val h = img.getHeight
@@ -351,8 +356,7 @@ object Multimodal {
       * simhash family (pigeonhole blocks on 16-bit quarters).
       */
     def averageHash(id: Long, bytes: Array[Byte]): ImageHash = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
+      val img = read(bytes)
       require(img != null, s"media_id=$id: not a decodable image")
       val w = img.getWidth
       val h = img.getHeight
@@ -412,7 +416,7 @@ object Multimodal {
       param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
       param.setCompressionQuality(quality)
       val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
       try {
         writer.setOutput(ios)
         writer.write(null, new javax.imageio.IIOImage(img, null, null),
@@ -447,10 +451,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, format, bos),
-        s"no ImageIO writer for format=$format")
-      bos.toByteArray
+      write(img, format)
     }
 
     /** Decode any ImageIO-supported blob (sniffed by magic bytes — PNG,
@@ -462,8 +463,7 @@ object Multimodal {
       */
     def fidelityStats(id: Long, bytes: Array[Byte])(
         ref: (Long, Int, Int) => Int): ImageFidelity = {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
+      val img = read(bytes)
       require(img != null, s"media_id=$id: not a decodable image")
       val w = img.getWidth
       val h = img.getHeight
@@ -851,10 +851,6 @@ object Multimodal {
     * pixel formula, so the comparison is exact integer equality.
     */
   object VideoCodec {
-    // same in-memory-stream discipline as ImageCodec (decodeFrames can
-    // run on an executor that never initialized ImageCodec)
-    javax.imageio.ImageIO.setUseCache(false)
-
     val Fps = 10
 
     def nFrames(id: Long): Int = 4 + (id % 5).toInt
@@ -912,8 +908,7 @@ object Multimodal {
         val png = new Array[Byte](len)
         in.readFully(png)
         if (f % everyK == 0) {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(png))
+          val img = ImageCodec.read(png)
           require(img != null, s"media_id=$id frame $f: not decodable")
           val w = img.getWidth
           val h = img.getHeight

@@ -86,24 +86,16 @@ object SingleLinkage {
     */
   def mstEdges(reps: DataFrame, eps: Long,
                maxRounds: Int = 40): DataFrame = {
-    val dbg = sys.env.contains("SPARK_GRAFT_SL_DEBUG")
-    val t0 = System.nanoTime()
     val edges = Dbscan.neighborPairs(reps, eps)
       .filter(col("ra") < col("rb"))
       .select(col("ra").as("a"), col("rb").as("b"),
         col("dist_sq").as("w"))
       .distinct()
-    if (dbg) System.err.println(
-      s"[sl] edges buildMs=${(System.nanoTime() - t0) / 1000000}")
     // (A/B-measured this round: running the loop with AQE disabled
     // halves the JOB count but triples the TASK count — coalesced
     // 1-task stages beat fewer-but-32-task jobs 3x on wall clock at
     // sf0.1 — so the loop keeps the session's AQE setting.)
-    val t1 = System.nanoTime()
-    val r = mstEdgesLoop(edges, maxRounds)
-    if (dbg) System.err.println(
-      s"[sl] mstLoop totalMs=${(System.nanoTime() - t1) / 1000000}")
-    r
+    mstEdgesLoop(edges, maxRounds)
   }
 
   /** Collapse parallel inter-component edges to the per-pair
@@ -183,18 +175,11 @@ object SingleLinkage {
     }
     while (!done && round < maxRounds) {
       round += 1
-      val dbg = sys.env.contains("SPARK_GRAFT_SL_DEBUG")
-      val tR = System.nanoTime()
       val nCross = crossMin.count()
-      if (dbg) System.err.println(s"[sl] round $round cross=$nCross" +
-        s" countMs=${(System.nanoTime() - tR) / 1000000}")
       if (nCross == 0L) done = true
       else if (nCross <= localMax) {
-        val tL = System.nanoTime()
         mstParts ::= kruskalFinish(crossMin)
         done = true
-        if (dbg) System.err.println(s"[sl] kruskal endgame n=$nCross" +
-          s" ms=${(System.nanoTime() - tL) / 1000000}")
       }
       else {
         // every component picks its lexicographic-min outgoing edge —
@@ -247,10 +232,7 @@ object SingleLinkage {
             .join(m2.as("y"), col("x.r") === col("y.c"))
             .select(col("x.c").as("c"), col("y.r").as("r"),
               (col("y.r") =!= col("x.r")).as("moved")), eager = false)
-          val tH = System.nanoTime()
           val nMoved = next.filter(col("moved")).count()
-          if (dbg) System.err.println(s"[sl]   hop $hops moved=$nMoved" +
-            s" ms=${(System.nanoTime() - tH) / 1000000}")
           stable = nMoved == 0L
           par = next.select("c", "r")
         }
@@ -305,8 +287,6 @@ object SingleLinkage {
   }
 
   def cut(reps: DataFrame, mst: DataFrame, k: Int): DataFrame = {
-    val dbg = sys.env.contains("SPARK_GRAFT_SL_DEBUG")
-    val t0 = System.nanoTime()
     val kept = keptEdges(mst, k)
     // The kept forest is by construction a FOREST: its component
     // diameter is O(component size) (an MST path over n reps can be a
@@ -316,8 +296,6 @@ object SingleLinkage {
     // star contraction; the labeling contract (min id per component)
     // is identical, so the output is unchanged (optimization r14).
     val cc = Dedup.starContraction(kept, "a", "b", maxIter = 40)
-    if (dbg) System.err.println(
-      s"[sl] cut starContraction buildMs=${(System.nanoTime() - t0) / 1000000}")
     reps.select(col("rid"))
       .join(cc, col("rid") === col("doc_id"), "left")
       .select(col("rid"),

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r13 money-surface determinism invariant (VERDICT r12 #1).
@@ -21,10 +23,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MoneyTailSpec extends AnyFunSuite {
 
-  private val sources = Seq(
-    "src/main/scala/graft/SparkEntry.scala",
-    "src/main/scala/graft/OracleSql.scala",
-    "src/main/scala/graft/streaming/EventsStreaming.scala")
+  // every main source file: builders and oracles live in per-family
+  // files, so a fixed list would miss the next file a query moves to
+  private val sources: Seq[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".scala")).toSeq.sorted
+    finally walk.close()
+  }
 
   private def read(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
@@ -42,6 +48,7 @@ class MoneyTailSpec extends AnyFunSuite {
     raw"\* ?100\.0\), ?\d\)".r) // round(x / (count * 100.0), n)
 
   test("no round(DOUBLE, n) tail over a cents-scaled division") {
+    assert(sources.exists(_.endsWith("queries/SqlQueries.scala")))
     for (path <- sources) {
       val text = read(path)
       for (re <- banned) {

@@ -61,7 +61,7 @@ class Round6OpsSpec extends SparkSpec {
   }
 
   test("dp threshold table covers [0, 2^40) exactly, monotone in k") {
-    val rows = SparkEntry.dpGeomThresholds
+    val rows = graft.queries.ProfileQueries.dpGeomThresholds
     assert(rows.size == 51)
     assert(rows.head._2 == 0L)
     assert(rows.last._3 == (1L << 40))

@@ -1,7 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** t1-style smoke: every registered query runs at sf0.001 and returns a
-  * sane frame; oracle keys stay aligned with query keys.
+  * sane frame; the registry holds each name once, with its oracle, and
+  * the query sources define each name once.
   */
 class SparkEntrySmokeSpec extends SparkSpec {
 
@@ -15,27 +18,45 @@ class SparkEntrySmokeSpec extends SparkSpec {
   }
 
   test("no duplicate query/oracle keys in the SparkEntry source") {
-    // Map literals silently keep the LAST duplicate key — a re-added
-    // query name would shadow (or be shadowed by) the original with no
-    // compiler diagnostic (this bit round 7: a second profile_benford).
-    // Scan the source for entry keys and assert global uniqueness.
-    val src = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala"))
-    val queryKey = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
-    val qDupes = queryKey.findAllMatchIn(src).map(_.group(1)).toSeq
-      .groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-    assert(qDupes.isEmpty, s"duplicate query keys: $qDupes")
-    // oracle entries: lines like  "name" -> <sql or builder>
-    // count only names that exist as oracle keys to avoid false hits
-    val oracleNames = SparkEntry.oracleSql.keySet
-    val entryKey = """"([a-z0-9_]+)" ->""".r
-    val oDupes = entryKey.findAllMatchIn(src).map(_.group(1)).toSeq
-      .filter(oracleNames)
-      .groupBy(identity)
-      // each name appears once as a query entry and once as an oracle
-      // entry; a third occurrence means a duplicate somewhere
-      .collect { case (k, v) if v.size > 2 => k -> v.size }
-    assert(oDupes.isEmpty, s"keys with extra entries: $oDupes")
+    // Each query and its oracle are one QueryDef in a family object
+    // under graft.queries. Scan those sources for the literal names and
+    // assert global uniqueness: a re-added name (a second profile_benford
+    // once slipped in) must show up here, not only at registration.
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val files = {
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    }
+    val defKey = """QueryDef\("([a-z0-9_]+)"""".r
+    val names = files.flatMap(f => defKey.findAllMatchIn(
+      java.nio.file.Files.readString(f)).map(_.group(1)))
+    val dupes = names.groupBy(identity).collect {
+      case (k, v) if v.size > 1 => k -> v.size }
+    assert(dupes.isEmpty, s"duplicate query/oracle keys: $dupes")
+    // every literal definition is a registered query with its oracle
+    val unregistered = names.toSet -- SparkEntry.queries.keySet
+    assert(unregistered.isEmpty, s"defined but not registered: $unregistered")
+    assert((names.toSet -- SparkEntry.oracleSql.keySet).isEmpty)
+    // and the scan sees every registered name, so a duplicate cannot hide
+    assert(names.size == SparkEntry.queries.size)
+  }
+
+  test("registry: one definition per name, builders and oracles aligned") {
+    // a second definition under an existing name fails at registration
+    // and the message names the key
+    val d = graft.queries.QueryDef("dup_name", (s, dir) => s.emptyDataFrame,
+      "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      graft.queries.QueryDef.register(Seq(d, d)))
+    assert(e.getMessage.contains("'dup_name'"), e.getMessage)
+    // registering and looking up a builder never generates oracle SQL
+    val lazyOracle = graft.queries.QueryDef("lazy_oracle",
+      (s, dir) => s.emptyDataFrame, sys.error("oracle generated"))
+    assert(graft.queries.QueryDef.register(Seq(lazyOracle))
+      .contains("lazy_oracle"))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 363)
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>

@@ -243,4 +243,28 @@ class MultimodalSpec extends SparkSpec {
     assert(got.map(_.frame_idx).toSeq == Seq(0, 2, 4))
     assert(got.forall(f => f.n_frames == 6 && f.fps == 10))
   }
+
+  test("the codecs leave the JVM-wide ImageIO cache setting alone") {
+    val before = javax.imageio.ImageIO.getUseCache
+    javax.imageio.ImageIO.setUseCache(true)
+    try {
+      assert(graft.SparkEntry.queries("multimodal_decode")(spark,
+        sf("sf0.001")).count() > 0)
+      assert(graft.SparkEntry.queries("multimodal_video_frames")(spark,
+        sf("sf0.001")).count() > 0)
+      assert(javax.imageio.ImageIO.getUseCache)
+      // the codec objects may already be initialized in this JVM, so
+      // initialize fresh copies of them too
+      val urls = sys.props("java.class.path")
+        .split(java.io.File.pathSeparator)
+        .map(p => new java.io.File(p).toURI.toURL)
+      val fresh = new java.net.URLClassLoader(urls,
+        ClassLoader.getPlatformClassLoader)
+      try for (codec <- Seq("ImageCodec", "VideoCodec")) {
+        fresh.loadClass(s"graft.multimodal.Multimodal$$$codec$$")
+          .getField("MODULE$").get(null)
+        assert(javax.imageio.ImageIO.getUseCache, s"$codec changed it")
+      } finally fresh.close()
+    } finally javax.imageio.ImageIO.setUseCache(before)
+  }
 }
