@@ -858,7 +858,7 @@ object OracleSql {
 
   /** Oracle for `graph_triangles`: canonical a<b near-dup edges,
     * wedges closed by the (a, c) edge, per-vertex membership counts —
-    * mirrors [[graft.functions.Dedup.triangleCounts]].
+    * mirrors [[graft.functions.Graph.triangleCounts]].
     */
   /** Oracle for `dedup_prefix_filter`: the PPJoin pipeline replayed in
     * plain SQL — distinct tokens, df rollup, rare-first per-doc prefix
@@ -2383,7 +2383,7 @@ object OracleSql {
   /** Oracle for `graph_kcore`: the same near-dup edge set, peeled for
     * `rounds` unrolled iterations — each round recomputes degrees over
     * the surviving edges and keeps vertices with degree >= k, exactly
-    * mirroring [[graft.functions.Dedup.kCore]]'s bounded-round loop.
+    * mirroring [[graft.functions.Graph.kCore]]'s bounded-round loop.
     */
   def graphKcore(numHashes: Int = 16, rowsPerBand: Int = 2,
                  k: Int = 2, rounds: Int = 4): String = {
@@ -2411,7 +2411,7 @@ object OracleSql {
   }
 
   /** Oracle for `graph_bfs_depth`: the same near-dup edge set as the
-    * engine ([[graft.functions.Dedup.bfsDepthsFromSeeds]]); the seed
+    * engine ([[graft.functions.Graph.bfsDepthsFromSeeds]]); the seed
     * set is the `nSeeds` smallest vertex ids of the candidate graph (a
     * deterministic, always-non-empty stand-in for an audit table); a
     * depth-bounded recursive closure records every (vertex, hops) pair
@@ -2507,7 +2507,7 @@ object OracleSql {
     * the seed set is the `nSeeds` smallest vertex ids; a depth-bounded
     * recursive closure enumerates all walks of ≤ `rounds` edges and
     * `min(total weight)` per vertex IS the Bellman–Ford result after
-    * `rounds` relaxation rounds ([[graft.functions.Dedup.ssspFromSeeds]]).
+    * `rounds` relaxation rounds ([[graft.functions.Graph.ssspFromSeeds]]).
     */
   def graphSssp(numHashes: Int = 16, rowsPerBand: Int = 2,
                 nSeeds: Int = 5, rounds: Int = 4): String = {
@@ -2539,7 +2539,7 @@ object OracleSql {
   /** Oracle for `graph_label_prop`: the same near-dup edge set,
     * `rounds` unrolled synchronous label-propagation steps — per step,
     * neighbor-label counts then the (count desc, label asc) mode —
-    * mirroring [[graft.functions.Dedup.labelPropagation]] exactly.
+    * mirroring [[graft.functions.Graph.labelPropagation]] exactly.
     */
   def graphLabelProp(numHashes: Int = 16, rowsPerBand: Int = 2,
                      rounds: Int = 3): String = {
@@ -2628,7 +2628,7 @@ object OracleSql {
     * communities (neighbor communities + its own, max-deduped k_{i,c}),
     * the exact integer gain 2m·k_{i,c} − k_i·(d_c − [c = c_i]·k_i),
     * argmax by (gain DESC, comm ASC). Mirrors
-    * [[graft.functions.Dedup.louvainLocalMove]] over the near-dup
+    * [[graft.functions.Graph.louvainLocalMove]] over the near-dup
     * graph.
     */
   def graphLouvain(numHashes: Int = 16, rowsPerBand: Int = 2,
@@ -2683,7 +2683,7 @@ object OracleSql {
     * weights = cross-edge counts, doubled intra self-loops), the SAME
     * weighted synchronous local move on the supernode graph, and the
     * two-level label unfold. Mirrors
-    * [[graft.functions.Dedup.louvainMultilevel]].
+    * [[graft.functions.Graph.louvainMultilevel]].
     */
   def graphLouvainMultilevel(numHashes: Int = 16, rowsPerBand: Int = 2,
                              rounds1: Int = 2,
@@ -3017,7 +3017,7 @@ object OracleSql {
   /** Oracle for `graph_personalized_pagerank`: [[graphPagerank]] with
     * the initial mass and the per-round teleport gated to the seed set
     * (`id % seedMod = 0`) — mirroring
-    * [[graft.functions.Dedup.personalizedPageRank]] exactly.
+    * [[graft.functions.Graph.personalizedPageRank]] exactly.
     */
   def graphPersonalizedPagerank(numHashes: Int = 16,
                                 rowsPerBand: Int = 2, iters: Int = 3,
@@ -3059,7 +3059,7 @@ object OracleSql {
     * DIRECTED edge list, `iters` exact-integer HITS rounds — each side
     * summed from the other then re-normalized by integer division
     * with the round's max — mirroring
-    * [[graft.functions.Dedup.hits]] bit-for-bit.
+    * [[graft.functions.Graph.hits]] bit-for-bit.
     */
   def graphHits(numHashes: Int = 16, rowsPerBand: Int = 2,
                 iters: Int = 2): String = {

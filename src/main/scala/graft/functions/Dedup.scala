@@ -107,7 +107,7 @@ object Dedup {
     // exactly once on first use and serves all three references from
     // the persisted blocks (GC-cleaned by the context cleaner, so
     // nothing lingers in the cache manager — the same hygiene argument
-    // as [[connectedComponents]]'s per-round checkpoints). Measured on
+    // as [[Graph.components]]'s per-round checkpoints). Measured on
     // the 500k-doc training-mix corpus this is the difference between one
     // and three corpus-wide text passes in the dedup stage. Trade-off
     // (accepted repo-wide): checkpointed partitions lost to executor
@@ -831,922 +831,6 @@ object Dedup {
         "(ic * 1000000L) div (size(sh_a) + size(sh_b) - ic)"))
       .filter(col("jac_ppm") >= minPpm)
       .select("id_a", "id_b", "ic", "jac_ppm")
-  }
-
-  // ---------------- candidate pairs → clusters ----------------
-
-  /** Connected components over a near-duplicate pair list: every vertex
-    * labeled with the minimum id reachable through the pair graph — the
-    * step that turns pairwise similarity into an actual keep/drop
-    * decision (keep `id == rep_id`, drop the rest of the cluster).
-    *
-    * Algorithm: iterative min-label propagation — each round is one
-    * edge⋈label join + min-aggregate (two narrow shuffles), and the loop
-    * ends after `diameter` rounds (near-dup clusters are near-cliques,
-    * so 2–3 rounds in practice; convergence is detected with a per-round
-    * count). The per-round work is a fixed pipeline over (edge, label)
-    * tuples — the shape that scales out; at extreme diameters switch to
-    * large-star/small-star, which squares the label-jump length per
-    * round at the cost of a denser intermediate edge set.
-    */
-  /** Thrown by [[connectedComponents]] under `strict` when min-label
-    * propagation has not reached a fixed point within `maxIter` rounds
-    * (component diameter > maxIter) — catch it to fall back to
-    * [[starContraction]], whose round count is O(log diameter).
-    */
-  final class ConvergenceException(msg: String)
-    extends RuntimeException(msg)
-
-  /** Small-graph endgame budget shared by the iterative component /
-    * forest operators (optimization r15, the filter-Kruskal hybrid
-    * discipline): once an iterative operator's CURRENT edge set fits
-    * this many rows, it finishes in ONE single-task union-find stage
-    * instead of paying O(log diameter) more distributed rounds of
-    * ~10 shuffle stages each. 256 Ki edges ≈ 4 MB in one task — the
-    * same magnitude a broadcast-hash-join build side ships to every
-    * executor — and the budget is scale-independent: a 100 TB graph
-    * simply runs distributed rounds until the contraction fits.
-    * Overridable for tests (system property) and deployments (env).
-    */
-  def ccLocalMax: Long =
-    sys.props.get("spark.graft.cc.local.max")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX"))
-      .map(_.toLong).getOrElse(262144L)
-
-  /** One-task min-label union-find over a bounded (src, dst) edge
-    * frame: every endpoint vertex labeled with its component MINIMUM —
-    * exactly the fixed point min-label propagation / star contraction
-    * converge to, computed in O(E α(E)) inside a single executor task
-    * (repartition(1) keeps the upstream stages parallel; no driver
-    * collect). Only call under [[ccLocalMax]].
-    */
-  private def localMinLabels(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    e.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)]
-      .repartition(1)
-      .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
-        }
-        val edges = it.toArray
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          // union toward the smaller root so the final root IS the
-          // component minimum (every vertex starts as its own root)
-          if (ra != rb) {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        edges.iterator.flatMap(t => Iterator(t._1, t._2))
-          .toArray.distinct.iterator.map(v => (v, find(v)))
-      }
-      .toDF("src", "dst")
-  }
-
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20,
-                          strict: Boolean = false): DataFrame = {
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs
-        .select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist()
-    // materialize ONCE: every round and the vertex seed read this; the
-    // count doubles as the small-graph dial (optimization r15): a
-    // bounded edge set skips the propagation loop entirely for one
-    // single-task union-find — same fixed point (min id per component),
-    // no per-round convergence actions.
-    if (edges.count() <= ccLocalMax) {
-      val labels = localMinLabels(edges)
-        .select(col("src").as("doc_id"), col("dst").as("rep_id"))
-        .localCheckpoint(false)
-      edges.unpersist()
-      return labels
-    }
-
-    // seed with min(self, direct neighbors) — one shuffle, same as a
-    // plain vertex-distinct would cost, but it starts the propagation a
-    // full round ahead (cliques and stars converge immediately).
-    // Per-round localCheckpoint (not persist): it materializes the round
-    // eagerly AND cuts the logical lineage — labels is referenced twice
-    // per round, so an uncut analyzed plan doubles every round and
-    // analysis cost turns exponential at high iteration counts; caching
-    // truncates only physical execution, not the analyzed tree. The
-    // checkpointed blocks are GC-cleaned by the context cleaner.
-    // Round materialization is a lazy STATS-BARRIER checkpoint
-    // (optimization r14, see PlanBridge.localCheckpointStatsBarrier):
-    // the moved-count action below materializes the round's blocks AND
-    // answers convergence in ONE job where eager checkpoint + separate
-    // count paid two, and resetting the size estimate per round stops
-    // Catalyst's join-size BigInts from doubling their digit count
-    // every iteration (a pure planning tax that grows with maxIter).
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    var labels = PlanBridge.localCheckpointStatsBarrier(
-      edges.groupBy(col("src").as("id"))
-        .agg(min(col("dst")).as("min_nbr"))
-        .select(col("id"), least(col("id"), col("min_nbr")).as("rep")),
-      eager = false)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min("rep").as("nbr_rep"))
-      val next = PlanBridge.localCheckpointStatsBarrier(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("rep"), coalesce(col("nbr_rep"), col("rep")))
-              .as("rep"),
-            (coalesce(col("nbr_rep"), col("rep")) < col("rep"))
-              .as("moved")),
-        eager = false)
-      val changed = next.filter(col("moved")).count()
-      labels = next.select("id", "rep")
-      converged = changed == 0
-      i += 1
-    }
-    if (!converged) {
-      val msg =
-        s"connectedComponents did not converge within $maxIter rounds — " +
-          "labels may be non-minimal; raise maxIter for graphs of " +
-          "diameter > maxIter; or use [[starContraction]], which " +
-          "converges in O(log diameter) rounds"
-      if (strict) {
-        edges.unpersist()
-        throw new ConvergenceException(msg)
-      }
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    // labels is already checkpointed (lineage-free), so the edge cache
-    // can be dropped here: the returned frame reads only the final
-    // round's blocks, and repeated calls leave nothing in the cache
-    // manager — no clearCache() housekeeping for long-lived sessions.
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("rep").as("rep_id"))
-  }
-
-  /** Incremental connected components: min-label propagation over the
-    * FULL edge set, warm-started from a previously-computed base
-    * labeling — the delta-maintenance twin of [[connectedComponents]]
-    * (same contract, same fixed point). New vertices start as their
-    * own label; old vertices start at their saved base rep. Because
-    * the base rep of any vertex is (a) itself a member of the merged
-    * component and (b) ≥ the merged component's min id, min
-    * propagation from the warm start converges to EXACTLY the
-    * from-scratch labeling — the equality the oracle checks — but the
-    * propagation only has to cover the diameter of the CHANGED
-    * region, not the whole graph: on a daily delta over a mostly-
-    * stable 100 TB dedup graph that is the difference between 2–3
-    * rounds and a full-diameter recompute. The loop still runs to a
-    * detected fixed point (changed == 0), so correctness never
-    * depends on guessing the round count.
-    */
-  def incrementalComponents(pairs: DataFrame, aCol: String, bCol: String,
-                            baseLabels: DataFrame,
-                            maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs
-        .select(col(bCol).cast("long").as("src"),
-          col(aCol).cast("long").as("dst")))
-      .distinct()
-      .persist()
-    // small-graph endgame (r15, see [[connectedComponents]]): the
-    // warm start exists to SHORTEN propagation, and its contracted
-    // fixed point equals the from-scratch labeling by contract — so a
-    // bounded edge set takes the one-task union-find directly.
-    if (edges.count() <= ccLocalMax) {
-      val labels = localMinLabels(edges)
-        .select(col("src").as("doc_id"), col("dst").as("rep_id"))
-        .localCheckpoint(false)
-      edges.unpersist()
-      return labels
-    }
-    val verts = edges.select(col("src").as("id")).distinct()
-    // lazy stats-barrier rounds with the fused moved-count — same
-    // rationale as [[connectedComponents]] (optimization r14)
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    var labels = PlanBridge.localCheckpointStatsBarrier(verts
-      .join(baseLabels
-        .select(col("doc_id").as("id"), col("rep_id").as("base_rep")),
-        Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("base_rep"), col("id")).as("rep")),
-      eager = false)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min("rep").as("nbr_rep"))
-      val next = PlanBridge.localCheckpointStatsBarrier(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("rep"), coalesce(col("nbr_rep"), col("rep")))
-              .as("rep"),
-            (coalesce(col("nbr_rep"), col("rep")) < col("rep"))
-              .as("moved")),
-        eager = false)
-      val changed = next.filter(col("moved")).count()
-      labels = next.select("id", "rep")
-      converged = changed == 0
-      i += 1
-    }
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("rep").as("rep_id"))
-  }
-
-  /** Connected components via alternating large-star / small-star rounds
-    * (the public two-phase contraction algorithm of Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14): each round
-    * re-points whole neighborhoods at their minimum, so the distance a
-    * label travels per round roughly squares — O(log diameter) rounds
-    * where [[connectedComponents]] needs O(diameter). Same output
-    * contract: (doc_id, rep_id), rep_id = min id in the component.
-    *
-    * Use for high-diameter graphs (long chains of pairwise near-dups);
-    * plain propagation stays the cheaper default for the near-clique
-    * clusters MinHash candidates usually form (its per-round edge set is
-    * never densified). Fixed point is detected with a narrow
-    * (count, hash-sum) checksum — one tiny agg per round, no `except`.
-    */
-  def starContraction(pairs: DataFrame, aCol: String, bCol: String,
-                      maxIter: Int = 20): DataFrame = {
-    def sym(e: DataFrame): DataFrame =
-      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-
-    // order-independent fingerprint of the edge set: at the fixed point
-    // the emitted orientation is canonical (src > dst), so equal
-    // (count, xor-of-hashes) across rounds ⇒ the set is stable. XOR
-    // (not sum) because ANSI mode makes a long sum overflow-checked.
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))"))
-        .head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    // large-star: every neighbor v > u re-points at m(u) = min(Γ(u) ∪ u)
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      val m = s.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src"), least(col("src"), col("mn")).as("m"))
-      s.filter(col("dst") > col("src"))
-        .join(m, Seq("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-    }
-
-    // small-star: neighbors v ≤ u (and u itself) re-point at their min
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      val m = dir.groupBy("src").agg(min("dst").as("m"))
-      dir.join(m, Seq("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(m.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-    }
-
-    val edges0 = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-
-    // per-round localCheckpoint (not persist): large-star/small-star each
-    // reference their input several times, so an uncut LOGICAL plan grows
-    // ~12× per round and analysis time explodes exponentially — caching
-    // truncates only the physical execution, not the analyzed tree.
-    // Checkpointing materializes the round AND replaces its lineage with
-    // the stored blocks (blocks are GC-cleaned by the context cleaner).
-    // lazy stats-barrier rounds; the checksum aggregate is the action
-    // that materializes each round — one job per round instead of two,
-    // and no per-round join-size-estimate snowball (optimization r14)
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    var edges = PlanBridge.localCheckpointStatsBarrier(edges0,
-      eager = false)
-    val verts = sym(edges).select(col("src").as("id")).distinct()
-    var state = checksum(edges)
-    var converged = false
-    var i = 0
-    // small-graph endgame (r15, see [[connectedComponents]]): rounds
-    // run only while the CURRENT edge set exceeds the budget; a
-    // bounded remainder finishes in one single-task union-find whose
-    // (vertex → component-min) stars are exactly the fixed point the
-    // remaining rounds would reach (the rewiring rounds preserve the
-    // vertex partition).
-    while (!converged && state._1 > ccLocalMax && i < maxIter) {
-      val next = PlanBridge.localCheckpointStatsBarrier(
-        smallStar(largeStar(edges)), eager = false)
-      val ns = checksum(next)
-      edges = next
-      converged = ns == state
-      state = ns
-      i += 1
-    }
-    if (!converged && state._1 <= ccLocalMax) {
-      if (state._1 > 0)
-        edges = PlanBridge.localCheckpointStatsBarrier(
-          localMinLabels(edges), eager = false)
-      converged = true
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"starContraction did not reach a fixed point within $maxIter " +
-          "rounds — labels may be non-minimal")
-    // at the fixed point the edge set is a union of stars (leaf, root)
-    val leaf = edges.groupBy(col("src").as("id")).agg(min("dst").as("rep"))
-    verts.join(leaf, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("rep"), col("id")).as("rep_id"))
-  }
-
-  /** Deterministic integer PageRank over an undirected pair graph
-    * (near-dup candidates, citation/link pairs): authority scores for
-    * quality weighting — a document endorsed by many well-connected
-    * near-dups/links ranks high, the CommonCrawl-host-rank idea applied
-    * per document.
-    *
-    * All arithmetic is EXACT INTEGER: ranks live in millionths,
-    * per-edge contributions are `floor(rank·damping% / (100·outdeg))`,
-    * and the per-vertex reduce sums longs — so the fixpoint iteration
-    * is reproducible under any partitioning or aggregation order
-    * (float PageRank is not). No normalization pass: the teleport
-    * constant keeps scores in a stable integer range, and downstream
-    * use is ordinal. The symmetric edge set means no dangling vertices.
-    *
-    * Scale shape: per round, one narrow (src, rank, deg) join plus one
-    * map-side-combined sum — the connected-components discipline
-    * ([[connectedComponents]]), including the per-round (lazy, r15)
-    * `localCheckpoint` that drops lineage and caches nothing past the
-    * return.
-    */
-  def pageRank(pairs: DataFrame, aCol: String, bCol: String,
-               iters: Int = 3, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && dampingPct > 0 && dampingPct < 100)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val verts = e.select(col("src").as("id")).distinct()
-    var r = verts.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(r.withColumnRenamed("id", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("id"),
-          floor(col("rank") * dampingPct / (lit(100) * col("deg")))
-            .cast("long").as("c"))
-      // teleport mass in millionths: (1 - damping) · 10⁶, consistent
-      // with the damping factor for ANY dampingPct (not just 85)
-      val teleport = (100L - dampingPct) * 10000L
-      r = verts
-        .join(contrib.groupBy("id").agg(sum("c").as("in")), Seq("id"),
-          "left")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("in"), lit(0L))).as("rank"))
-        .localCheckpoint(false)
-    }
-    r.select(col("id").as("doc_id"), col("rank"))
-  }
-
-  /** Personalized PageRank over the undirected near-dup graph:
-    * teleport mass returns ONLY to the seed set (a predicate over
-    * vertex ids) instead of uniformly, so rank measures proximity to
-    * the seeds — the standard "contamination spread" / "related docs"
-    * ranking ([[bfsDepths]] gives hop distance; this weighs ALL paths,
-    * not just the shortest). Same exact-integer discipline as
-    * [[pageRank]]: ranks in millionths, floor-divided contributions,
-    * teleport `(100−d)·10⁴` gated per vertex — deterministic under
-    * any execution order, bit-reproducible by the SQL oracle.
-    *
-    * Scale shape identical to [[pageRank]]: per round one narrow
-    * (src, rank, deg) join + one map-side-combined sum, per-round
-    * lazy (r15) `localCheckpoint`, nothing cached past the return.
-    */
-  def personalizedPageRank(pairs: DataFrame, aCol: String, bCol: String,
-                           seed: Column => Column, iters: Int = 3,
-                           dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && dampingPct > 0 && dampingPct < 100)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val verts = e.select(col("src").as("id")).distinct()
-    val teleport = (100L - dampingPct) * 10000L
-    def gate(c: Column): Column =
-      when(seed(col("id")), c).otherwise(lit(0L))
-    var r = verts.withColumn("rank", gate(lit(1000000L)))
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(r.withColumnRenamed("id", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("id"),
-          floor(col("rank") * dampingPct / (lit(100) * col("deg")))
-            .cast("long").as("c"))
-      r = verts
-        .join(contrib.groupBy("id").agg(sum("c").as("in")), Seq("id"),
-          "left")
-        .select(col("id"),
-          (gate(lit(teleport)) + coalesce(col("in"), lit(0L)))
-            .as("rank"))
-        .localCheckpoint(false)
-    }
-    r.select(col("id").as("doc_id"), col("rank"))
-  }
-
-  /** HITS hubs-and-authorities (Kleinberg, JACM'99) over a DIRECTED
-    * edge list, `iters` mutual-reinforcement rounds in exact integer
-    * arithmetic: authority(v) = Σ hub(u) over in-edges, hub(v) =
-    * Σ authority(w) over out-edges, each side re-normalized to a
-    * 0..10⁶ scale by integer division with the round's max (the
-    * fixed-point analogue of L∞ normalization — deterministic under
-    * any partitioning, unlike float L2). On the canonical a<b
-    * near-dup edge orientation, authorities are the "most duplicated
-    * targets" and hubs the "most duplicating sources" — a different
-    * ranking than [[pageRank]]'s undirected authority, and the
-    * classic web-graph dual.
-    *
-    * Scale shape: per round two narrow (id, score) joins against the
-    * checkpointed edge list + two map-side-combined sums; the max for
-    * normalization is a 1-row broadcast, never a collect. Per-round
-    * lazy (r15) `localCheckpoint` truncates the iterative lineage
-    * ([[pageRank]] discipline).
-    */
-  def hits(pairs: DataFrame, aCol: String, bCol: String,
-           iters: Int = 2): DataFrame = {
-    require(iters >= 1)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .distinct().localCheckpoint(false)
-    val verts = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
-    def normalize(raw: DataFrame, out: String): DataFrame = {
-      val mx = raw.agg(max("raw").as("mx"))
-      raw.crossJoin(broadcast(mx))
-        .select(col("id"),
-          expr("(raw * 1000000) div greatest(mx, 1)").as(out))
-        .localCheckpoint(false)
-    }
-    var h = verts.withColumn("hub", lit(1000000L))
-    var a = verts.withColumn("auth", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val aRaw = verts.join(
-        e.join(h.withColumnRenamed("id", "src"), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(sum("hub").as("s")),
-        Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("raw"))
-      a = normalize(aRaw, "auth")
-      val hRaw = verts.join(
-        e.join(a.withColumnRenamed("id", "dst")
-            .withColumnRenamed("auth", "av"), Seq("dst"))
-          .groupBy(col("src").as("id")).agg(sum("av").as("s")),
-        Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("raw"))
-      h = normalize(hRaw, "hub")
-    }
-    a.join(h, Seq("id")).select(col("id").as("doc_id"),
-      col("auth"), col("hub"))
-  }
-
-  /** Bounded-round k-core peeling over the undirected near-dup graph:
-    * repeatedly drop vertices with degree < k (and their edges) for
-    * `rounds` iterations, then report the survivors with their final
-    * within-core degree. The k-core separates DENSE duplicate
-    * communities (every member ≥ k strong neighbours) from stars and
-    * chains that exact-threshold pairing can't tell apart — the
-    * canonical "keep one per clique, review the periphery" split.
-    *
-    * Bounded rounds (like [[pageRank]]'s `iters`) keep the operator a
-    * fixed-depth DAG the oracle can unroll; on near-dup graphs the
-    * peel converges in a handful of rounds because cliques are stable
-    * under deletion.
-    *
-    * Scale shape: each round is two semi-joins of the narrow (src,
-    * dst) edge list against a key-only survivor set, plus one
-    * map-side-combined degree count — no row ever carries more than
-    * two longs, and the per-round lazy (r15) `localCheckpoint`
-    * truncates the iterative lineage ([[connectedComponents]]
-    * discipline).
-    */
-  def kCore(pairs: DataFrame, aCol: String, bCol: String,
-            k: Int, rounds: Int): DataFrame = {
-    require(k >= 1 && rounds >= 1)
-    var e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    var deg: DataFrame = null
-    for (_ <- 1 to rounds) {
-      deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      val alive = deg.filter(col("deg") >= k)
-        .select(col("src").as("node"))
-        .localCheckpoint(false)
-      e = e
-        .join(alive.withColumnRenamed("node", "src"), Seq("src"),
-          "left_semi")
-        .join(alive.withColumnRenamed("node", "dst"), Seq("dst"),
-          "left_semi")
-        .localCheckpoint(false)
-    }
-    // survivors with their degree inside the final peeled graph
-    e.groupBy("src").agg(count(lit(1)).as("core_deg"))
-      .filter(col("core_deg") >= k)
-      .select(col("src").as("doc_id"), col("core_deg"))
-  }
-
-  /** Synchronous label propagation over the undirected near-dup graph,
-    * `rounds` fixed iterations: every vertex adopts the MODE of its
-    * neighbors' labels (count desc, label asc tie-break — fully
-    * deterministic, unlike classic randomized LPA), seeded with its own
-    * id. Communities differ from [[connectedComponents]]: a bridge
-    * vertex joins the side with more of its neighbors instead of
-    * gluing both sides into one component — the granularity that
-    * separates two near-dup families connected by one borderline pair.
-    *
-    * Shape: per round, one edge×labels join (narrow id pairs) and one
-    * (vertex, label) count agg; the mode is a bounded `min(struct)`
-    * fold, never a per-vertex window sort. `localCheckpoint` per round
-    * caps lineage exactly like [[kCore]].
-    */
-  def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
-                       rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      labels = e
-        .join(labels.select(col("node").as("dst"), col("label")),
-          Seq("dst"))
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("src").as("node"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label")))
-          .getField("label").as("label"))
-        .localCheckpoint(false)
-    }
-    labels.select(col("node").as("doc_id"), col("label").as("community"))
-  }
-
-  /** Louvain-style modularity local move (Blondel–Guillaume–Lambiotte–
-    * Lefebvre, J. Stat. Mech. 2008, phase 1) — the community detection
-    * that OPTIMIZES modularity, where [[labelPropagation]] merely
-    * follows majority labels (graph_modularity scores a partition;
-    * this one improves it). Deterministic synchronous variant:
-    * `rounds` sweeps where every node simultaneously moves to the
-    * candidate community (its neighbors' communities plus its own)
-    * maximizing the exact integer gain score 2m·k_{i,c} − k_i·d_c^{−i}
-    * (the standard ΔQ numerator with the constant self-terms dropped —
-    * they are equal across a node's candidates, so the argmax is the
-    * true Louvain local move), ties to the SMALLEST community id.
-    * Sequential Louvain is order-dependent; the synchronous sweep is
-    * replayable in any engine, which is what makes the oracle a plain
-    * SQL twin.
-    *
-    * Scale shape per round: one (node, neighbor-community) rollup over
-    * the edge list (the corpus-sized shuffle), one community-degree
-    * rollup, keyed joins, and a per-node argmax via min/max-by struct
-    * (bounded by degree). The 1-row edge-count frame broadcasts.
-    * Bound stated: gains live in longs — exact while
-    * 2m·deg_max < 2⁶³.
-    */
-  def louvainLocalMove(pairs: DataFrame, aCol: String, bCol: String,
-                       rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      // drop self-pairs HERE (ADVICE r12 #4): the weighted core prices
-      // a self-loop row as twice the intra weight, so a stray (a, a)
-      // input pair surviving as a w=1 half-loop would silently skew
-      // degrees; current candidate generators only emit id_a < id_b,
-      // but the normalization — not the caller — owns the contract
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .withColumn("w", lit(1L))
-    louvainLocalMoveWeighted(e, rounds)
-      .select(col("node").as("doc_id"), col("comm").as("community"))
-  }
-
-  /** The weighted synchronous local-move core both Louvain levels run
-    * on: `edges` is a DIRECTED symmetric frame `(src, dst, w)` where a
-    * self-loop row (src = dst) carries TWICE the intra weight (both
-    * endpoints), so `ki = Σ w` is the weighted degree and
-    * `m = Σ w / 2` the total weight. Self-loops contribute to degrees
-    * and community loads but never to a candidate k_{i,c} (the
-    * `src ≠ dst` filter) — exactly the weighted gain numerator
-    * 2m·k_{i,c} − k_i·(d_c − [c = c_i]·k_i) of Blondel et al. 2008
-    * §2. With w ≡ 1 this is bit-identical to the round-11 unweighted
-    * sweep (sum ≡ count). Overflow bound (count class): gains are
-    * ≤ 4m² < 2⁶³ for m ≤ 1.5e9 total edge weight — loud past it.
-    */
-  def louvainLocalMoveWeighted(edges: DataFrame,
-                               rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    // OPTIMIZATION r15 — three per-round joins and one per-round edge
-    // pass removed, values bit-identical:
-    //  * ki RIDES the labeling frame (node, ki, comm) and the edge
-    //    frame (ki of src attached ONCE at setup), so the old
-    //    per-round comm⋈deg and gain⋈deg node-space joins are gone —
-    //    dcomm is a direct rollup of the labeling, and grouping by
-    //    (node, ki) is the same partition (ki is a function of node);
-    //  * the "staying is always a candidate" row carries an is_cc
-    //    FLAG through the max-dedup instead of re-joining the previous
-    //    labeling to recover the current community: the union row
-    //    exists exactly for (node, current comm), so max(f) marks it
-    //    and [comm = cc]·ki becomes is_cc·ki — the same gain;
-    //  * m is a 1-row lazily checkpointed frame computed once — the
-    //    old broadcast subtree re-aggregated the full edge frame
-    //    every round.
-    val e = edges.localCheckpoint(false)
-    val deg = e.groupBy(col("src").as("node"))
-      .agg(sum("w").as("ki"))
-      .localCheckpoint(false)
-    val e2 = e.filter(col("src") =!= col("dst"))
-      .join(deg.select(col("node").as("src"), col("ki").as("kis")),
-        Seq("src"))
-      .localCheckpoint(false)
-    val mstat = e.agg((sum("w") / 2).cast("long").as("m"))
-      .localCheckpoint(false)
-    var comm = deg.select(col("node"), col("ki"))
-      .withColumn("comm", col("node"))
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      val dcomm = comm.groupBy("comm").agg(sum("ki").as("dc"))
-      val kic = e2
-        .join(comm.select(col("node").as("dst"), col("comm")),
-          Seq("dst"))
-        .groupBy(col("src").as("node"), col("comm"))
-        .agg(sum("w").as("kic"), max("kis").as("ki"))
-      val cand = kic.withColumn("f", lit(0L))
-        .unionByName(comm.select(col("node"), col("comm"),
-          lit(0L).as("kic"), col("ki"), lit(1L).as("f")))
-        .groupBy("node", "comm")
-        .agg(max("kic").as("kic"), max("ki").as("ki"),
-          max("f").as("is_cc"))
-      comm = cand
-        .join(dcomm, Seq("comm"))
-        .crossJoin(broadcast(mstat))
-        .withColumn("gain",
-          lit(2L) * col("m") * col("kic") - col("ki") *
-            (col("dc") - col("is_cc") * col("ki")))
-        .groupBy("node", "ki")
-        .agg(max(struct(col("gain"), (-col("comm")).as("nc")))
-          .getField("nc").as("nc"))
-        .select(col("node"), col("ki"), (-col("nc")).as("comm"))
-        .localCheckpoint(false)
-    }
-    comm.select("node", "comm")
-  }
-
-  /** Multi-level Louvain (VERDICT r11 #4 — the phase the round-11
-    * local move lacked): phase 1 runs `rounds1` synchronous sweeps on
-    * the raw graph; phase 2 AGGREGATES each community to a supernode
-    * (Blondel et al. 2008 §2, the "community aggregation" step) —
-    * inter-community edge weights are the cross-edge counts, each
-    * community's intra-edge count becomes a self-loop of twice that
-    * weight, so the aggregated graph's modularity function equals the
-    * original partition's — reruns the SAME weighted sweep on the
-    * supernode graph, and unfolds labels through the two levels. This
-    * reaches merges a bounded number of synchronous local moves
-    * cannot (large-diameter community hierarchies), while every step
-    * stays a rollup + keyed joins: the aggregation is ONE edge rollup
-    * over the phase-1 labels, and the level-2 sweep runs on the
-    * communities-sized frame.
-    */
-  def louvainMultilevel(pairs: DataFrame, aCol: String, bCol: String,
-                        rounds1: Int, rounds2: Int): DataFrame = {
-    val c1 = louvainLocalMove(pairs, aCol, bCol, rounds1)
-      .localCheckpoint(false)
-    val und = pairs
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-    val m1 = und
-      .join(c1.select(col("doc_id").as("a"), col("community").as("ca")),
-        Seq("a"))
-      .join(c1.select(col("doc_id").as("b"), col("community").as("cb")),
-        Seq("b"))
-    val inter = m1.filter(col("ca") =!= col("cb"))
-      .groupBy(least(col("ca"), col("cb")).as("x"),
-        greatest(col("ca"), col("cb")).as("y"))
-      .agg(count(lit(1)).as("w"))
-    val intra = m1.filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("x"))
-      .agg((count(lit(1)) * lit(2L)).as("w"))
-    val agg = inter
-      .select(col("x").as("src"), col("y").as("dst"), col("w"))
-      .unionByName(inter.select(col("y").as("src"),
-        col("x").as("dst"), col("w")))
-      .unionByName(intra.select(col("x").as("src"),
-        col("x").as("dst"), col("w")))
-    val c2 = louvainLocalMoveWeighted(agg, rounds2)
-    c1.join(c2.select(col("node").as("community"),
-        col("comm").as("c2")), Seq("community"))
-      .select(col("doc_id"), col("c2").as("community"))
-  }
-
-  /** Bounded-round multi-source BFS over the undirected near-dup
-    * graph: minimum hop distance from any SEED vertex (a predicate
-    * over vertex ids — e.g. an audited/“known-contaminated” doc set)
-    * within `rounds` hops. The contamination-blast-radius query: given
-    * flagged documents, how much of the corpus sits within h near-dup
-    * hops of one? Vertices unreachable in `rounds` hops are absent
-    * from the output (distance genuinely unknown at this bound, not 0).
-    *
-    * Classic BFS frontier discipline: per round only the NEWLY reached
-    * vertices (left-anti vs the visited set) expand, so each edge is
-    * traversed at most once per endpoint discovery, not once per
-    * round. Per-round lazy (r15) `localCheckpoint` truncates lineage
-    * ([[connectedComponents]] discipline); every shuffled row is a
-    * pair of longs.
-    */
-  def bfsDepths(pairs: DataFrame, aCol: String, bCol: String,
-                seed: Column => Column, rounds: Int): DataFrame =
-    bfsDepthsCore(pairs, aCol, bCol,
-      verts => verts.filter(seed(col("id"))), rounds)
-
-  /** [[bfsDepths]] with the seed set given as a one-column DataFrame of
-    * vertex ids instead of a predicate — the shape for seed sets that
-    * are themselves query results (e.g. "the N lexically-smallest
-    * vertices of the candidate graph", an audit table, a quarantine
-    * list). Seeds not present in the graph are ignored (semi-join), so
-    * a stale quarantine list cannot invent vertices.
-    */
-  def bfsDepthsFromSeeds(pairs: DataFrame, aCol: String, bCol: String,
-                         seeds: DataFrame, rounds: Int): DataFrame = {
-    val s = seeds.select(
-      col(seeds.columns.head).cast("long").as("id"))
-    bfsDepthsCore(pairs, aCol, bCol,
-      verts => verts.join(s, Seq("id"), "left_semi"), rounds)
-  }
-
-  /** Bounded-round single-source(-set) shortest paths over the
-    * WEIGHTED undirected near-dup graph — Bellman–Ford with `rounds`
-    * relaxation rounds: after round r every vertex holds the minimum
-    * total weight over walks of ≤ r edges from any seed (vertices
-    * unreachable in `rounds` hops are absent). The weighted refinement
-    * of [[bfsDepthsFromSeeds]]: with edge weight = 1 − similarity, the
-    * distance is a DISSIMILARITY budget — "everything within ε of a
-    * flagged document, transitively" — which ranks blast-radius
-    * vertices by contamination strength instead of hop count.
-    *
-    * Scale shape: each round joins the narrow (id, dist) frame to the
-    * edge list (both shuffled by key) and takes a per-vertex min —
-    * rows are triples of longs; per-round lazy (r15) `localCheckpoint`
-    * truncates lineage exactly like [[connectedComponents]]. Weights
-    * are caller-provided integers (exact math end to end).
-    */
-  def ssspFromSeeds(pairs: DataFrame, aCol: String, bCol: String,
-                    wCol: String, seeds: DataFrame,
-                    rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst"), col(wCol).cast("long").as("w")))
-      .distinct()
-      .localCheckpoint(false)
-    val verts = e.select(col("src").as("id")).distinct()
-    val s = seeds.select(col(seeds.columns.head).cast("long").as("id"))
-    var dist = verts.join(s, Seq("id"), "left_semi")
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      val relaxed = e
-        .join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint(false)
-    }
-    dist.select(col("id").as("doc_id"), col("dist"))
-  }
-
-  private def bfsDepthsCore(pairs: DataFrame, aCol: String, bCol: String,
-                            seedOf: DataFrame => DataFrame,
-                            rounds: Int): DataFrame = {
-    require(rounds >= 1)
-    val e = pairs
-      .select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"),
-        col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    val verts = e.select(col("src").as("id")).distinct()
-    var visited = seedOf(verts)
-      .withColumn("depth", lit(0L))
-      .localCheckpoint(false)
-    var frontier = visited
-    for (d <- 1 to rounds) {
-      frontier = e
-        .join(frontier.select(col("id").as("src")), Seq("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited.select("id"), Seq("id"), "left_anti")
-        .withColumn("depth", lit(d.toLong))
-        .localCheckpoint(false)
-      visited = visited.unionByName(frontier).localCheckpoint(false)
-    }
-    visited.select(col("id").as("doc_id"), col("depth"))
-  }
-
-  /** Per-vertex triangle counts over the undirected near-dup graph —
-    * the local clustering signal: near-dup CLIQUES (true duplicate
-    * groups) are triangle-dense, while chains of borderline pairs
-    * (threshold noise) carry none, so the count separates "genuine
-    * cluster member" from "bridge artifact" better than degree.
-    *
-    * Shape: edges canonicalized to a < b and deduplicated; wedges
-    * (a<b<c) materialize via one self-join on the middle vertex and
-    * close via a second join on the (a, c) edge — both joins move only
-    * narrow id pairs, shuffled by join key. Output: (doc_id,
-    * n_triangles) for every vertex in at least one triangle.
-    */
-  def triangleCounts(pairs: DataFrame, aCol: String,
-                     bCol: String): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-    // wedges x<y<z: e(x,y) ⋈ e(y,z); closed by the (x,z) edge
-    val wedge = e
-      .join(e.select(col("a").as("b"), col("b").as("c")), Seq("b"))
-    val tri = wedge.join(
-      e.select(col("a"), col("b").as("c")), Seq("a", "c"))
-    tri.select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_triangles"))
-  }
-
-  /** Per-node local clustering coefficient over the candidate graph:
-    * `cc(v) = 2·T(v) / (deg(v)·(deg(v)−1))` for nodes of degree ≥ 2 —
-    * the clique-vs-bridge separator ([[triangleCounts]] gives the
-    * numerator; a dup CLIQUE scores ~1, a chain of borderline pairs
-    * ~0). Integer-exact numerator/denominator with a single IEEE
-    * division, so cross-engine comparison is bit-stable.
-    *
-    * Scale shape: degrees are one narrow aggregate over the exploded
-    * edge list; the triangle join is the standard x<y<z wedge closure
-    * (cost bounded by candidate-graph density, which dedup banding
-    * already bounds); one final key join.
-    */
-  def clusteringCoefficient(pairs: DataFrame, aCol: String,
-                            bCol: String): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-    val deg = e.select(explode(array(col("a"), col("b"))).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("degree"))
-    val tri = triangleCounts(pairs, aCol, bCol)
-    deg.filter(col("degree") >= 2)
-      .join(tri, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-        ExactGrid.eRatio(lit(2L) * coalesce(col("n_triangles"), lit(0L)),
-          col("degree") * (col("degree") - 1), 10000L).as("cc"))
   }
 
   /** Edit-distance near-dup pairs for SHORT text keys (titles, names,

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dedup
+import graft.functions.Graph
 
 /** Grid-accelerated DBSCAN (Ester et al., KDD'96) over integer-scaled
   * 2-D coordinates, hardened for the two dense-data failure shapes a
@@ -124,17 +124,7 @@ object Dbscan {
     val coreEdges = nbr
       .join(coreIds.select(col("rid").as("ra")), Seq("ra"))
       .join(coreIds.select(col("rid").as("rb")), Seq("rb"))
-    // strict: a core-graph chain of diameter > 40 (elongated
-    // eps-connected clusters at scale) must not SILENTLY yield split
-    // labels — on non-convergence fall back to star contraction,
-    // whose O(log diameter) rounds cover any practical chain
-    val comp =
-      try Dedup.connectedComponents(coreEdges, "ra", "rb",
-        maxIter = 40, strict = true)
-      catch {
-        case _: Dedup.ConvergenceException =>
-          Dedup.starContraction(coreEdges, "ra", "rb")
-      }
+    val comp = Graph.components(coreEdges, "ra", "rb")
     val coreLbl = coreIds
       .join(comp, col("rid") === col("doc_id"), "left")
       .select(col("rid"),

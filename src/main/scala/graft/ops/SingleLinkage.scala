@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dedup
+import graft.functions.Graph
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Exact eps-bounded single-linkage over 2-D integer coordinates via
@@ -130,7 +130,7 @@ object SingleLinkage {
     var done = false
     var round = 0
     // Small-graph endgame (optimization r15, the filter-Kruskal hybrid
-    // — the same [[Dedup.ccLocalMax]] budget the component operators
+    // — the same [[Graph.ccLocalMax]] budget the component operators
     // use): once the COLLAPSED component multigraph fits the budget,
     // one single-task Kruskal over the component labels finishes the
     // forest in O(n α) instead of O(log n) more distributed rounds
@@ -141,7 +141,7 @@ object SingleLinkage {
     // a 100 TB corpus simply runs more distributed rounds first
     // (components at least halve per round). repartition(1) keeps the
     // upstream collapse stages parallel; no driver collect.
-    val localMax = Dedup.ccLocalMax
+    val localMax = Graph.ccLocalMax
     def kruskalFinish(collapsed: DataFrame): DataFrame = {
       val spark = collapsed.sparkSession
       import spark.implicits._
@@ -153,22 +153,9 @@ object SingleLinkage {
         .repartition(1)
         .mapPartitions { it =>
           val rows = it.toArray.sortBy(t => (t._1, t._2, t._3))
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) {
-              val n = parent(c); parent(c) = r; c = n
-            }
-            r
-          }
+          val uf = new Graph.UnionFind
           rows.iterator.flatMap { t =>
-            val (ra, rb) = (find(t._4), find(t._5))
-            if (ra != rb) {
-              parent(math.max(ra, rb)) = math.min(ra, rb)
-              Some((t._2, t._3, t._1))
-            } else None
+            if (uf.union(t._4, t._5)) Some((t._2, t._3, t._1)) else None
           }
         }
         .toDF("a", "b", "w")
@@ -287,15 +274,9 @@ object SingleLinkage {
   }
 
   def cut(reps: DataFrame, mst: DataFrame, k: Int): DataFrame = {
-    val kept = keptEdges(mst, k)
-    // The kept forest is by construction a FOREST: its component
-    // diameter is O(component size) (an MST path over n reps can be a
-    // length-n chain), so min-label propagation is the wrong algorithm
-    // here — at sf0.1 it burned its full 40 strict rounds (80 jobs)
-    // only to throw and fall back. Go straight to the O(log diameter)
-    // star contraction; the labeling contract (min id per component)
-    // is identical, so the output is unchanged (optimization r14).
-    val cc = Dedup.starContraction(kept, "a", "b", maxIter = 40)
+    // the kept forest's components can be long chains (an MST path
+    // over n reps); the kernel's rounds are O(log diameter)
+    val cc = Graph.components(keptEdges(mst, k), "a", "b")
     reps.select(col("rid"))
       .join(cc, col("rid") === col("doc_id"), "left")
       .select(col("rid"),

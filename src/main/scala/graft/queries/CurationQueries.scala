@@ -4,8 +4,8 @@ package queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Clustering, Curation, Dedup, ExactGrid, Importance,
-  Packing, Sampling, TextFunctions}
+import graft.functions.{Clustering, Curation, Dedup, ExactGrid, Graph,
+  Importance, Packing, Sampling, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.queries.QueryKit._
 
@@ -51,7 +51,7 @@ object CurationQueries {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
         .filter(col("est_jaccard") >= 0.5)
-      val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      val comp = Graph.components(pairs, "id_a", "id_b")
       docs.select("doc_id")
         .join(comp, Seq("doc_id"), "left")
         .withColumn("rep", coalesce(col("rep_id"), col("doc_id")))
@@ -69,7 +69,7 @@ object CurationQueries {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
         .filter(col("est_jaccard") >= 0.5)
-      val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      val comp = Graph.components(pairs, "id_a", "id_b")
       val q = docs.select(col("doc_id"),
         functions.TextFunctions.qualityScore(col("text")).as("quality"))
       val j = comp.join(q, Seq("doc_id"))
@@ -273,7 +273,7 @@ object CurationQueries {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
         .filter(col("est_jaccard") >= 0.5)
-      val drops = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      val drops = Graph.components(pairs, "id_a", "id_b")
         .filter(col("rep_id") =!= col("doc_id")).select("doc_id")
       val enriched = docs.select(col("doc_id"), col("text"),
         TextFunctions.langId(col("text")).as("lang_pred"),

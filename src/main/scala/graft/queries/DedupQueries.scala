@@ -5,7 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Clustering, Dedup, Similarity}
+import graft.functions.{Clustering, Dedup, Graph, Similarity}
 import graft.queries.QueryKit._
 
 /** Near-duplicate detection (exact, MinHash, SimHash, n-gram, embedding
@@ -128,7 +128,7 @@ object DedupQueries {
       // pairs → clusters: every doc in a near-dup cluster labeled with
       // the minimum reachable doc_id (keep rep_id == doc_id, drop rest)
       val pairs = nearDupPairs(s, dir)
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
+      Graph.components(pairs, "id_a", "id_b")
     }, OracleSql.dedupComponents(NumHashes, RowsPerBand)),
 
     QueryDef("dedup_edit_distance", (s, dir) => {
@@ -644,20 +644,15 @@ object DedupQueries {
         |WHERE jaro_winkler_similarity(a.c_name, b.c_name) > 0.955""".stripMargin),
 
     QueryDef("dedup_components_star", (s, dir) => {
-      // the O(log diameter) closure: alternating large/small-star
-      // contraction (Kiveris et al. SoCC'14) over the SAME candidate
-      // graph as dedup_components, with the identical (doc_id,
-      // min-id rep) output contract — so it shares that query's
-      // recursive-closure oracle. dedup_components proves the 1-hop
-      // propagation; this proves the round-law variant you actually
-      // deploy on high-diameter graphs (chains of pairwise near-dups),
-      // where 1-hop needs O(diameter) rounds and star-contraction's
-      // label reach roughly squares per round.
+      // the same components kernel over the SAME candidate graph as
+      // dedup_components, with the identical (doc_id, min-id rep)
+      // output contract — so it shares that query's recursive-closure
+      // oracle. Kept as its own registry entry: its name and oracle
+      // are part of the published query surface.
       val pairs = nearDupPairs(s, dir)
-      Dedup.starContraction(pairs, "id_a", "id_b")
+      Graph.components(pairs, "id_a", "id_b")
     },
-      // star-contraction shares dedup_components' output contract, so
-      // it shares the recursive-closure oracle too.
+      // same output contract as dedup_components, same oracle
       OracleSql.dedupComponents(NumHashes, RowsPerBand)),
 
     QueryDef("link_survivorship", (s, dir) => {
@@ -689,7 +684,7 @@ object DedupQueries {
       // materialize the member frame ONCE: three rollups (canonical
       // name, segment mode, count/max) read it, and an uncut plan
       // would re-run the match join + component join per rollup
-      val members = Dedup.connectedComponents(pairs, "u", "v")
+      val members = Graph.components(pairs, "u", "v")
         .withColumnRenamed("rep_id", "rep")
         .join(c, col("doc_id") === col("c_custkey"))
         .localCheckpoint(true)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dedup
+import graft.functions.{Dedup, Graph}
 import graft.queries.QueryKit._
 
 /** Graph algorithms over the near-duplicate and embedding-neighbor graphs.
@@ -20,7 +20,7 @@ object GraphQueries {
         // 3 rounds — well-connected cluster members rank high (a quality/
         // canonicality weight for choosing cluster representatives)
         val pairs = nearDupPairs(s, dir)
-        Dedup.pageRank(pairs, "id_a", "id_b", iters, dampingPct)
+        Graph.pageRank(pairs, "id_a", "id_b", iters, dampingPct)
       }, OracleSql.graphPagerank(NumHashes, RowsPerBand, iters, dampingPct))
     },
 
@@ -32,7 +32,7 @@ object GraphQueries {
         // paths back to a seed — the soft counterpart of graph_bfs_depth's
         // hard hop bound (contamination spread scoring)
         val pairs = nearDupPairs(s, dir)
-        Dedup.personalizedPageRank(pairs, "id_a", "id_b",
+        Graph.personalizedPageRank(pairs, "id_a", "id_b",
           id => id % seedMod === 0, iters, dampingPct)
       }, OracleSql.graphPersonalizedPagerank(NumHashes, RowsPerBand, iters,
         dampingPct, seedMod))
@@ -43,14 +43,14 @@ object GraphQueries {
       // vertices sit in genuine duplicate cliques; chains of borderline
       // pairs carry none — a cheap cluster-vs-bridge separator
       val pairs = nearDupPairs(s, dir)
-      Dedup.triangleCounts(pairs, "id_a", "id_b")
+      Graph.triangleCounts(pairs, "id_a", "id_b")
     }, OracleSql.graphTriangles(NumHashes, RowsPerBand)),
 
     QueryDef("graph_clustering_coeff", (s, dir) => {
       // clique-vs-bridge separation on the same candidate graph as
       // graph_triangles: dup cliques score cc≈1, borderline chains ≈0
       val pairs = nearDupPairs(s, dir)
-      Dedup.clusteringCoefficient(pairs, "id_a", "id_b")
+      Graph.clusteringCoefficient(pairs, "id_a", "id_b")
     }, OracleSql.graphClusteringCoeff(NumHashes, RowsPerBand)),
 
     QueryDef("graph_link_predict", (s, dir) => {
@@ -202,7 +202,7 @@ object GraphQueries {
         // dense-duplicate-community extraction: 2-core of the near-dup
         // graph after 4 peel rounds — cliques survive, chains/stars don't
         val pairs = nearDupPairs(s, dir)
-        Dedup.kCore(pairs, "id_a", "id_b", k, rounds)
+        Graph.kCore(pairs, "id_a", "id_b", k, rounds)
       }, OracleSql.graphKcore(NumHashes, RowsPerBand, k, rounds))
     },
 
@@ -222,7 +222,7 @@ object GraphQueries {
         val seeds = pairs
           .select(explode(array(col("id_a"), col("id_b"))).as("id"))
           .distinct().orderBy("id").limit(nSeeds)
-        Dedup.bfsDepthsFromSeeds(pairs, "id_a", "id_b", seeds, rounds)
+        Graph.bfsDepthsFromSeeds(pairs, "id_a", "id_b", seeds, rounds)
       }, OracleSql.graphBfsDepth(NumHashes, RowsPerBand, nSeeds, rounds))
     },
 
@@ -316,7 +316,7 @@ object GraphQueries {
         val seeds = pairs
           .select(explode(array(col("id_a"), col("id_b"))).as("id"))
           .distinct().orderBy("id").limit(nSeeds)
-        Dedup.ssspFromSeeds(pairs, "id_a", "id_b", "w", seeds, rounds)
+        Graph.ssspFromSeeds(pairs, "id_a", "id_b", "w", seeds, rounds)
           .withColumnRenamed("dist", "dist_ppm")
       }, OracleSql.graphSssp(NumHashes, RowsPerBand, nSeeds, rounds))
     },
@@ -328,7 +328,7 @@ object GraphQueries {
         // mode-label rounds — bridges join their heavier side instead of
         // gluing components (contrast dedup_components)
         val pairs = nearDupPairs(s, dir)
-        Dedup.labelPropagation(pairs, "id_a", "id_b", rounds)
+        Graph.labelPropagation(pairs, "id_a", "id_b", rounds)
       }, OracleSql.graphLabelProp(NumHashes, RowsPerBand, rounds))
     },
 
@@ -346,7 +346,7 @@ object GraphQueries {
       // the graph_modularity formula) is >= label prop's on the
       // bridge-glue fixture.
       val pairs = nearDupPairs(s, dir)
-      Dedup.louvainLocalMove(pairs, "id_a", "id_b", rounds = 2)
+      Graph.louvainLocalMove(pairs, "id_a", "id_b", rounds = 2)
     }, OracleSql.graphLouvain()),
 
     QueryDef("graph_louvain_multilevel", (s, dir) => {
@@ -362,7 +362,7 @@ object GraphQueries {
       // bit-identical. The oracle replays the aggregation and the
       // weighted sweep in SQL.
       val pairs = nearDupPairs(s, dir)
-      Dedup.louvainMultilevel(pairs, "id_a", "id_b",
+      Graph.louvainMultilevel(pairs, "id_a", "id_b",
         rounds1 = 2, rounds2 = 2)
     }, OracleSql.graphLouvainMultilevel()),
 
@@ -375,7 +375,7 @@ object GraphQueries {
       // 2 mutual-reinforcement rounds in exact integers, L∞-normalized
       // by integer division each round.
       val pairs = nearDupPairs(s, dir)
-      Dedup.hits(pairs, "id_a", "id_b", iters = 2)
+      Graph.hits(pairs, "id_a", "id_b", iters = 2)
     }, OracleSql.graphHits()),
 
     QueryDef("graph_modularity", (s, dir) => {
@@ -389,7 +389,7 @@ object GraphQueries {
       val d = "decimal(38,0)"
       val pairs = nearDupPairs(s, dir)
         .localCheckpoint(false) // communities + edge rollups read it
-      val comm = Dedup.labelPropagation(pairs, "id_a", "id_b", rounds = 3)
+      val comm = Graph.labelPropagation(pairs, "id_a", "id_b", rounds = 3)
         .localCheckpoint(false) // joined twice + degree rollup
       val und = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
       val mstat = und.agg(count(lit(1)).as("m"))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Cleaning, IncrementalAgg, Joins, Merge, Split, Stamping}
-import graft.functions.{Dedup, Packing}
+import graft.functions.{Dedup, Graph, Packing}
 import graft.queries.QueryKit._
 
 /** The reference pipeline's own operators (universal cleaning, vertical
@@ -633,25 +633,29 @@ object PipelineQueries {
 
     QueryDef("incr_components_merge", (s, dir) => {
       // incremental dedup-graph maintenance: docs with doc_id % 5 == 0
-      // play "today's arrivals" — the base labeling is computed over
-      // edges among the stable 80% only, then the FULL edge set
-      // (delta edges touch a new doc) is closed by min-label
-      // propagation WARM-STARTED from the base labels. The fixed
-      // point provably equals a from-scratch recompute (the oracle
-      // runs the recursive-CTE closure over all edges), but the
-      // propagation only covers the changed region's diameter — the
-      // O(delta) nightly-maintenance pattern of incr_agg/incr_join,
-      // applied to the component structure itself.
+      // play "today's arrivals". The base labeling is computed over
+      // pairs among the stable 80% only; the merge then closes the
+      // stored base labels (one (doc_id, rep_id) row per old doc, each
+      // an edge to its component minimum) together with the delta
+      // pairs (those touching a new doc), so it never rereads the base
+      // pairs. Every pair is base or delta, so the closure has the
+      // components of the full graph: its labeling equals a
+      // from-scratch recompute (the oracle runs the recursive-CTE
+      // closure over all edges).
       val pairs = nearDupPairs(s, dir)
-        .localCheckpoint(true) // base split + warm propagation read it
-      val base = pairs
-        .filter(col("id_a") % 5 =!= 0 && col("id_b") % 5 =!= 0)
-      val baseLabels = Dedup.connectedComponents(base, "id_a", "id_b")
-      Dedup.incrementalComponents(pairs, "id_a", "id_b", baseLabels)
+        .localCheckpoint(true) // base and delta splits both read it
+      val isBase = col("id_a") % 5 =!= 0 && col("id_b") % 5 =!= 0
+      val baseLabels = Graph.components(pairs.filter(isBase),
+        "id_a", "id_b")
+      Graph.components(
+        baseLabels.select(col("doc_id").as("id_a"),
+            col("rep_id").as("id_b"))
+          .unionByName(pairs.filter(!isBase).select("id_a", "id_b")),
+        "id_a", "id_b")
     },
-      // incremental warm-start closure must EQUAL the from-scratch
-      // recursive closure over all edges — same oracle as
-      // dedup_components by design.
+      // the merged labeling must EQUAL the from-scratch recursive
+      // closure over all edges — same oracle as dedup_components by
+      // design.
       OracleSql.dedupComponents(NumHashes, RowsPerBand)),
 
     QueryDef("validate_freshness", (s, dir) => {

@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into Spark 4's `private[sql]` classic Dataset API so the
@@ -39,6 +41,20 @@ object PlanBridge {
     */
   def localCheckpointStatsBarrier(df: DataFrame,
                                   eager: Boolean): DataFrame = {
+    val (out, rdd) = statsBarrier(df)
+    if (eager) rdd.count()
+    out
+  }
+
+  /** Eager [[localCheckpointStatsBarrier]] that returns the frame's row
+    * count with it: the count is the one job that materializes it.
+    */
+  def countedStatsBarrier(df: DataFrame): (DataFrame, Long) = {
+    val (out, rdd) = statsBarrier(df)
+    (out, rdd.count())
+  }
+
+  private def statsBarrier(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
     import org.apache.spark.sql.execution.LogicalRDD
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val spark = ds.sparkSession
@@ -46,8 +62,7 @@ object PlanBridge {
     // reused mutable buffers and must be copied before caching
     val rdd = ds.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    if (eager) rdd.count()
-    classic.Dataset.ofRows(spark,
-      LogicalRDD(ds.queryExecution.analyzed.output, rdd)(spark))
+    (classic.Dataset.ofRows(spark,
+      LogicalRDD(ds.queryExecution.analyzed.output, rdd)(spark)), rdd)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dedup
+import graft.functions.Graph
 
 /** Round-6 operator family: HITS, incremental components, the DP
   * threshold table, trend/readability/HDR/sequence/CV queries.
@@ -14,7 +14,7 @@ class Round6OpsSpec extends SparkSpec {
     // 1→3, 2→3, 3→4: vertex 3 is the sole authority target of two
     // hubs; 4 is reachable only from 3.
     val e = Seq((1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val r = Dedup.hits(e, "a", "b", iters = 1)
+    val r = Graph.hits(e, "a", "b", iters = 1)
       .collect().map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2)))
       .toMap
     // auth raw: v3 = hub(1)+hub(2) = 2e6 (max), v4 = 1e6, v1=v2=0
@@ -32,7 +32,7 @@ class Round6OpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val e = Seq.fill(200)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter(p => p._1 != p._2).distinct.toDF("a", "b")
-    val r = Dedup.hits(e, "a", "b", iters = 3).collect()
+    val r = Graph.hits(e, "a", "b", iters = 3).collect()
     assert(r.nonEmpty)
     r.foreach { x =>
       assert(x.getLong(1) >= 0L && x.getLong(1) <= 1000000L)
@@ -49,15 +49,18 @@ class Round6OpsSpec extends SparkSpec {
         (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter(p => p._1 != p._2).distinct.toDF("a", "b")
       .localCheckpoint(true)
-    val full = Dedup.connectedComponents(pairs, "a", "b")
+    val full = Graph.components(pairs, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // base = edges among even "old" vertices only; delta = the rest
-    val base = pairs.filter(col("a") % 2 === 0 && col("b") % 2 === 0)
-    val baseLabels = Dedup.connectedComponents(base, "a", "b")
-    val incr = Dedup.incrementalComponents(pairs, "a", "b", baseLabels)
+    // base = edges among even "old" vertices only; delta = the rest.
+    // The merge closes the base labels together with the delta pairs.
+    val isBase = col("a") % 2 === 0 && col("b") % 2 === 0
+    val baseLabels = Graph.components(pairs.filter(isBase), "a", "b")
+    val incr = Graph.components(
+        baseLabels.select(col("doc_id").as("a"), col("rep_id").as("b"))
+          .unionByName(pairs.filter(!isBase)), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(incr == full,
-      "warm-started fixed point must equal the from-scratch labeling")
+      "merged base labels + delta must equal the from-scratch labeling")
   }
 
   test("dp threshold table covers [0, 2^40) exactly, monotone in k") {

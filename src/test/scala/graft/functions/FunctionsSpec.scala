@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 import graft.expressions.exprs
 
 class FunctionsSpec extends SparkSpec {
@@ -422,14 +422,20 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("connected components: chain, triangle, isolated pair → min-id reps") {
-    // chain 1-2-3-4 (diameter 3 exercises multi-round propagation),
+    // chain 1-2-3-4 (diameter 3 takes more than one star round),
     // triangle 10-11-12, plain pair 20-21
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
-      (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)))
+    // the default budget runs the union-find, "0" the star-contraction
+    // rounds
+    for (budget <- Seq(Graph.ccLocalMax.toString, "0")) {
+      val got = withCcLocalMax(budget) {
+        Graph.components(pairs, "id_a", "id_b").as[(Long, Long)].collect()
+      }
+      assert(got.toSet == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
+        (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)),
+        s"budget $budget")
+    }
   }
 
   test("triangle counts: clique counts C(n-1,2) per node, chains none") {
@@ -440,7 +446,7 @@ class FunctionsSpec extends SparkSpec {
       (3L, 2L), (2L, 1L), // reversed duplicates must not double-count
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L), (21L, 22L)).toDF("id_a", "id_b")
-    val got = Dedup.triangleCounts(pairs, "id_a", "id_b")
+    val got = Graph.triangleCounts(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       10L -> 1L, 11L -> 1L, 12L -> 1L))
@@ -516,57 +522,67 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("star contraction matches plain propagation on mixed clusters") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("id_a", "id_b")
-    val plain = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    val star = Dedup.starContraction(pairs, "id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(star == plain)
+    val ps = Seq((1L, 2L), (2L, 3L), (3L, 4L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L))
+    // plain min-label propagation, run to its fixpoint on the driver:
+    // each round every vertex takes the least label among itself and
+    // its neighbours
+    val adj = (ps ++ ps.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2) }
+    var plain = adj.keys.map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val next = plain.map { case (v, l) =>
+        v -> (l +: adj(v).map(plain)).min }
+      changed = next != plain
+      plain = next
+    }
+    // budget 0 pins the distributed star-contraction rounds
+    val star = withCcLocalMax("0") {
+      Graph.components(ps.toDF("id_a", "id_b"), "id_a", "id_b")
+        .as[(Long, Long)].collect().toSet
+    }
+    assert(star == plain.toSet)
   }
 
   test("star contraction converges on diameters plain propagation can't") {
-    // path 0-1-...-64: diameter 64. Plain min-label propagation moves a
-    // label one hop per round, so 10 rounds leave distant nodes
-    // unlabeled-to-minimum; large-star/small-star squares the jump
-    // length per round and converges within ~log2(64)+slack rounds.
-    // r15: pin the DISTRIBUTED rounds (budget 0) — the small-graph
-    // endgame would otherwise solve this 65-edge fixture exactly in
-    // one union-find task and defeat the premise under test
-    val old = sys.props.get("spark.graft.cc.local.max")
-    sys.props("spark.graft.cc.local.max") = "0"
-    try {
-      val path = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val star = Dedup.starContraction(path, "id_a", "id_b", maxIter = 10)
-        .as[(Long, Long)].collect().toSet
-      assert(star == (0L to 64L).map(i => (i, 0L)).toSet,
-        "star contraction must reach the component minimum")
-      val plain = Dedup.connectedComponents(path, "id_a", "id_b",
-        maxIter = 10).as[(Long, Long)].collect().toSet
-      assert(plain != star,
-        "10 rounds of one-hop propagation cannot cover diameter 64 " +
-          "(if this starts passing, the spec's premise changed)")
-    } finally {
-      old match {
-        case Some(o) => sys.props("spark.graft.cc.local.max") = o
-        case None => sys.props.remove("spark.graft.cc.local.max")
+    // path 0-1-...-64: diameter 64. Min-label propagation moves a label
+    // one hop per round, so it would need 64 rounds; large-star/
+    // small-star squares the jump length per round. Budget 0 pins the
+    // DISTRIBUTED rounds — the small-graph endgame would otherwise
+    // solve this 65-edge fixture in one union-find task.
+    def jobsOf(ps: Seq[(Long, Long)]): (Int, Set[(Long, Long)]) =
+      withCcLocalMax("0") {
+        var out: org.apache.spark.sql.DataFrame = null
+        val jobs = JobCount(spark) {
+          out = Graph.components(ps.toDF("id_a", "id_b"), "id_a", "id_b")
+        }
+        (jobs, out.as[(Long, Long)].collect().toSet)
       }
-    }
+    // a single edge takes exactly two rounds (the star, then the
+    // unchanged confirmation round) after the one count job; AQE runs
+    // each round's shuffle stages as jobs of their own
+    val perRound = (jobsOf(Seq((0L, 1L)))._1 - 1) / 2
+    val (jobs, labels) = jobsOf((0L until 64L).map(i => (i, i + 1)))
+    assert(labels == (0L to 64L).map(i => (i, 0L)).toSet,
+      "star contraction must reach the component minimum")
+    assert(jobs <= 1 + 10 * perRound,
+      s"$jobs jobs: more than 10 rounds of $perRound jobs each")
   }
 
   test("connected components leave no cached frames behind") {
     spark.catalog.clearCache()
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
-    assert(labels.count() == 5) // result usable after internal unpersists
-    val star = Dedup.starContraction(pairs, "id_a", "id_b")
+    val labels = Graph.components(pairs, "id_a", "id_b")
+    assert(labels.count() == 5)
+    val star = withCcLocalMax("0")(Graph.components(pairs, "id_a", "id_b"))
     assert(star.count() == 5)
     // private[sql] accessors are public at the bytecode level
     val ss = spark.getClass.getMethod("sharedState").invoke(spark)
     val cm = ss.getClass.getMethod("cacheManager").invoke(ss)
     val empty = cm.getClass.getMethod("isEmpty").invoke(cm)
       .asInstanceOf[Boolean]
-    assert(empty, "connectedComponents/starContraction retained a cache")
+    assert(empty, "Graph.components retained a cache")
   }
 
   test("minhash LSH candidates find planted near-duplicates") {

@@ -13,16 +13,16 @@ class GraphKcoreSpec extends SparkSpec {
   ).toDF("id_a", "id_b")
 
   test("2-core keeps the triangle and peels chains and pendants") {
-    val out = Dedup.kCore(pairs, "id_a", "id_b", k = 2, rounds = 4)
+    val out = Graph.kCore(pairs, "id_a", "id_b", k = 2, rounds = 4)
       .orderBy("doc_id").collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(out.forall(_.getLong(1) == 2L)) // within-core degrees
   }
 
   test("3-core of a triangle is empty; 1-core keeps everything") {
-    assert(Dedup.kCore(pairs, "id_a", "id_b", k = 3, rounds = 3)
+    assert(Graph.kCore(pairs, "id_a", "id_b", k = 3, rounds = 3)
       .count() == 0L)
-    assert(Dedup.kCore(pairs, "id_a", "id_b", k = 1, rounds = 1)
+    assert(Graph.kCore(pairs, "id_a", "id_b", k = 1, rounds = 1)
       .count() == 7L)
   }
 
@@ -31,11 +31,11 @@ class GraphKcoreSpec extends SparkSpec {
     // two endpoints — after 2 rounds the middle still survives, a
     // direct check of the documented bounded-round semantics
     val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val after2 = Dedup.kCore(chain, "id_a", "id_b", k = 2, rounds = 2)
+    val after2 = Graph.kCore(chain, "id_a", "id_b", k = 2, rounds = 2)
     // edges among {3..6} remain; of those, only 4 and 5 still have
     // degree >= 2 inside the peeled graph (the output's own gate)
     assert(after2.count() == 2L)
-    val after4 = Dedup.kCore(chain, "id_a", "id_b", k = 2, rounds = 4)
+    val after4 = Graph.kCore(chain, "id_a", "id_b", k = 2, rounds = 4)
     assert(after4.count() == 0L)
   }
 }

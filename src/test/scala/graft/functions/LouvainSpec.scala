@@ -48,7 +48,7 @@ class LouvainSpec extends SparkSpec {
 
   private def runEngine(edges: Set[(Long, Long)],
                         rounds: Int): Map[Long, Long] =
-    Dedup.louvainLocalMove(
+    Graph.louvainLocalMove(
         edges.toSeq.toDF("id_a", "id_b"), "id_a", "id_b", rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -100,7 +100,7 @@ class LouvainSpec extends SparkSpec {
       }.sum
     }
     val lv = runEngine(edges, 2)
-    val lp = Dedup.labelPropagation(
+    val lp = Graph.labelPropagation(
         edges.toSeq.toDF("id_a", "id_b"), "id_a", "id_b", rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(q(lv) >= q(lp),
@@ -123,7 +123,7 @@ class LouvainSpec extends SparkSpec {
 
   private def runMultilevel(edges: Set[(Long, Long)], r1: Int,
                             r2: Int): Map[Long, Long] =
-    Dedup.louvainMultilevel(
+    Graph.louvainMultilevel(
         edges.toSeq.toDF("id_a", "id_b"), "id_a", "id_b", r1, r2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 

@@ -143,10 +143,10 @@ class DbscanSpec extends SparkSpec {
       "to star contraction — one cluster, minimal label") {
     // 120 colinear points spaced eps apart: every point is core
     // (minPts=2 counting itself), the core graph is a path of diameter
-    // 119 — min-label propagation cannot converge in 40 rounds, so
-    // Dbscan.cluster must take the strict-throw → starContraction path
-    // and still emit ONE cluster labeled by the component minimum
-    // (a silent 40-round cut would split the chain into >1 label)
+    // 119 — min-label propagation cannot converge in 40 rounds; the
+    // components kernel must still emit ONE cluster labeled by the
+    // component minimum (a silent 40-round cut would split the chain
+    // into >1 label)
     val rows = (0L until 120L).map(i => (i, i * EPS, 0L))
     val out = collectOut(Dbscan.cluster(ptsDf(rows), EPS, 2L))
     assert(out.size == 120)
