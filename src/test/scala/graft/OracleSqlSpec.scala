@@ -65,11 +65,9 @@ class OracleSqlSpec extends SparkSpec {
   }
 
   test("generated oracles are well-formed (no unrendered interpolation)") {
-    val generated = Seq(
-      OracleSql.dedupMinhash(), OracleSql.dedupNgramJaccard(),
-      OracleSql.dedupSimhash(), OracleSql.dedupComponents(),
-      OracleSql.multimodalFeatures(), OracleSql.simLshTopK(),
-      OracleSql.simIvfTopK())
+    val generated = Seq("dedup_minhash", "dedup_ngram_jaccard",
+      "dedup_simhash", "dedup_components", "multimodal_features",
+      "sim_lsh_topk", "sim_ivf_topk").map(SparkEntry.oracleSql)
     generated.foreach { sql =>
       assert(sql.length > 500)
       assert(!sql.contains("$"), "unrendered interpolation")
@@ -77,6 +75,30 @@ class OracleSqlSpec extends SparkSpec {
     }
     // every query has an oracle and vice versa
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
+  test("oracle SQL matches the pinned per-query hashes") {
+    // src/test/resources/oracle_sql.sha256 holds one
+    // `name<TAB>sha256(oracle SQL)` line per query. Moving or rewriting
+    // an oracle generator must leave its SQL byte-identical; this checks
+    // that without Spark or DuckDB.
+    val src = scala.io.Source.fromResource("oracle_sql.sha256")
+    val pinned = try src.getLines().map { line =>
+      val Array(name, hash) = line.split('\t')
+      name -> hash
+    }.toMap finally src.close()
+    def sha256(s: String): String = java.security.MessageDigest
+      .getInstance("SHA-256")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+    val actual = SparkEntry.oracleSql.map { case (n, sql) => n -> sha256(sql) }
+    val unpinned = actual.keySet -- pinned.keySet
+    val gone = pinned.keySet -- actual.keySet
+    assert(unpinned.isEmpty, s"queries not pinned: ${unpinned.toSeq.sorted}")
+    assert(gone.isEmpty, s"pinned queries gone: ${gone.toSeq.sorted}")
+    val changed = actual.collect { case (n, h) if pinned(n) != h => n }
+    assert(changed.isEmpty,
+      s"oracle SQL changed: ${changed.toSeq.sorted.mkString(", ")}")
   }
 
   test("det4Minors ≡ det4 ≡ BigInt reference on signed random matrices") {
