@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Clustering, Curation, Dedup, ExactGrid, Graph,
   Importance, Packing, Sampling, TextFunctions}
 import graft.multimodal.Multimodal
+import graft.OracleSql.{adaptiveKSql, componentCtes, idHashCtes, kmeansCtes,
+  minhashCtes, roundSpark, shingleHashCtes, tokenHashCtes}
 import graft.queries.QueryKit._
 
 /** Training-data curation: quality gates, sampling, leakage-safe splits,
@@ -59,7 +61,28 @@ object CurationQueries {
           Sampling.assignSplit(col("rep"),
             Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
             .as("split"))
-    }, OracleSql.splitLeakageSafe()),
+    },
+      // Oracle for `split_leakage_safe`: component closure (the
+      // `dedup_components` CTEs), singleton docs their own rep, the REP id
+      // hashed through the XXH64 chain into the same 0.9/0.05/0.05 buckets
+      // as [[assignSplit]] — so every member of a near-dup cluster lands
+      // in the same split.
+      s"""WITH RECURSIVE ${tokenHashCtes()},
+         |${shingleHashCtes()},
+         |${minhashCtes(NumHashes, RowsPerBand)},
+         |${componentCtes(NumHashes)},
+         |full_docs AS (
+         |  SELECT d.doc_id, coalesce(c.rep_id, d.doc_id) AS rep
+         |  FROM documents d LEFT JOIN comp c USING (doc_id)),
+         |reps AS (SELECT DISTINCT rep AS doc_id FROM full_docs),
+         |${idHashCtes("reps", "doc_id")},
+         |bk AS (SELECT doc_id AS rep,
+         |         ((hv % 1000000) + 1000000) % 1000000 AS b FROM hashed)
+         |SELECT f.doc_id, f.rep,
+         |  CASE WHEN b < 900000 THEN 'train'
+         |       WHEN b < 950000 THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM full_docs f JOIN bk USING (rep)""".stripMargin),
 
     QueryDef("curate_canonical_docs", (s, dir) => {
       // canonical-doc selection: per near-dup cluster keep the highest-
@@ -78,7 +101,26 @@ object CurationQueries {
       functions.Curation.capPerGroup(j, "rep_id", "doc_id", ord, 1)
         .select(col("rep_id").as("cluster_rep"),
           col("doc_id").as("canonical_id"), col("quality"))
-    }, OracleSql.curateCanonicalDocs(QualityOracle)),
+    }, {
+      // Oracle for `curate_canonical_docs`: the component closure joined
+      // to the quality oracle; per cluster the (quality desc, doc_id asc)
+      // winner — mirroring the bounded top-1-by aggregate.
+      val qualitySql = QualityOracle
+      s"""WITH RECURSIVE ${tokenHashCtes()},
+         |${shingleHashCtes()},
+         |${minhashCtes(NumHashes, RowsPerBand)},
+         |${componentCtes(NumHashes)},
+         |q AS ($qualitySql),
+         |j AS (SELECT c.rep_id, c.doc_id, q.quality
+         |      FROM comp c JOIN q USING (doc_id)),
+         |r AS (SELECT rep_id, doc_id, quality,
+         |        row_number() OVER (PARTITION BY rep_id
+         |          ORDER BY CAST(round(quality * 10000) AS BIGINT) DESC,
+         |                   doc_id ASC) AS rn
+         |      FROM j)
+         |SELECT rep_id AS cluster_rep, doc_id AS canonical_id, quality
+         |FROM r WHERE rn = 1""".stripMargin
+    }),
 
     QueryDef("pack_training", (s, dir) => {
       // context-window packing: shard-local concat-and-chunk at a 2048-
@@ -230,9 +272,35 @@ object CurationQueries {
           .select("doc_id", "keep_prob", "n_tokens", "shard",
             "pack_in_shard", "pack_offset")
       },
-        OracleSql.trainingMixSemantic(
-          OracleSql.dedupSemantic(targetClusterSize, minK, iters, dim = 64,
-            minCos), QualityGateOracle, budgetTokens, shardSize))
+        {
+          // Oracle for `training_mix_semantic`: the composed embedding-side
+          // mix — `semSql` (the dedup_semantic oracle) names the dropped
+          // vec_ids, `gateSql` (the curate_quality_gate oracle) supplies
+          // keep_prob, and the survivors pack with the same shard-local cumsum
+          // as `pack_training`.
+          val semSql = OracleSql.dedupSemantic(targetClusterSize, minK, iters, dim = 64, minCos)
+          val gateSql = QualityGateOracle
+          s"""WITH sem AS ($semSql),
+             |gate AS ($gateSql),
+             |keepd AS (
+             |  SELECT d.doc_id, g.keep_prob,
+             |    CAST(len(regexp_extract_all(d.text,
+             |      '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens,
+             |    CAST(d.doc_id // $shardSize AS BIGINT) AS shard
+             |  FROM documents d JOIN gate g ON g.doc_id = d.doc_id
+             |  WHERE g.keep_prob >= 0.5
+             |    AND d.doc_id NOT IN (SELECT vec_id FROM sem)),
+             |c AS (
+             |  SELECT doc_id, keep_prob, n_tokens, shard,
+             |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
+             |      - n_tokens AS strt
+             |  FROM keepd)
+             |SELECT doc_id, keep_prob, n_tokens, shard,
+             |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
+             |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
+             |    AS pack_offset
+             |FROM c""".stripMargin
+        })
     },
 
     QueryDef("pack_length_batches", (s, dir) => {
@@ -265,45 +333,132 @@ object CurationQueries {
         |  CAST(strt // 512 AS BIGINT) AS batch_in_shard
         |FROM c""".stripMargin),
 
-    QueryDef("training_mix", (s, dir) => {
-      // the composed pipeline, end to end: near-dup clusters resolved and
-      // non-representatives dropped, quality gate, per-language
-      // deterministic sampling, shard-local context-window packing —
-      // every stage independently oracle-verified, composed here
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
-        .filter(col("est_jaccard") >= 0.5)
-      val drops = Graph.components(pairs, "id_a", "id_b")
-        .filter(col("rep_id") =!= col("doc_id")).select("doc_id")
-      val enriched = docs.select(col("doc_id"), col("text"),
-        TextFunctions.langId(col("text")).as("lang_pred"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-        .join(drops, Seq("doc_id"), "left_anti")
-        .filter(col("quality") >= 0.5)
-      val sampled = Sampling.sampleStratified(enriched, "doc_id",
-        col("lang_pred"), Map("en" -> 0.5), defaultRate = 0.9)
-      Packing.packForTraining(sampled, "doc_id",
-        TextFunctions.subwordCount(col("text")),
-        budgetTokens = 2048, shardSize = 100)
-        .select("doc_id", "lang_pred", "quality", "n_tokens", "shard",
-          "pack_in_shard", "pack_offset")
+    locally {
+      val minQuality = 0.5
+      val enThreshold = 500000L
+      val defaultThreshold = 900000L
+      val budgetTokens = 2048
+      val shardSize = 100
+      QueryDef("training_mix", (s, dir) => {
+        // the composed pipeline, end to end: near-dup clusters resolved and
+        // non-representatives dropped, quality gate, per-language
+        // deterministic sampling, shard-local context-window packing —
+        // every stage independently oracle-verified, composed here
+        val docs = t(s, dir, "documents")
+        val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
+          .filter(col("est_jaccard") >= 0.5)
+        val drops = Graph.components(pairs, "id_a", "id_b")
+          .filter(col("rep_id") =!= col("doc_id")).select("doc_id")
+        val enriched = docs.select(col("doc_id"), col("text"),
+          TextFunctions.langId(col("text")).as("lang_pred"),
+          TextFunctions.qualityScore(col("text")).as("quality"))
+          .join(drops, Seq("doc_id"), "left_anti")
+          .filter(col("quality") >= 0.5)
+        val sampled = Sampling.sampleStratified(enriched, "doc_id",
+          col("lang_pred"), Map("en" -> 0.5), defaultRate = 0.9)
+        Packing.packForTraining(sampled, "doc_id",
+          TextFunctions.subwordCount(col("text")),
+          budgetTokens = 2048, shardSize = 100)
+          .select("doc_id", "lang_pred", "quality", "n_tokens", "shard",
+            "pack_in_shard", "pack_offset")
+      },
+        {
+          // Oracle for `training_mix` — the composed pipeline: quality filter,
+          // near-dup removal (cluster non-representatives dropped), stratified
+          // hash sampling over the language strata, then shard-local sequence
+          // packing of the survivors. Every stage reuses the independently
+          // verified oracle formulation.
+          val langSql = LangIdOracle
+          val qualitySql = QualityOracle
+          s"""WITH RECURSIVE ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${componentCtes(NumHashes)},
+             |drops AS (SELECT doc_id FROM comp WHERE rep_id <> doc_id),
+             |lang AS ($langSql),
+             |qual AS ($qualitySql),
+             |${idHashCtes()},
+             |surv AS (
+             |  SELECT d.doc_id, l.lang_pred, q.quality,
+             |    CAST(len(regexp_extract_all(d.text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]'))
+             |      AS BIGINT) AS n_tokens
+             |  FROM documents d
+             |  JOIN lang l ON l.doc_id = d.doc_id
+             |  JOIN qual q ON q.doc_id = d.doc_id
+             |  WHERE q.quality >= $minQuality
+             |    AND d.doc_id NOT IN (SELECT doc_id FROM drops)),
+             |samp AS (
+             |  SELECT s.* FROM surv s JOIN hashed h ON h.doc_id = s.doc_id
+             |  WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
+             |    CASE WHEN s.lang_pred = 'en' THEN $enThreshold
+             |         ELSE $defaultThreshold END),
+             |pk AS (
+             |  SELECT *, CAST(doc_id // $shardSize AS BIGINT) AS shard,
+             |    sum(n_tokens) OVER (PARTITION BY doc_id // $shardSize
+             |      ORDER BY doc_id) - n_tokens AS strt
+             |  FROM samp)
+             |SELECT doc_id, lang_pred, quality, n_tokens, shard,
+             |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
+             |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
+             |    AS pack_offset
+             |FROM pk""".stripMargin
+        })
     },
-      OracleSql.trainingMix(LangIdOracle, QualityOracle,
-        minQuality = 0.5, enThreshold = 500000L,
-        defaultThreshold = 900000L, budgetTokens = 2048, shardSize = 100)),
 
-    QueryDef("curate_dsir_sample", (s, dir) => {
-      // DSIR: importance weights of every doc toward the en slice
-      // (hashed-unigram target/raw likelihood ratio), then a one-row
-      // percentile reduce broadcast back as the top-quartile gate —
-      // no global sort, no window
-      val w = Importance.dsirWeights(t(s, dir, "documents"),
-        "doc_id", "text", col("lang") === "en", dim = 4096)
-      val th = w.agg(percentile(col("imp_weight"), lit(0.75)).as("p75"))
-      w.crossJoin(broadcast(th))
-        .select(col("doc_id"), col("n_tokens"), col("imp_weight"),
-          (col("imp_weight") > col("p75")).as("keep"))
-    }, OracleSql.curateDsirSample()),
+    locally {
+      val dim = 4096
+      QueryDef("curate_dsir_sample", (s, dir) => {
+        // DSIR: importance weights of every doc toward the en slice
+        // (hashed-unigram target/raw likelihood ratio), then a one-row
+        // percentile reduce broadcast back as the top-quartile gate —
+        // no global sort, no window
+        val w = Importance.dsirWeights(t(s, dir, "documents"),
+          "doc_id", "text", col("lang") === "en", dim = 4096)
+        val th = w.agg(percentile(col("imp_weight"), lit(0.75)).as("p75"))
+        w.crossJoin(broadcast(th))
+          .select(col("doc_id"), col("n_tokens"), col("imp_weight"),
+            (col("imp_weight") > col("p75")).as("keep"))
+      }, {
+        // Oracle for `curate_dsir_sample`: DSIR importance weights from the
+        // same token-xxhash bucket stream — add-one-smoothed bucket models
+        // for the target slice vs the raw corpus, per-doc position-ordered
+        // fold of the `ln` ratio terms (identical long counts → identical
+        // IEEE doubles on both engines, same contract as `text_perplexity`),
+        // top-quartile keep via `quantile_cont` over the rounded weights
+        // (the `percentile` mirror established by `curate_quality_bins`).
+        val targetLang = "en"
+        s"""WITH ${tokenHashCtes()},
+           |tb AS MATERIALIZED (
+           |  SELECT k.doc_id, k.i AS pos, (k.thu % $dim) AS b,
+           |    (d.lang = '$targetLang') AS is_target
+           |  FROM tokh k JOIN documents d USING (doc_id)),
+           |tcn AS (SELECT b, count(*) AS ct FROM tb WHERE is_target
+           |        GROUP BY 1),
+           |rcn AS (SELECT b, count(*) AS cr FROM tb GROUP BY 1),
+           |tot AS (SELECT sum(CASE WHEN is_target THEN 1 ELSE 0 END)::BIGINT
+           |          AS nt, count(*)::BIGINT AS nr
+           |        FROM tb),
+           |terms AS (
+           |  SELECT tb.doc_id, tb.pos,
+           |    ln((coalesce(tcn.ct, 0) + 1.0)
+           |        / CAST(tot.nt + $dim AS DOUBLE))
+           |    - ln((rcn.cr + 1.0) / CAST(tot.nr + $dim AS DOUBLE)) AS lr
+           |  FROM tb LEFT JOIN tcn USING (b) JOIN rcn USING (b)
+           |    CROSS JOIN tot),
+           |agg AS (
+           |  SELECT doc_id,
+           |    list_reduce(list(lr ORDER BY pos), (a, x) -> a + x) AS raw,
+           |    count(*) AS n_tokens
+           |  FROM terms GROUP BY 1),
+           |w AS (
+           |  SELECT doc_id, n_tokens,
+           |    ${roundSpark("raw / n_tokens::DOUBLE", 4)} AS imp_weight
+           |  FROM agg),
+           |th AS (SELECT quantile_cont(imp_weight, 0.75) AS p75 FROM w)
+           |SELECT doc_id, n_tokens, imp_weight, (imp_weight > p75) AS keep
+           |FROM w, th""".stripMargin
+      })
+    },
 
     QueryDef("sample_quality_weighted", (s, dir) => {
       // quality-proportional keep: each doc survives with probability
@@ -313,10 +468,25 @@ object CurationQueries {
       Sampling.sampleWeighted(docs, "doc_id",
         TextFunctions.qualityScore(col("text")))
         .select("doc_id", "source")
-    }, OracleSql.sampleQualityWeighted(QualityOracle)),
+    }, {
+      // Oracle for `sample_quality_weighted`: the weighted Bernoulli gate —
+      // keep iff `xxhash64(doc_id) pmod 1e6 < floor(quality·1e6)`, with the
+      // quality score from the shared quality oracle (`qualitySql` reused
+      // verbatim so both queries share one definition of the weight).
+      val qualitySql = QualityOracle
+      s"""WITH q AS ($qualitySql),
+         |${idHashCtes()}
+         |SELECT h.doc_id, d.source
+         |FROM hashed h
+         |JOIN q ON q.doc_id = h.doc_id
+         |JOIN documents d ON d.doc_id = h.doc_id
+         |WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
+         |  CAST(floor(q.quality * 1000000) AS BIGINT)""".stripMargin
+    }),
 
     locally {
       val (iters, targetClusterSize, minK, quota) = (3, 256, 8, 16)
+      val dim = 64
       QueryDef("curate_cluster_quota", (s, dir) => {
         // semantic-diversity pruning: at most 16 members per k-means
         // cluster, chosen by deterministic id-hash — winner ids from the
@@ -326,24 +496,51 @@ object CurationQueries {
           "embedding", iters, targetClusterSize, minK)
           .select("vec_id", "cluster")
         Clustering.clusterQuota(assigned, "vec_id", "cluster", quota)
-      }, OracleSql.curateClusterQuota(targetClusterSize, minK, iters,
-        dim = 64, quota))
+      },
+        // Oracle for `curate_cluster_quota`: the adaptive k-means assignment
+        // (same CTEs as `cluster_kmeans`) with at most `quota` members kept
+        // per cluster by xxhash64(vec_id) DESCENDING — the same top-k-by-hash
+        // winner set the bounded aggregate produces.
+        s"""WITH ${kmeansCtes(adaptiveKSql(targetClusterSize, minK), iters, dim)},
+           |${idHashCtes("embeddings", "vec_id")},
+           |r AS (
+           |  SELECT f.vec_id, f.cluster,
+           |    row_number() OVER (PARTITION BY f.cluster
+           |      ORDER BY h.hv DESC, f.vec_id ASC) AS rn
+           |  FROM fin f JOIN hashed h ON h.vec_id = f.vec_id)
+           |SELECT vec_id, cluster FROM r WHERE rn <= $quota""".stripMargin)
     },
 
-    QueryDef("sample_stratified", (s, dir) => {
-      // deterministic per-language training-mix sampling: en kept at
-      // 25%, everything else at 75% — map-only, partition-independent.
-      // eagerStratum pins the gate above the langId projection, so the
-      // derived stratum evaluates once per row, not once in the pushed
-      // filter and again in the output projection
-      val withLang = t(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.langId(col("text")).as("lang_pred"))
-      Sampling.sampleStratified(withLang, "doc_id", col("lang_pred"),
-        Map("en" -> 0.25), defaultRate = 0.75, eagerStratum = true)
-        .select("doc_id", "lang_pred")
+    locally {
+      val enThreshold = 250000L
+      val defaultThreshold = 750000L
+      QueryDef("sample_stratified", (s, dir) => {
+        // deterministic per-language training-mix sampling: en kept at
+        // 25%, everything else at 75% — map-only, partition-independent.
+        // eagerStratum pins the gate above the langId projection, so the
+        // derived stratum evaluates once per row, not once in the pushed
+        // filter and again in the output projection
+        val withLang = t(s, dir, "documents").select(col("doc_id"),
+          TextFunctions.langId(col("text")).as("lang_pred"))
+        Sampling.sampleStratified(withLang, "doc_id", col("lang_pred"),
+          Map("en" -> 0.25), defaultRate = 0.75, eagerStratum = true)
+          .select("doc_id", "lang_pred")
+      },
+        {
+          // Oracle for `sample_stratified`: the deterministic hash gate
+          // (xxhash64(doc_id) pmod 1e6 under a per-language threshold) over the
+          // language-ID strata; `langSql` is the text_langid oracle, reused
+          // verbatim as a CTE so both queries share one definition of the
+          // stratum.
+          val langSql = LangIdOracle
+          s"""WITH lang AS ($langSql),
+             |${idHashCtes()}
+             |SELECT h.doc_id, l.lang_pred
+             |FROM hashed h JOIN lang l ON l.doc_id = h.doc_id
+             |WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
+             |  CASE WHEN l.lang_pred = 'en' THEN $enThreshold ELSE $defaultThreshold END""".stripMargin
+        })
     },
-      OracleSql.sampleStratified(LangIdOracle,
-        enThreshold = 250000L, defaultThreshold = 750000L)),
 
     QueryDef("sample_temperature", (s, dir) => {
       // alpha=0.5 temperature resampling over sources: one narrow count
@@ -353,7 +550,26 @@ object CurationQueries {
       Sampling.sampleTemperature(t(s, dir, "documents"), "doc_id",
         "source", alpha = 0.5)
         .select("doc_id", "source")
-    }, OracleSql.sampleTemperature()),
+    },
+      // Oracle for `sample_temperature`: per-source counts → temperature
+      // keep-thresholds `floor(1e6 * sqrt(n_min/n))` (alpha = 0.5; `sqrt`
+      // is correctly rounded under IEEE 754 in both engines, so the
+      // thresholds match bit-for-bit) → the same xxhash64(doc_id) gate as
+      // `sample_stratified`.
+      s"""WITH c AS (
+         |  SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY source),
+         |mn AS (SELECT min(n) AS nmin FROM c),
+         |thr AS (
+         |  SELECT source,
+         |    CAST(floor(1000000 * sqrt(nmin::DOUBLE / n::DOUBLE)) AS BIGINT)
+         |      AS thr
+         |  FROM c, mn),
+         |${idHashCtes()}
+         |SELECT d.doc_id, d.source
+         |FROM documents d
+         |JOIN hashed h ON h.doc_id = d.doc_id
+         |JOIN thr ON thr.source = d.source
+         |WHERE ((h.hv % 1000000) + 1000000) % 1000000 < thr.thr""".stripMargin),
 
     locally {
       val fractions = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)
@@ -362,7 +578,22 @@ object CurationQueries {
         // as the corpus grows — leak-free eval sets across versions
         t(s, dir, "documents").select(col("doc_id"),
           Sampling.assignSplit(col("doc_id"), fractions).as("split"))
-      }, OracleSql.assignSplit(fractions))
+      }, {
+        // Oracle for `split_train_val_test`: same id-hash bucket, same
+        // cumulative thresholds, first-match-wins CASE.
+        val scale = 1000000L
+        val cum = fractions.scanLeft(0.0) { case (a, (_, f)) => a + f }
+          .tail.map(c => (c * scale).toLong)
+        val whens = fractions.init.zip(cum.init)
+          .map { case ((n, _), t) => s"WHEN b < $t THEN '$n'" }
+          .mkString(" ")
+        s"""WITH ${idHashCtes()},
+           |bk AS (SELECT doc_id,
+           |         ((hv % $scale) + $scale) % $scale AS b FROM hashed)
+           |SELECT doc_id,
+           |  CASE $whens ELSE '${fractions.last._1}' END AS split
+           |FROM bk""".stripMargin
+      })
     },
 
     QueryDef("curate_domain_cap", (s, dir) => {
@@ -504,11 +735,32 @@ object CurationQueries {
 
     locally {
       val budget = 4000L
+      val shardBits = 6
       QueryDef("sample_budget_fill", (s, dir) =>
         // deterministic per-source budget fill in hash order — the
         // distributed-prefix-sum mix constructor (4000 chars per source)
         Sampling.budgetFill(t(s, dir, "documents"), "doc_id", "source",
-          length(col("text")), budget), OracleSql.sampleBudgetFill(budget))
+          length(col("text")), budget), {
+            // Oracle for `sample_budget_fill`: one global per-source window
+            // cumsum in (shard, hash, id) order — provably the same order as the
+            // engine's two-phase shard-offset + intra-shard prefix sum.
+            val shift = 64 - shardBits
+            val mask = (1L << shardBits) - 1
+            s"""WITH ${idHashCtes()},
+               |b AS (
+               |  SELECT d.source, d.doc_id, length(d.text)::BIGINT AS cost,
+               |         h.hv, ((h.hv >> $shift) & $mask) AS shard
+               |  FROM documents d JOIN hashed h ON h.doc_id = d.doc_id),
+               |c AS (
+               |  SELECT source, doc_id, cost,
+               |    CAST(sum(cost) OVER (PARTITION BY source
+               |      ORDER BY shard, hv, doc_id
+               |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - cost
+               |      AS BIGINT) AS cum_before
+               |  FROM b)
+               |SELECT source, doc_id, cost, cum_before
+               |FROM c WHERE cum_before < $budget""".stripMargin
+          })
     },
 
     QueryDef("curate_pareto", (s, dir) => {
@@ -643,49 +895,80 @@ object CurationQueries {
          |JOIN ac ON ac.n_frames = a.n_frames AND ac.fp = a.fp"""
         .stripMargin),
 
-    QueryDef("sample_priority_topk", (s, dir) => {
-      // PRIORITY SAMPLING (Duffield–Lund–Thorup, JACM'07): the
-      // fixed-SIZE weighted sample the curation stack lacked — the
-      // existing weighted gates (sample_quality_weighted,
-      // sample_temperature) are Bernoulli, whose output size drifts
-      // with the corpus; a training-data budget wants exactly k docs
-      // with long-doc-favoring inclusion AND an unbiased weight
-      // estimator. Priority q_i = w_i · 10¹² div u_i with u_i the
-      // doc's deterministic xxhash64 residue (the replayable-coin
-      // discipline every sampler in this engine uses), keep the k
-      // largest, threshold τ = the (k+1)-th priority, and emit the
-      // DLT estimator ŵ_i = max(w_i, τ) — Σŵ over the sample is
-      // unbiased for Σw over the corpus. Scale: the only global op is
-      // top-(k+1) — TakeOrderedAndProject, a per-partition heap +
-      // driver merge of k+1 rows, NO full sort/shuffle; the window
-      // runs on the k+1-row frame.
+    locally {
       val k = 100
-      val docs = t(s, dir, "documents")
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          size(split(lower(trim(col("text"))), "\\s+")).cast("long")
-            .as("w"))
-      val pri = docs
-        .withColumn("u",
-          pmod(xxhash64(col("doc_id")), lit(1000000000000L)) + 1)
-        .select(col("doc_id"), col("w"),
-          expr("w * 1000000000000 div u").as("priority"))
-      // one linear plan: rank and threshold both come from windows
-      // over the k+1-row TakeOrdered output (bounded single-task
-      // frames), so TakeOrderedAndProject stays visible and pinned in
-      // the final physical plan — no checkpoint/rejoin to hide it
-      pri.orderBy(col("priority").desc, col("doc_id").asc)
-        .limit(k + 1)
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("priority").desc, col("doc_id").asc)))
-        .withColumn("tau", max(when(col("rn") === k + 1,
-          col("priority"))).over(
-          Window.rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)))
-        .filter(col("rn") <= k)
-        .select(col("doc_id"), col("w"), col("priority"),
-          greatest(col("w"), col("tau")).as("w_hat"))
-    }, OracleSql.samplePriorityTopk()),
+      QueryDef("sample_priority_topk", (s, dir) => {
+        // PRIORITY SAMPLING (Duffield–Lund–Thorup, JACM'07): the
+        // fixed-SIZE weighted sample the curation stack lacked — the
+        // existing weighted gates (sample_quality_weighted,
+        // sample_temperature) are Bernoulli, whose output size drifts
+        // with the corpus; a training-data budget wants exactly k docs
+        // with long-doc-favoring inclusion AND an unbiased weight
+        // estimator. Priority q_i = w_i · 10¹² div u_i with u_i the
+        // doc's deterministic xxhash64 residue (the replayable-coin
+        // discipline every sampler in this engine uses), keep the k
+        // largest, threshold τ = the (k+1)-th priority, and emit the
+        // DLT estimator ŵ_i = max(w_i, τ) — Σŵ over the sample is
+        // unbiased for Σw over the corpus. Scale: the only global op is
+        // top-(k+1) — TakeOrderedAndProject, a per-partition heap +
+        // driver merge of k+1 rows, NO full sort/shuffle; the window
+        // runs on the k+1-row frame.
+        val k = 100
+        val docs = t(s, dir, "documents")
+          .filter(length(trim(col("text"))) > 0)
+          .select(col("doc_id"),
+            size(split(lower(trim(col("text"))), "\\s+")).cast("long")
+              .as("w"))
+        val pri = docs
+          .withColumn("u",
+            pmod(xxhash64(col("doc_id")), lit(1000000000000L)) + 1)
+          .select(col("doc_id"), col("w"),
+            expr("w * 1000000000000 div u").as("priority"))
+        // one linear plan: rank and threshold both come from windows
+        // over the k+1-row TakeOrdered output (bounded single-task
+        // frames), so TakeOrderedAndProject stays visible and pinned in
+        // the final physical plan — no checkpoint/rejoin to hide it
+        pri.orderBy(col("priority").desc, col("doc_id").asc)
+          .limit(k + 1)
+          .withColumn("rn", row_number().over(
+            Window.orderBy(col("priority").desc, col("doc_id").asc)))
+          .withColumn("tau", max(when(col("rn") === k + 1,
+            col("priority"))).over(
+            Window.rowsBetween(Window.unboundedPreceding,
+              Window.unboundedFollowing)))
+          .filter(col("rn") <= k)
+          .select(col("doc_id"), col("w"), col("priority"),
+            greatest(col("w"), col("tau")).as("w_hat"))
+      },
+        // Oracle for `sample_priority_topk`: Duffield–Lund–Thorup priority
+        // sampling — same xxhash64(doc_id) residue coin (the [[idHashCtes]]
+        // chain), same integer priority w·10¹² // (u+1), top-k by
+        // (priority DESC, doc_id ASC), threshold = the (k+1)-th priority,
+        // estimator ŵ = max(w, τ). When the corpus has ≤ k eligible docs
+        // there is no rank-(k+1) row and DLT defines NO threshold (every
+        // doc is taken, ŵ = w): tau joins LEFT with a 0 fallback so the
+        // oracle degrades exactly like the engine's null-skipping
+        // `greatest` instead of CROSS-JOINing against an empty frame
+        // (ADVICE r9).
+        s"""WITH ${idHashCtes()},
+           |dw AS (SELECT doc_id,
+           |    len(regexp_split_to_array(lower(trim(text)), '\\s+'))::BIGINT
+           |      AS w
+           |  FROM documents WHERE length(trim(text)) > 0),
+           |pr AS (SELECT dw.doc_id, dw.w,
+           |    ((h.hv % 1000000000000) + 1000000000000) % 1000000000000
+           |      + 1 AS u
+           |  FROM dw JOIN hashed h USING (doc_id)),
+           |q AS (SELECT doc_id, w,
+           |    (w::HUGEINT * 1000000000000) // u AS priority FROM pr),
+           |r AS (SELECT doc_id, w, priority,
+           |    row_number() OVER (ORDER BY priority DESC, doc_id ASC)
+           |      AS rn FROM q),
+           |tau AS (SELECT priority AS tv FROM r WHERE rn = ${k + 1})
+           |SELECT r.doc_id, r.w, r.priority::BIGINT AS priority,
+           |  greatest(r.w::HUGEINT, coalesce(tau.tv, 0))::BIGINT AS w_hat
+           |FROM r LEFT JOIN tau ON true WHERE rn <= $k""".stripMargin)
+    },
 
     QueryDef("curate_mmr", (s, dir) => {
       // TRUE maximal marginal relevance (Carbonell–Goldstein 1998) —

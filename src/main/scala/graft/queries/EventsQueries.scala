@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.TemporalJoins
 import graft.functions.{Analytics, ExactGrid}
+import graft.OracleSql.{Chain, hashLong, idHashCtes, roundSpark, sig}
 import graft.queries.QueryKit._
 
 /** Event-log and order analytics: sessions, funnels, cohorts, time-series
@@ -418,7 +419,26 @@ object EventsQueries {
         .select(col("event_type"), col("hour"), col("cnt"),
           round(col("num").cast("double") /
             sqrt(col("den2").cast("double")), 4).as("z"))
-    }, OracleSql.eventsAnomaly()),
+    },
+      // Oracle for `events_anomaly`: hourly counts per type, the z>3 gate
+      // in exact HUGEINT arithmetic, z derived from the same integers with
+      // the engine's IEEE association and Spark-semantics rounding.
+      s"""WITH hourly AS (
+         |  SELECT event_type,
+         |    CAST(CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS BIGINT)
+         |      AS hour,
+         |    count(*) AS cnt
+         |  FROM events GROUP BY 1, 2),
+         |st AS (
+         |  SELECT event_type, count(*)::HUGEINT AS n,
+         |    sum(cnt::HUGEINT) AS sc, sum(cnt::HUGEINT * cnt) AS scc
+         |  FROM hourly GROUP BY event_type)
+         |SELECT h.event_type, h.hour, h.cnt,
+         |  ${roundSpark(
+            "(n*h.cnt - sc)::DOUBLE / sqrt((n*scc - sc*sc)::DOUBLE)", 4)} AS z
+         |FROM hourly h JOIN st ON st.event_type = h.event_type
+         |WHERE (n*h.cnt - sc)*(n*h.cnt - sc) > 9*(n*scc - sc*sc)
+         |  AND n*h.cnt - sc > 0""".stripMargin),
 
     QueryDef("events_transitions", (s, dir) => {
       // first-order Markov transition matrix over each user's event
@@ -782,115 +802,229 @@ object EventsQueries {
         |  CASE WHEN ok = 1 THEN ar - al ELSE 0 END AS tau_e6
         |FROM a""".stripMargin),
 
-    QueryDef("orders_cox_ph", (s, dir) => {
-      // Cox proportional-hazards regression (Cox 1972, Breslow ties) —
-      // the COVARIATE-ADJUSTED member the survival family lacked: KM/
-      // Nelson–Aalen describe the curve, the log-rank test compares two
-      // groups, Cox quantifies per-covariate hazard ratios. Subjects =
-      // customers, duration = first order → reorder (right-censored at
-      // the horizon); covariates x1 = first-order value (/5e5), x2 =
-      // urgent/high priority dummy. 4 full-batch gradient-ascent rounds
-      // on the Breslow partial likelihood: per round ONE rollup of
-      // e9-rounded per-subject risk weights (exp touched once per
-      // subject, the logreg discipline) to the DISTINCT-day frame, one
-      // CALENDAR-BOUNDED suffix window (risk sets are suffix sums over
-      // duration — the KM single-partition discipline on a day-domain
-      // frame), and a 1-row gradient collect; β state is 2 doubles on
-      // the driver. All cross-engine-compared values are e6/e9 longs;
-      // the oracle unrolls the identical 4 rounds. Bound stated: S0 is
-      // a sum of e9 weights — exact to ~10⁹ subjects per fixture at
-      // |z| ≲ 1.
-      val od = t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderdate").cast("date")
-          .as("od"), col("o_totalprice"), col("o_orderpriority"),
-          col("o_orderkey"))
-      val hz = od.agg(max(col("od")).as("hz"))
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("od"), col("o_orderkey"))
-      val subj = od
-        .withColumn("rn", row_number().over(w))
-        .withColumn("nxt", lead("od", 1).over(w))
-        .filter(col("rn") === 1)
-        .crossJoin(broadcast(hz))
-        .select(
-          when(col("nxt").isNotNull, datediff(col("nxt"), col("od")))
-            .otherwise(datediff(col("hz"), col("od")))
-            .cast("long").as("dur"),
-          when(col("nxt").isNotNull, lit(1L)).otherwise(lit(0L))
-            .as("event"),
-          (col("o_totalprice") / 500000.0).as("x1"),
-          substring(col("o_orderpriority"), 1, 1).isin("1", "2")
-            .cast("int").cast("double").as("x2"))
-        .filter(col("dur") > 0)
-        .withColumn("x1_e6", round(col("x1") * 1000000.0, 0)
-          .cast("long"))
-        .withColumn("x2_e6", round(col("x2") * 1000000.0, 0)
-          .cast("long"))
-        .localCheckpoint(false) // 4 GD rounds + final frame re-read it
-        // (lazy, r15: the cnts head() materializes it in one action)
-      val cnts = subj.agg(count(lit(1)).as("n"),
-        sum("event").as("ne")).head()
-      val nSubj = cnts.getLong(0)
-      val nEvents = cnts.getLong(1)
+    locally {
+      val iters = 4
       val lr = 0.5
-      val wSuffix = Window.orderBy(col("dur").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def suffixFrame(b1: Double, b2: Double): DataFrame = {
-        val z = lit(b1) * col("x1") + lit(b2) * col("x2")
-        val wgt = exp(z)
-        subj
-          .withColumn("w_e9", round(wgt * 1000000000.0, 0)
+      QueryDef("orders_cox_ph", (s, dir) => {
+        // Cox proportional-hazards regression (Cox 1972, Breslow ties) —
+        // the COVARIATE-ADJUSTED member the survival family lacked: KM/
+        // Nelson–Aalen describe the curve, the log-rank test compares two
+        // groups, Cox quantifies per-covariate hazard ratios. Subjects =
+        // customers, duration = first order → reorder (right-censored at
+        // the horizon); covariates x1 = first-order value (/5e5), x2 =
+        // urgent/high priority dummy. 4 full-batch gradient-ascent rounds
+        // on the Breslow partial likelihood: per round ONE rollup of
+        // e9-rounded per-subject risk weights (exp touched once per
+        // subject, the logreg discipline) to the DISTINCT-day frame, one
+        // CALENDAR-BOUNDED suffix window (risk sets are suffix sums over
+        // duration — the KM single-partition discipline on a day-domain
+        // frame), and a 1-row gradient collect; β state is 2 doubles on
+        // the driver. All cross-engine-compared values are e6/e9 longs;
+        // the oracle unrolls the identical 4 rounds. Bound stated: S0 is
+        // a sum of e9 weights — exact to ~10⁹ subjects per fixture at
+        // |z| ≲ 1.
+        val od = t(s, dir, "orders")
+          .select(col("o_custkey"), col("o_orderdate").cast("date")
+            .as("od"), col("o_totalprice"), col("o_orderpriority"),
+            col("o_orderkey"))
+        val hz = od.agg(max(col("od")).as("hz"))
+        val w = Window.partitionBy("o_custkey")
+          .orderBy(col("od"), col("o_orderkey"))
+        val subj = od
+          .withColumn("rn", row_number().over(w))
+          .withColumn("nxt", lead("od", 1).over(w))
+          .filter(col("rn") === 1)
+          .crossJoin(broadcast(hz))
+          .select(
+            when(col("nxt").isNotNull, datediff(col("nxt"), col("od")))
+              .otherwise(datediff(col("hz"), col("od")))
+              .cast("long").as("dur"),
+            when(col("nxt").isNotNull, lit(1L)).otherwise(lit(0L))
+              .as("event"),
+            (col("o_totalprice") / 500000.0).as("x1"),
+            substring(col("o_orderpriority"), 1, 1).isin("1", "2")
+              .cast("int").cast("double").as("x2"))
+          .filter(col("dur") > 0)
+          .withColumn("x1_e6", round(col("x1") * 1000000.0, 0)
             .cast("long"))
-          .withColumn("wx1_e9", round(wgt * col("x1") * 1000000000.0,
-            0).cast("long"))
-          .withColumn("wx2_e9", round(wgt * col("x2") * 1000000000.0,
-            0).cast("long"))
-          .withColumn("z_e6", round(z * 1000000.0, 0).cast("long"))
-          .groupBy("dur")
-          .agg(sum("w_e9").as("s0"), sum("wx1_e9").as("s1"),
-            sum("wx2_e9").as("s2"), sum("event").as("d"),
-            sum(when(col("event") === 1, col("x1_e6")).otherwise(0L))
-              .as("dx1"),
-            sum(when(col("event") === 1, col("x2_e6")).otherwise(0L))
-              .as("dx2"),
-            sum(when(col("event") === 1, col("z_e6")).otherwise(0L))
-              .as("dz"))
-          .select(col("dur"), col("d"), col("dx1"), col("dx2"),
-            col("dz"),
-            sum("s0").over(wSuffix).as("cs0"),
-            sum("s1").over(wSuffix).as("cs1"),
-            sum("s2").over(wSuffix).as("cs2"))
-      }
-      var b1 = 0.0
-      var b2 = 0.0
-      for (_ <- 1 to 4) {
-        val g = suffixFrame(b1, b2).filter(col("d") > 0)
-          .agg(
-            (sum("dx1") - sum(col("d") *
-              round(col("cs1").cast("double") / col("cs0")
-                .cast("double") * 1000000.0, 0).cast("long")))
-              .as("g1"),
-            (sum("dx2") - sum(col("d") *
-              round(col("cs2").cast("double") / col("cs0")
-                .cast("double") * 1000000.0, 0).cast("long")))
-              .as("g2")).head()
-        b1 += lr * ((g.getLong(0).toDouble / 1000000.0) / nEvents)
-        b2 += lr * ((g.getLong(1).toDouble / 1000000.0) / nEvents)
-      }
-      // Breslow partial log-likelihood at the fitted betas: Σ_deaths z
-      // − Σ_t d·ln(S0(t)/1e9) — the one-number fit audit
-      suffixFrame(b1, b2).filter(col("d") > 0)
-        .agg((sum("dz") - sum(col("d") *
-          round(log(col("cs0").cast("double") / 1000000000.0)
-            * 1000000.0, 0).cast("long"))).as("pll_e6"))
-        .select(
-          round(lit(b1) * 1000000.0, 0).cast("long").as("b1_e6"),
-          round(lit(b2) * 1000000.0, 0).cast("long").as("b2_e6"),
-          round(exp(lit(b1)) * 1000000.0, 0).cast("long").as("hr1_e6"),
-          round(exp(lit(b2)) * 1000000.0, 0).cast("long").as("hr2_e6"),
-          lit(nSubj).as("n"), lit(nEvents).as("n_events"),
-          col("pll_e6"))
-    }, OracleSql.ordersCoxPh()),
+          .withColumn("x2_e6", round(col("x2") * 1000000.0, 0)
+            .cast("long"))
+          .localCheckpoint(false) // 4 GD rounds + final frame re-read it
+          // (lazy, r15: the cnts head() materializes it in one action)
+        val cnts = subj.agg(count(lit(1)).as("n"),
+          sum("event").as("ne")).head()
+        val nSubj = cnts.getLong(0)
+        val nEvents = cnts.getLong(1)
+        val lr = 0.5
+        val wSuffix = Window.orderBy(col("dur").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        def suffixFrame(b1: Double, b2: Double): DataFrame = {
+          val z = lit(b1) * col("x1") + lit(b2) * col("x2")
+          val wgt = exp(z)
+          subj
+            .withColumn("w_e9", round(wgt * 1000000000.0, 0)
+              .cast("long"))
+            .withColumn("wx1_e9", round(wgt * col("x1") * 1000000000.0,
+              0).cast("long"))
+            .withColumn("wx2_e9", round(wgt * col("x2") * 1000000000.0,
+              0).cast("long"))
+            .withColumn("z_e6", round(z * 1000000.0, 0).cast("long"))
+            .groupBy("dur")
+            .agg(sum("w_e9").as("s0"), sum("wx1_e9").as("s1"),
+              sum("wx2_e9").as("s2"), sum("event").as("d"),
+              sum(when(col("event") === 1, col("x1_e6")).otherwise(0L))
+                .as("dx1"),
+              sum(when(col("event") === 1, col("x2_e6")).otherwise(0L))
+                .as("dx2"),
+              sum(when(col("event") === 1, col("z_e6")).otherwise(0L))
+                .as("dz"))
+            .select(col("dur"), col("d"), col("dx1"), col("dx2"),
+              col("dz"),
+              sum("s0").over(wSuffix).as("cs0"),
+              sum("s1").over(wSuffix).as("cs1"),
+              sum("s2").over(wSuffix).as("cs2"))
+        }
+        var b1 = 0.0
+        var b2 = 0.0
+        for (_ <- 1 to 4) {
+          val g = suffixFrame(b1, b2).filter(col("d") > 0)
+            .agg(
+              (sum("dx1") - sum(col("d") *
+                round(col("cs1").cast("double") / col("cs0")
+                  .cast("double") * 1000000.0, 0).cast("long")))
+                .as("g1"),
+              (sum("dx2") - sum(col("d") *
+                round(col("cs2").cast("double") / col("cs0")
+                  .cast("double") * 1000000.0, 0).cast("long")))
+                .as("g2")).head()
+          b1 += lr * ((g.getLong(0).toDouble / 1000000.0) / nEvents)
+          b2 += lr * ((g.getLong(1).toDouble / 1000000.0) / nEvents)
+        }
+        // Breslow partial log-likelihood at the fitted betas: Σ_deaths z
+        // − Σ_t d·ln(S0(t)/1e9) — the one-number fit audit
+        suffixFrame(b1, b2).filter(col("d") > 0)
+          .agg((sum("dz") - sum(col("d") *
+            round(log(col("cs0").cast("double") / 1000000000.0)
+              * 1000000.0, 0).cast("long"))).as("pll_e6"))
+          .select(
+            round(lit(b1) * 1000000.0, 0).cast("long").as("b1_e6"),
+            round(lit(b2) * 1000000.0, 0).cast("long").as("b2_e6"),
+            round(exp(lit(b1)) * 1000000.0, 0).cast("long").as("hr1_e6"),
+            round(exp(lit(b2)) * 1000000.0, 0).cast("long").as("hr2_e6"),
+            lit(nSubj).as("n"), lit(nEvents).as("n_events"),
+            col("pll_e6"))
+      }, {
+        // Oracle for `orders_cox_ph`: the Breslow partial-likelihood
+        // gradient ascent unrolled round by round — identical subject
+        // frame (first order → reorder duration, horizon-censored),
+        // identical e9-rounded risk weights (exp touched once per subject
+        // per round), identical suffix-sum risk sets over the distinct-day
+        // frame, identical e6 ratio/rounding and double β updates in the
+        // same evaluation order. Every chain CTE is MATERIALIZED (the
+        // DuckDB inlining-explosion discipline).
+        val sb = new StringBuilder
+        sb.append(
+          s"""WITH od AS (
+             |  SELECT o_custkey, o_orderdate::DATE AS od, o_totalprice,
+             |    o_orderpriority, o_orderkey FROM orders),
+             |hz AS (SELECT max(od) AS hz FROM od),
+             |ranked AS (
+             |  SELECT o_custkey, od, o_totalprice, o_orderpriority,
+             |    row_number() OVER (PARTITION BY o_custkey
+             |      ORDER BY od, o_orderkey) AS rn,
+             |    lead(od) OVER (PARTITION BY o_custkey
+             |      ORDER BY od, o_orderkey) AS nxt
+             |  FROM od),
+             |subj AS (
+             |  SELECT CASE WHEN nxt IS NOT NULL
+             |      THEN datediff('day', od, nxt)
+             |      ELSE datediff('day', od, (SELECT hz FROM hz))
+             |      END::BIGINT AS dur,
+             |    CASE WHEN nxt IS NOT NULL THEN 1 ELSE 0 END::BIGINT
+             |      AS event,
+             |    o_totalprice / 500000.0 AS x1,
+             |    (substr(o_orderpriority, 1, 1) IN ('1', '2'))::INT::DOUBLE
+             |      AS x2
+             |  FROM ranked WHERE rn = 1),
+             |subje AS MATERIALIZED (
+             |  SELECT dur, event, x1, x2,
+             |    round(x1 * 1000000.0)::BIGINT AS x1_e6,
+             |    round(x2 * 1000000.0)::BIGINT AS x2_e6
+             |  FROM subj WHERE dur > 0),
+             |ne AS (SELECT sum(event)::BIGINT AS ne FROM subje),
+             |bt0 AS (SELECT 0.0::DOUBLE AS b1, 0.0::DOUBLE AS b2),
+             |""".stripMargin)
+        for (r <- 1 to iters) {
+          val sfx = "OVER (ORDER BY dur DESC ROWS BETWEEN UNBOUNDED " +
+            "PRECEDING AND CURRENT ROW)"
+          sb.append(
+            s"""pw$r AS MATERIALIZED (
+               |  SELECT s.dur, s.event, s.x1_e6, s.x2_e6,
+               |    round(exp(b.b1 * s.x1 + b.b2 * s.x2)
+               |      * 1000000000.0)::BIGINT AS w_e9,
+               |    round(exp(b.b1 * s.x1 + b.b2 * s.x2) * s.x1
+               |      * 1000000000.0)::BIGINT AS wx1_e9,
+               |    round(exp(b.b1 * s.x1 + b.b2 * s.x2) * s.x2
+               |      * 1000000000.0)::BIGINT AS wx2_e9
+               |  FROM subje s CROSS JOIN bt${r - 1} b),
+               |rd$r AS MATERIALIZED (
+               |  SELECT dur, sum(w_e9)::BIGINT AS s0,
+               |    sum(wx1_e9)::BIGINT AS s1, sum(wx2_e9)::BIGINT AS s2,
+               |    sum(event)::BIGINT AS d,
+               |    sum(CASE WHEN event = 1 THEN x1_e6 ELSE 0 END)::BIGINT
+               |      AS dx1,
+               |    sum(CASE WHEN event = 1 THEN x2_e6 ELSE 0 END)::BIGINT
+               |      AS dx2
+               |  FROM pw$r GROUP BY 1),
+               |sf$r AS MATERIALIZED (
+               |  SELECT dur, d, dx1, dx2,
+               |    sum(s0) $sfx::BIGINT AS cs0,
+               |    sum(s1) $sfx::BIGINT AS cs1,
+               |    sum(s2) $sfx::BIGINT AS cs2
+               |  FROM rd$r),
+               |gr$r AS MATERIALIZED (
+               |  SELECT (sum(dx1) - sum(d * round(cs1::DOUBLE / cs0::DOUBLE
+               |      * 1000000.0)::BIGINT))::BIGINT AS g1,
+               |    (sum(dx2) - sum(d * round(cs2::DOUBLE / cs0::DOUBLE
+               |      * 1000000.0)::BIGINT))::BIGINT AS g2
+               |  FROM sf$r WHERE d > 0),
+               |bt$r AS MATERIALIZED (
+               |  SELECT b.b1 + $lr * ((g.g1::DOUBLE / 1000000.0) / ne.ne)
+               |      AS b1,
+               |    b.b2 + $lr * ((g.g2::DOUBLE / 1000000.0) / ne.ne) AS b2
+               |  FROM bt${r - 1} b CROSS JOIN gr$r g CROSS JOIN ne),
+               |""".stripMargin)
+        }
+        sb.append(
+          s"""pwf AS MATERIALIZED (
+             |  SELECT s.dur, s.event,
+             |    round((b.b1 * s.x1 + b.b2 * s.x2) * 1000000.0)::BIGINT
+             |      AS z_e6,
+             |    round(exp(b.b1 * s.x1 + b.b2 * s.x2)
+             |      * 1000000000.0)::BIGINT AS w_e9
+             |  FROM subje s CROSS JOIN bt$iters b),
+             |rdf AS MATERIALIZED (
+             |  SELECT dur, sum(w_e9)::BIGINT AS s0, sum(event)::BIGINT AS d,
+             |    sum(CASE WHEN event = 1 THEN z_e6 ELSE 0 END)::BIGINT AS dz
+             |  FROM pwf GROUP BY 1),
+             |sff AS MATERIALIZED (
+             |  SELECT dur, d, dz,
+             |    sum(s0) OVER (ORDER BY dur DESC ROWS BETWEEN UNBOUNDED
+             |      PRECEDING AND CURRENT ROW)::BIGINT AS cs0
+             |  FROM rdf),
+             |nn AS (SELECT count(*)::BIGINT AS n FROM subje)
+             |SELECT round(b.b1 * 1000000.0)::BIGINT AS b1_e6,
+             |  round(b.b2 * 1000000.0)::BIGINT AS b2_e6,
+             |  round(exp(b.b1) * 1000000.0)::BIGINT AS hr1_e6,
+             |  round(exp(b.b2) * 1000000.0)::BIGINT AS hr2_e6,
+             |  nn.n AS n, ne.ne AS n_events,
+             |  (SELECT (sum(dz) - sum(d * round(ln(cs0::DOUBLE
+             |      / 1000000000.0) * 1000000.0)::BIGINT))::BIGINT
+             |   FROM sff WHERE d > 0) AS pll_e6
+             |FROM bt$iters b CROSS JOIN nn CROSS JOIN ne""".stripMargin)
+        sb.toString
+      })
+    },
 
     QueryDef("orders_survival_km", (s, dir) => {
       // Kaplan–Meier survival over inter-purchase gaps: time-to-next-
@@ -1238,7 +1372,49 @@ object EventsQueries {
           .select(col("day"),
             Kq.kq_quantile(col("msk"), 0.5).as("p50_cents"),
             Kq.kq_quantile(col("msk"), 0.9).as("p90_cents"))
-      }, OracleSql.eventsRollingQuantiles(k, window))
+      }, {
+        // Oracle for `events_rolling_quantiles`: per-day bottom-k sketch
+        // states merged over a trailing `window`-day frame. Reproduces the
+        // engine ([[graft.expressions.KqBuffer]]) EXACTLY: rows hash by
+        // event_id (the emulated xxhash64 chain, seed 42), each day keeps
+        // the k unsigned-smallest (hash → min value) pairs, the window
+        // merge re-applies the same rule over the union of the member
+        // days' samples (bottom-k of bottom-k unions is lossless), and the
+        // quantile is the value at 1-based rank `ceil(q·m)` of the merged
+        // sample's sorted values.
+        val ch = new Chain("rq",
+          "SELECT datediff('day', DATE '2024-01-01', ts::DATE)::INT AS day, " +
+            "CAST(round(value * 100) AS DOUBLE) AS v, " +
+            "event_id::HUGEINT AS ka FROM events")
+        val h = hashLong(ch, "ka", "42", "p")
+        s"""WITH ${ch.render},
+           |dd AS (SELECT day, $h AS hv, min(v) AS v
+           |       FROM ${ch.last} GROUP BY 1, 2),
+           |rk AS (SELECT day, hv, v,
+           |         row_number() OVER (PARTITION BY day ORDER BY hv) AS rn
+           |       FROM dd),
+           |smp AS (SELECT day, hv, v FROM rk WHERE rn <= $k),
+           |days AS (SELECT DISTINCT day FROM dd),
+           |wm AS (SELECT t.day AS day, s.hv, min(s.v) AS v
+           |       FROM days t JOIN smp s
+           |         ON s.day BETWEEN t.day - ${window - 1} AND t.day
+           |       GROUP BY 1, 2),
+           |wrk AS (SELECT day, hv, v,
+           |          row_number() OVER (PARTITION BY day ORDER BY hv) AS rn
+           |        FROM wm),
+           |wsmp AS (SELECT day, v FROM wrk WHERE rn <= $k),
+           |m AS (SELECT day, count(*) AS m FROM wsmp GROUP BY day),
+           |vr AS (SELECT s.day, s.v,
+           |         row_number() OVER (PARTITION BY s.day ORDER BY s.v) AS r
+           |       FROM wsmp s)
+           |SELECT vr.day,
+           |  max(CASE WHEN vr.r = greatest(1, least(m.m,
+           |    CAST(ceil(0.5 * m.m) AS BIGINT))) THEN vr.v END) AS p50_cents,
+           |  max(CASE WHEN vr.r = greatest(1, least(m.m,
+           |    CAST(ceil(0.9 * m.m) AS BIGINT))) THEN vr.v END) AS p90_cents
+           |FROM vr JOIN m ON m.day = vr.day
+           |GROUP BY 1""".stripMargin
+      })
     },
 
     QueryDef("events_new_users", (s, dir) => {
@@ -1796,51 +1972,94 @@ object EventsQueries {
         |    WHERE fp.pa = b.l_partkey AND fp.pb = c.l_partkey)
         |GROUP BY 1, 2, 3 HAVING count(*) >= 2""".stripMargin),
 
-    QueryDef("events_sprt", (s, dir) => {
-      // Wald's Sequential Probability Ratio Test (Wald 1945) — the
-      // SEQUENTIAL member the experimentation kit lacked: the A/B/
-      // power/CUPED queries are fixed-horizon, but a live experiment
-      // wants to STOP as soon as the evidence crosses a boundary,
-      // with error rates guaranteed by construction. H0: purchase
-      // share p = 0.25 vs H1: p = 0.30 on the treatment arm's event
-      // stream (arm = pmod(xxhash64(user_id), 2), the events_ab_test
-      // assignment), monitored daily. ZERO floats in either engine:
-      // the per-trial log-likelihood increments are precomputed
-      // integer constants (ln(p1/p0)·1e6 = 182322, ln(q1/q0)·1e6 =
-      // −68993 — literals, not libm calls), so LLR_e6 = c·182322 +
-      // (n−c)·(−68993) is exact integer arithmetic, compared against
-      // the Wald boundary ±ln(0.95/0.05)·1e6 = ±2944439 (α = β =
-      // 0.05). verdict: +1 accept H1, −1 accept H0, 0 continue;
-      // `stopped` = has any boundary been crossed by this day (the
-      // test's actual stopping rule — a cumulative max over the
-      // day-domain window). Scale: one map-side-combined daily
-      // rollup; the cumulative windows run over the calendar-bounded
-      // daily frame, never raw events.
+    locally {
       val lnA = 182322L
       val lnB = -68993L
       val up = 2944439L
-      val ev = t(s, dir, "events")
-        .filter(pmod(xxhash64(col("user_id")), lit(2)) === 1)
-        .select(datediff(col("ts").cast("date"),
-          lit("2024-01-01").cast("date")).cast("long").as("day"),
-          (col("event_type") === "purchase").cast("long").as("x"))
-      val daily = ev.groupBy("day")
-        .agg(count(lit(1)).as("n"), sum("x").as("c"))
-      val wCum = Window.orderBy(col("day").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily
-        .withColumn("n_cum", sum("n").over(wCum))
-        .withColumn("conv_cum", sum("c").over(wCum))
-        .withColumn("llr_e6",
-          col("conv_cum") * lnA + (col("n_cum") - col("conv_cum"))
-            * lnB)
-        .withColumn("verdict",
-          when(col("llr_e6") >= up, 1L)
-            .when(col("llr_e6") <= -up, -1L).otherwise(0L))
-        .withColumn("stopped", max(abs(col("verdict"))).over(wCum))
-        .select("day", "n_cum", "conv_cum", "llr_e6", "verdict",
-          "stopped")
-    }, OracleSql.eventsSprt()),
+      QueryDef("events_sprt", (s, dir) => {
+        // Wald's Sequential Probability Ratio Test (Wald 1945) — the
+        // SEQUENTIAL member the experimentation kit lacked: the A/B/
+        // power/CUPED queries are fixed-horizon, but a live experiment
+        // wants to STOP as soon as the evidence crosses a boundary,
+        // with error rates guaranteed by construction. H0: purchase
+        // share p = 0.25 vs H1: p = 0.30 on the treatment arm's event
+        // stream (arm = pmod(xxhash64(user_id), 2), the events_ab_test
+        // assignment), monitored daily. ZERO floats in either engine:
+        // the per-trial log-likelihood increments are precomputed
+        // integer constants (ln(p1/p0)·1e6 = 182322, ln(q1/q0)·1e6 =
+        // −68993 — literals, not libm calls), so LLR_e6 = c·182322 +
+        // (n−c)·(−68993) is exact integer arithmetic, compared against
+        // the Wald boundary ±ln(0.95/0.05)·1e6 = ±2944439 (α = β =
+        // 0.05). verdict: +1 accept H1, −1 accept H0, 0 continue;
+        // `stopped` = has any boundary been crossed by this day (the
+        // test's actual stopping rule — a cumulative max over the
+        // day-domain window). Scale: one map-side-combined daily
+        // rollup; the cumulative windows run over the calendar-bounded
+        // daily frame, never raw events.
+        val lnA = 182322L
+        val lnB = -68993L
+        val up = 2944439L
+        val ev = t(s, dir, "events")
+          .filter(pmod(xxhash64(col("user_id")), lit(2)) === 1)
+          .select(datediff(col("ts").cast("date"),
+            lit("2024-01-01").cast("date")).cast("long").as("day"),
+            (col("event_type") === "purchase").cast("long").as("x"))
+        val daily = ev.groupBy("day")
+          .agg(count(lit(1)).as("n"), sum("x").as("c"))
+        val wCum = Window.orderBy(col("day").asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        daily
+          .withColumn("n_cum", sum("n").over(wCum))
+          .withColumn("conv_cum", sum("c").over(wCum))
+          .withColumn("llr_e6",
+            col("conv_cum") * lnA + (col("n_cum") - col("conv_cum"))
+              * lnB)
+          .withColumn("verdict",
+            when(col("llr_e6") >= up, 1L)
+              .when(col("llr_e6") <= -up, -1L).otherwise(0L))
+          .withColumn("stopped", max(abs(col("verdict"))).over(wCum))
+          .select("day", "n_cum", "conv_cum", "llr_e6", "verdict",
+            "stopped")
+      },
+        // Oracle for `events_sprt`: Wald's SPRT replayed — the same
+        // xxhash64 arm assignment, daily purchase rollup, cumulative
+        // counts, and the PRECOMPUTED integer log-likelihood constants
+        // (182322 / −68993 e6 per trial, boundary ±2944439) — pure
+        // integer arithmetic end to end, no libm in either engine.
+        s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",
+             "user_id")},
+           |arm1 AS MATERIALIZED (
+           |  SELECT user_id, ((hv % 2) + 2) % 2 AS arm FROM hashed),
+           |daily AS MATERIALIZED (
+           |  SELECT datediff('day', DATE '2024-01-01', e.ts::DATE)
+           |      ::BIGINT AS day,
+           |    count(*)::BIGINT AS n,
+           |    sum((e.event_type = 'purchase')::BIGINT)::BIGINT AS c
+           |  FROM events e JOIN arm1 a USING (user_id)
+           |  WHERE a.arm = 1 GROUP BY 1),
+           |cum AS (
+           |  SELECT day,
+           |    sum(n) OVER w::BIGINT AS n_cum,
+           |    sum(c) OVER w::BIGINT AS conv_cum
+           |  FROM daily
+           |  WINDOW w AS (ORDER BY day ASC ROWS BETWEEN UNBOUNDED
+           |    PRECEDING AND CURRENT ROW)),
+           |llr AS (
+           |  SELECT day, n_cum, conv_cum,
+           |    (conv_cum * $lnA + (n_cum - conv_cum) * ($lnB))::BIGINT
+           |      AS llr_e6
+           |  FROM cum),
+           |v AS (
+           |  SELECT day, n_cum, conv_cum, llr_e6,
+           |    (CASE WHEN llr_e6 >= $up THEN 1
+           |      WHEN llr_e6 <= -$up THEN -1 ELSE 0 END)::BIGINT
+           |      AS verdict
+           |  FROM llr)
+           |SELECT day, n_cum, conv_cum, llr_e6, verdict,
+           |  max(abs(verdict)) OVER (ORDER BY day ASC ROWS BETWEEN
+           |    UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS stopped
+           |FROM v""".stripMargin)
+    },
 
     QueryDef("events_ab_test", (s, dir) => {
       // deterministic A/B harness: users assigned to arms by
@@ -1866,7 +2085,30 @@ object EventsQueries {
           sum("rev").as("revenue_cents"))
         .withColumn("heavy_ppm",
           expr("(n_heavy * 1000000) div n_users"))
-    }, OracleSql.eventsAbTest()),
+    },
+      // Oracle for `events_ab_test`: deterministic experiment assignment
+      // — `arm = pmod(xxhash64(user_id), 2)` over DISTINCT users (the
+      // exact hashLong emulation, so assignment is user-sticky and
+      // engine-reproducible) — then per-arm funnel metrics in exact
+      // integers.
+      s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",
+           "user_id")},
+         |arm AS (
+         |  SELECT user_id, ((hv % 2) + 2) % 2 AS arm FROM hashed),
+         |m AS (
+         |  SELECT e.user_id, a.arm,
+         |    count(CASE WHEN e.event_type = 'purchase' THEN 1 END) AS np,
+         |    sum(CASE WHEN e.event_type = 'purchase'
+         |        THEN CAST(round(e.value * 100) AS BIGINT)
+         |        ELSE 0 END) AS rev
+         |  FROM events e JOIN arm a USING (user_id) GROUP BY 1, 2)
+         |SELECT arm, count(*) AS n_users,
+         |  sum(CASE WHEN np >= 14 THEN 1 ELSE 0 END)::BIGINT AS n_heavy,
+         |  sum(np)::BIGINT AS n_purchases,
+         |  sum(rev)::BIGINT AS revenue_cents,
+         |  ((sum(CASE WHEN np >= 14 THEN 1 ELSE 0 END)::BIGINT * 1000000)
+         |    // count(*))::BIGINT AS heavy_ppm
+         |FROM m GROUP BY 1""".stripMargin),
 
     QueryDef("events_bandit_replay", (s, dir) => {
       // offline BANDIT POLICY REPLAY: an epsilon-greedy agent choosing
@@ -1935,7 +2177,88 @@ object EventsQueries {
         .withColumn("cum_regret_e6", sum("regret_e6").over(wDay))
         .select("day", "chosen_type", "explored", "reward_e6",
           "best_e6", "regret_e6", "cum_regret_e6")
-    }, OracleSql.eventsBanditReplay()),
+    }, {
+      // Oracle for `events_bandit_replay`: the epsilon-greedy replay
+      // rebuilt end-to-end — xxhash64(day) and xxhash64(day + 777)
+      // through the exact XXH64 chain emulation on the distinct-day
+      // frame, the complete (day × arm) grid with zero fill, cumulative
+      // PRIOR-day stats via 1-PRECEDING windows, e6 integral-div means
+      // with the same optimistic-init constant, argmax by
+      // (mean_e6 DESC, typ ASC), and the regret rollup.
+      val ch = new Chain("bd",
+        """SELECT day, day::HUGEINT AS d1u, (day + 777)::HUGEINT AS d2u
+          |  FROM (SELECT DISTINCT
+          |      datediff('day', DATE '2024-01-01', ts::DATE)::BIGINT
+          |        AS day
+          |    FROM events) q""".stripMargin)
+      val h1 = hashLong(ch, "d1u", "42::HUGEINT", "ga")
+      val h2 = hashLong(ch, "d2u", "42::HUGEINT", "gb")
+      ch.add("h1v", sig(h1))
+      ch.add("h2v", sig(h2))
+      s"""WITH ${ch.render},
+         |hday AS (SELECT day, h1v, h2v FROM ${ch.last}),
+         |evd AS (
+         |  SELECT datediff('day', DATE '2024-01-01', ts::DATE)::BIGINT
+         |      AS day,
+         |    event_type AS typ,
+         |    CAST(round(value * 100) AS BIGINT) AS cents
+         |  FROM events),
+         |daily AS MATERIALIZED (
+         |  SELECT day, typ, count(*)::BIGINT AS n,
+         |    sum(cents)::BIGINT AS cc
+         |  FROM evd GROUP BY 1, 2),
+         |grid AS (
+         |  SELECT d.day, t.typ, COALESCE(x.n, 0)::BIGINT AS n,
+         |    COALESCE(x.cc, 0)::BIGINT AS cc
+         |  FROM (SELECT DISTINCT day FROM daily) d
+         |  CROSS JOIN (SELECT DISTINCT typ FROM daily) t
+         |  LEFT JOIN daily x ON x.day = d.day AND x.typ = t.typ),
+         |st AS MATERIALIZED (
+         |  SELECT day, typ, n, cc,
+         |    COALESCE(sum(n) OVER (PARTITION BY typ ORDER BY day
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |      0)::BIGINT AS cn,
+         |    COALESCE(sum(cc) OVER (PARTITION BY typ ORDER BY day
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |      0)::BIGINT AS ccents
+         |  FROM grid),
+         |st2 AS MATERIALIZED (
+         |  SELECT day, typ, n, cc,
+         |    (CASE WHEN cn > 0 THEN (ccents::HUGEINT * 1000000) // cn
+         |      ELSE 1000000000000000 END)::BIGINT AS mean_e6,
+         |    (CASE WHEN n > 0 THEN (cc::HUGEINT * 1000000) // n
+         |      ELSE 0 END)::BIGINT AS dm_e6
+         |  FROM st),
+         |exploit AS (
+         |  SELECT day, typ AS ex_t FROM (
+         |    SELECT day, typ, row_number() OVER (PARTITION BY day
+         |      ORDER BY mean_e6 DESC, typ ASC) AS rn
+         |    FROM st2) r WHERE rn = 1),
+         |best AS (
+         |  SELECT day, max(dm_e6)::BIGINT AS best_e6 FROM st2 GROUP BY 1),
+         |arms AS (
+         |  SELECT day, list_sort(list(typ)) AS arms FROM st2 GROUP BY 1),
+         |chosen AS (
+         |  SELECT h.day,
+         |    ((h.h1v % 4) + 4) % 4 = 0 AS explored,
+         |    CASE WHEN ((h.h1v % 4) + 4) % 4 = 0
+         |      THEN a.arms[(((h.h2v % len(a.arms)) + len(a.arms))
+         |        % len(a.arms) + 1)::INT]
+         |      ELSE e.ex_t END AS chosen_type
+         |  FROM hday h JOIN exploit e ON e.day = h.day
+         |  JOIN arms a ON a.day = h.day),
+         |rew AS (
+         |  SELECT c.day, c.chosen_type, c.explored,
+         |    COALESCE(s.dm_e6, 0)::BIGINT AS reward_e6, b.best_e6
+         |  FROM chosen c JOIN best b ON b.day = c.day
+         |  LEFT JOIN st2 s ON s.day = c.day AND s.typ = c.chosen_type)
+         |SELECT day, chosen_type, explored, reward_e6, best_e6,
+         |  (best_e6 - reward_e6)::BIGINT AS regret_e6,
+         |  sum(best_e6 - reward_e6) OVER (ORDER BY day
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
+         |    AS cum_regret_e6
+         |FROM rew""".stripMargin
+    }),
 
     QueryDef("orders_rapid_repeat", (s, dir) => {
       // duplicate-submission / fraud audit: pairs of orders by the
@@ -2213,7 +2536,53 @@ object EventsQueries {
         .crossJoin(broadcast(obs))
         .select(col("n_days"), col("n_boot"), col("mean_obs_cents"),
           col("lo95_cents"), col("hi95_cents"))
-    }, OracleSql.eventsBootstrapCi(poissonThresholds, nBoot = bootstrapNBoot)),
+    }, {
+      // Oracle for `events_bootstrap_ci`: the daily rollup fanned out to
+      // `nBoot` replicates, Poisson(1) weights drawn through the SAME
+      // xxhash64(11, b, day) chain and threshold literals as the engine,
+      // replicate means by integer division, CI via order statistics.
+      val rows = poissonThresholds
+      val nBoot = bootstrapNBoot
+      val vals = rows
+        .map { case (w, lo, hi) => s"($w, ${lo}::HUGEINT, ${hi}::HUGEINT)" }
+        .mkString(", ")
+      val loRank = math.max(1, (nBoot * 25) / 1000)
+      val hiRank = nBoot - loRank
+      val ch = new Chain("bs",
+        "SELECT d.day::HUGEINT AS day, d.cents, rb.b::HUGEINT AS b " +
+          "FROM daily d CROSS JOIN " +
+          s"(SELECT unnest(range(0, $nBoot)) AS b) rb")
+      val h1 = hashLong(ch, "11::HUGEINT", "42::HUGEINT", "q")
+      val h2 = hashLong(ch, "b", h1, "r")
+      val h3 = hashLong(ch, "day", h2, "s")
+      val m = ch.add("m", s"($h3) % ${1L << 40}")
+      s"""WITH daily AS MATERIALIZED (
+         |  SELECT datediff('day', DATE '2024-01-01', ts::DATE)::BIGINT
+         |    AS day,
+         |    sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS cents
+         |  FROM events GROUP BY 1),
+         |${ch.render},
+         |tab(w, lo, hi) AS (SELECT * FROM (VALUES $vals)),
+         |wts AS (SELECT day, cents, b, w FROM ${ch.last}
+         |  JOIN tab ON $m >= lo AND $m < hi),
+         |means AS (SELECT b,
+         |    (sum(w * cents) // sum(w))::BIGINT AS mean_cents
+         |  FROM wts GROUP BY b HAVING sum(w) > 0),
+         |ranked AS (SELECT b, mean_cents,
+         |  row_number() OVER (ORDER BY mean_cents ASC, b ASC) AS rk
+         |  FROM means),
+         |ci AS (SELECT count(*)::BIGINT AS n_boot,
+         |  min(CASE WHEN rk = $loRank THEN mean_cents END)::BIGINT
+         |    AS lo95_cents,
+         |  min(CASE WHEN rk = $hiRank THEN mean_cents END)::BIGINT
+         |    AS hi95_cents
+         |  FROM ranked),
+         |obs AS (SELECT count(*)::BIGINT AS n_days,
+         |  (sum(cents) // count(*))::BIGINT AS mean_obs_cents FROM daily)
+         |SELECT o.n_days, c.n_boot, o.mean_obs_cents,
+         |  c.lo95_cents, c.hi95_cents
+         |FROM ci c CROSS JOIN obs o""".stripMargin
+    }),
 
     QueryDef("orders_cohort_ltv", (s, dir) => {
       // revenue LTV curves by acquisition cohort: customers grouped by
@@ -2312,7 +2681,48 @@ object EventsQueries {
           expr(s"cast((2 * $aN * 10000 + (case when $aN >= 0 then $bD" +
             s" else -$bD end)) div (2 * $bD) as double) / 10000.0")
             .as("did_cents"))
-    }, OracleSql.eventsDiffInDiff()),
+    },
+      // Oracle for `events_diff_in_diff`: the same arm hash and pre/post
+      // per-user revenue as [[eventsAbCuped]], four mean divisions, the
+      // DiD contrast as the identical IEEE chain.
+      s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",
+           "user_id")},
+         |arm AS (SELECT user_id, ((hv % 2) + 2) % 2 AS arm FROM hashed),
+         |per AS (
+         |  SELECT e.user_id,
+         |    sum(CASE WHEN datediff('day', DATE '2024-01-01',
+         |          e.ts::DATE) < 15 AND e.event_type = 'purchase'
+         |        THEN CAST(round(e.value * 100) AS BIGINT)
+         |        ELSE 0 END)::BIGINT AS x,
+         |    sum(CASE WHEN datediff('day', DATE '2024-01-01',
+         |          e.ts::DATE) >= 15 AND e.event_type = 'purchase'
+         |        THEN CAST(round(e.value * 100) AS BIGINT)
+         |        ELSE 0 END)::BIGINT AS y
+         |  FROM events e GROUP BY 1),
+         |pa AS MATERIALIZED (SELECT p.x, p.y, a.arm
+         |  FROM per p JOIN arm a USING (user_id)),
+         |arms AS (SELECT arm, count(*)::BIGINT AS n, sum(x)::BIGINT AS sx,
+         |  sum(y)::BIGINT AS sy FROM pa GROUP BY 1),
+         |a0 AS (SELECT n AS n0, sx AS sx0, sy AS sy0 FROM arms
+         |  WHERE arm = 0),
+         |a1 AS (SELECT n AS n1, sx AS sx1, sy AS sy1 FROM arms
+         |  WHERE arm = 1)
+         |SELECT n0, n1,
+         |  ((2 * sx0::HUGEINT * 10000 + n0) // (2 * n0::HUGEINT))::DOUBLE
+         |    / 10000.0 AS pre0,
+         |  ((2 * sy0::HUGEINT * 10000 + n0) // (2 * n0::HUGEINT))::DOUBLE
+         |    / 10000.0 AS post0,
+         |  ((2 * sx1::HUGEINT * 10000 + n1) // (2 * n1::HUGEINT))::DOUBLE
+         |    / 10000.0 AS pre1,
+         |  ((2 * sy1::HUGEINT * 10000 + n1) // (2 * n1::HUGEINT))::DOUBLE
+         |    / 10000.0 AS post1,
+         |  ((2 * ((sy1::HUGEINT - sx1::HUGEINT) * n0
+         |        - (sy0::HUGEINT - sx0::HUGEINT) * n1) * 10000
+         |      + (CASE WHEN (sy1::HUGEINT - sx1::HUGEINT) * n0
+         |            - (sy0::HUGEINT - sx0::HUGEINT) * n1 >= 0
+         |          THEN n0::HUGEINT * n1 ELSE -(n0::HUGEINT * n1) END))
+         |    // (2 * n0::HUGEINT * n1))::DOUBLE / 10000.0 AS did_cents
+         |FROM a0, a1""".stripMargin),
 
     QueryDef("events_power_analysis", (s, dir) => {
       // experiment sizing from the engine's own exact moments: users
@@ -2570,39 +2980,136 @@ object EventsQueries {
             (expr("cast(n*sxx - sx*sx AS double)") *
               expr("cast(n*syy - sy*sy AS double)")), 6)
             .as("var_reduction"))
-    }, OracleSql.eventsAbCuped()),
+    },
+      // Oracle for `events_ab_cuped`: the same arm hash as
+      // [[eventsAbTest]], pre/post per-user revenue, pooled exact
+      // moments, θ/adjusted-mean/variance-reduction as the identical
+      // IEEE chains over those integers.
+      s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",
+           "user_id")},
+         |arm AS (SELECT user_id, ((hv % 2) + 2) % 2 AS arm FROM hashed),
+         |per AS (
+         |  SELECT e.user_id,
+         |    sum(CASE WHEN datediff('day', DATE '2024-01-01',
+         |          e.ts::DATE) < 15 AND e.event_type = 'purchase'
+         |        THEN CAST(round(e.value * 100) AS BIGINT)
+         |        ELSE 0 END)::BIGINT AS x,
+         |    sum(CASE WHEN datediff('day', DATE '2024-01-01',
+         |          e.ts::DATE) >= 15 AND e.event_type = 'purchase'
+         |        THEN CAST(round(e.value * 100) AS BIGINT)
+         |        ELSE 0 END)::BIGINT AS y
+         |  FROM events e GROUP BY 1),
+         |pa AS (SELECT p.user_id, p.x, p.y, a.arm
+         |  FROM per p JOIN arm a USING (user_id)),
+         |pooled AS (SELECT count(*)::HUGEINT AS n,
+         |    sum(x::HUGEINT) AS sx, sum(y::HUGEINT) AS sy,
+         |    sum(x::HUGEINT * x) AS sxx, sum(x::HUGEINT * y) AS sxy,
+         |    sum(y::HUGEINT * y) AS syy FROM pa),
+         |arms AS (SELECT arm, count(*)::BIGINT AS n_users,
+         |    sum(x)::BIGINT AS sx_arm, sum(y)::BIGINT AS sy_arm
+         |  FROM pa GROUP BY 1),
+         |j AS (SELECT a.arm, a.n_users, a.sx_arm, a.sy_arm,
+         |    p.n, p.sx, p.sy, p.sxx, p.sxy, p.syy,
+         |    (p.n*p.sxy - p.sx*p.sy)::DOUBLE /
+         |      (p.n*p.sxx - p.sx*p.sx)::DOUBLE AS th
+         |  FROM arms a CROSS JOIN pooled p)
+         |SELECT arm, n_users, sx_arm, sy_arm,
+         |  ${roundSpark("th", 6)} AS theta,
+         |  ${roundSpark(
+               "sy_arm::DOUBLE / n_users - th * (sx_arm::DOUBLE / n_users" +
+                 " - sx::DOUBLE / n::DOUBLE)", 4)} AS adj_mean_y_cents,
+         |  ${roundSpark(
+               "(n*sxy - sx*sy)::DOUBLE * (n*sxy - sx*sy)::DOUBLE / " +
+                 "((n*sxx - sx*sx)::DOUBLE * (n*syy - sy*sy)::DOUBLE)",
+               6)} AS var_reduction
+         |FROM j""".stripMargin),
 
-    QueryDef("events_dtw_pairs", (s, dir) => {
-      // dynamic-time-warping similarity between user activity SHAPES:
-      // each of the 8 most-active users gets a 24-bin hour-of-day
-      // profile (exact Long counts), then every pair is scored with
-      // the native dtw_distance expression — elastic alignment, so a
-      // user who does the same thing 2 hours later still scores close.
-      // The profile rollup is one map-side-combined pass over events
-      // (24 conditional sums, no shuffle beyond the groupBy); the pair
-      // join is top-8 × top-8 (bounded, broadcast), and the DP itself
-      // is a codegen'd scalar — at 100 TB the only data-sized cost is
-      // the single profile scan.
-      import graft.expressions.DtwDistanceCol.dtw_distance
-      val prof = t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          array((0 until 24).map(h =>
-            sum(when(hour(col("ts")) === h, 1L).otherwise(0L))): _*)
-            .as("prof"))
-      // materialize the 8-row top frame: both pair-join sides read it,
-      // and an uncut plan would run the full profile scan TWICE
-      val top = prof.orderBy(col("n_events").desc, col("user_id"))
-        .limit(8).select(col("user_id"), col("prof"))
-        .localCheckpoint(true)
-      top.select(col("user_id").as("user_a"), col("prof").as("pa"))
-        .join(
-          top.select(col("user_id").as("user_b"), col("prof").as("pb")),
-          col("user_a") < col("user_b"))
-        .select(col("user_a"), col("user_b"),
-          dtw_distance(col("pa"), col("pb")).as("dtw_cost"))
-    }, OracleSql.eventsDtwPairs()),
+    locally {
+      val dim = 24
+      val topN = 8
+      QueryDef("events_dtw_pairs", (s, dir) => {
+        // dynamic-time-warping similarity between user activity SHAPES:
+        // each of the 8 most-active users gets a 24-bin hour-of-day
+        // profile (exact Long counts), then every pair is scored with
+        // the native dtw_distance expression — elastic alignment, so a
+        // user who does the same thing 2 hours later still scores close.
+        // The profile rollup is one map-side-combined pass over events
+        // (24 conditional sums, no shuffle beyond the groupBy); the pair
+        // join is top-8 × top-8 (bounded, broadcast), and the DP itself
+        // is a codegen'd scalar — at 100 TB the only data-sized cost is
+        // the single profile scan.
+        import graft.expressions.DtwDistanceCol.dtw_distance
+        val prof = t(s, dir, "events")
+          .groupBy(col("user_id"))
+          .agg(
+            count(lit(1)).as("n_events"),
+            array((0 until 24).map(h =>
+              sum(when(hour(col("ts")) === h, 1L).otherwise(0L))): _*)
+              .as("prof"))
+        // materialize the 8-row top frame: both pair-join sides read it,
+        // and an uncut plan would run the full profile scan TWICE
+        val top = prof.orderBy(col("n_events").desc, col("user_id"))
+          .limit(8).select(col("user_id"), col("prof"))
+          .localCheckpoint(true)
+        top.select(col("user_id").as("user_a"), col("prof").as("pa"))
+          .join(
+            top.select(col("user_id").as("user_b"), col("prof").as("pb")),
+            col("user_a") < col("user_b"))
+          .select(col("user_a"), col("user_b"),
+            dtw_distance(col("pa"), col("pb")).as("dtw_cost"))
+      }, {
+        // Oracle for `events_dtw_pairs`: replays the engine's full DTW DP
+        // (exact Long |a−b| cost, min over up/left/diag) as a recursive CTE
+        // that fills the dim×dim grid ONE cell per iteration in row-major
+        // order, carrying the grid as a growing BIGINT list — recursion
+        // materializes every step, so the 3-reference-per-cell recurrence
+        // can't hit DuckDB's CTE-inlining explosion (pitfall the chained-
+        // alias form would). Cell (i,j) lives at 1-based list position
+        // i*dim+j+1; unavailable neighbors take a large sentinel that can
+        // never win `least` (every cell after the first has ≥1 real
+        // neighbor). Profiles and the top-N frame are MATERIALIZED (each
+        // referenced twice by the pair self-join).
+        require(dim >= 2 && topN >= 2, s"need dim/topN >= 2: $dim/$topN")
+        val lastK = dim * dim - 1
+        val sent = "4611686018427387904" // 2^62: never wins least()
+        s"""WITH RECURSIVE grid AS (
+           |  SELECT e.user_id, x.h,
+           |    sum(CASE WHEN extract(hour FROM e.ts) = x.h
+           |        THEN 1 ELSE 0 END)::BIGINT AS cnt
+           |  FROM events e
+           |    CROSS JOIN (SELECT unnest(range($dim)) AS h) x
+           |  GROUP BY e.user_id, x.h),
+           |prof AS MATERIALIZED (
+           |  SELECT user_id, sum(cnt)::BIGINT AS n_events,
+           |    list(cnt ORDER BY h) AS prof
+           |  FROM grid GROUP BY user_id),
+           |top AS MATERIALIZED (
+           |  SELECT user_id, prof FROM prof
+           |  ORDER BY n_events DESC, user_id LIMIT $topN),
+           |pairs AS MATERIALIZED (
+           |  SELECT a.user_id AS user_a, b.user_id AS user_b,
+           |    a.prof AS av, b.prof AS bv
+           |  FROM top a JOIN top b ON a.user_id < b.user_id),
+           |dp AS (
+           |  SELECT user_a, user_b, av, bv, 0 AS k,
+           |    [abs(av[1] - bv[1])] AS cells
+           |  FROM pairs
+           |  UNION ALL
+           |  SELECT user_a, user_b, av, bv, k + 1,
+           |    list_append(cells,
+           |      abs(av[(k + 1) // $dim + 1] - bv[(k + 1) % $dim + 1]) +
+           |      least(
+           |        CASE WHEN (k + 1) // $dim > 0
+           |          THEN cells[k - ${dim - 2}] ELSE $sent END,
+           |        CASE WHEN (k + 1) % $dim > 0
+           |          THEN cells[k + 1] ELSE $sent END,
+           |        CASE WHEN (k + 1) // $dim > 0 AND (k + 1) % $dim > 0
+           |          THEN cells[k - ${dim - 1}] ELSE $sent END))
+           |  FROM dp WHERE k < $lastK)
+           |SELECT user_a, user_b, cells[${lastK + 1}]::BIGINT AS dtw_cost
+           |FROM dp WHERE k = $lastK""".stripMargin
+      })
+    },
 
     QueryDef("events_cem_att", (s, dir) => {
       // coarsened exact matching (Iacus–King–Porro 2012) — the
@@ -3084,7 +3591,59 @@ object EventsQueries {
           col("n2").as("n_click"), col("f_e6"),
           when(col("ok") && col("f_e6") >= 2995733L, 1L)
             .otherwise(0L).as("reject_05"))
-    }, OracleSql.eventsAnovaF()),
+    }, {
+      // Oracle for `events_anova_f`: the same per-group sums, HUGEINT
+      // Σv², the identical floor decomposition of S²/n, and the same
+      // staged integral division — engine-identical to the last cent².
+      def tg(sC: String, nC: String): String = {
+        val a = s"($sC // greatest($nC, 1))"
+        val r = s"($sC - $a * $nC)"
+        s"($a::HUGEINT * $a * $nC + 2 * $a::HUGEINT * $r" +
+          s" + ($r * $r // greatest($nC, 1))::HUGEINT)"
+      }
+      s"""WITH ev AS MATERIALIZED (
+         |  SELECT CASE WHEN event_type = 'purchase' THEN 0
+         |      WHEN event_type = 'view' THEN 1 ELSE 2 END AS g,
+         |    CAST(round(value * 100) AS BIGINT) AS v
+         |  FROM events
+         |  WHERE event_type IN ('purchase', 'view', 'click')),
+         |a AS (
+         |  SELECT
+         |    sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)::BIGINT AS n0,
+         |    sum(CASE WHEN g = 1 THEN 1 ELSE 0 END)::BIGINT AS n1,
+         |    sum(CASE WHEN g = 2 THEN 1 ELSE 0 END)::BIGINT AS n2,
+         |    sum(CASE WHEN g = 0 THEN v ELSE 0 END)::BIGINT AS s0,
+         |    sum(CASE WHEN g = 1 THEN v ELSE 0 END)::BIGINT AS s1,
+         |    sum(CASE WHEN g = 2 THEN v ELSE 0 END)::BIGINT AS s2,
+         |    sum(v::HUGEINT * v) AS q
+         |  FROM ev),
+         |b AS (
+         |  SELECT n0, n1, n2, (n0 + n1 + n2)::BIGINT AS nn,
+         |    (s0 + s1 + s2)::BIGINT AS ss, s0, s1, s2, q
+         |  FROM a),
+         |c AS (
+         |  SELECT n0, n1, n2, nn, q,
+         |    (${tg("s0", "n0")} + ${tg("s1", "n1")}
+         |      + ${tg("s2", "n2")}) AS tsum,
+         |    ${tg("ss", "nn")} AS gg
+         |  FROM b),
+         |e AS (
+         |  SELECT n0, n1, n2, nn, (tsum - gg) AS ssb, (q - tsum) AS ssw
+         |  FROM c),
+         |f AS (
+         |  SELECT n0, n1, n2,
+         |    (n0 > 0 AND n1 > 0 AND n2 > 0 AND nn > 3 AND ssw > 0)
+         |      AS ok,
+         |    CASE WHEN n0 > 0 AND n1 > 0 AND n2 > 0 AND nn > 3
+         |        AND ssw > 0
+         |      THEN (ssb * (nn - 3) * 1000000 // (ssw * 2))::BIGINT
+         |      ELSE 0 END AS f_e6
+         |  FROM e)
+         |SELECT n0 AS n_purchase, n1 AS n_view, n2 AS n_click, f_e6,
+         |  CASE WHEN ok AND f_e6 >= 2995733 THEN 1 ELSE 0 END::BIGINT
+         |    AS reject_05
+         |FROM f""".stripMargin
+    }),
 
     QueryDef("events_kruskal_wallis", (s, dir) => {
       // Kruskal–Wallis H — the k-SAMPLE extension of

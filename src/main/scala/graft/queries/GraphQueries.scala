@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, Graph}
+import graft.OracleSql.{Chain, edgeCtes, embLshPairsCtes, eRatioE, estJaccardE4,
+  hashLong, minhashCtes, shingleHashCtes, tokenHashCtes}
 import graft.queries.QueryKit._
 
 /** Graph algorithms over the near-duplicate and embedding-neighbor graphs.
@@ -21,7 +23,40 @@ object GraphQueries {
         // canonicality weight for choosing cluster representatives)
         val pairs = nearDupPairs(s, dir)
         Graph.pageRank(pairs, "id_a", "id_b", iters, dampingPct)
-      }, OracleSql.graphPagerank(NumHashes, RowsPerBand, iters, dampingPct))
+      }, {
+        // Oracle for `graph_pagerank`: the same edge closure, outdegrees,
+        // and `iters` unrolled integer-exact rank rounds
+        // (`floor(rank·damping% / (100·deg))` contributions, long sums,
+        // constant teleport in millionths).
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
+             |r0 AS (SELECT id, 1000000::BIGINT AS rank FROM verts)""".stripMargin
+        for (i <- 1 to iters) {
+          sb ++=
+            s""",
+               |c$i AS (
+               |  SELECT e.dst AS id,
+               |    CAST(floor(r${i - 1}.rank * $dampingPct
+               |      / (100 * deg.deg)) AS BIGINT) AS c
+               |  FROM edges e
+               |  JOIN r${i - 1} ON r${i - 1}.id = e.src
+               |  JOIN deg ON deg.src = e.src),
+               |r$i AS (
+               |  SELECT v.id,
+               |    (${(100L - dampingPct) * 10000L} + coalesce(s.i, 0))::BIGINT
+               |      AS rank
+               |  FROM verts v LEFT JOIN (
+               |    SELECT id, sum(c)::BIGINT AS i FROM c$i GROUP BY 1) s
+               |    USING (id))""".stripMargin
+        }
+        sb ++= s"\nSELECT id AS doc_id, rank FROM r$iters"
+        sb.toString
+      })
     },
 
     locally {
@@ -34,8 +69,42 @@ object GraphQueries {
         val pairs = nearDupPairs(s, dir)
         Graph.personalizedPageRank(pairs, "id_a", "id_b",
           id => id % seedMod === 0, iters, dampingPct)
-      }, OracleSql.graphPersonalizedPagerank(NumHashes, RowsPerBand, iters,
-        dampingPct, seedMod))
+      }, {
+        // Oracle for `graph_personalized_pagerank`: [[graphPagerank]] with
+        // the initial mass and the per-round teleport gated to the seed set
+        // (`id % seedMod = 0`) — mirroring
+        // [[graft.functions.Graph.personalizedPageRank]] exactly.
+        val tele = (100L - dampingPct) * 10000L
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
+             |r0 AS (SELECT id, CASE WHEN id % $seedMod = 0
+             |  THEN 1000000 ELSE 0 END::BIGINT AS rank FROM verts)""".stripMargin
+        for (i <- 1 to iters) {
+          sb ++=
+            s""",
+               |c$i AS (
+               |  SELECT e.dst AS id,
+               |    CAST(floor(r${i - 1}.rank * $dampingPct
+               |      / (100 * deg.deg)) AS BIGINT) AS c
+               |  FROM edges e
+               |  JOIN r${i - 1} ON r${i - 1}.id = e.src
+               |  JOIN deg ON deg.src = e.src),
+               |r$i AS (
+               |  SELECT v.id,
+               |    (CASE WHEN v.id % $seedMod = 0 THEN $tele ELSE 0 END
+               |      + coalesce(s.i, 0))::BIGINT AS rank
+               |  FROM verts v LEFT JOIN (
+               |    SELECT id, sum(c)::BIGINT AS i FROM c$i GROUP BY 1) s
+               |    USING (id))""".stripMargin
+        }
+        sb ++= s"\nSELECT id AS doc_id, rank FROM r$iters"
+        sb.toString
+      })
     },
 
     QueryDef("graph_triangles", (s, dir) => {
@@ -44,27 +113,122 @@ object GraphQueries {
       // pairs carry none — a cheap cluster-vs-bridge separator
       val pairs = nearDupPairs(s, dir)
       Graph.triangleCounts(pairs, "id_a", "id_b")
-    }, OracleSql.graphTriangles(NumHashes, RowsPerBand)),
+    },
+      // Oracle for `graph_triangles`: canonical a<b near-dup edges,
+      // wedges closed by the (a, c) edge, per-vertex membership counts —
+      // mirrors [[graft.functions.Graph.triangleCounts]].
+      s"""WITH ${tokenHashCtes()},
+         |${shingleHashCtes()},
+         |${minhashCtes(NumHashes, RowsPerBand)},
+         |${edgeCtes(NumHashes)},
+         |ce AS MATERIALIZED (SELECT DISTINCT id_a AS a, id_b AS b FROM fcand),
+         |tri AS (
+         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+         |  FROM ce e1
+         |  JOIN ce e2 ON e2.a = e1.b
+         |  JOIN ce e3 ON e3.a = e1.a AND e3.b = e2.b),
+         |nodes AS (
+         |  SELECT x AS doc_id FROM tri
+         |  UNION ALL SELECT y FROM tri
+         |  UNION ALL SELECT z FROM tri)
+         |SELECT doc_id, count(*)::BIGINT AS n_triangles
+         |FROM nodes GROUP BY 1""".stripMargin),
 
     QueryDef("graph_clustering_coeff", (s, dir) => {
       // clique-vs-bridge separation on the same candidate graph as
       // graph_triangles: dup cliques score cc≈1, borderline chains ≈0
       val pairs = nearDupPairs(s, dir)
       Graph.clusteringCoefficient(pairs, "id_a", "id_b")
-    }, OracleSql.graphClusteringCoeff(NumHashes, RowsPerBand)),
+    },
+      // Oracle for `graph_clustering_coeff`: same candidate-edge closure
+      // as `graph_triangles`; degrees from the exploded edge list, cc =
+      // exact-integer `2·T / (deg·(deg−1))` with one IEEE division.
+      s"""WITH ${tokenHashCtes()},
+         |${shingleHashCtes()},
+         |${minhashCtes(NumHashes, RowsPerBand)},
+         |${edgeCtes(NumHashes)},
+         |ce AS MATERIALIZED (SELECT DISTINCT id_a AS a, id_b AS b FROM fcand),
+         |tri AS (
+         |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+         |  FROM ce e1
+         |  JOIN ce e2 ON e2.a = e1.b
+         |  JOIN ce e3 ON e3.a = e1.a AND e3.b = e2.b),
+         |nodes AS (
+         |  SELECT x AS doc_id FROM tri
+         |  UNION ALL SELECT y FROM tri
+         |  UNION ALL SELECT z FROM tri),
+         |tc AS (SELECT doc_id, count(*)::BIGINT AS n_triangles
+         |       FROM nodes GROUP BY 1),
+         |degn AS (SELECT a AS doc_id FROM ce
+         |         UNION ALL SELECT b FROM ce),
+         |deg AS (SELECT doc_id, count(*)::BIGINT AS degree
+         |        FROM degn GROUP BY 1)
+         |SELECT d.doc_id, d.degree,
+         |  coalesce(tc.n_triangles, 0)::BIGINT AS n_triangles,
+         |  ${eRatioE("2 * coalesce(tc.n_triangles, 0)",
+              "d.degree * (d.degree - 1)", 10000L)} AS cc
+         |FROM deg d LEFT JOIN tc USING (doc_id)
+         |WHERE d.degree >= 2""".stripMargin),
 
-    QueryDef("graph_link_predict", (s, dir) => {
-      // Resource-Allocation link prediction (Zhou et al. 2009) on the
-      // mutual-kNN embedding graph: non-adjacent two-hop pairs scored
-      // by hub-discounted common neighbors — "these two vectors likely
-      // belong together even though the degree-capped kNN edge set
-      // dropped the direct link". The near-dup JACCARD graph would be
-      // the wrong base here: its clusters are transitively-closed
-      // cliques, so every wedge is already an edge and the score set
-      // is empty by construction; a top-k graph is non-transitive and
-      // leaves real holes. Integer-exact ra_ppm.
-      Dedup.linkPrediction(mutualKnnPairs(s, dir), "id_a", "id_b")
-    }, OracleSql.graphLinkPredict()),
+    locally {
+      val minCos = 0.2
+      val k = 3
+      val nTables = 8
+      val targetBucket = 128
+      val minBits = 4
+      val maxBits = 16
+      val dim = 64
+      val seed = 42L
+      QueryDef("graph_link_predict", (s, dir) => {
+        // Resource-Allocation link prediction (Zhou et al. 2009) on the
+        // mutual-kNN embedding graph: non-adjacent two-hop pairs scored
+        // by hub-discounted common neighbors — "these two vectors likely
+        // belong together even though the degree-capped kNN edge set
+        // dropped the direct link". The near-dup JACCARD graph would be
+        // the wrong base here: its clusters are transitively-closed
+        // cliques, so every wedge is already an edge and the score set
+        // is empty by construction; a top-k graph is non-transitive and
+        // leaves real holes. Integer-exact ra_ppm.
+        Dedup.linkPrediction(mutualKnnPairs(s, dir), "id_a", "id_b")
+      },
+        // Oracle for `graph_link_predict`: the mutual-kNN edge set (same
+        // CTEs as `dedup_mutual_knn`), degrees from the exploded edge list,
+        // wedge join x–y ⋈ y–z (x < z), hub-discounted integer RA score,
+        // existing edges removed by NOT EXISTS. Mirrors
+        // [[graft.functions.Dedup.linkPrediction]] over the reciprocal
+        // top-k graph.
+        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)},
+           |thr AS (SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos),
+           |symc AS (
+           |  SELECT id_a AS a, id_b AS b, cos FROM thr
+           |  UNION ALL SELECT id_b, id_a, cos FROM thr),
+           |rkd AS (
+           |  SELECT a, b, row_number() OVER (PARTITION BY a
+           |    ORDER BY cos DESC, b ASC) AS rnk
+           |  FROM symc),
+           |topk AS (SELECT * FROM rkd WHERE rnk <= $k),
+           |ce AS MATERIALIZED (
+           |  SELECT x.a, x.b
+           |  FROM topk x JOIN topk y ON x.a = y.b AND x.b = y.a
+           |  WHERE x.a < x.b),
+           |sym AS (SELECT a AS src, b AS dst FROM ce
+           |        UNION ALL SELECT b, a FROM ce),
+           |deg AS (SELECT src AS y, count(*)::BIGINT AS deg
+           |        FROM sym GROUP BY 1),
+           |wedge AS (
+           |  SELECT s1.dst AS y, s1.src AS x, s2.dst AS z
+           |  FROM sym s1 JOIN sym s2 ON s2.src = s1.dst
+           |  WHERE s1.src < s2.dst),
+           |scored AS (
+           |  SELECT w.x AS id_a, w.z AS id_b, count(*)::BIGINT AS cn,
+           |    sum(1000000 // d.deg)::BIGINT AS ra_ppm
+           |  FROM wedge w JOIN deg d ON d.y = w.y
+           |  GROUP BY 1, 2)
+           |SELECT s.id_a, s.id_b, s.cn, s.ra_ppm FROM scored s
+           |WHERE NOT EXISTS (
+           |  SELECT 1 FROM ce e
+           |  WHERE e.a = s.id_a AND e.b = s.id_b)""".stripMargin)
+    },
 
     QueryDef("graph_neighborhood", (s, dir) => {
       // HyperANF-shape neighborhood function (Boldi–Rosa–Vigna,
@@ -104,7 +268,7 @@ object GraphQueries {
           Bitmaps.bitmap_cardinality(col("st")).as("n2")), Seq("doc_id"))
         .join(b3.select(col("src").as("doc_id"),
           Bitmaps.bitmap_cardinality(col("st")).as("n3")), Seq("doc_id"))
-    }, OracleSql.graphNeighborhood()),
+    }, graphNeighborhood),
 
     QueryDef("graph_harmonic", (s, dir) => {
       // 3-hop harmonic centrality: Σ_d (|N_d| − |N_{d−1}|)/d over the
@@ -125,7 +289,7 @@ object GraphQueries {
       s"""SELECT doc_id, n3 AS reach3,
          |  ((n1 - 1) * 1000000 + ((n2 - n1) * 1000000 // 2)
          |    + ((n3 - n2) * 1000000 // 3))::BIGINT AS harmonic_e6
-         |FROM (${OracleSql.graphNeighborhood()}) base""".stripMargin),
+         |FROM (${graphNeighborhood}) base""".stripMargin),
 
     QueryDef("graph_neighborhood_hll", (s, dir) => {
       // graph_neighborhood's 100 TB path, CASHED (the r8 verdict noted
@@ -168,7 +332,7 @@ object GraphQueries {
           hll_estimate(col("st")).as("n2_est")), Seq("doc_id"))
         .join(h3.select(col("src").as("doc_id"),
           hll_estimate(col("st")).as("n3_est")), Seq("doc_id"))
-    }, OracleSql.graphNeighborhoodHll()),
+    }, graphNeighborhoodHll),
 
     QueryDef("graph_harmonic_hll", (s, dir) => {
       // harmonic centrality straight off the HLL neighborhood
@@ -194,7 +358,7 @@ object GraphQueries {
          |    + ((n2_est - n1_est) * 1000000 // 2)
          |    + ((n3_est - n2_est) * 1000000 // 3))::BIGINT
          |    AS harmonic_e6
-         |FROM (${OracleSql.graphNeighborhoodHll()}) base""".stripMargin),
+         |FROM (${graphNeighborhoodHll}) base""".stripMargin),
 
     locally {
       val (k, rounds) = (2, 4)
@@ -203,7 +367,33 @@ object GraphQueries {
         // graph after 4 peel rounds — cliques survive, chains/stars don't
         val pairs = nearDupPairs(s, dir)
         Graph.kCore(pairs, "id_a", "id_b", k, rounds)
-      }, OracleSql.graphKcore(NumHashes, RowsPerBand, k, rounds))
+      }, {
+        // Oracle for `graph_kcore`: the same near-dup edge set, peeled for
+        // `rounds` unrolled iterations — each round recomputes degrees over
+        // the surviving edges and keeps vertices with degree >= k, exactly
+        // mirroring [[graft.functions.Graph.kCore]]'s bounded-round loop.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |e0 AS (SELECT src, dst FROM edges)""".stripMargin
+        for (i <- 1 to rounds) {
+          sb ++=
+            s""",
+               |d$i AS (SELECT src, count(*) AS deg FROM e${i - 1} GROUP BY src),
+               |a$i AS (SELECT src AS node FROM d$i WHERE deg >= $k),
+               |e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
+               |        JOIN a$i x ON x.node = e.src
+               |        JOIN a$i y ON y.node = e.dst)""".stripMargin
+        }
+        sb ++=
+          s"""
+             |SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
+             |FROM e$rounds GROUP BY src HAVING count(*) >= $k""".stripMargin
+        sb.toString
+      })
     },
 
     locally {
@@ -223,7 +413,28 @@ object GraphQueries {
           .select(explode(array(col("id_a"), col("id_b"))).as("id"))
           .distinct().orderBy("id").limit(nSeeds)
         Graph.bfsDepthsFromSeeds(pairs, "id_a", "id_b", seeds, rounds)
-      }, OracleSql.graphBfsDepth(NumHashes, RowsPerBand, nSeeds, rounds))
+      },
+        // Oracle for `graph_bfs_depth`: the same near-dup edge set as the
+        // engine ([[graft.functions.Graph.bfsDepthsFromSeeds]]); the seed
+        // set is the `nSeeds` smallest vertex ids of the candidate graph (a
+        // deterministic, always-non-empty stand-in for an audit table); a
+        // depth-bounded recursive closure records every (vertex, hops) pair
+        // reachable from a seed within `rounds` hops, and `min(hops)` per
+        // vertex IS the BFS distance — the frontier discipline is an
+        // engine-side efficiency, not a semantic difference.
+        s"""WITH RECURSIVE ${tokenHashCtes()},
+           |${shingleHashCtes()},
+           |${minhashCtes(NumHashes, RowsPerBand)},
+           |${edgeCtes(NumHashes)},
+           |seeds AS MATERIALIZED (
+           |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
+           |reach(id, d) AS (
+           |  SELECT id, 0 FROM seeds
+           |  UNION
+           |  SELECT e.dst, r.d + 1 FROM reach r
+           |  JOIN edges e ON e.src = r.id WHERE r.d < $rounds)
+           |SELECT id AS doc_id, min(d)::BIGINT AS depth
+           |FROM reach GROUP BY 1""".stripMargin)
     },
 
     locally {
@@ -296,7 +507,69 @@ object GraphQueries {
           .groupBy(col("node").as("doc_id"))
           .agg(count(lit(1)).as("n_sources"),
             sum("delta_e6").as("bc_e6"))
-      }, OracleSql.graphBetweenness(NumHashes, RowsPerBand, nSeeds, levels = L))
+      }, {
+        // Oracle for `graph_betweenness`: k-source depth-bounded Brandes,
+        // fully unrolled — per level a frontier expansion with σ summed
+        // over shortest-path DAG edges (anti-joined against the visited
+        // set), then the backward dependency fold with the engine's exact
+        // per-term e6 integral truncation. Every level CTE is MATERIALIZED
+        // (sequential chain, multi-referenced).
+        val levels = L
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |bseeds AS MATERIALIZED (
+             |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
+             |bl0 AS MATERIALIZED (
+             |  SELECT id AS s, id AS node, 1::BIGINT AS sig FROM bseeds),
+             |bv0 AS MATERIALIZED (SELECT s, node FROM bl0)""".stripMargin
+        for (l <- 1 to levels) {
+          sb ++=
+            s""",
+               |bl$l AS MATERIALIZED (
+               |  SELECT p.s, e.dst AS node, sum(p.sig)::BIGINT AS sig
+               |  FROM bl${l - 1} p JOIN edges e ON e.src = p.node
+               |  WHERE NOT EXISTS (SELECT 1 FROM bv${l - 1} w
+               |    WHERE w.s = p.s AND w.node = e.dst)
+               |  GROUP BY 1, 2),
+               |bv$l AS MATERIALIZED (
+               |  SELECT s, node FROM bv${l - 1}
+               |  UNION ALL SELECT s, node FROM bl$l)""".stripMargin
+        }
+        sb ++=
+          s""",
+             |bd$levels AS MATERIALIZED (
+             |  SELECT s, node, sig, 0::BIGINT AS delta FROM bl$levels)"""
+            .stripMargin
+        for (l <- levels to 1 by -1) {
+          sb ++=
+            s""",
+               |bd${l - 1} AS MATERIALIZED (
+               |  SELECT u.s, u.node, u.sig,
+               |    COALESCE(t.dsum, 0)::BIGINT AS delta
+               |  FROM bl${l - 1} u LEFT JOIN (
+               |    SELECT uu.s, uu.node,
+               |      sum((uu.sig * (1000000 + v.delta)) // v.sig)::BIGINT
+               |        AS dsum
+               |    FROM bl${l - 1} uu JOIN edges e ON e.src = uu.node
+               |    JOIN bd$l v ON v.node = e.dst AND v.s = uu.s
+               |    GROUP BY 1, 2) t
+               |    ON t.s = u.s AND t.node = u.node)""".stripMargin
+        }
+        val union = (1 to levels)
+          .map(l => s"SELECT s, node, delta FROM bd$l")
+          .mkString("\n  UNION ALL ")
+        sb ++=
+          s"""
+             |SELECT node AS doc_id, count(*)::BIGINT AS n_sources,
+             |  sum(delta)::BIGINT AS bc_e6
+             |FROM ($union) q
+             |WHERE node <> s GROUP BY 1""".stripMargin
+        sb.toString
+      })
     },
 
     locally {
@@ -318,7 +591,39 @@ object GraphQueries {
           .distinct().orderBy("id").limit(nSeeds)
         Graph.ssspFromSeeds(pairs, "id_a", "id_b", "w", seeds, rounds)
           .withColumnRenamed("dist", "dist_ppm")
-      }, OracleSql.graphSssp(NumHashes, RowsPerBand, nSeeds, rounds))
+      }, {
+        // Oracle for `graph_sssp`: the same near-dup candidate machinery
+        // with edges carrying integer ppm DISSIMILARITY weights
+        // ((10000 − round(est·10⁴))·100 — exact: est is a 4-dp-rounded
+        // multiple of 1/16, so every product is integer-valued in DOUBLE);
+        // the seed set is the `nSeeds` smallest vertex ids; a depth-bounded
+        // recursive closure enumerates all walks of ≤ `rounds` edges and
+        // `min(total weight)` per vertex IS the Bellman–Ford result after
+        // `rounds` relaxation rounds ([[graft.functions.Graph.ssspFromSeeds]]).
+        val est = estJaccardE4(NumHashes)
+        s"""WITH RECURSIVE ${tokenHashCtes()},
+           |${shingleHashCtes()},
+           |${minhashCtes(NumHashes, RowsPerBand)},
+           |fw AS MATERIALIZED (
+           |  SELECT c.id_a, c.id_b,
+           |    CAST(10000 - round($est * 10000) AS BIGINT) * 100 AS w
+           |  FROM cand c JOIN sigv sa ON sa.doc_id = c.id_a
+           |              JOIN sigv sb ON sb.doc_id = c.id_b
+           |  WHERE $est >= 0.5),
+           |wedges AS MATERIALIZED (
+           |  SELECT id_a AS src, id_b AS dst, w FROM fw
+           |  UNION SELECT id_b, id_a, w FROM fw),
+           |wverts AS MATERIALIZED (SELECT DISTINCT src AS id FROM wedges),
+           |wseeds AS MATERIALIZED (
+           |  SELECT id FROM wverts ORDER BY id LIMIT $nSeeds),
+           |wreach(id, d, h) AS (
+           |  SELECT id, 0::BIGINT, 0 FROM wseeds
+           |  UNION
+           |  SELECT e.dst, r.d + e.w, r.h + 1 FROM wreach r
+           |  JOIN wedges e ON e.src = r.id WHERE r.h < $rounds)
+           |SELECT id AS doc_id, min(d)::BIGINT AS dist_ppm
+           |FROM wreach GROUP BY 1""".stripMargin
+      })
     },
 
     locally {
@@ -329,135 +634,574 @@ object GraphQueries {
         // gluing components (contrast dedup_components)
         val pairs = nearDupPairs(s, dir)
         Graph.labelPropagation(pairs, "id_a", "id_b", rounds)
-      }, OracleSql.graphLabelProp(NumHashes, RowsPerBand, rounds))
+      }, {
+        // Oracle for `graph_label_prop`: the same near-dup edge set,
+        // `rounds` unrolled synchronous label-propagation steps — per step,
+        // neighbor-label counts then the (count desc, label asc) mode —
+        // mirroring [[graft.functions.Graph.labelPropagation]] exactly.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |l0 AS (SELECT id AS node, id AS label FROM verts)""".stripMargin
+        for (i <- 1 to rounds) {
+          sb ++=
+            s""",
+               |n$i AS (
+               |  SELECT e.src AS node, l.label, count(*) AS cnt
+               |  FROM edges e JOIN l${i - 1} l ON l.node = e.dst
+               |  GROUP BY 1, 2),
+               |l$i AS (
+               |  SELECT node, label FROM (
+               |    SELECT node, label, row_number() OVER (PARTITION BY node
+               |      ORDER BY cnt DESC, label ASC) AS rn
+               |    FROM n$i)
+               |  WHERE rn = 1)""".stripMargin
+        }
+        sb ++=
+          s"""
+             |SELECT node AS doc_id, label AS community FROM l$rounds""".stripMargin
+        sb.toString
+      })
     },
 
-    QueryDef("graph_louvain", (s, dir) => {
-      // modularity-OPTIMIZING community detection (Blondel et al. 2008
-      // phase 1, deterministic synchronous variant) — the member
-      // graph_label_prop can't replace: label prop follows majority
-      // labels and can glue along bridges; the Louvain local move
-      // prices every candidate community by the exact integer
-      // modularity-gain numerator 2m·k_ic − k_i·d_c^(−i) and moves
-      // only where Q improves (ties to the smallest community id, so
-      // the sweep is replayable — sequential Louvain is
-      // order-dependent and no oracle could twin it). 2 sweeps; the
-      // LouvainSpec proves the resulting partition's modularity (via
-      // the graph_modularity formula) is >= label prop's on the
-      // bridge-glue fixture.
-      val pairs = nearDupPairs(s, dir)
-      Graph.louvainLocalMove(pairs, "id_a", "id_b", rounds = 2)
-    }, OracleSql.graphLouvain()),
+    locally {
+      val rounds = 2
+      QueryDef("graph_louvain", (s, dir) => {
+        // modularity-OPTIMIZING community detection (Blondel et al. 2008
+        // phase 1, deterministic synchronous variant) — the member
+        // graph_label_prop can't replace: label prop follows majority
+        // labels and can glue along bridges; the Louvain local move
+        // prices every candidate community by the exact integer
+        // modularity-gain numerator 2m·k_ic − k_i·d_c^(−i) and moves
+        // only where Q improves (ties to the smallest community id, so
+        // the sweep is replayable — sequential Louvain is
+        // order-dependent and no oracle could twin it). 2 sweeps; the
+        // LouvainSpec proves the resulting partition's modularity (via
+        // the graph_modularity formula) is >= label prop's on the
+        // bridge-glue fixture.
+        val pairs = nearDupPairs(s, dir)
+        Graph.louvainLocalMove(pairs, "id_a", "id_b", rounds = 2)
+      }, {
+        // Oracle for `graph_louvain`: the deterministic synchronous
+        // modularity local move replayed — per round, each node's candidate
+        // communities (neighbor communities + its own, max-deduped k_{i,c}),
+        // the exact integer gain 2m·k_{i,c} − k_i·(d_c − [c = c_i]·k_i),
+        // argmax by (gain DESC, comm ASC). Mirrors
+        // [[graft.functions.Graph.louvainLocalMove]] over the near-dup
+        // graph.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |ldeg AS MATERIALIZED (
+             |  SELECT src AS node, count(*)::BIGINT AS ki
+             |  FROM edges GROUP BY 1),
+             |lm AS (SELECT (count(*) / 2)::BIGINT AS m FROM edges),
+             |c0 AS (SELECT id AS node, id AS comm FROM verts)""".stripMargin
+        for (r <- 1 to rounds) {
+          sb ++=
+            s""",
+               |dc$r AS (SELECT c.comm, sum(d.ki)::BIGINT AS dc
+               |  FROM c${r - 1} c JOIN ldeg d USING (node) GROUP BY 1),
+               |kic$r AS (
+               |  SELECT e.src AS node, c.comm, count(*)::BIGINT AS kic
+               |  FROM edges e JOIN c${r - 1} c ON c.node = e.dst
+               |  GROUP BY 1, 2),
+               |cd$r AS (SELECT node, comm, max(kic)::BIGINT AS kic FROM (
+               |  SELECT node, comm, kic FROM kic$r
+               |  UNION ALL SELECT node, comm, 0::BIGINT FROM c${r - 1})
+               |  GROUP BY 1, 2),
+               |sc$r AS (
+               |  SELECT a.node, a.comm,
+               |    (2 * m.m * a.kic - d.ki * (dc.dc
+               |      - CASE WHEN a.comm = cur.comm THEN d.ki
+               |        ELSE 0 END))::BIGINT AS gain
+               |  FROM cd$r a JOIN dc$r dc USING (comm)
+               |  JOIN c${r - 1} cur ON cur.node = a.node
+               |  JOIN ldeg d ON d.node = a.node
+               |  CROSS JOIN lm m),
+               |c$r AS MATERIALIZED (SELECT node, comm FROM (
+               |  SELECT node, comm, row_number() OVER (PARTITION BY node
+               |    ORDER BY gain DESC, comm ASC) AS rn
+               |  FROM sc$r) WHERE rn = 1)""".stripMargin
+        }
+        sb ++=
+          s"""
+             |SELECT node AS doc_id, comm AS community
+             |FROM c$rounds""".stripMargin
+        sb.toString
+      })
+    },
 
-    QueryDef("graph_louvain_multilevel", (s, dir) => {
-      // the MULTI-LEVEL member (VERDICT r11 #4): phase-1 sweeps, then
-      // Blondel's community-aggregation phase 2 — communities become
-      // supernodes (inter weights = cross-edge counts, intra counts
-      // fold into doubled self-loops, preserving the modularity
-      // function), the SAME weighted local move reruns on the
-      // supernode graph, labels unfold through both levels. Reaches
-      // merges the bounded synchronous sweep cannot; LouvainSpec
-      // proves modularity never drops below the phase-1 partition on
-      // the bridge fixture and that w≡1 delegation keeps phase 1
-      // bit-identical. The oracle replays the aggregation and the
-      // weighted sweep in SQL.
-      val pairs = nearDupPairs(s, dir)
-      Graph.louvainMultilevel(pairs, "id_a", "id_b",
-        rounds1 = 2, rounds2 = 2)
-    }, OracleSql.graphLouvainMultilevel()),
+    locally {
+      val rounds1 = 2
+      val rounds2 = 2
+      QueryDef("graph_louvain_multilevel", (s, dir) => {
+        // the MULTI-LEVEL member (VERDICT r11 #4): phase-1 sweeps, then
+        // Blondel's community-aggregation phase 2 — communities become
+        // supernodes (inter weights = cross-edge counts, intra counts
+        // fold into doubled self-loops, preserving the modularity
+        // function), the SAME weighted local move reruns on the
+        // supernode graph, labels unfold through both levels. Reaches
+        // merges the bounded synchronous sweep cannot; LouvainSpec
+        // proves modularity never drops below the phase-1 partition on
+        // the bridge fixture and that w≡1 delegation keeps phase 1
+        // bit-identical. The oracle replays the aggregation and the
+        // weighted sweep in SQL.
+        val pairs = nearDupPairs(s, dir)
+        Graph.louvainMultilevel(pairs, "id_a", "id_b",
+          rounds1 = 2, rounds2 = 2)
+      }, {
+        // Oracle for `graph_louvain_multilevel`: the phase-1 sweep CTEs of
+        // [[graphLouvain]], then Blondel's community aggregation (inter
+        // weights = cross-edge counts, doubled intra self-loops), the SAME
+        // weighted synchronous local move on the supernode graph, and the
+        // two-level label unfold. Mirrors
+        // [[graft.functions.Graph.louvainMultilevel]].
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |ldeg AS MATERIALIZED (
+             |  SELECT src AS node, count(*)::BIGINT AS ki
+             |  FROM edges GROUP BY 1),
+             |lm AS (SELECT (count(*) / 2)::BIGINT AS m FROM edges),
+             |c0 AS (SELECT id AS node, id AS comm FROM verts)""".stripMargin
+        for (r <- 1 to rounds1) {
+          sb ++=
+            s""",
+               |dc$r AS (SELECT c.comm, sum(d.ki)::BIGINT AS dc
+               |  FROM c${r - 1} c JOIN ldeg d USING (node) GROUP BY 1),
+               |kic$r AS (
+               |  SELECT e.src AS node, c.comm, count(*)::BIGINT AS kic
+               |  FROM edges e JOIN c${r - 1} c ON c.node = e.dst
+               |  GROUP BY 1, 2),
+               |cd$r AS (SELECT node, comm, max(kic)::BIGINT AS kic FROM (
+               |  SELECT node, comm, kic FROM kic$r
+               |  UNION ALL SELECT node, comm, 0::BIGINT FROM c${r - 1})
+               |  GROUP BY 1, 2),
+               |sc$r AS (
+               |  SELECT a.node, a.comm,
+               |    (2 * m.m * a.kic - d.ki * (dc.dc
+               |      - CASE WHEN a.comm = cur.comm THEN d.ki
+               |        ELSE 0 END))::BIGINT AS gain
+               |  FROM cd$r a JOIN dc$r dc USING (comm)
+               |  JOIN c${r - 1} cur ON cur.node = a.node
+               |  JOIN ldeg d ON d.node = a.node
+               |  CROSS JOIN lm m),
+               |c$r AS MATERIALIZED (SELECT node, comm FROM (
+               |  SELECT node, comm, row_number() OVER (PARTITION BY node
+               |    ORDER BY gain DESC, comm ASC) AS rn
+               |  FROM sc$r) WHERE rn = 1)""".stripMargin
+        }
+        // phase 2: aggregate communities to a weighted supernode graph —
+        // inter weights both directions, intra folded into 2× self-loops
+        sb ++=
+          s""",
+             |p1 AS MATERIALIZED (SELECT node, comm FROM c$rounds1),
+             |em AS MATERIALIZED (
+             |  SELECT ca.comm AS ca, cb.comm AS cb
+             |  FROM fcand u JOIN p1 ca ON ca.node = u.id_a
+             |  JOIN p1 cb ON cb.node = u.id_b),
+             |winter AS (
+             |  SELECT least(ca, cb) AS x, greatest(ca, cb) AS y,
+             |    count(*)::BIGINT AS w
+             |  FROM em WHERE ca <> cb GROUP BY 1, 2),
+             |wintra AS (
+             |  SELECT ca AS x, (2 * count(*))::BIGINT AS w
+             |  FROM em WHERE ca = cb GROUP BY 1),
+             |wedges AS MATERIALIZED (
+             |  SELECT x AS src, y AS dst, w FROM winter
+             |  UNION ALL SELECT y, x, w FROM winter
+             |  UNION ALL SELECT x, x, w FROM wintra),
+             |wdeg AS MATERIALIZED (
+             |  SELECT src AS node, sum(w)::BIGINT AS ki
+             |  FROM wedges GROUP BY 1),
+             |wm AS (SELECT (sum(w) / 2)::BIGINT AS m FROM wedges),
+             |w0 AS (SELECT node, node AS comm FROM wdeg)""".stripMargin
+        for (r <- 1 to rounds2) {
+          sb ++=
+            s""",
+               |wdc$r AS (SELECT c.comm, sum(d.ki)::BIGINT AS dc
+               |  FROM w${r - 1} c JOIN wdeg d USING (node) GROUP BY 1),
+               |wkic$r AS (
+               |  SELECT e.src AS node, c.comm, sum(e.w)::BIGINT AS kic
+               |  FROM wedges e JOIN w${r - 1} c ON c.node = e.dst
+               |  WHERE e.src <> e.dst
+               |  GROUP BY 1, 2),
+               |wcd$r AS (SELECT node, comm, max(kic)::BIGINT AS kic FROM (
+               |  SELECT node, comm, kic FROM wkic$r
+               |  UNION ALL SELECT node, comm, 0::BIGINT FROM w${r - 1})
+               |  GROUP BY 1, 2),
+               |wsc$r AS (
+               |  SELECT a.node, a.comm,
+               |    (2 * m.m * a.kic - d.ki * (dc.dc
+               |      - CASE WHEN a.comm = cur.comm THEN d.ki
+               |        ELSE 0 END))::BIGINT AS gain
+               |  FROM wcd$r a JOIN wdc$r dc USING (comm)
+               |  JOIN w${r - 1} cur ON cur.node = a.node
+               |  JOIN wdeg d ON d.node = a.node
+               |  CROSS JOIN wm m),
+               |w$r AS MATERIALIZED (SELECT node, comm FROM (
+               |  SELECT node, comm, row_number() OVER (PARTITION BY node
+               |    ORDER BY gain DESC, comm ASC) AS rn
+               |  FROM wsc$r) WHERE rn = 1)""".stripMargin
+        }
+        sb ++=
+          s"""
+             |SELECT p.node AS doc_id, w.comm AS community
+             |FROM p1 p JOIN w$rounds2 w ON w.node = p.comm""".stripMargin
+        sb.toString
+      })
+    },
 
-    QueryDef("graph_hits", (s, dir) => {
-      // hubs-and-authorities over the DIRECTED near-dup graph (edges
-      // oriented small→large doc id, the canonical orientation the
-      // candidate generator emits): authorities = docs many sources
-      // point at, hubs = docs pointing at many authorities — the
-      // Kleinberg dual of graph_pagerank's single undirected score.
-      // 2 mutual-reinforcement rounds in exact integers, L∞-normalized
-      // by integer division each round.
-      val pairs = nearDupPairs(s, dir)
-      Graph.hits(pairs, "id_a", "id_b", iters = 2)
-    }, OracleSql.graphHits()),
+    locally {
+      val iters = 2
+      QueryDef("graph_hits", (s, dir) => {
+        // hubs-and-authorities over the DIRECTED near-dup graph (edges
+        // oriented small→large doc id, the canonical orientation the
+        // candidate generator emits): authorities = docs many sources
+        // point at, hubs = docs pointing at many authorities — the
+        // Kleinberg dual of graph_pagerank's single undirected score.
+        // 2 mutual-reinforcement rounds in exact integers, L∞-normalized
+        // by integer division each round.
+        val pairs = nearDupPairs(s, dir)
+        Graph.hits(pairs, "id_a", "id_b", iters = 2)
+      }, {
+        // Oracle for `graph_hits`: the canonical a<b candidate pairs as a
+        // DIRECTED edge list, `iters` exact-integer HITS rounds — each side
+        // summed from the other then re-normalized by integer division
+        // with the round's max — mirroring
+        // [[graft.functions.Graph.hits]] bit-for-bit.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |de AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM fcand),
+             |vv AS MATERIALIZED (
+             |  SELECT DISTINCT src AS id FROM de
+             |  UNION SELECT DISTINCT dst FROM de),
+             |h0 AS (SELECT id, 1000000::BIGINT AS hub FROM vv)""".stripMargin
+        for (i <- 1 to iters) {
+          sb ++=
+            s""",
+               |araw$i AS (
+               |  SELECT v.id, coalesce(s.s, 0)::BIGINT AS raw
+               |  FROM vv v LEFT JOIN (
+               |    SELECT e.dst AS id, sum(h.hub)::BIGINT AS s
+               |    FROM de e JOIN h${i - 1} h ON h.id = e.src GROUP BY 1) s
+               |    USING (id)),
+               |amax$i AS (SELECT max(raw)::BIGINT AS mx FROM araw$i),
+               |a$i AS (SELECT id,
+               |  ((raw * 1000000) // greatest(mx, 1))::BIGINT AS auth
+               |  FROM araw$i, amax$i),
+               |hraw$i AS (
+               |  SELECT v.id, coalesce(s.s, 0)::BIGINT AS raw
+               |  FROM vv v LEFT JOIN (
+               |    SELECT e.src AS id, sum(a.auth)::BIGINT AS s
+               |    FROM de e JOIN a$i a ON a.id = e.dst GROUP BY 1) s
+               |    USING (id)),
+               |hmax$i AS (SELECT max(raw)::BIGINT AS mx FROM hraw$i),
+               |h$i AS (SELECT id,
+               |  ((raw * 1000000) // greatest(mx, 1))::BIGINT AS hub
+               |  FROM hraw$i, hmax$i)""".stripMargin
+        }
+        sb ++=
+          s"""
+             |SELECT a.id AS doc_id, a.auth, h.hub
+             |FROM a$iters a JOIN h$iters h USING (id)""".stripMargin
+        sb.toString
+      })
+    },
 
-    QueryDef("graph_modularity", (s, dir) => {
-      // partition-quality metric for the label-prop communities:
-      // Newman modularity Q = Σ_c (e_c/m − (d_c/2m)²), computed as
-      // ONE exact integer ratio — Q·4m² = Σ_c (4m·e_c − d_c²), e9
-      // fixed point — so "did the communities beat random?" is
-      // hash-checkable. Intra-edge and degree rollups are narrow
-      // (community, count) frames; the community map scales with the
-      // corpus → no broadcast hints.
-      val d = "decimal(38,0)"
-      val pairs = nearDupPairs(s, dir)
-        .localCheckpoint(false) // communities + edge rollups read it
-      val comm = Graph.labelPropagation(pairs, "id_a", "id_b", rounds = 3)
-        .localCheckpoint(false) // joined twice + degree rollup
-      val und = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
-      val mstat = und.agg(count(lit(1)).as("m"))
-      val intra = und
-        .join(comm.select(col("doc_id").as("a"),
-          col("community").as("ca")), Seq("a"))
-        .join(comm.select(col("doc_id").as("b"),
-          col("community").as("cb")), Seq("b"))
-        .filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("community"))
-        .agg(count(lit(1)).as("e_c"))
-      val sym = und.unionByName(
-        und.select(col("b").as("a"), col("a").as("b")))
-      val deg = sym
-        .join(comm.select(col("doc_id").as("a"),
-          col("community").as("community")), Seq("a"))
-        .groupBy("community").agg(count(lit(1)).as("d_c"))
-      deg.join(intra, Seq("community"), "left")
-        .select(col("community"),
-          coalesce(col("e_c"), lit(0L)).as("e_c"), col("d_c"))
-        .crossJoin(broadcast(mstat))
-        .agg(sum(expr(s"4 * cast(m AS $d) * e_c - cast(d_c AS $d) * d_c"))
-          .as("n"), max("m").as("m"),
-          count(lit(1)).as("n_communities"))
-        .select(col("n_communities"), col("m").as("n_edges"),
-          expr(s"cast((n * 1000000000) div (4 * cast(m AS $d) * m) " +
-            "AS bigint)").as("q_e9"))
-    }, OracleSql.graphModularity()),
+    locally {
+      val rounds = 3
+      QueryDef("graph_modularity", (s, dir) => {
+        // partition-quality metric for the label-prop communities:
+        // Newman modularity Q = Σ_c (e_c/m − (d_c/2m)²), computed as
+        // ONE exact integer ratio — Q·4m² = Σ_c (4m·e_c − d_c²), e9
+        // fixed point — so "did the communities beat random?" is
+        // hash-checkable. Intra-edge and degree rollups are narrow
+        // (community, count) frames; the community map scales with the
+        // corpus → no broadcast hints.
+        val d = "decimal(38,0)"
+        val pairs = nearDupPairs(s, dir)
+          .localCheckpoint(false) // communities + edge rollups read it
+        val comm = Graph.labelPropagation(pairs, "id_a", "id_b", rounds = 3)
+          .localCheckpoint(false) // joined twice + degree rollup
+        val und = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+        val mstat = und.agg(count(lit(1)).as("m"))
+        val intra = und
+          .join(comm.select(col("doc_id").as("a"),
+            col("community").as("ca")), Seq("a"))
+          .join(comm.select(col("doc_id").as("b"),
+            col("community").as("cb")), Seq("b"))
+          .filter(col("ca") === col("cb"))
+          .groupBy(col("ca").as("community"))
+          .agg(count(lit(1)).as("e_c"))
+        val sym = und.unionByName(
+          und.select(col("b").as("a"), col("a").as("b")))
+        val deg = sym
+          .join(comm.select(col("doc_id").as("a"),
+            col("community").as("community")), Seq("a"))
+          .groupBy("community").agg(count(lit(1)).as("d_c"))
+        deg.join(intra, Seq("community"), "left")
+          .select(col("community"),
+            coalesce(col("e_c"), lit(0L)).as("e_c"), col("d_c"))
+          .crossJoin(broadcast(mstat))
+          .agg(sum(expr(s"4 * cast(m AS $d) * e_c - cast(d_c AS $d) * d_c"))
+            .as("n"), max("m").as("m"),
+            count(lit(1)).as("n_communities"))
+          .select(col("n_communities"), col("m").as("n_edges"),
+            expr(s"cast((n * 1000000000) div (4 * cast(m AS $d) * m) " +
+              "AS bigint)").as("q_e9"))
+      }, {
+        // Oracle for `graph_modularity`: the label-propagation communities
+        // ([[graphLabelProp]] CTEs), then Newman modularity of the
+        // partition as ONE exact integer ratio — Q·4m² = Σ_c (4m·e_c −
+        // d_c²), reported in e9 fixed point.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |l0 AS (SELECT id AS node, id AS label FROM verts)""".stripMargin
+        for (i <- 1 to rounds) {
+          sb ++=
+            s""",
+               |n$i AS (
+               |  SELECT e.src AS node, l.label, count(*) AS cnt
+               |  FROM edges e JOIN l${i - 1} l ON l.node = e.dst
+               |  GROUP BY 1, 2),
+               |l$i AS (
+               |  SELECT node, label FROM (
+               |    SELECT node, label, row_number() OVER (PARTITION BY node
+               |      ORDER BY cnt DESC, label ASC) AS rn
+               |    FROM n$i)
+               |  WHERE rn = 1)""".stripMargin
+        }
+        sb ++=
+          s""",
+             |comm AS MATERIALIZED (
+             |  SELECT node, label AS community FROM l$rounds),
+             |und AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM fcand),
+             |mstat AS (SELECT count(*)::BIGINT AS m FROM und),
+             |intra AS (SELECT ca.community, count(*)::BIGINT AS e_c
+             |  FROM und u JOIN comm ca ON ca.node = u.a
+             |  JOIN comm cb ON cb.node = u.b
+             |  WHERE ca.community = cb.community GROUP BY 1),
+             |deg AS (SELECT comm.community, count(*)::BIGINT AS d_c
+             |  FROM edges e JOIN comm ON comm.node = e.src GROUP BY 1),
+             |parts AS (SELECT d.community, coalesce(i.e_c, 0)::BIGINT AS e_c,
+             |    d.d_c
+             |  FROM deg d LEFT JOIN intra i USING (community)),
+             |num AS (SELECT
+             |    sum(4 * m.m::HUGEINT * p.e_c - p.d_c::HUGEINT * p.d_c) AS n,
+             |    max(m.m) AS m, count(*)::BIGINT AS n_communities
+             |  FROM parts p, mstat m)
+             |SELECT n_communities, m AS n_edges,
+             |  ((n * 1000000000) // (4 * m::HUGEINT * m))::BIGINT AS q_e9
+             |FROM num""".stripMargin
+        sb.toString
+      })
+    },
 
-    QueryDef("graph_random_walks", (s, dir) => {
-      // deterministic random-walk corpus over the near-dup graph (the
-      // node2vec/DeepWalk data-generation step, hash-derandomized):
-      // one walk per seed (the 5 smallest vertices), 4 steps; at each
-      // step the walker moves to the neighbor minimizing
-      // pmod(xxhash64(step, walk, neighbor), 2⁴⁰) — uniform-ish,
-      // sticky across runs/restarts, and replayable by the oracle's
-      // XXH64 emulation. Per step ONE edge join on the 5-row frontier
-      // + a frontier-partitioned argmin window; localCheckpoint per
-      // step (pageRank discipline).
-      val pairs = nearDupPairs(s, dir)
-      val e = pairs
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(pairs.select(col("id_b").as("src"),
-          col("id_a").as("dst")))
-        .distinct().localCheckpoint(true)
-      val seeds = e.select(col("src").as("id")).distinct()
-        .orderBy("id").limit(5)
-        .select(col("id").as("walk_id"), col("id").as("node"))
-        .localCheckpoint(true)
-      var cur = seeds
-      var frames = Seq(seeds.withColumn("step", lit(0)))
-      for (t <- 1 to 4) {
-        val cand = e
-          .join(cur.withColumnRenamed("node", "src"), Seq("src"))
-          .select(col("walk_id"), col("dst"))
-          .withColumn("h", pmod(
-            xxhash64(lit(t.toLong), col("walk_id"), col("dst")),
-            lit(1L << 40)))
-        val w = Window.partitionBy("walk_id")
-          .orderBy(col("h").asc, col("dst").asc)
-        cur = cand.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("walk_id"), col("dst").as("node"))
+    locally {
+      val steps = 4
+      val nSeeds = 5
+      QueryDef("graph_random_walks", (s, dir) => {
+        // deterministic random-walk corpus over the near-dup graph (the
+        // node2vec/DeepWalk data-generation step, hash-derandomized):
+        // one walk per seed (the 5 smallest vertices), 4 steps; at each
+        // step the walker moves to the neighbor minimizing
+        // pmod(xxhash64(step, walk, neighbor), 2⁴⁰) — uniform-ish,
+        // sticky across runs/restarts, and replayable by the oracle's
+        // XXH64 emulation. Per step ONE edge join on the 5-row frontier
+        // + a frontier-partitioned argmin window; localCheckpoint per
+        // step (pageRank discipline).
+        val pairs = nearDupPairs(s, dir)
+        val e = pairs
+          .select(col("id_a").as("src"), col("id_b").as("dst"))
+          .unionByName(pairs.select(col("id_b").as("src"),
+            col("id_a").as("dst")))
+          .distinct().localCheckpoint(true)
+        val seeds = e.select(col("src").as("id")).distinct()
+          .orderBy("id").limit(5)
+          .select(col("id").as("walk_id"), col("id").as("node"))
           .localCheckpoint(true)
-        frames = frames :+ cur.withColumn("step", lit(t))
-      }
-      frames.reduce(_ unionByName _)
-        .select(col("walk_id"), col("step"), col("node"))
-    }, OracleSql.graphRandomWalks())
+        var cur = seeds
+        var frames = Seq(seeds.withColumn("step", lit(0)))
+        for (t <- 1 to 4) {
+          val cand = e
+            .join(cur.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("walk_id"), col("dst"))
+            .withColumn("h", pmod(
+              xxhash64(lit(t.toLong), col("walk_id"), col("dst")),
+              lit(1L << 40)))
+          val w = Window.partitionBy("walk_id")
+            .orderBy(col("h").asc, col("dst").asc)
+          cur = cand.withColumn("rn", row_number().over(w))
+            .filter(col("rn") === 1)
+            .select(col("walk_id"), col("dst").as("node"))
+            .localCheckpoint(true)
+          frames = frames :+ cur.withColumn("step", lit(t))
+        }
+        frames.reduce(_ unionByName _)
+          .select(col("walk_id"), col("step"), col("node"))
+      }, {
+        // Oracle for `graph_random_walks`: the candidate edge set, seeds =
+        // the `nSeeds` smallest vertices, `steps` unrolled argmin-by-hash
+        // transitions through the SAME xxhash64(step, walk, neighbor)
+        // chain, ties by neighbor id.
+        val sb = new StringBuilder
+        sb ++=
+          s"""WITH ${tokenHashCtes()},
+             |${shingleHashCtes()},
+             |${minhashCtes(NumHashes, RowsPerBand)},
+             |${edgeCtes(NumHashes)},
+             |seeds AS MATERIALIZED (
+             |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
+             |s0 AS (SELECT id AS walk_id, id AS node FROM seeds)""".stripMargin
+        for (t <- 1 to steps) {
+          val ch = new Chain(s"wk$t",
+            s"SELECT w.walk_id, e.dst, w.walk_id::HUGEINT AS wu, " +
+              s"e.dst::HUGEINT AS du " +
+              s"FROM s${t - 1} w JOIN edges e ON e.src = w.node")
+          val h1 = hashLong(ch, s"$t::HUGEINT", "42::HUGEINT", "ha")
+          val h2 = hashLong(ch, "wu", h1, "hb")
+          val h3 = hashLong(ch, "du", h2, "hc")
+          val m = ch.add("m", s"($h3) % ${1L << 40}")
+          sb ++=
+            s""",
+               |${ch.render},
+               |s$t AS (SELECT walk_id, dst AS node FROM (
+               |  SELECT walk_id, dst, row_number() OVER (
+               |    PARTITION BY walk_id ORDER BY $m, dst) AS rn
+               |  FROM ${ch.last}) WHERE rn = 1)""".stripMargin
+        }
+        sb ++= "\nSELECT walk_id::BIGINT AS walk_id, 0::INT AS step, " +
+          "node::BIGINT AS node FROM s0"
+        for (t <- 1 to steps)
+          sb ++= s"\nUNION ALL SELECT walk_id::BIGINT, $t::INT, " +
+            s"node::BIGINT FROM s$t"
+        sb.toString
+      })
+    }
   )
+
+  /** The neighborhood builders unroll three hops (columns n1..n3). */
+  private val NeighborhoodHops = 3
+
+  /** Oracle for `graph_neighborhood`: recursive ≤`NeighborhoodHops` walk over the
+    * self-looped near-dup edge set, min-hop dedup, then per-vertex
+    * reach counts at each hop — the exact ground truth the engine's
+    * bitmap-state propagation must reproduce. Mirrors the
+    * `graph_neighborhood` bitmap loop in [[graft.queries.GraphQueries]].
+    */
+  private def graphNeighborhood: String =
+    s"""WITH RECURSIVE ${tokenHashCtes()},
+       |${shingleHashCtes()},
+       |${minhashCtes(NumHashes, RowsPerBand)},
+       |${edgeCtes(NumHashes)},
+       |es AS (SELECT src, dst FROM edges
+       |       UNION SELECT id, id FROM verts),
+       |walk(src, dst, h) AS (
+       |  SELECT src, dst, 1 FROM es
+       |  UNION
+       |  SELECT w.src, e.dst, w.h + 1 FROM walk w
+       |  JOIN es e ON e.src = w.dst
+       |  WHERE w.h < $NeighborhoodHops),
+       |r AS (SELECT src, dst, min(h) AS mh FROM walk GROUP BY 1, 2)
+       |SELECT src AS doc_id,
+       |  (count(*) FILTER (WHERE mh <= 1))::BIGINT AS n1,
+       |  (count(*) FILTER (WHERE mh <= 2))::BIGINT AS n2,
+       |  count(*)::BIGINT AS n3
+       |FROM r GROUP BY 1""".stripMargin
+
+  /** Oracle for `graph_neighborhood_hll`: the HyperANF loop with HLL
+    * register states instead of exact sets, re-derived end to end —
+    * the recursive walk gives each vertex's TRUE hop-h reachable set,
+    * every reachable dst is hashed through the bit-exact XXH64
+    * emulation, and bucket/rank/registers/estimator reuse the shared
+    * integer constants of `approx_distinct_hll`'s oracle. HLL registers from a
+    * merged union equal registers over the union set (max is
+    * associative), so the engine's iterated state merges land on these
+    * exact estimates bit for bit.
+    */
+  private def graphNeighborhoodHll: String = {
+    import graft.expressions.Hll
+    val sb = Hll.SuffixBits
+    val two = BigInt(1) << sb
+    val ch = new Chain("gh", "SELECT dst, dst::HUGEINT AS lv FROM dv")
+    val hv = hashLong(ch, "lv", "42", "h")
+    val rankCase = (1 to sb)
+      .map(r => s"WHEN sfx >= ${BigInt(1) << (sb - r)} THEN $r")
+      .mkString("\n|     ")
+    val termCase = (0 to sb + 1)
+      .map(m => s"WHEN $m THEN ${BigInt(1) << (sb + 1 - m)}")
+      .mkString("\n|           ")
+    val lnCase = (1 to Hll.M)
+      .map(v => s"WHEN $v THEN ${Hll.LnTable(v - 1)}")
+      .mkString("\n|            ")
+    s"""WITH RECURSIVE ${tokenHashCtes()},
+       |${shingleHashCtes()},
+       |${minhashCtes(NumHashes, RowsPerBand)},
+       |${edgeCtes(NumHashes)},
+       |es AS (SELECT src, dst FROM edges
+       |       UNION SELECT id, id FROM verts),
+       |walk(src, dst, h) AS (
+       |  SELECT src, dst, 1 FROM es
+       |  UNION
+       |  SELECT w.src, e.dst, w.h + 1 FROM walk w
+       |  JOIN es e ON e.src = w.dst
+       |  WHERE w.h < $NeighborhoodHops),
+       |rw AS MATERIALIZED (
+       |  SELECT src, dst, min(h) AS mh FROM walk GROUP BY 1, 2),
+       |dv AS (SELECT DISTINCT dst FROM rw),
+       |${ch.render},
+       |hh AS MATERIALIZED (SELECT dst, $hv AS hv FROM ${ch.last}),
+       |bx AS (SELECT dst, hv // $two AS j, hv % $two AS sfx FROM hh),
+       |br AS (SELECT dst, j,
+       |   CASE WHEN sfx = 0 THEN ${sb + 1}
+       |     $rankCase END AS r FROM bx),
+       |hp AS (SELECT unnest([${(1 to NeighborhoodHops).mkString(", ")}]) AS h),
+       |regs AS (SELECT w.src, hp.h, b.j, max(b.r) AS m
+       |         FROM rw w JOIN br b ON b.dst = w.dst
+       |         JOIN hp ON w.mh <= hp.h GROUP BY 1, 2, 3),
+       |fr AS (SELECT g.src, g.h, t.j, coalesce(rg.m, 0) AS m
+       |       FROM (SELECT DISTINCT src, h FROM regs) g
+       |       CROSS JOIN range(0, ${Hll.M}) t(j)
+       |       LEFT JOIN regs rg ON rg.src = g.src AND rg.h = g.h
+       |         AND rg.j = t.j),
+       |ag AS (SELECT src, h,
+       |         sum(CASE m
+       |           $termCase END)::HUGEINT AS s,
+       |         sum(CASE WHEN m = 0 THEN 1 ELSE 0 END)::BIGINT AS v
+       |       FROM fr GROUP BY 1, 2),
+       |esr AS (SELECT src, h, v,
+       |         CAST('${Hll.RawNumerator}' AS HUGEINT) // (s * 1000000)
+       |           AS raw
+       |       FROM ag),
+       |ev2 AS (SELECT src, h,
+       |  CASE WHEN v > 0 AND raw <= ${Hll.LinearThreshold}
+       |       THEN (${Hll.M}::HUGEINT * (CASE v
+       |            $lnCase END)) // 1000000
+       |       ELSE least(raw, 9223372036854775807) END::BIGINT AS e
+       |  FROM esr)
+       |SELECT src AS doc_id,
+       |  max(CASE WHEN h = 1 THEN e END)::BIGINT AS n1_est,
+       |  max(CASE WHEN h = 2 THEN e END)::BIGINT AS n2_est,
+       |  max(CASE WHEN h = 3 THEN e END)::BIGINT AS n3_est
+       |FROM ev2 GROUP BY 1""".stripMargin
+  }
 }

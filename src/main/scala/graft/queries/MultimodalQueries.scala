@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.OracleSql.{M, eRatioE, roundSpark, sig}
 import graft.queries.QueryKit._
 
 /** Multimodal columns: image, audio and video decode, perceptual hashes
@@ -61,7 +62,32 @@ object MultimodalQueries {
         .select(col("media_id"), col("n_bytes"), col("checksum"),
           col("mean_byte"), // already on the exact 4-dp grid
           round(col("entropy_bits"), 4).as("entropy_bits"))
-    }, OracleSql.multimodalFeatures()),
+    },
+      // Oracle for `multimodal_features`: byte stats over the UTF-8 bytes of
+      // `text` (ASCII corpus, so `ord` per char IS the byte) — length,
+      // Java-style `crc*31+b` wrapping checksum via list_reduce in HUGEINT,
+      // exact integer mean, and Shannon entropy with Java's log(p)/log(2)
+      // formulation.
+      s"""WITH cl AS (
+         |  SELECT doc_id AS media_id, string_split(text, '') AS cs FROM documents),
+         |crc AS (
+         |  SELECT media_id, len(cs)::BIGINT AS n_bytes,
+         |    list_reduce(list_prepend(0::HUGEINT, list_transform(cs, c -> ord(c)::HUGEINT)),
+         |                (a, b) -> (a * 31 + b) % $M) AS crcu
+         |  FROM cl),
+         |chars AS (SELECT media_id, unnest(cs) AS c FROM cl),
+         |hist AS (
+         |  SELECT media_id, ord(c) AS b, count(*) AS cnt
+         |  FROM chars GROUP BY media_id, ord(c)),
+         |stats AS (
+         |  SELECT h.media_id, sum(h.b * h.cnt) AS bsum,
+         |    -sum((h.cnt::DOUBLE / c.n_bytes) * (ln(h.cnt::DOUBLE / c.n_bytes) / ln(2))) AS ent
+         |  FROM hist h JOIN crc c USING (media_id) GROUP BY h.media_id)
+         |SELECT c.media_id, c.n_bytes, ${sig("c.crcu")} AS checksum,
+         |  coalesce(${eRatioE("s.bsum", "c.n_bytes", 10000L)}, 0.0)
+         |    AS mean_byte,
+         |  ${roundSpark("coalesce(s.ent, 0.0)", 4)} AS entropy_bits
+         |FROM crc c LEFT JOIN stats s ON s.media_id = c.media_id""".stripMargin),
 
     QueryDef("multimodal_decode", (s, dir) => {
       // REAL codec path (not the stub): formula-generated pixels →
@@ -315,7 +341,36 @@ object MultimodalQueries {
       // formula (ADVICE r8) — the engine must deliver the same bits
       // through its decode + band join, so a decode drift, a banding
       // break, or an id shortcut all fail the hash gate
-      s"""WITH ah AS MATERIALIZED (${OracleSql.multimodalSmoothAhash()})
+      // The aHash recompute: identical sample/mean/bit math to
+      // `multimodalAhash` but over
+      // the clamped linear ramp `p(x,y) = min(255, 4x + 3y + id % 64)`
+      // ([[graft.multimodal.Multimodal.ImageCodec.smoothPixel]]). PNG is
+      // lossless, so the engine's sniffing decode of the smooth PNG must
+      // land on these bits exactly — this is the independent recompute
+      // the cross-format-twin gate checks the band join's output against
+      // (ADVICE r8: the verdict column alone was unfalsifiable).
+      s"""WITH ah AS MATERIALIZED (WITH sdims AS (
+         |  SELECT doc_id,
+         |    CAST(16 + doc_id % 32 AS INT) AS width,
+         |    CAST(16 + (doc_id * 7) % 32 AS INT) AS height
+         |  FROM documents),
+         |ss AS (
+         |  SELECT d.doc_id, d.width, d.height, g.k,
+         |    least(255, 4 * (((g.k % 8) * d.width) // 8)
+         |      + 3 * (((g.k // 8) * d.height) // 8) + d.doc_id % 64) AS p
+         |  FROM sdims d,
+         |    LATERAL (SELECT unnest(generate_series(0, 63)) AS k) g),
+         |sm AS (
+         |  SELECT doc_id, sum(p)::BIGINT // 64 AS mean
+         |  FROM ss GROUP BY 1),
+         |shb AS (
+         |  SELECT ss.doc_id, ss.width, ss.height,
+         |    sum(CASE WHEN ss.p > sm.mean
+         |        THEN (1::HUGEINT << ss.k) ELSE 0::HUGEINT END) AS hu
+         |  FROM ss JOIN sm USING (doc_id) GROUP BY 1, 2, 3)
+         |SELECT doc_id AS media_id, width, height,
+         |  ${sig("hu")} AS ahash
+         |FROM shb)
          |SELECT media_id, width, height, ahash AS ref_ahash,
          |  TRUE AS twin_found
          |FROM ah""".stripMargin),

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Cleaning, IncrementalAgg, Joins, Merge, Split, Stamping}
 import graft.functions.{Dedup, Graph, Packing}
+import graft.OracleSql.{Chain, eRatioE, hashLong, idHashCtes, sig}
 import graft.queries.QueryKit._
 
 /** The reference pipeline's own operators (universal cleaning, vertical
@@ -540,13 +541,40 @@ object PipelineQueries {
         IncrementalAgg.aggState(base, Seq("o_custkey"), col("cents")),
         IncrementalAgg.aggState(delta, Seq("o_custkey"), col("cents")),
         Seq("o_custkey")))
-    }, OracleSql.incrAggMerge()),
+    },
+      // Oracle for `incr_agg_merge`: the direct full recompute the
+      // incremental merge must equal — per-customer count/sum/min/max over
+      // exact integer cents plus the derived rounded mean.
+      s"""WITH c AS (
+         |  SELECT o_custkey,
+         |    CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+         |  FROM orders)
+         |SELECT o_custkey,
+         |  count(*) AS st_cnt,
+         |  CAST(sum(cents) AS BIGINT) AS st_sum,
+         |  min(cents) AS st_min,
+         |  max(cents) AS st_max,
+         |  ${eRatioE("CAST(sum(cents) AS BIGINT)", "count(*)", 10000L)} AS st_avg
+         |FROM c GROUP BY o_custkey""".stripMargin),
 
     locally {
       val nShards = 8
       QueryDef("export_shards", (s, dir) =>
         Packing.shardManifest(t(s, dir, "documents"), "doc_id", "text",
-          nShards), OracleSql.exportShards(nShards))
+          nShards),
+            // Oracle for `export_shards`: xxhash64(doc_id) mod nShards shard
+            // assignment (the integer-hash CTE chain) + per-shard volume stats.
+            s"""WITH ${idHashCtes()},
+               |sh AS (
+               |  SELECT d.doc_id,
+               |         ((h.hv % $nShards) + $nShards) % $nShards AS shard,
+               |         length(d.text) AS chars
+               |  FROM documents d JOIN hashed h ON h.doc_id = d.doc_id)
+               |SELECT CAST(shard AS INTEGER) AS shard,
+               |  count(*) AS n_docs,
+               |  CAST(sum(chars) AS BIGINT) AS total_chars,
+               |  min(doc_id) AS min_id, max(doc_id) AS max_id
+               |FROM sh GROUP BY shard""".stripMargin)
     },
 
     QueryDef("incr_distinct_merge", (s, dir) => {
@@ -864,7 +892,42 @@ object PipelineQueries {
           .groupBy(col("s8").as("shard"))
           .agg(count(lit(1)).as("n_docs"),
             sum((col("s8") =!= col("s9")).cast("long")).as("n_moved"))
-      }, OracleSql.exportRendezvousShards(nShards))
+      }, {
+        // Oracle for `export_rendezvous_shards`: highest-random-weight
+        // (rendezvous) hashing — per (doc, shard) score is the chained
+        // xxhash64 of (doc_id, shard) (seed 42, exactly Spark's multi-arg
+        // fold), the winner is the max SIGNED score with shard-asc
+        // tie-break, and the stability half recomputes the winner with one
+        // shard added: HRW's guarantee is that a doc moves only when the
+        // NEW shard wins, so moved counts are ~1/(n+1) of each shard.
+        val ch = new Chain("rv",
+          s"SELECT d.doc_id, t.sh, d.doc_id::HUGEINT AS ka, " +
+            s"t.sh::HUGEINT AS kb " +
+            s"FROM documents d CROSS JOIN range(0, ${nShards + 1}) t(sh)")
+        val h1 = hashLong(ch, "ka", "42", "p")
+        val h2 = hashLong(ch, "kb", h1, "w")
+        s"""WITH ${ch.render},
+           |scored AS MATERIALIZED (
+           |  SELECT doc_id, sh::BIGINT AS sh, ${sig(h2)} AS hv
+           |  FROM ${ch.last}),
+           |a8 AS (
+           |  SELECT doc_id, sh AS s8 FROM (
+           |    SELECT doc_id, sh, row_number() OVER (PARTITION BY doc_id
+           |      ORDER BY hv DESC, sh ASC) AS rn
+           |    FROM scored WHERE sh < $nShards)
+           |  WHERE rn = 1),
+           |a9 AS (
+           |  SELECT doc_id, sh AS s9 FROM (
+           |    SELECT doc_id, sh, row_number() OVER (PARTITION BY doc_id
+           |      ORDER BY hv DESC, sh ASC) AS rn
+           |    FROM scored)
+           |  WHERE rn = 1)
+           |SELECT a8.s8 AS shard, count(*)::BIGINT AS n_docs,
+           |  sum(CASE WHEN a8.s8 <> a9.s9 THEN 1 ELSE 0 END)::BIGINT
+           |    AS n_moved
+           |FROM a8 JOIN a9 ON a8.doc_id = a9.doc_id
+           |GROUP BY 1""".stripMargin
+      })
     }
   )
 }

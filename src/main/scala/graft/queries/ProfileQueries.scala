@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Scale
 import graft.functions.{Analytics, ExactGrid}
+import graft.OracleSql.{Chain, hashLong, roundSpark, sig, u}
 import graft.queries.QueryKit._
 
 /** Data profiling and privacy: distribution statistics, goodness-of-fit
@@ -168,27 +169,45 @@ object ProfileQueries {
         |FROM customer c JOIN f USING (c_mktsegment)
         |GROUP BY 1, f.q1, f.q3""".stripMargin),
 
-    QueryDef("profile_histogram", (s, dir) => {
-      // equi-width histogram of order prices: one min/max reduce
-      // broadcast back, then a map-only bin assignment and a
-      // 20-row aggregate — the distribution-shape profiler (skew,
-      // outlier mass, modality) a datasheet needs beyond min/max.
-      // All rows share one IEEE width division, so binning is
-      // bit-reproducible; the top edge folds into the last bin
+    locally {
       val nBins = 20
-      val mm = t(s, dir, "orders").agg(
-        min(col("o_totalprice")).as("lo"),
-        max(col("o_totalprice")).as("hi"))
-      val w = (col("hi") - col("lo")) / lit(nBins.toDouble)
-      t(s, dir, "orders").crossJoin(broadcast(mm))
-        .select(least(floor((col("o_totalprice") - col("lo")) / w),
-          lit((nBins - 1).toDouble)).cast("int").as("bin"),
-          col("lo"), w.as("w"))
-        .select(col("bin"),
-          round(col("lo") + col("bin") * col("w"), 4).as("bin_lo"))
-        .groupBy("bin", "bin_lo")
-        .agg(count(lit(1)).as("n"))
-    }, OracleSql.profileHistogram()),
+      QueryDef("profile_histogram", (s, dir) => {
+        // equi-width histogram of order prices: one min/max reduce
+        // broadcast back, then a map-only bin assignment and a
+        // 20-row aggregate — the distribution-shape profiler (skew,
+        // outlier mass, modality) a datasheet needs beyond min/max.
+        // All rows share one IEEE width division, so binning is
+        // bit-reproducible; the top edge folds into the last bin
+        val nBins = 20
+        val mm = t(s, dir, "orders").agg(
+          min(col("o_totalprice")).as("lo"),
+          max(col("o_totalprice")).as("hi"))
+        val w = (col("hi") - col("lo")) / lit(nBins.toDouble)
+        t(s, dir, "orders").crossJoin(broadcast(mm))
+          .select(least(floor((col("o_totalprice") - col("lo")) / w),
+            lit((nBins - 1).toDouble)).cast("int").as("bin"),
+            col("lo"), w.as("w"))
+          .select(col("bin"),
+            round(col("lo") + col("bin") * col("w"), 4).as("bin_lo"))
+          .groupBy("bin", "bin_lo")
+          .agg(count(lit(1)).as("n"))
+      },
+        // Oracle for `profile_histogram`: identical one-division equi-width
+        // binning (floor over the shared IEEE width, top edge folded into
+        // the last bin), bin_lo recomputed per row then grouped.
+        s"""WITH mm AS (
+           |  SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi
+           |  FROM orders),
+           |b AS (
+           |  SELECT CAST(least(floor((o_totalprice - lo)
+           |      / ((hi - lo) / $nBins.0)), ${nBins - 1}.0) AS INTEGER)
+           |      AS bin,
+           |    lo, (hi - lo) / $nBins.0 AS w
+           |  FROM orders, mm)
+           |SELECT bin, ${roundSpark("lo + bin * w", 4)} AS bin_lo,
+           |  count(*) AS n
+           |FROM b GROUP BY 1, 2""".stripMargin)
+    },
 
     QueryDef("profile_numeric_stats", (s, dir) => {
       // generic column profiler: null/distinct/min/max per numeric
@@ -235,7 +254,26 @@ object ProfileQueries {
       Analytics.linregByGroup(t(s, dir, "lineitem"), "l_returnflag",
         col("l_quantity").cast("long"),
         floor(col("l_extendedprice") * 100).cast("long"))
-    }, OracleSql.analyticsLinreg()),
+    }, {
+      // Oracle for `analytics_linreg`: identical sufficient statistics in
+      // HUGEINT, identical final IEEE association (num::DOUBLE/den::DOUBLE,
+      // then (sy - slope*sx)/n), Spark-semantics rounding.
+      val slope = "(n*sxy - sx*sy)::DOUBLE / (n*sxx - sx*sx)::DOUBLE"
+      s"""WITH m AS (
+         |  SELECT l_returnflag,
+         |    CAST(l_quantity AS BIGINT)::HUGEINT AS x,
+         |    CAST(floor(l_extendedprice * 100) AS BIGINT)::HUGEINT AS y
+         |  FROM lineitem),
+         |st AS (
+         |  SELECT l_returnflag, count(*)::HUGEINT AS n,
+         |    sum(x) AS sx, sum(y) AS sy,
+         |    sum(x * x) AS sxx, sum(x * y) AS sxy
+         |  FROM m GROUP BY l_returnflag)
+         |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
+         |  ${roundSpark(slope, 6)} AS slope,
+         |  ${roundSpark(s"(sy::DOUBLE - ($slope) * sx::DOUBLE) / n::DOUBLE", 2)} AS intercept
+         |FROM st""".stripMargin
+    }),
 
     QueryDef("profile_correlations", (s, dir) => {
       // pairwise Pearson r over scaled-integer measures, ONE scan for
@@ -245,7 +283,35 @@ object ProfileQueries {
           "price" -> floor(col("l_extendedprice") * 100).cast("long"),
           "disc" -> floor(col("l_discount") * 10000).cast("long")),
         Seq("qty" -> "price", "qty" -> "disc", "price" -> "disc"))
-    }, OracleSql.profileCorrelations()),
+    }, {
+      // Oracle for `profile_correlations`: one sufficient-statistics row
+      // in HUGEINT, three long-form Pearson r values with the engine's
+      // exact IEEE association (num::DOUBLE / sqrt(da::DOUBLE * db::DOUBLE)).
+      def r(a: String, b: String): String = roundSpark(
+        s"(n*s_${a}_$b - s_$a*s_$b)::DOUBLE / " +
+          s"sqrt((n*s_${a}_$a - s_$a*s_$a)::DOUBLE * " +
+          s"(n*s_${b}_$b - s_$b*s_$b)::DOUBLE)", 6)
+      s"""WITH m AS (
+         |  SELECT CAST(l_quantity AS BIGINT)::HUGEINT AS qty,
+         |    CAST(floor(l_extendedprice * 100) AS BIGINT)::HUGEINT AS price,
+         |    CAST(floor(l_discount * 10000) AS BIGINT)::HUGEINT AS disc
+         |  FROM lineitem),
+         |st AS (
+         |  SELECT count(*)::HUGEINT AS n,
+         |    sum(qty) AS s_qty, sum(price) AS s_price, sum(disc) AS s_disc,
+         |    sum(qty * qty) AS s_qty_qty,
+         |    sum(price * price) AS s_price_price,
+         |    sum(disc * disc) AS s_disc_disc,
+         |    sum(qty * price) AS s_qty_price,
+         |    sum(qty * disc) AS s_qty_disc,
+         |    sum(price * disc) AS s_price_disc
+         |  FROM m)
+         |SELECT 'qty_price' AS pair, ${r("qty", "price")} AS r FROM st
+         |UNION ALL
+         |SELECT 'qty_disc', ${r("qty", "disc")} FROM st
+         |UNION ALL
+         |SELECT 'price_disc', ${r("price", "disc")} FROM st""".stripMargin
+    }),
 
     QueryDef("profile_equidepth", (s, dir) => {
       // equi-depth histogram of l_quantity per return flag WITHOUT a
@@ -746,7 +812,28 @@ object ProfileQueries {
         .join(broadcast(tab), col("m") >= col("lo") && col("m") < col("hi"))
         .select(col("c_nationkey"), col("true_cnt"), col("noise"),
           (col("true_cnt") + col("noise")).as("noisy_cnt"))
-    }, OracleSql.privacyDpCounts(dpGeomThresholds)),
+    }, {
+      // Oracle for `privacy_dp_counts`: per-nation counts + the seeded
+      // discrete-Laplace noise — the same xxhash64(7, key) chain through
+      // the emulated XXH64, reduced mod 2⁴⁰ and mapped through the SAME
+      // inverse-CDF threshold literals the engine broadcasts.
+      val rows = dpGeomThresholds
+      val vals = rows
+        .map { case (k, lo, hi) => s"($k, ${lo}::HUGEINT, ${hi}::HUGEINT)" }
+        .mkString(", ")
+      val ch = new Chain("dp",
+        "SELECT c_nationkey::HUGEINT AS nk, count(*)::BIGINT AS true_cnt " +
+          "FROM customer GROUP BY 1")
+      val h1 = hashLong(ch, "7::HUGEINT", "42::HUGEINT", "q")
+      val h2 = hashLong(ch, "nk", h1, "r")
+      val m = ch.add("m", s"($h2) % ${1L << 40}")
+      s"""WITH ${ch.render},
+         |tab(noise, lo, hi) AS (SELECT * FROM (VALUES $vals))
+         |SELECT CAST(nk AS BIGINT) AS c_nationkey, true_cnt,
+         |  noise::BIGINT AS noise,
+         |  (true_cnt + noise)::BIGINT AS noisy_cnt
+         |FROM ${ch.last} JOIN tab ON $m >= lo AND $m < hi""".stripMargin
+    }),
 
     QueryDef("profile_mutual_information", (s, dir) => {
       // information-theoretic dependence audit: mutual information
@@ -1284,6 +1371,39 @@ object ProfileQueries {
           expr("(8 * obs_cnt - n_users) * 100 div 6").as("est_e2"),
           (expr("(8 * obs_cnt - n_users) * 100 div 6") -
             col("true_cnt") * 100).as("err_e2"))
-    }, OracleSql.privacyRandomizedResponse())
+    }, {
+      // Oracle for `privacy_randomized_response`: both per-user coins are
+      // chained xxhash64 values — the constant first-argument hash
+      // (xxhash64(13, user_id) = hashLong(user_id, hashLong(13, 42))) is
+      // folded at build time with Spark's own XXH64, so the emulated
+      // chain provably replays the engine's coin flips.
+      import org.apache.spark.sql.catalyst.expressions.XXH64
+      val s13 = u(XXH64.hashLong(13L, 42L))
+      val s17 = u(XXH64.hashLong(17L, 42L))
+      val ch = new Chain("rr",
+        "SELECT user_id, user_id::HUGEINT AS ka, " +
+          "max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)" +
+          "::BIGINT AS t " +
+          "FROM events GROUP BY 1, 2")
+      val h1 = hashLong(ch, "ka", s"$s13::HUGEINT", "c1")
+      val h2 = hashLong(ch, "ka", s"$s17::HUGEINT", "c2")
+      s"""WITH ${ch.render},
+         |coins AS (
+         |  SELECT t,
+         |    ((${sig(h1)} % 4) + 4) % 4 AS c1,
+         |    ((${sig(h2)} % 2) + 2) % 2 AS c2
+         |  FROM ${ch.last}),
+         |rep AS (
+         |  SELECT t, CASE WHEN c1 < 3 THEN t ELSE c2 END AS report
+         |  FROM coins),
+         |m AS (SELECT count(*)::BIGINT AS n_users,
+         |  sum(t)::BIGINT AS true_cnt, sum(report)::BIGINT AS obs_cnt
+         |  FROM rep)
+         |SELECT n_users, true_cnt, obs_cnt,
+         |  ((8 * obs_cnt - n_users) * 100 // 6)::BIGINT AS est_e2,
+         |  (((8 * obs_cnt - n_users) * 100 // 6) - true_cnt * 100)
+         |    ::BIGINT AS err_e2
+         |FROM m""".stripMargin
+    })
   )
 }

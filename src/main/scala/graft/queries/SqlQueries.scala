@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Joins, Scale, TemporalJoins}
 import graft.functions.ExactGrid
+import graft.OracleSql.{Chain, hashLong, roundSpark, tokenHashCtes}
 import graft.queries.QueryKit._
 
 /** SQL-surface breadth: the TPC-H queries, aggregation, windows, set
@@ -107,6 +108,12 @@ object SqlQueries {
       .agg(expr(discMoney).as("revenue"),
         count(lit(1)).as("n_items"))
   }
+
+  /** Bottom-k sample size and the quantiles read off the sample, shared
+    * by the single-pass and rollup sketch queries and their one oracle.
+    */
+  private val SampleK = 256
+  private val SampleQuantiles = Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q1_pricing_summary", (s, dir) => {
@@ -387,7 +394,7 @@ object SqlQueries {
             graft.expressions.Sketches
               .kmv_distinct(col("l_orderkey"), k).as("approx_orders"),
             countDistinct(col("l_orderkey")).as("exact_orders"))
-      }, OracleSql.approxDistinctKmv(k))
+      }, approxDistinctKmv(k))
     },
 
     locally {
@@ -408,7 +415,7 @@ object SqlQueries {
       },
         // lossless merge: the rolled-up estimate equals the single-pass one
         "SELECT l_returnflag, approx_orders" +
-          s" FROM (${OracleSql.approxDistinctKmv(k)}) kr")
+          s" FROM (${approxDistinctKmv(k)}) kr")
     },
 
     QueryDef("approx_distinct_hll", (s, dir) => {
@@ -422,7 +429,7 @@ object SqlQueries {
           graft.expressions.HllSketches
             .hll_distinct(col("l_orderkey")).as("approx_orders"),
           countDistinct(col("l_orderkey")).as("exact_orders"))
-    }, OracleSql.approxDistinctHll()),
+    }, approxDistinctHll()),
 
     QueryDef("approx_distinct_hll_rollup", (s, dir) => {
       // the 64-byte sketch-store pattern: one persistable register
@@ -439,7 +446,7 @@ object SqlQueries {
           .as("approx_orders"))
     },
       // elementwise-max register merge is lossless: rollup == single-pass
-      s"SELECT l_returnflag, approx_orders FROM (${OracleSql.approxDistinctHll()}) hr"),
+      s"SELECT l_returnflag, approx_orders FROM (${approxDistinctHll()}) hr"),
 
     QueryDef("exact_distinct_bitmap", (s, dir) => {
       // roaring-style compressed bitmap (ClickHouse groupBitmap / Druid
@@ -767,47 +774,39 @@ object SqlQueries {
         |             ORDER BY o_totalprice DESC, o_orderkey ASC),
         |       p AS (PARTITION BY o_orderstatus)""".stripMargin),
 
-    locally {
-      val k = 256
-      QueryDef("approx_quantiles_sample", (s, dir) => {
-        // mergeable quantile sketch: deterministic bottom-k row sample
-        // per group (<=k 16-byte pairs per partition through the
-        // shuffle); quantiles are positional reads off the sample, so the
-        // oracle reproduces them exactly
-        import graft.expressions.Kq
-        t(s, dir, "lineitem").groupBy("l_returnflag")
-          .agg(Kq.kq_state(col("l_quantity"), k,
-            col("l_orderkey"), col("l_linenumber").cast("long")).as("sk"))
-          .select(col("l_returnflag"),
-            Kq.kq_quantile(col("sk"), 0.5).as("p50"),
-            Kq.kq_quantile(col("sk"), 0.9).as("p90"),
-            Kq.kq_quantile(col("sk"), 0.99).as("p99"))
-      }, OracleSql.quantileSample(k))
-    },
+    QueryDef("approx_quantiles_sample", (s, dir) => {
+      // mergeable quantile sketch: deterministic bottom-k row sample
+      // per group (<=k 16-byte pairs per partition through the
+      // shuffle); quantiles are positional reads off the sample, so the
+      // oracle reproduces them exactly
+      import graft.expressions.Kq
+      t(s, dir, "lineitem").groupBy("l_returnflag")
+        .agg(Kq.kq_state(col("l_quantity"), SampleK,
+          col("l_orderkey"), col("l_linenumber").cast("long")).as("sk"))
+        .select(col("l_returnflag") +:
+          SampleQuantiles.map { case (n, q) =>
+            Kq.kq_quantile(col("sk"), q).as(n) }: _*)
+    }, quantileSample(SampleK, SampleQuantiles)),
 
-    locally {
-      val k = 256
-      QueryDef("approx_quantiles_rollup", (s, dir) => {
-        // sketch-store rollup: one sample state per (flag, ship-month),
-        // persistable, merged per flag WITHOUT re-touching raw rows.
-        // Bottom-k merges losslessly, so this equals the single-pass
-        // sketch and shares its oracle.
-        import graft.expressions.Kq
-        val monthly = t(s, dir, "lineitem")
-          .groupBy(col("l_returnflag"),
-            date_trunc("month", col("l_shipdate")))
-          .agg(Kq.kq_state(col("l_quantity"), k,
-            col("l_orderkey"), col("l_linenumber").cast("long")).as("sk"))
-        monthly.groupBy("l_returnflag")
-          .agg(Kq.kq_merge(col("sk")).as("msk"))
-          .select(col("l_returnflag"),
-            Kq.kq_quantile(col("msk"), 0.5).as("p50"),
-            Kq.kq_quantile(col("msk"), 0.9).as("p90"),
-            Kq.kq_quantile(col("msk"), 0.99).as("p99"))
-      },
-        // lossless merge: the rolled-up sample equals the single-pass one
-        OracleSql.quantileSample(k))
+    QueryDef("approx_quantiles_rollup", (s, dir) => {
+      // sketch-store rollup: one sample state per (flag, ship-month),
+      // persistable, merged per flag WITHOUT re-touching raw rows.
+      // Bottom-k merges losslessly, so this equals the single-pass
+      // sketch and shares its oracle.
+      import graft.expressions.Kq
+      val monthly = t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"),
+          date_trunc("month", col("l_shipdate")))
+        .agg(Kq.kq_state(col("l_quantity"), SampleK,
+          col("l_orderkey"), col("l_linenumber").cast("long")).as("sk"))
+      monthly.groupBy("l_returnflag")
+        .agg(Kq.kq_merge(col("sk")).as("msk"))
+        .select(col("l_returnflag") +:
+          SampleQuantiles.map { case (n, q) =>
+            Kq.kq_quantile(col("msk"), q).as(n) }: _*)
     },
+      // lossless merge: the rolled-up sample equals the single-pass one
+      quantileSample(SampleK, SampleQuantiles)),
 
     locally {
       val (d, w, vocabFactor) = (4, 32, 32)
@@ -832,7 +831,44 @@ object SqlQueries {
           .filter(col("exact_cnt") * vocabFactor >= total)
           .select(col("token"), col("exact_cnt"),
             Cms.cms_estimate(lit(state), col("token"), d).as("cms_cnt"))
-      }, OracleSql.heavyHittersCms(d, w, vocabFactor))
+      }, {
+        // Oracle for `heavy_hitters_cms`: bit-exact count-min emulation.
+        // Token strings hash once (the existing xxhash64 string emulation),
+        // each distinct hash re-hashes per sketch row via `hashLong(thu,
+        // 1000+r)`, buckets are the low bits (`w` a power of two, so the
+        // unsigned mod equals the JVM's signed mask), and each row's bucket
+        // count is the sum of colliding tokens' exact counts — exactly the
+        // grid the Spark aggregate builds. The estimate is the least of the
+        // d bucket counts. Heavy hitters = tokens with above-`1/vocabFactor`
+        // frequency (integer-exact threshold).
+        require(w >= 2 && (w & (w - 1)) == 0, s"w must be a power of two: $w")
+        val ch = new Chain("cm", "SELECT thu FROM tc")
+        val bCols = (1 to d).map { r =>
+          val h = hashLong(ch, "thu", (1000 + r).toString, s"r$r")
+          ch.add(s"b$r", s"($h) % $w")
+        }
+        val bcCtes = (1 to d).map { r =>
+          s"""bc$r AS (SELECT dh.b$r AS b, sum(t.exact_cnt)::BIGINT AS cnt
+             |  FROM dh JOIN tc t ON t.thu = dh.thu GROUP BY 1)""".stripMargin
+        }.mkString(",\n")
+        val joins = (1 to d)
+          .map(r => s"JOIN bc$r c$r ON c$r.b = dh.b$r").mkString("\n  ")
+        val leastExpr = (1 to d).map(r => s"c$r.cnt")
+          .mkString("least(", ", ", ")")
+        s"""WITH ${tokenHashCtes()},
+           |tc AS MATERIALIZED (SELECT thu, any_value(tok) AS token,
+           |    count(*)::BIGINT AS exact_cnt FROM tokh GROUP BY thu),
+           |${ch.render},
+           |dh AS MATERIALIZED (SELECT thu, ${bCols.mkString(", ")}
+           |  FROM ${ch.last}),
+           |$bcCtes,
+           |tot AS (SELECT sum(exact_cnt) AS n FROM tc)
+           |SELECT t.token, t.exact_cnt, $leastExpr AS cms_cnt
+           |FROM tc t JOIN dh ON dh.thu = t.thu
+           |  $joins
+           |  CROSS JOIN tot
+           |WHERE t.exact_cnt * $vocabFactor >= tot.n""".stripMargin
+      })
     },
 
     locally {
@@ -891,7 +927,70 @@ object SqlQueries {
           bufU.estimate, inter, uni, jacPpm))
           .toDF("n_even_est", "n_odd_est", "union_est", "sample_inter",
             "sample_union", "jaccard_ppm")
-      }, OracleSql.approxJaccardKmv(k))
+      }, {
+        // Oracle for `approx_jaccard_kmv`: KMV/theta set algebra between
+        // the even- and odd-doc token-hash sets, reproduced exactly. Per
+        // side: distinct XXH64 token hashes (seed 42, the [[tokenHashCtes]]
+        // emulation), the k unsigned-smallest retained, theta = k-th value
+        // (2^64 sentinel below k). Global theta = least of the two; the
+        // theta-filtered retained sets give the exact sample intersection/
+        // union the engine computes on its two deserialized sketch buffers,
+        // and the union estimate re-runs the KMV estimator on the merged
+        // k-min set — all HUGEINT, no floats.
+        val km1 = k - 1
+        s"""WITH ${tokenHashCtes()},
+           |sides AS (
+           |  SELECT CASE WHEN doc_id % 2 = 0 THEN 'even' ELSE 'odd' END
+           |    AS side, thu FROM tokh),
+           |dh AS (SELECT DISTINCT side, thu FROM sides),
+           |rk AS (SELECT side, thu,
+           |    row_number() OVER (PARTITION BY side ORDER BY thu) AS rn,
+           |    count(*) OVER (PARTITION BY side) AS n
+           |  FROM dh),
+           |ret AS (SELECT side, thu, rn, n FROM rk WHERE rn <= $k),
+           |th AS (SELECT side, max(n) AS n,
+           |    CASE WHEN max(n) >= $k
+           |      THEN max(CASE WHEN rn = $k THEN thu END)
+           |      ELSE 18446744073709551616::HUGEINT END AS theta
+           |  FROM ret GROUP BY side),
+           |est AS (SELECT side,
+           |    CASE WHEN n < $k THEN n::HUGEINT
+           |      ELSE ($km1::HUGEINT * 18446744073709551616) // theta END
+           |      AS est
+           |  FROM th),
+           |g AS (SELECT min(theta) AS theta FROM th),
+           |sa AS (SELECT r.thu FROM ret r, g
+           |  WHERE r.side = 'even' AND r.thu < g.theta),
+           |sb AS (SELECT r.thu FROM ret r, g
+           |  WHERE r.side = 'odd' AND r.thu < g.theta),
+           |samp AS (SELECT
+           |    (SELECT count(*) FROM sa JOIN sb ON sa.thu = sb.thu)::HUGEINT
+           |      AS inter,
+           |    (SELECT count(DISTINCT thu) FROM
+           |      (SELECT thu FROM sa UNION ALL SELECT thu FROM sb))::HUGEINT
+           |      AS uni),
+           |um AS (SELECT DISTINCT thu FROM ret),
+           |urk AS (SELECT thu,
+           |    row_number() OVER (ORDER BY thu) AS rn,
+           |    count(*) OVER () AS n
+           |  FROM um),
+           |uag AS (SELECT max(CASE WHEN rn = $k THEN thu END) AS uk,
+           |    least(max(n), $k) AS n
+           |  FROM urk WHERE rn <= $k),
+           |uest AS (SELECT CASE WHEN n < $k THEN n::HUGEINT
+           |    ELSE ($km1::HUGEINT * 18446744073709551616) // uk END AS est
+           |  FROM uag)
+           |SELECT
+           |  (SELECT est FROM est WHERE side = 'even')::BIGINT AS n_even_est,
+           |  (SELECT est FROM est WHERE side = 'odd')::BIGINT AS n_odd_est,
+           |  (SELECT est FROM uest)::BIGINT AS union_est,
+           |  samp.inter::BIGINT AS sample_inter,
+           |  samp.uni::BIGINT AS sample_union,
+           |  (CASE WHEN samp.uni = 0 THEN 0
+           |    ELSE (samp.inter * 1000000) // samp.uni END)::BIGINT
+           |    AS jaccard_ppm
+           |FROM samp""".stripMargin
+      })
     },
 
     QueryDef("heavy_hitters_mg", (s, dir) => {
@@ -943,7 +1042,34 @@ object SqlQueries {
       // the closed-form pixel function (keep in sync with
       // Multimodal.ImageCodec.pixel) — no image library on the oracle
       // side; PNG losslessness makes the comparison exact-integer
-      OracleSql.interpolateHourly()),
+        // Oracle for `interpolate_hourly`: same dedupe (max per second),
+        // same lead-window segmentation, same per-segment grid explode, and
+        // the interpolation formula in the same IEEE association, with
+        // Spark-semantics rounding.
+        s"""WITH obs AS (
+           |  SELECT event_type AS t, CAST(floor(epoch(ts)) AS BIGINT) AS e,
+           |         max(value) AS v
+           |  FROM events GROUP BY 1, 2),
+           |seg AS (
+           |  SELECT t, e, v,
+           |    lead(e) OVER (PARTITION BY t ORDER BY e) AS ne,
+           |    lead(v) OVER (PARTITION BY t ORDER BY e) AS nv
+           |  FROM obs),
+           |b AS (
+           |  SELECT *, ((e + 3599) // 3600) * 3600 AS gs,
+           |    CASE WHEN ne IS NULL THEN e ELSE ne - 1 END AS ge
+           |  FROM seg),
+           |g AS (
+           |  SELECT t, e, v, ne, nv,
+           |    unnest(CASE WHEN gs <= ge THEN generate_series(gs, ge, 3600)
+           |           ELSE [] END) AS grid
+           |  FROM b)
+           |SELECT t AS event_type, grid AS grid_epoch,
+           |  ${roundSpark(
+                "CASE WHEN ne IS NULL THEN v ELSE v + (nv - v) * " +
+                  "((grid - e)::DOUBLE / (ne - e)::DOUBLE) END", 4)}
+           |    AS value_interp
+           |FROM g""".stripMargin),
 
     QueryDef("agg_cube", (s, dir) => {
       t(s, dir, "orders")
@@ -1796,4 +1922,132 @@ object SqlQueries {
         |WHERE c.cw * 100 >= q.q * c.tot
         |  AND (c.cw - c.wt) * 100 < q.q * c.tot""".stripMargin)
   )
+
+  /** Oracle for `approx_distinct_kmv`: the KMV estimate is reproduced
+    * EXACTLY — XXH64.hashLong(l_orderkey, 42) via the HUGEINT chain,
+    * distinct hashes ranked unsigned-ascending per group, estimate
+    * `(k-1) * 2^64 // u_k` in HUGEINT floor division (the engine does
+    * the identical BigInt math), exact count below k. Scope: key column
+    * must be a non-negative BIGINT (signed bit-pattern == HUGEINT value;
+    * l_orderkey >= 1 by construction).
+    */
+  private def approxDistinctKmv(k: Int): String = {
+    val ch = new Chain("kv",
+      "SELECT DISTINCT l_returnflag AS grp, l_orderkey::HUGEINT AS lv FROM lineitem")
+    val hv = hashLong(ch, "lv", "42", "h")
+    s"""WITH ${ch.render},
+       |hh AS MATERIALIZED (SELECT DISTINCT grp, $hv AS hv FROM ${ch.last}),
+       |rk AS (SELECT grp, hv,
+       |         row_number() OVER (PARTITION BY grp ORDER BY hv) AS rn,
+       |         count(*) OVER (PARTITION BY grp) AS n
+       |       FROM hh),
+       |ag AS (SELECT grp, max(n) AS n,
+       |         max(CASE WHEN rn = $k THEN hv END) AS uk
+       |       FROM rk GROUP BY grp),
+       |ex AS (SELECT l_returnflag AS grp,
+       |         count(DISTINCT l_orderkey) AS exact_orders
+       |       FROM lineitem GROUP BY 1)
+       |SELECT a.grp AS l_returnflag,
+       |  CASE WHEN a.n < $k THEN a.n::BIGINT
+       |       ELSE least((${k - 1}::HUGEINT * 18446744073709551616) // a.uk,
+       |                  9223372036854775807)::BIGINT END AS approx_orders,
+       |  e.exact_orders
+       |FROM ag a JOIN ex e ON e.grp = a.grp""".stripMargin
+  }
+
+  /** Oracle for `approx_distinct_hll` (and, via lossless elementwise-max
+    * register merge, `approx_distinct_hll_rollup`): the whole HLL
+    * pipeline re-derived in SQL from the shared constants in
+    * [[graft.expressions.Hll]] — bucket/rank by integer bit tests on
+    * the emulated XXH64, the harmonic sum as the exact dyadic HUGEINT
+    * `Σ 2^(59-M_j)`, the raw estimate as one HUGEINT floor division
+    * with α pre-scaled to millionths, and the linear-counting
+    * correction from the SAME 64-entry scaled-ln table the engine
+    * compiles in. No floats anywhere, so the approximation matches the
+    * engine bit-for-bit.
+    */
+  private def approxDistinctHll(): String = {
+    import graft.expressions.Hll
+    val sb = Hll.SuffixBits
+    val two = BigInt(1) << sb
+    val ch = new Chain("hl",
+      "SELECT DISTINCT l_returnflag AS grp, l_orderkey::HUGEINT AS lv FROM lineitem")
+    val hv = hashLong(ch, "lv", "42", "h")
+    val rankCase = (1 to sb)
+      .map(r => s"WHEN sfx >= ${BigInt(1) << (sb - r)} THEN $r")
+      .mkString("\n|     ")
+    val termCase = (0 to sb + 1)
+      .map(m => s"WHEN $m THEN ${BigInt(1) << (sb + 1 - m)}")
+      .mkString("\n|           ")
+    val lnCase = (1 to Hll.M)
+      .map(v => s"WHEN $v THEN ${Hll.LnTable(v - 1)}")
+      .mkString("\n|            ")
+    s"""WITH ${ch.render},
+       |hh AS MATERIALIZED (SELECT DISTINCT grp, $hv AS hv FROM ${ch.last}),
+       |bx AS (SELECT grp, hv // $two AS j, hv % $two AS sfx FROM hh),
+       |br AS (SELECT grp, j,
+       |   CASE WHEN sfx = 0 THEN ${sb + 1}
+       |     $rankCase END AS r FROM bx),
+       |regs AS (SELECT grp, j, max(r) AS m FROM br GROUP BY 1, 2),
+       |fr AS (SELECT g.grp, t.j, coalesce(rg.m, 0) AS m
+       |       FROM (SELECT DISTINCT grp FROM regs) g
+       |       CROSS JOIN range(0, ${Hll.M}) t(j)
+       |       LEFT JOIN regs rg ON rg.grp = g.grp AND rg.j = t.j),
+       |ag AS (SELECT grp,
+       |         sum(CASE m
+       |           $termCase END)::HUGEINT AS s,
+       |         sum(CASE WHEN m = 0 THEN 1 ELSE 0 END)::BIGINT AS v
+       |       FROM fr GROUP BY grp),
+       |es AS (SELECT grp, v,
+       |         CAST('${Hll.RawNumerator}' AS HUGEINT) // (s * 1000000)
+       |           AS raw
+       |       FROM ag),
+       |ex AS (SELECT l_returnflag AS grp,
+       |         count(DISTINCT l_orderkey) AS exact_orders
+       |       FROM lineitem GROUP BY 1)
+       |SELECT e.grp AS l_returnflag,
+       |  CASE WHEN e.v > 0 AND e.raw <= ${Hll.LinearThreshold}
+       |       THEN (${Hll.M}::HUGEINT * (CASE e.v
+       |            $lnCase END)) // 1000000
+       |       ELSE least(e.raw, 9223372036854775807) END::BIGINT
+       |    AS approx_orders,
+       |  x.exact_orders
+       |FROM es e JOIN ex x ON x.grp = e.grp""".stripMargin
+  }
+
+  /** Oracle for `approx_quantiles_sample` (and its lossless rollup
+    * twin): emulate the deterministic bottom-k row sample — rank rows by
+    * the chained xxhash64 of the (orderkey, linenumber) row key, keep
+    * the k unsigned-smallest per group, and read the positional quantile
+    * `ceil(q * m)` off the sample's value order. IEEE `q * m` and ceil
+    * are bit-deterministic in both engines, so the estimate matches
+    * exactly.
+    */
+  private def quantileSample(k: Int, qs: Seq[(String, Double)]): String = {
+    val ch = new Chain("qq",
+      "SELECT l_returnflag AS g, l_quantity AS v, " +
+        "l_orderkey::HUGEINT AS ka, l_linenumber::HUGEINT AS kb " +
+        "FROM lineitem")
+    val h1 = hashLong(ch, "ka", "42", "p")
+    val h2 = hashLong(ch, "kb", h1, "w")
+    val cols = qs.map { case (n, q) =>
+      s"max(CASE WHEN vr.r = greatest(1, least(m.m, " +
+        s"CAST(ceil($q * m.m) AS BIGINT))) THEN vr.v END) AS $n"
+    }.mkString(",\n  ")
+    s"""WITH ${ch.render},
+       |dd AS (SELECT g, $h2 AS hv, min(v) AS v
+       |       FROM ${ch.last} GROUP BY 1, 2),
+       |rk AS (SELECT g, v,
+       |         row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
+       |       FROM dd),
+       |smp AS (SELECT g, v FROM rk WHERE rn <= $k),
+       |m AS (SELECT g, count(*) AS m FROM smp GROUP BY g),
+       |vr AS (SELECT s.g, s.v,
+       |         row_number() OVER (PARTITION BY s.g ORDER BY s.v) AS r
+       |       FROM smp s)
+       |SELECT vr.g AS l_returnflag,
+       |  $cols
+       |FROM vr JOIN m ON m.g = vr.g
+       |GROUP BY 1""".stripMargin
+  }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{Dedup, ExactGrid, LanguageModel, Retrieval,
   TextFunctions}
 import graft.expressions.UnicodeNormalizeCol
+import graft.OracleSql.{bm25Ctes, eRatioE, roundSpark, shingleHashCtes,
+  tokenHashCtes}
 import graft.queries.QueryKit._
 
 /** Text analysis for LLM data: normalization, quality signals, language
@@ -354,7 +356,46 @@ object TextQueries {
       // the token array (no positional self-join); per-doc fold is
       // position-ordered, so the oracle matches bit-for-bit
       LanguageModel.bigramNll(t(s, dir, "documents"))
-    }, OracleSql.textPerplexity()),
+    },
+      // Oracle for `text_perplexity`: the add-one bigram LM trained on the
+      // corpus — identical long counts, identical `ln((c+1)/(denom+V))`
+      // doubles, per-doc fold in position order (`list_reduce` over
+      // `list(lp ORDER BY pos)`; the engine's `0.0 + x` seed is exact), and
+      // the Spark-rounded 4-decimal mean NLL.
+      s"""WITH d AS (
+         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+         |  FROM documents WHERE length(trim(text)) > 0),
+         |t AS (
+         |  SELECT doc_id, unnest(arr) AS w,
+         |    generate_subscripts(arr, 1) AS pos
+         |  FROM d),
+         |uni AS (SELECT w, count(*) AS cu FROM t GROUP BY 1),
+         |st AS (SELECT count(*) AS n, count(DISTINCT w) AS v FROM t),
+         |bg AS (
+         |  SELECT doc_id, unnest(arr[1:len(arr) - 1]) AS w1,
+         |    unnest(arr[2:len(arr)]) AS w2,
+         |    generate_subscripts(arr[1:len(arr) - 1], 1) AS pos
+         |  FROM d WHERE len(arr) > 1),
+         |bc AS (SELECT w1, w2, count(*) AS cb FROM bg GROUP BY 1, 2),
+         |term1 AS (
+         |  SELECT f.doc_id, 1 AS pos,
+         |    ln((uni.cu + 1.0) / CAST(st.n + st.v AS DOUBLE)) AS lp
+         |  FROM (SELECT doc_id, arr[1] AS w FROM d) f
+         |  JOIN uni USING (w) CROSS JOIN st),
+         |termb AS (
+         |  SELECT bg.doc_id, bg.pos + 1 AS pos,
+         |    ln((bc.cb + 1.0) / CAST(uni.cu + st.v AS DOUBLE)) AS lp
+         |  FROM bg JOIN bc USING (w1, w2)
+         |  JOIN uni ON uni.w = bg.w1 CROSS JOIN st),
+         |terms AS (SELECT * FROM term1 UNION ALL SELECT * FROM termb),
+         |agg AS (
+         |  SELECT doc_id,
+         |    list_reduce(list(lp ORDER BY pos), (a, x) -> a + x) AS raw,
+         |    count(*) AS n_tokens
+         |  FROM terms GROUP BY 1)
+         |SELECT doc_id, n_tokens,
+         |  ${roundSpark("-(raw / n_tokens::DOUBLE)", 4)} AS avg_nll
+         |FROM agg""".stripMargin),
 
     locally {
       val (shingleN, evalMod) = (4, 13)
@@ -366,7 +407,18 @@ object TextQueries {
           docs.filter(col("doc_id") % evalMod === 0), "text", shingleN)
         Dedup.contaminationHits(docs.filter(col("doc_id") % evalMod =!= 0),
           "doc_id", "text", contamination, shingleN)
-      }, OracleSql.textDecontaminate(shingleN, evalMod))
+      },
+        // Oracle for `text_decontaminate`: distinct width-`shingleN` shingle
+        // hashes of the eval slice (doc_id % `evalMod` == 0) matched against
+        // every other doc's shingle set.
+        s"""WITH ${tokenHashCtes()},
+           |${shingleHashCtes(shingleN)},
+           |sset AS MATERIALIZED (SELECT DISTINCT doc_id, shu FROM shash),
+           |ctam AS MATERIALIZED (SELECT DISTINCT shu FROM sset WHERE doc_id % $evalMod = 0)
+           |SELECT s.doc_id, CAST(count(DISTINCT s.shu) AS BIGINT) AS n_hits
+           |FROM sset s JOIN ctam c ON c.shu = s.shu
+           |WHERE s.doc_id % $evalMod <> 0
+           |GROUP BY s.doc_id""".stripMargin)
     },
 
     QueryDef("text_exact_decontaminate", (s, dir) => {
@@ -458,7 +510,25 @@ object TextQueries {
           // 1 - k/n = (n-k)/n: exact integer ratio on the 4-dp grid
           ExactGrid.eRatio(col("n_bigrams") - coalesce(col("n_known"), lit(0L)),
             col("n_bigrams"), 10000L).as("novelty"))
-    }, OracleSql.textNovelty()),
+    },
+      // Oracle for `text_novelty`: the same bigram shingle-hash chain,
+      // reference set = distinct hashes of the `doc_id % 10 < 5` half,
+      // per-candidate coverage by hash join, one division, Spark rounding.
+      s"""WITH ${tokenHashCtes()},
+         |${shingleHashCtes(2)},
+         |refset AS MATERIALIZED (
+         |  SELECT DISTINCT shu FROM shash WHERE doc_id % 10 < 5),
+         |cs AS MATERIALIZED (
+         |  SELECT DISTINCT doc_id, shu FROM shash WHERE doc_id % 10 >= 5),
+         |tot AS (SELECT doc_id, count(*) AS n_bigrams FROM cs GROUP BY 1),
+         |hit AS (
+         |  SELECT c.doc_id, count(*) AS k
+         |  FROM cs c JOIN refset r USING (shu) GROUP BY 1)
+         |SELECT t.doc_id, t.n_bigrams,
+         |  ${eRatioE("t.n_bigrams - coalesce(h.k, 0)", "t.n_bigrams",
+              10000L)}
+         |    AS novelty
+         |FROM tot t LEFT JOIN hit h USING (doc_id)""".stripMargin),
 
     locally {
       val maskBits = 4
@@ -525,24 +595,73 @@ object TextQueries {
         |SELECT doc_id, rk::INT AS rk, tok, tf, score
         |FROM rk WHERE rk <= 5 AND score > 0""".stripMargin),
 
-    QueryDef("text_collocations", (s, dir) => {
-      // phrase mining: top-50 adjacent pairs by lift (monotone PMI),
-      // exact integer counts, one division, bounded TakeOrdered top-k
-      TextFunctions.collocations(t(s, dir, "documents"), "text")
-    }, OracleSql.textCollocations()),
+    locally {
+      val minCount = 5
+      val topK = 50
+      QueryDef("text_collocations", (s, dir) => {
+        // phrase mining: top-50 adjacent pairs by lift (monotone PMI),
+        // exact integer counts, one division, bounded TakeOrdered top-k
+        TextFunctions.collocations(t(s, dir, "documents"), "text")
+      },
+        // Oracle for `text_collocations`: bigram lift over exact integer
+        // counts, one IEEE division, TOTAL-ordered top-k (lift desc, then
+        // the pair) so the LIMIT boundary is deterministic on both engines.
+        s"""WITH d AS (
+           |  SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+           |  FROM documents WHERE length(trim(text)) > 0),
+           |t AS (SELECT unnest(arr) AS w FROM d),
+           |uni AS (SELECT w, count(*) AS cu FROM t GROUP BY 1),
+           |bg AS (
+           |  SELECT unnest(arr[1:len(arr) - 1]) AS w1,
+           |    unnest(arr[2:len(arr)]) AS w2
+           |  FROM d WHERE len(arr) > 1),
+           |bc AS (SELECT w1, w2, count(*) AS cab FROM bg GROUP BY 1, 2),
+           |tot AS (SELECT count(*) AS n FROM bg)
+           |SELECT bc.w1, bc.w2, bc.cab,
+           |  ${roundSpark("(bc.cab * tot.n)::DOUBLE / (ua.cu * ub.cu)::DOUBLE", 4)}
+           |    AS lift
+           |FROM bc
+           |JOIN uni ua ON ua.w = bc.w1
+           |JOIN uni ub ON ub.w = bc.w2
+           |CROSS JOIN tot
+           |WHERE bc.cab >= $minCount
+           |ORDER BY lift DESC, bc.w1, bc.w2
+           |LIMIT $topK""".stripMargin)
+    },
 
-    QueryDef("text_classifier_score", (s, dir) => {
-      // fastText-style hashed linear gate, one map-only pass: the
-      // "model" here is a derived integer weight per bucket (the
-      // multiplicative-mix formula below, reproduced by the oracle) —
-      // a trained model would ship its real weight array through the
-      // same parameter
+    locally {
       val dim = 4096
-      val weights = Array.tabulate(dim)(b =>
-        ((b.toLong * 2654435761L) % 2001L).toInt - 1000)
-      TextFunctions.classifierScore(t(s, dir, "documents"),
-        "doc_id", "text", weights)
-    }, OracleSql.textClassifierScore()),
+      QueryDef("text_classifier_score", (s, dir) => {
+        // fastText-style hashed linear gate, one map-only pass: the
+        // "model" here is a derived integer weight per bucket (the
+        // multiplicative-mix formula below, reproduced by the oracle) —
+        // a trained model would ship its real weight array through the
+        // same parameter
+        val dim = 4096
+        val weights = Array.tabulate(dim)(b =>
+          ((b.toLong * 2654435761L) % 2001L).toInt - 1000)
+        TextFunctions.classifierScore(t(s, dir, "documents"),
+          "doc_id", "text", weights)
+      }, {
+        // Oracle for `text_classifier_score`: per-token xxhash64 → low-bits
+        // bucket (`dim` a power of two, so the HUGEINT mod equals the
+        // engine's signed-long mask) → the query's derived integer weight
+        // `((b·2654435761) mod 2001) − 1000`, summed exactly per document.
+        // Blank docs (no tokh rows) left-join back as (0, 0, false).
+        require(dim >= 2 && (dim & (dim - 1)) == 0,
+          s"dim must be a power of two: $dim")
+        s"""WITH ${tokenHashCtes()},
+           |ds AS (
+           |  SELECT doc_id, count(*)::INT AS n_tokens,
+           |    sum((((thu % $dim) * 2654435761) % 2001) - 1000)::BIGINT
+           |      AS score
+           |  FROM tokh GROUP BY doc_id)
+           |SELECT d.doc_id, coalesce(ds.n_tokens, 0)::INT AS n_tokens,
+           |  coalesce(ds.score, 0)::BIGINT AS score,
+           |  (coalesce(ds.score, 0) > 0) AS keep
+           |FROM documents d LEFT JOIN ds USING (doc_id)""".stripMargin
+      })
+    },
 
     QueryDef("text_multipattern_scan", (s, dir) => {
       // the same screen as text_exact_decontaminate, at snippet-set
@@ -569,17 +688,35 @@ object TextQueries {
         |WHERE d.doc_id % 29 <> 0
         |GROUP BY d.doc_id""".stripMargin),
 
-    QueryDef("bm25_topk", (s, dir) => {
-      // lexical retrieval: BM25 top-10 per keyword query — the
-      // complement to the embedding ANN family (hybrid retrieval fuses
-      // both). Winners via the bounded top-k aggregate; score fold is
-      // order-defined (sorted terms, left-to-right), so the oracle
-      // reproduces the doubles bit-for-bit before the 4-decimal round.
-      Retrieval.bm25TopK(s, t(s, dir, "documents"), Bm25Queries, k = 10)
-    }, OracleSql.bm25TopK(Bm25Queries, k = 10)),
+    locally {
+      val k = 10
+      val k1 = 1.2
+      val b = 0.75
+      QueryDef("bm25_topk", (s, dir) => {
+        // lexical retrieval: BM25 top-10 per keyword query — the
+        // complement to the embedding ANN family (hybrid retrieval fuses
+        // both). Winners via the bounded top-k aggregate; score fold is
+        // order-defined (sorted terms, left-to-right), so the oracle
+        // reproduces the doubles bit-for-bit before the 4-decimal round.
+        Retrieval.bm25TopK(s, t(s, dir, "documents"), Bm25Queries, k = 10)
+      }, {
+        // Oracle for `bm25_topk`: same tf/df/len aggregations, the SAME
+        // IEEE double operations in the same association order (the engine
+        // folds term scores in sorted-term order left-to-right; DuckDB's
+        // `list_reduce(list(x ORDER BY term), +)` reproduces it — the fold's
+        // `0.0 + s1` seed is bit-transparent for positive scores), ranking
+        // on the 4-decimal Spark-rounded score with a doc-id tie-break.
+        val queries = Bm25Queries
+        s"WITH ${bm25Ctes(queries, k1, b)}\n" +
+          s"SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= $k"
+      })
+    },
 
     locally {
       val k = 10
+      val c = 60
+      val k1 = 1.2
+      val b = 0.75
       QueryDef("hybrid_retrieval_rrf", (s, dir) => {
         // hybrid retrieval: reciprocal-rank fusion of BM25 and boolean
         // term-overlap rankings — fixed-order reciprocal sum, bounded
@@ -588,18 +725,88 @@ object TextQueries {
         Retrieval.rrfFuse(
           Retrieval.bm25TopK(s, docs, Bm25Queries, k),
           Retrieval.booleanOverlapTopK(s, docs, Bm25Queries, k), k)
-      }, OracleSql.hybridRrf(Bm25Queries, k))
+      }, {
+        // Oracle for `hybrid_retrieval_rrf`: reciprocal-rank fusion of the
+        // BM25 ranking (shared CTEs) and a boolean term-overlap ranking.
+        // The fused score `coalesce(1/(c+rank_a), 0) + coalesce(1/(c+rank_b),
+        // 0)` is two IEEE divisions and one addition in fixed order — exact
+        // cross-engine — then Spark-rounded for the rank key.
+        val queries = Bm25Queries
+        s"""WITH ${bm25Ctes(queries, k1, b)},
+           |bm AS (SELECT query_id, doc_id, rank FROM rk WHERE rank <= $k),
+           |ov AS (SELECT qt.query_id, tf.doc_id, count(*) AS overlap
+           |       FROM tf JOIN qt USING (term) GROUP BY 1, 2),
+           |ovr AS (SELECT query_id, doc_id,
+           |          row_number() OVER (PARTITION BY query_id
+           |            ORDER BY overlap DESC, doc_id ASC) AS rank
+           |        FROM ov),
+           |ob AS (SELECT query_id, doc_id, rank FROM ovr WHERE rank <= $k),
+           |fu AS (
+           |  SELECT coalesce(bm.query_id, ob.query_id) AS query_id,
+           |    coalesce(bm.doc_id, ob.doc_id) AS doc_id,
+           |    CASE
+           |      WHEN bm.rank IS NOT NULL AND ob.rank IS NOT NULL THEN
+           |        ${eRatioE(s"($c + bm.rank) + ($c + ob.rank)",
+                      s"($c + bm.rank) * ($c + ob.rank)", 1000000L)}
+           |      WHEN bm.rank IS NOT NULL THEN
+           |        ${eRatioE("1", s"$c + bm.rank", 1000000L)}
+           |      ELSE ${eRatioE("1", s"$c + ob.rank", 1000000L)}
+           |    END AS rrf
+           |  FROM bm FULL OUTER JOIN ob
+           |    ON bm.query_id = ob.query_id AND bm.doc_id = ob.doc_id),
+           |fr AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+           |         ORDER BY CAST(round(rrf * 1000000) AS BIGINT) DESC,
+           |                  doc_id ASC) AS INTEGER) AS rank
+           |       FROM fu)
+           |SELECT query_id, rank, doc_id, rrf FROM fr WHERE rank <= $k""".stripMargin
+      })
     },
 
     locally {
       val k = 10
+      val k1 = 1.2
+      val b = 0.75
       QueryDef("retrieval_metrics", (s, dir) => {
         // retrieval evaluation: recall/MRR/nDCG@10 of the BM25 ranking
         // against boolean-AND qrels (doc contains every query term) —
         // system-independent judgments both engines recompute exactly
         Retrieval.retrievalMetrics(s, t(s, dir, "documents"),
           Bm25Queries, k)
-      }, OracleSql.retrievalMetrics(Bm25Queries, k))
+      }, {
+        // Oracle for `retrieval_metrics`: boolean-AND qrels (doc contains
+        // every distinct query term), BM25 ranking via the shared CTEs, and
+        // recall/MRR/nDCG with the same ascending-order folds and the same
+        // embedded ln2 literal as the engine.
+        val queries = Bm25Queries
+        val ln2 = math.log(2.0)
+        s"""WITH ${bm25Ctes(queries, k1, b)},
+           |bmk AS (SELECT query_id, doc_id, rank FROM rk WHERE rank <= $k),
+           |dt AS (SELECT DISTINCT doc_id, term FROM t),
+           |nq AS (SELECT query_id, count(*) AS nq FROM qt GROUP BY 1),
+           |ov AS (SELECT qt.query_id, dt.doc_id, count(*) AS c
+           |       FROM dt JOIN qt USING (term) GROUP BY 1, 2),
+           |qr AS (SELECT ov.query_id, ov.doc_id
+           |       FROM ov JOIN nq USING (query_id) WHERE ov.c = nq.nq),
+           |nrel AS (SELECT query_id, count(*) AS n_rel FROM qr GROUP BY 1),
+           |hit AS (SELECT b2.query_id, b2.rank
+           |        FROM bmk b2 JOIN qr USING (query_id, doc_id)),
+           |hs AS (SELECT query_id,
+           |         list_reduce(list($ln2 / ln(rank + 1.0) ORDER BY rank),
+           |           (a, x) -> a + x) AS dcg,
+           |         min(rank) AS first_rank, count(*) AS n_hits
+           |       FROM hit GROUP BY 1),
+           |met AS (
+           |  SELECT n.query_id, n.n_rel, hs.dcg, hs.first_rank, hs.n_hits,
+           |    list_reduce(list_transform(range(1, least(n.n_rel, $k) + 1),
+           |      i -> $ln2 / ln(i + 1.0)), (a, x) -> a + x) AS idcg
+           |  FROM nrel n LEFT JOIN hs ON hs.query_id = n.query_id)
+           |SELECT query_id, n_rel,
+           |  ${eRatioE("coalesce(n_hits, 0)", "n_rel", 10000L)}
+           |    AS recall_$k,
+           |  coalesce(${eRatioE("1", "first_rank", 10000L)}, 0.0) AS mrr_$k,
+           |  ${roundSpark("coalesce(dcg, 0.0) / idcg", 4)} AS ndcg_$k
+           |FROM met""".stripMargin
+      })
     },
 
     QueryDef("text_chunk", (s, dir) => {
@@ -630,7 +837,23 @@ object TextQueries {
       val topK = 30
       QueryDef("text_bpe_pairs", (s, dir) =>
         TextFunctions.bpePairCounts(t(s, dir, "documents"), "text", topK),
-        OracleSql.textBpePairs(topK))
+          // Oracle for `text_bpe_pairs`: word histogram → in-word adjacent
+          // character pairs weighted by word count → deterministic top-k cut
+          // (count desc, pair asc).
+          s"""WITH w AS (
+             |  SELECT w, count(*) AS wc FROM (
+             |    SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+'))
+             |      AS w
+             |    FROM documents)
+             |  WHERE length(w) >= 2 GROUP BY w),
+             |p AS (
+             |  SELECT unnest(list_transform(range(1, length(w)),
+             |                i -> substr(w, i, 2))) AS pair, wc
+             |  FROM w),
+             |c AS (SELECT pair, CAST(sum(wc) AS BIGINT) AS cnt
+             |      FROM p GROUP BY pair)
+             |SELECT pair, cnt FROM c
+             |ORDER BY cnt DESC, pair ASC LIMIT $topK""".stripMargin)
     },
 
     QueryDef("text_normalize", (s, dir) => {
@@ -774,7 +997,16 @@ object TextQueries {
           .select(col("doc_id"), pmod(xxhash64(col("tok")), lit(buckets))
             .as("bucket"))
           .groupBy("doc_id", "bucket").agg(count(lit(1)).as("cnt"))
-      }, OracleSql.textFeatureHash(buckets))
+      },
+        // Oracle for `text_feature_hash`: the hashing-trick featurization —
+        // every whitespace-token OCCURRENCE hashed with the exact XXH64
+        // emulation ([[tokenHashCtes]]), bucketed by unsigned mod (equal to
+        // Spark's `pmod` of the signed hash: the 2⁶⁴ offset vanishes mod a
+        // power of two), counted per (doc, bucket).
+        s"""WITH ${tokenHashCtes()}
+           |SELECT doc_id, (thu % $buckets)::BIGINT AS bucket,
+           |  count(*) AS cnt
+           |FROM tokh GROUP BY 1, 2""".stripMargin)
     },
 
     QueryDef("text_gopher_rules", (s, dir) => {
@@ -1031,7 +1263,57 @@ object TextQueries {
         learned.toSeq.toDF("rank", "l", "r", "cnt")
           .select(col("rank"), col("l"), col("r"),
             concat(col("l"), col("r")).as("pair"), col("cnt"))
-      }, OracleSql.textBpeLearn(nMerges))
+      }, {
+        // Oracle for `text_bpe_learn`: the iterative merge loop unrolled —
+        // per round, adjacent-pair counts over the CURRENT segmentation
+        // (DuckDB symbol lists), the (cnt DESC, l, r) argmax, then greedy
+        // left-to-right re-segmentation via the delimiter-string replace
+        // trick (global `replace` over ␟-wrapped tokens merges
+        // non-overlapping left-to-right, the same semantics as the
+        // engine's array fold — verified on the 'abab'→'ab ab' and
+        // 'aaa'→'aa a' shapes).
+        //
+        // Every chain CTE is `AS MATERIALIZED`: each `w$i` is referenced
+        // twice (p$i and w${i+1}) and each `t$i` five times (four scalar
+        // subqueries in the replace plus the final UNION), so DuckDB's
+        // per-reference CTE inlining re-evaluates the whole prefix
+        // exponentially (2^rounds) without the fence — the r7 gate measured
+        // >650 s for 6 rounds at sf0.01; materialized it is seconds.
+        val d = "chr(31)"
+        val sb = new StringBuilder
+        sb ++=
+          """WITH w1 AS MATERIALIZED (
+            |  SELECT string_split(w, '') AS syms, count(*)::BIGINT AS wc
+            |  FROM (
+            |    SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+'))
+            |      AS w
+            |    FROM documents)
+            |  WHERE length(w) >= 2 GROUP BY w)""".stripMargin
+        for (i <- 1 to nMerges) {
+          val l = s"(SELECT l FROM t$i)"
+          val r = s"(SELECT r FROM t$i)"
+          sb ++=
+            s""",
+               |p$i AS (
+               |  SELECT syms[j] AS l, syms[j + 1] AS r, wc
+               |  FROM w$i, LATERAL (SELECT unnest(range(1, len(syms))) AS j) u),
+               |t$i AS MATERIALIZED (
+               |  SELECT l, r, sum(wc)::BIGINT AS cnt FROM p$i GROUP BY 1, 2
+               |  ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
+               |w${i + 1} AS MATERIALIZED (
+               |  SELECT string_split(trim(replace(
+               |      $d || array_to_string(syms, $d || $d) || $d,
+               |      $d || $l || $d || $d || $r || $d,
+               |      $d || $l || $r || $d),
+               |    $d), $d || $d) AS syms, wc
+               |  FROM w$i)""".stripMargin
+        }
+        sb ++= (1 to nMerges).map { i =>
+          s"""
+             |SELECT $i AS rank, l, r, l || r AS pair, cnt FROM t$i""".stripMargin
+        }.mkString("\nUNION ALL")
+        sb.toString
+      })
     },
 
     locally {
@@ -1056,7 +1338,68 @@ object TextQueries {
             .as("n_chars"),
           graft.expressions.BpeCol.bpe_token_count(col("text"), merges)
             .as("n_tokens"))
-      }, OracleSql.textBpeEncode(nMerges))
+      }, {
+        // Oracle for `text_bpe_encode`: re-derives the top-`nMerges` merge
+        // table exactly like [[textBpePairs]], then emulates the engine's
+        // rank-ordered left-to-right merge passes WITHOUT recursion. Each
+        // token is wrapped in its OWN delimiter pair (`D tok D`, D =
+        // chr(31), never inside an `[a-z0-9]` word), so a word starts as
+        // `Dc1DDc2D...DcnD` and one merge pass is ONE SQL
+        // `replace(DaDDbD → DabD)`. Each match consumes exactly two
+        // complete self-contained token wrappers — adjacent candidate pairs
+        // share NO characters (an interleaved `Dc1Dc2D` encoding would make
+        // neighboring matches share a delimiter, and `replace`'s
+        // non-overlapping scan would skip every other merge: "bbbb" with
+        // (b,b) must give 2 tokens, not 3). Left-to-right non-overlapping
+        // `replace` is then bit-for-bit the engine's token-level pass
+        // ([[graft.expressions.BpeOps.wordTokens]]). Token count =
+        // delimiter count / 2. Missing ranks (tiny corpora) fall back to
+        // an unmatchable chr(1) pair.
+        val d = "chr(31)"
+        val enc = (1 to nMerges).foldLeft(
+          s"regexp_replace(w, '(.)', $d || '\\1' || $d, 'g')") { (prev, i) =>
+          val m = s"coalesce((SELECT pair FROM m WHERE rk = $i), " +
+            "chr(1) || chr(1))"
+          s"""replace($prev,
+             |      $d || substr($m, 1, 1) || $d || $d || substr($m, 2, 1) || $d,
+             |      $d || $m || $d)""".stripMargin
+        }
+        s"""WITH w0 AS (
+           |  SELECT w, count(*) AS wc FROM (
+           |    SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+'))
+           |      AS w
+           |    FROM documents)
+           |  WHERE length(w) >= 2 GROUP BY w),
+           |p AS (
+           |  SELECT unnest(list_transform(range(1, length(w)),
+           |                i -> substr(w, i, 2))) AS pair, wc
+           |  FROM w0),
+           |c AS (SELECT pair, CAST(sum(wc) AS BIGINT) AS cnt
+           |      FROM p GROUP BY pair),
+           |m AS (
+           |  SELECT pair, CAST(row_number() OVER
+           |    (ORDER BY cnt DESC, pair ASC) AS INT) AS rk
+           |  FROM c ORDER BY cnt DESC, pair ASC LIMIT $nMerges),
+           |dw AS (
+           |  SELECT doc_id, w FROM (
+           |    SELECT doc_id,
+           |      unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
+           |    FROM documents)
+           |  WHERE length(w) >= 1),
+           |e AS (
+           |  SELECT doc_id, w,
+           |    $enc AS enc
+           |  FROM dw),
+           |agg AS (
+           |  SELECT doc_id, count(*) AS n_words, sum(length(w)) AS n_chars,
+           |    sum((length(enc) - length(replace(enc, chr(31), ''))) // 2)
+           |      AS n_tokens
+           |  FROM e GROUP BY 1)
+           |SELECT doc.doc_id, coalesce(a.n_words, 0)::INT AS n_words,
+           |  coalesce(a.n_chars, 0)::BIGINT AS n_chars,
+           |  coalesce(a.n_tokens, 0)::INT AS n_tokens
+           |FROM documents doc LEFT JOIN agg a USING (doc_id)""".stripMargin
+      })
     },
 
     QueryDef("text_readability", (s, dir) => {
