@@ -220,46 +220,6 @@ object VersionedTable {
       throw new java.io.FileNotFoundException(
         s"no version of $root existed at $tsMillis"))))
 
-  /** Exactly-once micro-batch commit for streaming `foreachBatch`
-    * sinks: Spark re-delivers the LAST batch after a crash-restart, so
-    * a sink is exactly-once iff re-processing an already-committed
-    * `batchId` is a no-op. Each committed version records its batch id
-    * (`_batch_id`, written before the `_COMMITTED` marker); a commit
-    * for a batch id at or below the newest committed one is skipped.
-    * Returns the version written, or None when skipped.
-    */
-  def commitBatch(df: DataFrame, root: String, batchId: Long,
-                  nowMillis: () => Long = System.currentTimeMillis)
-      : Option[Long] = {
-    val spark = df.sparkSession
-    val newest = versions(spark, root).lastOption.flatMap(n =>
-      readSmall(spark, new Path(vdir(root, n), "_batch_id"))
-        .flatMap(s => scala.util.Try(s.toLong).toOption))
-    if (newest.exists(_ >= batchId)) None
-    else {
-      val n = claimNext(spark, root)
-      // Re-check under the claim: another writer may have committed this
-      // batch between the first check and our claim winning.
-      val newest2 = versions(spark, root).lastOption.flatMap(v =>
-        readSmall(spark, new Path(vdir(root, v), "_batch_id"))
-          .flatMap(s => scala.util.Try(s.toLong).toOption))
-      if (newest2.exists(_ >= batchId)) {
-        releaseClaim(spark, root, n)
-        None
-      } else {
-        val dir = vdir(root, n)
-        df.write.mode("errorifexists").parquet(dir.toString)
-        writeSmall(spark, new Path(dir, "_commit_ts"), nowMillis().toString)
-        writeSmall(spark, new Path(dir, "_batch_id"), batchId.toString)
-        requireClaimLive(spark, root, n)
-        writeSmall(spark, new Path(dir, "_COMMITTED"), "")
-        writeSmall(spark, new Path(root, "_LATEST"), n.toString)
-        releaseClaim(spark, root, n)
-        Some(n)
-      }
-    }
-  }
-
   /** mtime of `_claim=n`, or None if the claim no longer exists. A
     * racing commit's releaseClaim can delete a claim between vacuum's
     * listing and this stat; a vanished claim is NOT live — it can only

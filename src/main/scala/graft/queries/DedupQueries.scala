@@ -973,18 +973,6 @@ object DedupQueries {
         |  AND a.c_custkey < b.c_custkey
         |WHERE jaro_winkler_similarity(a.c_name, b.c_name) > 0.955""".stripMargin),
 
-    QueryDef("dedup_components_star", (s, dir) => {
-      // the same components kernel over the SAME candidate graph as
-      // dedup_components, with the identical (doc_id, min-id rep)
-      // output contract — so it shares that query's recursive-closure
-      // oracle. Kept as its own registry entry: its name and oracle
-      // are part of the published query surface.
-      val pairs = nearDupPairs(s, dir)
-      Graph.components(pairs, "id_a", "id_b")
-    },
-      // same output contract as dedup_components, same oracle
-      OracleSql.dedupComponents(NumHashes, RowsPerBand)),
-
     QueryDef("link_survivorship", (s, dir) => {
       // golden-record construction — the stage AFTER matching in an
       // entity-resolution pipeline (Fellegi–Sunter/Jaro–Winkler score

@@ -1670,9 +1670,7 @@ object MlQueries {
         |FROM cl GROUP BY 1""".stripMargin),
 
     locally {
-      val k = 8
-      val eps = 50000L
-      val rounds = 12
+      val (k, eps, rounds) = (8, 50000L, 12)
       QueryDef("cluster_single_linkage_2d", (s, dir) => {
         // multi-D single-linkage (VERDICT r11 #5): the dendrogram IS the
         // MST (Gower & Ross 1969), so the exact k-cluster partition
@@ -1686,11 +1684,7 @@ object MlQueries {
         // the ALL-PAIRS edge definition (proving the grid graph
         // lossless). eps bounds the dendrogram height — pairs farther
         // than eps never merge (the truncation that keeps this off the
-        // O(n²) all-pairs path at scale). SPARK_GRAFT_SL_EPS: big-
-        // fixture knob, never set in driver/oracle runs.
-        val K = 8
-        val EPS = sys.env.get("SPARK_GRAFT_SL_EPS")
-          .map(_.toLong).getOrElse(50000L)
+        // O(n²) all-pairs path at scale).
         val pts = t(s, dir, "embeddings")
           .select(col("vec_id"),
             floor(col("embedding").getItem(0).cast("double")
@@ -1698,8 +1692,8 @@ object MlQueries {
             floor(col("embedding").getItem(1).cast("double")
               * 1000000.0 + 0.5).as("y"))
         val rp = graft.ops.Dbscan.reps(pts).localCheckpoint(true)
-        val mst = graft.ops.SingleLinkage.mstEdges(rp, EPS)
-        graft.ops.SingleLinkage.cut(rp, mst, K)
+        val mst = graft.ops.SingleLinkage.mstEdges(rp, eps)
+        graft.ops.SingleLinkage.cut(rp, mst, k)
           .join(rp, Seq("rid"))
           .groupBy("cluster")
           .agg(sum("mult").as("n_points"),
@@ -1812,9 +1806,7 @@ object MlQueries {
     },
 
     locally {
-      val eps = 50000L
-      val minPts = 8L
-      val rounds = 12
+      val (eps, minPts, rounds) = (50000L, 8L, 12) // minPts counts the point
       QueryDef("cluster_dbscan_grid", (s, dir) => {
         // grid-accelerated DBSCAN (Ester et al. 1996) over the first two
         // embedding coordinates — the DENSITY clustering the centroid
@@ -1833,21 +1825,13 @@ object MlQueries {
         // definition; cluster_dbscan_pairs proves the candidate set
         // itself). Core components run on the engine's
         // convergence-checked min-label propagation.
-        // SPARK_GRAFT_DBSCAN_EPS: at-scale knob for the parameterized
-        // density-regime runs (scripts/dbscan_scale_check.py re-verifies
-        // such dumps engine-independently at the matching --eps). NEVER
-        // set in driver/oracle runs — the oracle SQL is built for the
-        // default, and unset ≡ 50000 keeps the gate surface unchanged.
-        val EPS = sys.env.get("SPARK_GRAFT_DBSCAN_EPS")
-          .map(_.toLong).getOrElse(50000L)
-        val MIN = 8L // incl. the point itself
         val pts = t(s, dir, "embeddings")
           .select(col("vec_id"),
             floor(col("embedding").getItem(0).cast("double")
               * 1000000.0 + 0.5).as("x"),
             floor(col("embedding").getItem(1).cast("double")
               * 1000000.0 + 0.5).as("y"))
-        graft.ops.Dbscan.cluster(pts, EPS, MIN)
+        graft.ops.Dbscan.cluster(pts, eps, minPts)
       }, {
         // Oracle for `cluster_dbscan_grid` (VERDICT r13 #4): the DuckDB twin
         // now mirrors the ENGINE's scale discipline instead of degrading to
@@ -1951,49 +1935,48 @@ object MlQueries {
       })
     },
 
-    QueryDef("cluster_dbscan_pairs", (s, dir) => {
-      // the DBSCAN candidate generator as a first-class oracle-gated
-      // surface (VERDICT r9 #1/#3): every representative-level
-      // eps-neighbor pair the grid join emits, checked against the
-      // all-pairs-over-distinct-coordinates definition. This is what
-      // makes the at-scale story REPLAYABLE — an independent checker
-      // only needs soundness (each emitted pair is truly within eps)
-      // plus sampled completeness over this dump, never an n² rebuild
-      // (scripts/dbscan_scale_check.py runs that at the 10× fixture,
-      // where the full all-pairs oracle exceeded its cap).
-      // same SPARK_GRAFT_DBSCAN_EPS knob as cluster_dbscan_grid (the
-      // two dumps must share eps for the checker's replay); unset ≡
-      // the oracle default 50000
-      val EPS = sys.env.get("SPARK_GRAFT_DBSCAN_EPS")
-        .map(_.toLong).getOrElse(50000L)
-      val pts = t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          floor(col("embedding").getItem(0).cast("double")
-            * 1000000.0 + 0.5).as("x"),
-          floor(col("embedding").getItem(1).cast("double")
-            * 1000000.0 + 0.5).as("y"))
-      graft.ops.Dbscan
-        .neighborPairs(graft.ops.Dbscan.reps(pts), EPS)
-        .select(col("ra"), col("rb"), col("mult_a"), col("mult_b"),
-          col("dist_sq"))
+    locally {
+      val eps = 50000L
+      QueryDef("cluster_dbscan_pairs", (s, dir) => {
+        // the DBSCAN candidate generator as a first-class oracle-gated
+        // surface (VERDICT r9 #1/#3): every representative-level
+        // eps-neighbor pair the grid join emits, checked against the
+        // all-pairs-over-distinct-coordinates definition. This is what
+        // makes the at-scale story REPLAYABLE — an independent checker
+        // only needs soundness (each emitted pair is truly within eps)
+        // plus sampled completeness over this dump, never an n² rebuild
+        // (scripts/dbscan_scale_check.py runs that at the 10× fixture,
+        // where the full all-pairs oracle exceeded its cap). eps is
+        // cluster_dbscan_grid's: the checker replays both dumps at one eps.
+        val pts = t(s, dir, "embeddings")
+          .select(col("vec_id"),
+            floor(col("embedding").getItem(0).cast("double")
+              * 1000000.0 + 0.5).as("x"),
+            floor(col("embedding").getItem(1).cast("double")
+              * 1000000.0 + 0.5).as("y"))
+        graft.ops.Dbscan
+          .neighborPairs(graft.ops.Dbscan.reps(pts), eps)
+          .select(col("ra"), col("rb"), col("mult_a"), col("mult_b"),
+            col("dist_sq"))
+      },
+        s"""WITH pts AS MATERIALIZED (
+          |  SELECT vec_id,
+          |    floor(embedding[1]::DOUBLE * 1000000.0 + 0.5)::BIGINT AS x,
+          |    floor(embedding[2]::DOUBLE * 1000000.0 + 0.5)::BIGINT AS y
+          |  FROM embeddings),
+          |reps AS MATERIALIZED (
+          |  SELECT x, y, min(vec_id)::BIGINT AS rid,
+          |    count(*)::BIGINT AS mult
+          |  FROM pts GROUP BY 1, 2)
+          |SELECT a.rid AS ra, b.rid AS rb, a.mult AS mult_a,
+          |  b.mult AS mult_b,
+          |  ((a.x - b.x) * (a.x - b.x)
+          |    + (a.y - b.y) * (a.y - b.y))::BIGINT AS dist_sq
+          |FROM reps a JOIN reps b ON a.rid <> b.rid
+          |  AND (a.x - b.x) * (a.x - b.x)
+          |    + (a.y - b.y) * (a.y - b.y) <= ${eps * eps}"""
+          .stripMargin)
     },
-      """WITH pts AS MATERIALIZED (
-        |  SELECT vec_id,
-        |    floor(embedding[1]::DOUBLE * 1000000.0 + 0.5)::BIGINT AS x,
-        |    floor(embedding[2]::DOUBLE * 1000000.0 + 0.5)::BIGINT AS y
-        |  FROM embeddings),
-        |reps AS MATERIALIZED (
-        |  SELECT x, y, min(vec_id)::BIGINT AS rid,
-        |    count(*)::BIGINT AS mult
-        |  FROM pts GROUP BY 1, 2)
-        |SELECT a.rid AS ra, b.rid AS rb, a.mult AS mult_a,
-        |  b.mult AS mult_b,
-        |  ((a.x - b.x) * (a.x - b.x)
-        |    + (a.y - b.y) * (a.y - b.y))::BIGINT AS dist_sq
-        |FROM reps a JOIN reps b ON a.rid <> b.rid
-        |  AND (a.x - b.x) * (a.x - b.x)
-        |    + (a.y - b.y) * (a.y - b.y) <= 2500000000"""
-        .stripMargin),
 
     locally {
       val iters = 3

@@ -56,7 +56,7 @@ class SparkEntrySmokeSpec extends SparkSpec {
     assert(graft.queries.QueryDef.register(Seq(lazyOracle))
       .contains("lazy_oracle"))
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.queries.size == 363)
+    assert(SparkEntry.queries.size == 362)
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>

@@ -62,16 +62,6 @@ class VersionedTableSpec extends SparkSpec {
     assert(claims.isEmpty, s"stale claims: ${claims.map(_.getName).toSeq}")
   }
 
-  test("commitBatch skips a batch another writer committed under the claim") {
-    val root = tmpRoot()
-    assert(VersionedTable.commitBatch(df(1), root, batchId = 7L,
-      () => 1000L).contains(1L))
-    // second writer replaying the same batch id must be a no-op
-    assert(VersionedTable.commitBatch(df(2), root, batchId = 7L,
-      () => 2000L).isEmpty)
-    assert(VersionedTable.versions(spark, root) == Seq(1L))
-  }
-
   test("time travel resolves the newest version at or before ts") {
     val root = tmpRoot()
     VersionedTable.commit(df(1), root, () => 1000L)
@@ -117,50 +107,6 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.latestVersion(spark, root).contains(2L))
     assert(VersionedTable.read(spark, root)
       .agg(max("val")).head().getInt(0) == 2)
-  }
-
-  test("commitBatch is exactly-once under batch replay") {
-    val root = tmpRoot()
-    assert(VersionedTable.commitBatch(df(1), root, 0L, () => 1000L)
-      .contains(1L))
-    assert(VersionedTable.commitBatch(df(2), root, 1L, () => 2000L)
-      .contains(2L))
-    // crash-restart replay of the last batch: must be a no-op
-    assert(VersionedTable.commitBatch(df(99), root, 1L, () => 3000L)
-      .isEmpty)
-    assert(VersionedTable.versions(spark, root) == Seq(1L, 2L))
-    assert(VersionedTable.read(spark, root)
-      .agg(max("val")).head().getInt(0) == 2)
-    // the next genuinely-new batch commits
-    assert(VersionedTable.commitBatch(df(3), root, 2L, () => 4000L)
-      .contains(3L))
-  }
-
-  test("streaming foreachBatch sink lands each batch as one version") {
-    val dir = java.nio.file.Files.createTempDirectory("vsink").toString
-    val root = s"$dir/table"
-    df(7).write.parquet(s"$dir/land/b0")
-    val src = spark.readStream
-      .schema(df(7).schema)
-      .parquet(s"$dir/land/*")
-    val q = graft.streaming.EventsStreaming.versionedSink(
-      src, root, s"$dir/ckpt")
-    q.awaitTermination()
-    assert(VersionedTable.versions(spark, root).size == 1)
-    assert(VersionedTable.read(spark, root).count() == 3)
-    // second file, second drain -> second version; history retained
-    df(8).write.parquet(s"$dir/land/b1")
-    val src2 = spark.readStream.schema(df(7).schema)
-      .parquet(s"$dir/land/*")
-    val q2 = graft.streaming.EventsStreaming.versionedSink(
-      src2, root, s"$dir/ckpt")
-    q2.awaitTermination()
-    val vs = VersionedTable.versions(spark, root)
-    assert(vs.size == 2)
-    assert(VersionedTable.read(spark, root, Some(vs.head))
-      .agg(max("val")).head().getInt(0) == 7)
-    assert(VersionedTable.read(spark, root)
-      .agg(max("val")).head().getInt(0) == 8)
   }
 
   test("vacuum spares a fresh in-flight claim, sweeps a stale one") {
