@@ -113,8 +113,10 @@ object Graph {
     * SoCC'14) re-point whole neighborhoods at their minimum, so a
     * label's jump length roughly squares per round — O(log diameter)
     * rounds, each one stats-barrier checkpoint plus one (count, hash)
-    * checksum action that both materializes it and detects the fixed
-    * point. Once the CURRENT edge set fits the budget, the union-find
+    * checksum action that detects the fixed point. Under AQE building
+    * the barrier already runs the round's shuffle stages, so one round
+    * starts 9 jobs (7 stages, 2 for the checksum; measured with
+    * `JobCount` on a one-edge graph at budget 0). Once the CURRENT edge set fits the budget, the union-find
     * finishes: the rewiring rounds preserve the vertex partition, so
     * its stars are the fixed point the remaining rounds would reach.
     */
@@ -171,8 +173,8 @@ object Graph {
     // Per-round lazy stats-barrier checkpoint (optimization r14, see
     // PlanBridge.localCheckpointStatsBarrier): large-star/small-star
     // reference their input several times, so an uncut logical plan
-    // grows ~12× per round; the checksum action materializes each
-    // round, and resetting the size estimate stops Catalyst's
+    // grows ~12× per round; building the barrier runs the round's
+    // shuffle stages (AQE), the checksum reads it, and resetting the size estimate stops Catalyst's
     // join-size BigInts from snowballing.
     var e = edges
     var last: Option[(Long, Long)] = None

@@ -58,11 +58,16 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   *     they induce is the same partition, which is all the pick step
   *     reads (the pick itself stays keyed by (w, a, b) — label values
   *     never order anything).
-  *  3. Materialization is a lazy stats-barrier checkpoint
-  *     (PlanBridge.localCheckpointStatsBarrier) + one action that both
-  *     materializes the round frame and answers the loop's question
-  *     (count) — one action where eager checkpoint + separate count
-  *     paid two, and no Catalyst join-size-estimate snowball. MST
+  *  3. Each round frame goes through a stats-barrier checkpoint
+  *     (PlanBridge.localCheckpointStatsBarrier, `eager = false`), so
+  *     there is no Catalyst join-size-estimate snowball. The barrier
+  *     is not lazy under AQE: building it runs the frame's shuffle
+  *     stages as jobs. Counted with `JobCount` on the sf0.01
+  *     embeddings (local[4], budget 0): the loop-top count takes 2
+  *     jobs, the pick barrier 1, the parent-pointer barrier 3, each
+  *     doubling iteration 9–11 (7–9 to build its barrier, 2 for the
+  *     moved count) and the next round's collapsed frame 4–5 — one
+  *     Borůvka round with two doubling iterations starts 28–32. MST
   *     picks accumulate in a Scala list of per-round checkpointed
   *     frames, unioned ONCE at the end, instead of re-checkpointing
   *     the growing accumulator every round (which re-copied the whole
@@ -114,14 +119,14 @@ object SingleLinkage {
   private def mstEdgesLoop(edges: DataFrame,
                            maxRounds: Int): DataFrame = {
     // every node starts as its own component; labels ride on the edges.
-    // No materialization here: round 1's crossMin consumes the edge
-    // frame in the same action that builds it (one corpus-sized pass,
-    // not two). r14 second pass: the per-round `live` frame was
-    // materialized eagerly and then consumed ONLY by the next round's
-    // collapse — so the loop now materializes the COLLAPSED frame
-    // directly (rekey + collapse composed into one stats-barrier
-    // checkpoint) and the emptiness probe rides the same action: one
-    // corpus-sized materialization per round instead of two.
+    // The edge frame is not materialized on its own: round 1's
+    // crossMin barrier consumes it (one corpus-sized pass, not two).
+    // r14 second pass: the per-round `live` frame was materialized
+    // eagerly and then consumed ONLY by the next round's collapse — so
+    // the loop now materializes the COLLAPSED frame directly (rekey +
+    // collapse composed into one stats-barrier checkpoint, whose
+    // shuffle stages run when the barrier is built, 4 jobs at sf0.01)
+    // and the loop-top count reads it.
     var crossMin = PlanBridge.localCheckpointStatsBarrier(
       collapse(edges
         .select(col("a"), col("b"), col("w"),
@@ -201,11 +206,11 @@ object SingleLinkage {
             when(col("y.p") === col("x.c"),
               least(col("x.c"), col("x.p")))
               .otherwise(col("x.p")).as("r")), eager = false)
-        // pointer doubling to the roots: r ← r(r) until fixpoint —
-        // ⌈log₂ depth⌉ iterations, one job each (the moved-count
-        // materializes the lazily checkpointed round frame).
-        // two doubling steps per materialized action (r ← r∘r twice):
-        // depth shrinks 4× per job, and stability of the second step
+        // pointer doubling to the roots: r ← r(r) until fixpoint.
+        // Each iteration takes two doubling steps (r ← r∘r twice) and
+        // starts 9–11 jobs (its barrier's shuffle stages under AQE,
+        // then the moved count; measured at sf0.01): depth shrinks 4×
+        // per iteration, and stability of the second step
         // (r⁴ == r² pointwise) implies the image of r² is fixed — i.e.
         // every pointer already reaches its root.
         var hops = 0
@@ -230,8 +235,8 @@ object SingleLinkage {
         // labels of every crossMin row picked an edge this round, so
         // the joins are inner; edges whose endpoints merged are now
         // intra-component and drop), and COLLAPSE again in the same
-        // plan — the next round's crossMin, materialized lazily so the
-        // loop-top count is its one materializing action.
+        // plan — the next round's crossMin, which the loop-top count
+        // reads.
         crossMin = PlanBridge.localCheckpointStatsBarrier(
           collapse(crossMin
             .join(par.select(col("c").as("la"), col("r").as("ra")),

@@ -784,8 +784,13 @@ object PipelineQueries {
       val ot = s"orders_b_${app}_$tag"
       val ct = s"customer_b_${app}_$tag"
       // r14: spread the write input — the 1-partition fixture scan made
-      // this a single-task bucketed write (bucketBy allows any number
-      // of files per bucket; the join's bucket pruning is unchanged)
+      // this a single-task bucketed write. Spread, each write task
+      // leaves its own file per bucket, so the orders scan reports no
+      // sort order (nor would one file per bucket while
+      // spark.sql.legacy.bucketedTableScan.outputOrdering is off, the
+      // default): a sort-merge join still sorts, and only the Exchange
+      // is saved. At the sf0.01 and sf0.1 fixtures the planner
+      // broadcasts customer instead.
       tsp(s, dir, "orders", "o_orderkey").write.mode("overwrite")
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
         .option("path", s"$base/o").saveAsTable(ot)

@@ -25,6 +25,12 @@ object PlanBridge {
     * origin-plan stats rewrite Spark 4's checkpoint performs
     * (`LogicalRDD.fromDataset` → `rewriteStatsAndConstraints`).
     *
+    * `eager = false` defers only the checkpoint's own job. Under AQE,
+    * `queryExecution.toRdd` runs the adaptive plan's shuffle stages as
+    * jobs while the barrier is built, so building it is not free: a
+    * plan with s shuffle stages starts about s jobs here (one
+    * distributed `Graph.components` round starts 9 in all).
+    *
     * Why this exists (optimization r14): Catalyst's size-in-bytes
     * estimate of a join MULTIPLIES the children's BigInt sizes, and a
     * checkpoint that inherits those products feeds them into the next
