@@ -105,12 +105,11 @@ object CurationQueries {
       // Oracle for `curate_canonical_docs`: the component closure joined
       // to the quality oracle; per cluster the (quality desc, doc_id asc)
       // winner — mirroring the bounded top-1-by aggregate.
-      val qualitySql = QualityOracle
       s"""WITH RECURSIVE ${tokenHashCtes()},
          |${shingleHashCtes()},
          |${minhashCtes(NumHashes, RowsPerBand)},
          |${componentCtes(NumHashes)},
-         |q AS ($qualitySql),
+         |q AS ($QualityOracle),
          |j AS (SELECT c.rep_id, c.doc_id, q.quality
          |      FROM comp c JOIN q USING (doc_id)),
          |r AS (SELECT rep_id, doc_id, quality,
@@ -275,13 +274,12 @@ object CurationQueries {
         {
           // Oracle for `training_mix_semantic`: the composed embedding-side
           // mix — `semSql` (the dedup_semantic oracle) names the dropped
-          // vec_ids, `gateSql` (the curate_quality_gate oracle) supplies
+          // vec_ids, `QualityGateOracle` (the curate_quality_gate oracle) supplies
           // keep_prob, and the survivors pack with the same shard-local cumsum
           // as `pack_training`.
           val semSql = OracleSql.dedupSemantic(targetClusterSize, minK, iters, dim = 64, minCos)
-          val gateSql = QualityGateOracle
           s"""WITH sem AS ($semSql),
-             |gate AS ($gateSql),
+             |gate AS ($QualityGateOracle),
              |keepd AS (
              |  SELECT d.doc_id, g.keep_prob,
              |    CAST(len(regexp_extract_all(d.text,
@@ -334,18 +332,16 @@ object CurationQueries {
         |FROM c""".stripMargin),
 
     locally {
-      val minQuality = 0.5
-      val enThreshold = 500000L
-      val defaultThreshold = 900000L
-      val budgetTokens = 2048
-      val shardSize = 100
+      val (minQuality, enRate, defaultRate) = (0.5, 0.5, 0.9)
+      val (budgetTokens, shardSize) = (2048L, 100L)
       QueryDef("training_mix", (s, dir) => {
         // the composed pipeline, end to end: near-dup clusters resolved and
         // non-representatives dropped, quality gate, per-language
         // deterministic sampling, shard-local context-window packing —
         // every stage independently oracle-verified, composed here
         val docs = t(s, dir, "documents")
-        val pairs = Dedup.minHashCandidates(docs, "doc_id", "text")
+        val pairs = Dedup.minHashCandidates(docs, "doc_id", "text",
+            numHashes = NumHashes, rowsPerBand = RowsPerBand)
           .filter(col("est_jaccard") >= 0.5)
         val drops = Graph.components(pairs, "id_a", "id_b")
           .filter(col("rep_id") =!= col("doc_id")).select("doc_id")
@@ -353,12 +349,11 @@ object CurationQueries {
           TextFunctions.langId(col("text")).as("lang_pred"),
           TextFunctions.qualityScore(col("text")).as("quality"))
           .join(drops, Seq("doc_id"), "left_anti")
-          .filter(col("quality") >= 0.5)
+          .filter(col("quality") >= minQuality)
         val sampled = Sampling.sampleStratified(enriched, "doc_id",
-          col("lang_pred"), Map("en" -> 0.5), defaultRate = 0.9)
+          col("lang_pred"), Map("en" -> enRate), defaultRate)
         Packing.packForTraining(sampled, "doc_id",
-          TextFunctions.subwordCount(col("text")),
-          budgetTokens = 2048, shardSize = 100)
+          TextFunctions.subwordCount(col("text")), budgetTokens, shardSize)
           .select("doc_id", "lang_pred", "quality", "n_tokens", "shard",
             "pack_in_shard", "pack_offset")
       },
@@ -368,15 +363,15 @@ object CurationQueries {
           // hash sampling over the language strata, then shard-local sequence
           // packing of the survivors. Every stage reuses the independently
           // verified oracle formulation.
-          val langSql = LangIdOracle
-          val qualitySql = QualityOracle
+          val enThreshold = (enRate * 1000000).toLong
+          val defaultThreshold = (defaultRate * 1000000).toLong
           s"""WITH RECURSIVE ${tokenHashCtes()},
              |${shingleHashCtes()},
              |${minhashCtes(NumHashes, RowsPerBand)},
              |${componentCtes(NumHashes)},
              |drops AS (SELECT doc_id FROM comp WHERE rep_id <> doc_id),
-             |lang AS ($langSql),
-             |qual AS ($qualitySql),
+             |lang AS ($LangIdOracle),
+             |qual AS ($QualityOracle),
              |${idHashCtes()},
              |surv AS (
              |  SELECT d.doc_id, l.lang_pred, q.quality,
@@ -406,14 +401,14 @@ object CurationQueries {
     },
 
     locally {
-      val dim = 4096
+      val (dim, targetLang) = (4096, "en")
       QueryDef("curate_dsir_sample", (s, dir) => {
         // DSIR: importance weights of every doc toward the en slice
         // (hashed-unigram target/raw likelihood ratio), then a one-row
         // percentile reduce broadcast back as the top-quartile gate —
         // no global sort, no window
         val w = Importance.dsirWeights(t(s, dir, "documents"),
-          "doc_id", "text", col("lang") === "en", dim = 4096)
+          "doc_id", "text", col("lang") === targetLang, dim)
         val th = w.agg(percentile(col("imp_weight"), lit(0.75)).as("p75"))
         w.crossJoin(broadcast(th))
           .select(col("doc_id"), col("n_tokens"), col("imp_weight"),
@@ -426,7 +421,6 @@ object CurationQueries {
         // IEEE doubles on both engines, same contract as `text_perplexity`),
         // top-quartile keep via `quantile_cont` over the rounded weights
         // (the `percentile` mirror established by `curate_quality_bins`).
-        val targetLang = "en"
         s"""WITH ${tokenHashCtes()},
            |tb AS MATERIALIZED (
            |  SELECT k.doc_id, k.i AS pos, (k.thu % $dim) AS b,
@@ -471,10 +465,9 @@ object CurationQueries {
     }, {
       // Oracle for `sample_quality_weighted`: the weighted Bernoulli gate —
       // keep iff `xxhash64(doc_id) pmod 1e6 < floor(quality·1e6)`, with the
-      // quality score from the shared quality oracle (`qualitySql` reused
+      // quality score from the shared quality oracle (`QualityOracle` reused
       // verbatim so both queries share one definition of the weight).
-      val qualitySql = QualityOracle
-      s"""WITH q AS ($qualitySql),
+      s"""WITH q AS ($QualityOracle),
          |${idHashCtes()}
          |SELECT h.doc_id, d.source
          |FROM hashed h
@@ -485,8 +478,7 @@ object CurationQueries {
     }),
 
     locally {
-      val (iters, targetClusterSize, minK, quota) = (3, 256, 8, 16)
-      val dim = 64
+      val (iters, targetClusterSize, minK, quota, dim) = (3, 256, 8, 16, 64)
       QueryDef("curate_cluster_quota", (s, dir) => {
         // semantic-diversity pruning: at most 16 members per k-means
         // cluster, chosen by deterministic id-hash — winner ids from the
@@ -512,8 +504,7 @@ object CurationQueries {
     },
 
     locally {
-      val enThreshold = 250000L
-      val defaultThreshold = 750000L
+      val (enRate, defaultRate) = (0.25, 0.75)
       QueryDef("sample_stratified", (s, dir) => {
         // deterministic per-language training-mix sampling: en kept at
         // 25%, everything else at 75% — map-only, partition-independent.
@@ -523,17 +514,18 @@ object CurationQueries {
         val withLang = t(s, dir, "documents").select(col("doc_id"),
           TextFunctions.langId(col("text")).as("lang_pred"))
         Sampling.sampleStratified(withLang, "doc_id", col("lang_pred"),
-          Map("en" -> 0.25), defaultRate = 0.75, eagerStratum = true)
+          Map("en" -> enRate), defaultRate, eagerStratum = true)
           .select("doc_id", "lang_pred")
       },
         {
           // Oracle for `sample_stratified`: the deterministic hash gate
           // (xxhash64(doc_id) pmod 1e6 under a per-language threshold) over the
-          // language-ID strata; `langSql` is the text_langid oracle, reused
+          // language-ID strata; `LangIdOracle` is the text_langid oracle, reused
           // verbatim as a CTE so both queries share one definition of the
           // stratum.
-          val langSql = LangIdOracle
-          s"""WITH lang AS ($langSql),
+          val enThreshold = (enRate * 1000000).toLong
+          val defaultThreshold = (defaultRate * 1000000).toLong
+          s"""WITH lang AS ($LangIdOracle),
              |${idHashCtes()}
              |SELECT h.doc_id, l.lang_pred
              |FROM hashed h JOIN lang l ON l.doc_id = h.doc_id
@@ -734,13 +726,12 @@ object CurationQueries {
         |FROM r""".stripMargin),
 
     locally {
-      val budget = 4000L
-      val shardBits = 6
+      val (budget, shardBits) = (4000L, 6)
       QueryDef("sample_budget_fill", (s, dir) =>
         // deterministic per-source budget fill in hash order — the
         // distributed-prefix-sum mix constructor (4000 chars per source)
         Sampling.budgetFill(t(s, dir, "documents"), "doc_id", "source",
-          length(col("text")), budget), {
+          length(col("text")), budget, shardBits), {
             // Oracle for `sample_budget_fill`: one global per-source window
             // cumsum in (shard, hash, id) order — provably the same order as the
             // engine's two-phase shard-offset + intra-shard prefix sum.
@@ -913,7 +904,6 @@ object CurationQueries {
         // top-(k+1) — TakeOrderedAndProject, a per-partition heap +
         // driver merge of k+1 rows, NO full sort/shuffle; the window
         // runs on the k+1-row frame.
-        val k = 100
         val docs = t(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
           .select(col("doc_id"),

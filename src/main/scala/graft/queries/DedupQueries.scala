@@ -40,11 +40,9 @@ object DedupQueries {
       }),
 
     locally {
-      val minSim = 0.5
-      val shingleN = 3
-      val hotThreshold = 8.0
-      val sampleCutoff = 8192L
-      val sampleMod = 16
+      val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
+      // the df-profile sampling the engine's profile pass defaults to
+      val (sampleCutoff, sampleMod) = (8192L, 16)
       QueryDef("dedup_auto_route", (s, dir) => {
         // the measured dedup-path dial as a first-class query
         // (VERDICT r9 #6): one cheap df-profile pre-pass (size-biased
@@ -60,7 +58,8 @@ object DedupQueries {
         // sf0.1 exercises the banded branch (load 10.7; threshold 8
         // justified from the measured decade tables in BENCH_NOTES).
         val (route, pairs) = Dedup.similarityPairsAuto(
-          tsp(s, dir, "documents", "doc_id"), "doc_id", "text")
+          tsp(s, dir, "documents", "doc_id"), "doc_id", "text", minSim,
+          shingleN, NumHashes, RowsPerBand, hotThreshold)
         pairs.withColumn("route", lit(route))
       }, {
         // Oracle for `dedup_auto_route` (VERDICT r9 #6): recomputes the
@@ -143,11 +142,8 @@ object DedupQueries {
     },
 
     locally {
-      val minSim = 0.5
-      val shingleN = 3
-      val hotThreshold = 8.0
-      val sampleCutoff = 8192L
-      val sampleMod = 16
+      val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
+      val (sampleCutoff, sampleMod) = (8192L, 16)
       QueryDef("dedup_auto_route_mixed", (s, dir) => {
         // the dial's THIRD outcome (VERDICT r10 #7): per-SOURCE routing
         // for mixed corpora. The realistic crawl shape is a closed-vocab
@@ -162,100 +158,109 @@ object DedupQueries {
         // routed pair set is hash-proven. SimilarityRouteSpec measures
         // the mixed fixture where this beats BOTH single-path choices.
         Dedup.similarityPairsAutoBySource(
-          tsp(s, dir, "documents", "doc_id"), "doc_id", "text", "source")
+          tsp(s, dir, "documents", "doc_id"), "doc_id", "text", "source",
+          minSim, shingleN, NumHashes, RowsPerBand, hotThreshold,
+          sampleCutoff, sampleMod)
       }, autoRouteBySourceOracle(minSim, shingleN, hotThreshold,
         sampleCutoff, sampleMod, "documents"))
     },
 
-    QueryDef("dedup_auto_route_dual", (s, dir) => {
-      // gate-visible dual-route fixture (ADVICE r11): the real-source
-      // mixed query routes every sf0.01 source prefix, so the oracle
-      // twin's banded/prefix UNION was only exercised by unit specs.
-      // This corpus is derived IN-QUERY from documents so BOTH routes
-      // emit pairs at every fixture: 'tpl' holds 16 identical docs per
-      // doc_id-div-64 group (within-group shingle df 16 → hot → banded;
-      // per-group vocabulary is unique, so candidate buckets stay
-      // group-sized), 'o_pair' holds unique-vocabulary boundary pairs
-      // at exact jaccard 20/36 (→ cold → prefix), and the remaining
-      // docs keep their original text under 'o_'-prefixed sources
-      // (cold → prefix). sampleCutoff forces the full df profile so
-      // the dial is closed-form deterministic at any fixture size.
-      val raw = tsp(s, dir, "documents", "doc_id")
-      def words(mk: Column => Column) = array_join(
-        transform(sequence(lit(0), lit(29)), mk), " ")
-      val tpl = words(i => concat(lit("g"),
-        expr("doc_id div 64").cast("string"), lit("w"),
-        i.cast("string")))
-      val pairBase = words(i => concat(lit("p"),
-        expr("doc_id div 200").cast("string"), lit("u"),
-        i.cast("string")))
-      val pairPart = words(i => concat(lit("p"),
-        expr("doc_id div 200").cast("string"),
-        when(i < 22, lit("u")).otherwise(lit("v")), i.cast("string")))
-      val docs2 = raw.select(col("doc_id"),
-        when(col("doc_id") % 4 === 0, lit("tpl"))
-          .when(col("doc_id") % 200 === 1 || col("doc_id") % 200 === 5,
-            lit("o_pair"))
-          .otherwise(concat(lit("o_"), col("source"))).as("source"),
-        when(col("doc_id") % 4 === 0, tpl)
-          .when(col("doc_id") % 200 === 1, pairBase)
-          .when(col("doc_id") % 200 === 5, pairPart)
-          .otherwise(col("text")).as("text"))
-        // r14: the synthesized corpus (30-word concat per row) is read
-        // by the profile pass AND both route replays — materialize the
-        // derivation once instead of re-synthesizing it per pass
-        // (lazy, r15: the dial's collect materializes it in-action)
-        .localCheckpoint(false)
-      Dedup.similarityPairsAutoBySource(docs2, "doc_id", "text",
-        "source", sampleCutoff = 1000000L)
-    }, {
-      // Oracle for `dedup_auto_route_dual` (ADVICE r11): the per-source
-      // dial and BOTH path replays of [[dedupAutoRouteBySource]], run
-      // over the synthetic dual-route corpus derived in-query from the
-      // documents table — 'tpl' groups of 16 identical docs (hot →
-      // banded), 'o_pair' unique-vocabulary boundary pairs at jaccard
-      // 20/36 (cold → prefix), everything else original text under
-      // 'o_'-prefixed sources. Mirrors the Spark-side derivation token
-      // for token; sampleCutoff forces the full profile so the dial is
-      // deterministic at any fixture size.
-      // NOTE: this snippet is embedded into templates that re-apply
-      // stripMargin, so no continuation line may START with '|' (a
-      // leading '||' would be eaten as a margin) — concatenations keep
-      // '||' at line ends.
-      val docsRel =
-        """(SELECT doc_id,
-          |   CASE WHEN doc_id % 4 = 0 THEN 'tpl'
-          |        WHEN doc_id % 200 IN (1, 5) THEN 'o_pair'
-          |        ELSE 'o_' || source END AS source,
-          |   CASE WHEN doc_id % 4 = 0 THEN
-          |       array_to_string(['g' || (doc_id // 64)::VARCHAR ||
-          |         'w' || i::VARCHAR FOR i IN range(0, 30)], ' ')
-          |     WHEN doc_id % 200 = 1 THEN
-          |       array_to_string(['p' || (doc_id // 200)::VARCHAR ||
-          |         'u' || i::VARCHAR FOR i IN range(0, 30)], ' ')
-          |     WHEN doc_id % 200 = 5 THEN
-          |       array_to_string(['p' || (doc_id // 200)::VARCHAR ||
-          |         CASE WHEN i < 22 THEN 'u' ELSE 'v' END ||
-          |         i::VARCHAR FOR i IN range(0, 30)], ' ')
-          |     ELSE text END AS text
-          | FROM documents)""".stripMargin
-      autoRouteBySourceOracle(minSim = 0.5, shingleN = 3, hotThreshold = 8.0,
-        sampleCutoff = 1000000L, sampleMod = 16, docsRel)
-    }),
+    locally {
+      val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
+      // the full df profile: the dial is closed-form at any fixture size
+      val (sampleCutoff, sampleMod) = (1000000L, 16)
+      QueryDef("dedup_auto_route_dual", (s, dir) => {
+        // gate-visible dual-route fixture (ADVICE r11): the real-source
+        // mixed query routes every sf0.01 source prefix, so the oracle
+        // twin's banded/prefix UNION was only exercised by unit specs.
+        // This corpus is derived IN-QUERY from documents so BOTH routes
+        // emit pairs at every fixture: 'tpl' holds 16 identical docs per
+        // doc_id-div-64 group (within-group shingle df 16 → hot → banded;
+        // per-group vocabulary is unique, so candidate buckets stay
+        // group-sized), 'o_pair' holds unique-vocabulary boundary pairs
+        // at exact jaccard 20/36 (→ cold → prefix), and the remaining
+        // docs keep their original text under 'o_'-prefixed sources
+        // (cold → prefix). sampleCutoff forces the full df profile so
+        // the dial is closed-form deterministic at any fixture size.
+        val raw = tsp(s, dir, "documents", "doc_id")
+        def words(mk: Column => Column) = array_join(
+          transform(sequence(lit(0), lit(29)), mk), " ")
+        val tpl = words(i => concat(lit("g"),
+          expr("doc_id div 64").cast("string"), lit("w"),
+          i.cast("string")))
+        val pairBase = words(i => concat(lit("p"),
+          expr("doc_id div 200").cast("string"), lit("u"),
+          i.cast("string")))
+        val pairPart = words(i => concat(lit("p"),
+          expr("doc_id div 200").cast("string"),
+          when(i < 22, lit("u")).otherwise(lit("v")), i.cast("string")))
+        val docs2 = raw.select(col("doc_id"),
+          when(col("doc_id") % 4 === 0, lit("tpl"))
+            .when(col("doc_id") % 200 === 1 || col("doc_id") % 200 === 5,
+              lit("o_pair"))
+            .otherwise(concat(lit("o_"), col("source"))).as("source"),
+          when(col("doc_id") % 4 === 0, tpl)
+            .when(col("doc_id") % 200 === 1, pairBase)
+            .when(col("doc_id") % 200 === 5, pairPart)
+            .otherwise(col("text")).as("text"))
+          // r14: the synthesized corpus (30-word concat per row) is read
+          // by the profile pass AND both route replays — materialize the
+          // derivation once instead of re-synthesizing it per pass
+          // (lazy, r15: the dial's collect materializes it in-action)
+          .localCheckpoint(false)
+        Dedup.similarityPairsAutoBySource(docs2, "doc_id", "text",
+          "source", minSim, shingleN, NumHashes, RowsPerBand, hotThreshold,
+          sampleCutoff, sampleMod)
+      }, {
+        // Oracle for `dedup_auto_route_dual` (ADVICE r11): the per-source
+        // dial and BOTH path replays of [[dedupAutoRouteBySource]], run
+        // over the synthetic dual-route corpus derived in-query from the
+        // documents table — 'tpl' groups of 16 identical docs (hot →
+        // banded), 'o_pair' unique-vocabulary boundary pairs at jaccard
+        // 20/36 (cold → prefix), everything else original text under
+        // 'o_'-prefixed sources. Mirrors the Spark-side derivation token
+        // for token; sampleCutoff forces the full profile so the dial is
+        // deterministic at any fixture size.
+        // NOTE: this snippet is embedded into templates that re-apply
+        // stripMargin, so no continuation line may START with '|' (a
+        // leading '||' would be eaten as a margin) — concatenations keep
+        // '||' at line ends.
+        val docsRel =
+          """(SELECT doc_id,
+            |   CASE WHEN doc_id % 4 = 0 THEN 'tpl'
+            |        WHEN doc_id % 200 IN (1, 5) THEN 'o_pair'
+            |        ELSE 'o_' || source END AS source,
+            |   CASE WHEN doc_id % 4 = 0 THEN
+            |       array_to_string(['g' || (doc_id // 64)::VARCHAR ||
+            |         'w' || i::VARCHAR FOR i IN range(0, 30)], ' ')
+            |     WHEN doc_id % 200 = 1 THEN
+            |       array_to_string(['p' || (doc_id // 200)::VARCHAR ||
+            |         'u' || i::VARCHAR FOR i IN range(0, 30)], ' ')
+            |     WHEN doc_id % 200 = 5 THEN
+            |       array_to_string(['p' || (doc_id // 200)::VARCHAR ||
+            |         CASE WHEN i < 22 THEN 'u' ELSE 'v' END ||
+            |         i::VARCHAR FOR i IN range(0, 30)], ' ')
+            |     ELSE text END AS text
+            | FROM documents)""".stripMargin
+        autoRouteBySourceOracle(minSim, shingleN, hotThreshold, sampleCutoff,
+          sampleMod, docsRel)
+      })
+    },
 
     locally {
-      val newMod = 10
-      val newFrom = 8
+      val (newMod, newFrom) = (10, 8) // docs with id % 10 >= 8 are new
       QueryDef("dedup_incremental", (s, dir) => {
         // daily-ingestion shape: docs with doc_id % 10 >= 8 are "today's
         // batch", the rest are history known only through a persisted
         // (doc_id, sig) fingerprint store — historical text never rescanned
         val docs = t(s, dir, "documents")
         val hist = Dedup.signatureStore(
-          docs.filter(col("doc_id") % 10 < 8), "doc_id", "text")
+          docs.filter(col("doc_id") % newMod < newFrom), "doc_id", "text",
+          numHashes = NumHashes)
         val batch = Dedup.signatureStore(
-          docs.filter(col("doc_id") % 10 >= 8), "doc_id", "text")
-        Dedup.incrementalCandidates(batch, hist)
+          docs.filter(col("doc_id") % newMod >= newFrom), "doc_id", "text",
+          numHashes = NumHashes)
+        Dedup.incrementalCandidates(batch, hist, NumHashes, RowsPerBand)
       }, {
         // Oracle for `dedup_incremental`: same banding CTEs over ALL docs;
         // keep candidate pairs touching at least one "new" doc
@@ -850,9 +855,8 @@ object DedupQueries {
         |      >= 0.4""".stripMargin),
 
     locally {
-      val (minCos, dim, bucket, nTables, minBits, maxBits) =
-        (0.4, 64, 128, 8, 4, 16)
-      val seed = 42L
+      val (minCos, dim, targetBucket, nTables, minBits, maxBits, seed) =
+        (0.4, 64, 128, 8, 4, 16, 42L)
       QueryDef("dedup_embedding_lsh", (s, dir) => {
         // the SCALE path for embedding near-dup: candidates bounded by
         // multi-table hyperplane buckets, exact cosine refine — no bounded
@@ -861,8 +865,8 @@ object DedupQueries {
         // BENCH_NOTES round 4); the oracle replicates the same integer
         // bits rule and masks nested max-resolution signatures.
         Similarity.embeddingNearDupsLshAuto(t(s, dir, "embeddings"),
-          "vec_id", "embedding", minCos, dim, bucket, nTables, minBits,
-          maxBits)
+          "vec_id", "embedding", minCos, dim, targetBucket, nTables, minBits,
+          maxBits, seed)
       }, {
         // Oracle for `dedup_embedding_lsh` (count-adaptive resolution): the
         // engine picks `bits = min b in [minBits, maxBits] :
@@ -876,21 +880,13 @@ object DedupQueries {
         // the engine — per-table banded rows, equality bucket join, DISTINCT
         // pairs, exact cosine refine. The round goes through VARCHAR→DECIMAL
         // to reproduce Spark's shortest-decimal HALF_UP semantics.
-        val targetBucket = bucket
         s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)}
            |SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos""".stripMargin
       })
     },
 
     locally {
-      val minCos = 0.2
-      val k = 3
-      val nTables = 8
-      val targetBucket = 128
-      val minBits = 4
-      val maxBits = 16
-      val dim = 64
-      val seed = 42L
+      import MutualKnn._
       QueryDef("dedup_mutual_knn", (s, dir) => {
         // reciprocal-nearest-neighbor filter over the LSH candidate
         // graph: per vertex only the top-3 neighbors by exact cosine

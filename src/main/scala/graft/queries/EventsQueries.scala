@@ -15,10 +15,9 @@ import graft.queries.QueryKit._
   */
 object EventsQueries {
 
-  /** Bootstrap replicate count shared by the `events_bootstrap_ci`
-    * engine query and its oracle (`OracleSql.eventsBootstrapCi`): the
-    * CI ranks on both sides derive from this single constant with the
-    * same formula, so they cannot drift apart.
+  /** Bootstrap replicate count and the CI ranks derived from it, read
+    * by both the `events_bootstrap_ci` builder and its oracle, so the
+    * two sides cannot drift apart.
     */
   private val bootstrapNBoot: Int = 200
   private val bootstrapLoRank: Int =
@@ -803,8 +802,7 @@ object EventsQueries {
         |FROM a""".stripMargin),
 
     locally {
-      val iters = 4
-      val lr = 0.5
+      val (iters, lr) = (4, 0.5)
       QueryDef("orders_cox_ph", (s, dir) => {
         // Cox proportional-hazards regression (Cox 1972, Breslow ties) —
         // the COVARIATE-ADJUSTED member the survival family lacked: KM/
@@ -855,7 +853,6 @@ object EventsQueries {
           sum("event").as("ne")).head()
         val nSubj = cnts.getLong(0)
         val nEvents = cnts.getLong(1)
-        val lr = 0.5
         val wSuffix = Window.orderBy(col("dur").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         def suffixFrame(b1: Double, b2: Double): DataFrame = {
@@ -886,7 +883,7 @@ object EventsQueries {
         }
         var b1 = 0.0
         var b2 = 0.0
-        for (_ <- 1 to 4) {
+        for (_ <- 1 to iters) {
           val g = suffixFrame(b1, b2).filter(col("d") > 0)
             .agg(
               (sum("dx1") - sum(col("d") *
@@ -1973,9 +1970,7 @@ object EventsQueries {
         |GROUP BY 1, 2, 3 HAVING count(*) >= 2""".stripMargin),
 
     locally {
-      val lnA = 182322L
-      val lnB = -68993L
-      val up = 2944439L
+      val (lnA, lnB, up) = (182322L, -68993L, 2944439L)
       QueryDef("events_sprt", (s, dir) => {
         // Wald's Sequential Probability Ratio Test (Wald 1945) — the
         // SEQUENTIAL member the experimentation kit lacked: the A/B/
@@ -1996,9 +1991,6 @@ object EventsQueries {
         // day-domain window). Scale: one map-side-combined daily
         // rollup; the cumulative windows run over the calendar-bounded
         // daily frame, never raw events.
-        val lnA = 182322L
-        val lnB = -68993L
-        val up = 2944439L
         val ev = t(s, dir, "events")
           .filter(pmod(xxhash64(col("user_id")), lit(2)) === 1)
           .select(datediff(col("ts").cast("date"),
@@ -2499,7 +2491,7 @@ object EventsQueries {
       // zero runtime float ops). Replicate means are exact integer
       // divisions; the 95% CI comes from ORDER STATISTICS (ranks
       // derived from the shared [[bootstrapNBoot]] constant — the same
-      // loRank/hiRank formula OracleSql.eventsBootstrapCi uses), never
+      // bootstrapLoRank/HiRank its oracle reads), never
       // float interpolation, so the oracle matches
       // bit-for-bit. Scale shape: the corpus collapses to the daily
       // frame first; the bootstrap fan-out (366 × 200 rows) and
@@ -2541,13 +2533,10 @@ object EventsQueries {
       // `nBoot` replicates, Poisson(1) weights drawn through the SAME
       // xxhash64(11, b, day) chain and threshold literals as the engine,
       // replicate means by integer division, CI via order statistics.
-      val rows = poissonThresholds
       val nBoot = bootstrapNBoot
-      val vals = rows
+      val vals = poissonThresholds
         .map { case (w, lo, hi) => s"($w, ${lo}::HUGEINT, ${hi}::HUGEINT)" }
         .mkString(", ")
-      val loRank = math.max(1, (nBoot * 25) / 1000)
-      val hiRank = nBoot - loRank
       val ch = new Chain("bs",
         "SELECT d.day::HUGEINT AS day, d.cents, rb.b::HUGEINT AS b " +
           "FROM daily d CROSS JOIN " +
@@ -2572,9 +2561,9 @@ object EventsQueries {
          |  row_number() OVER (ORDER BY mean_cents ASC, b ASC) AS rk
          |  FROM means),
          |ci AS (SELECT count(*)::BIGINT AS n_boot,
-         |  min(CASE WHEN rk = $loRank THEN mean_cents END)::BIGINT
+         |  min(CASE WHEN rk = $bootstrapLoRank THEN mean_cents END)::BIGINT
          |    AS lo95_cents,
-         |  min(CASE WHEN rk = $hiRank THEN mean_cents END)::BIGINT
+         |  min(CASE WHEN rk = $bootstrapHiRank THEN mean_cents END)::BIGINT
          |    AS hi95_cents
          |  FROM ranked),
          |obs AS (SELECT count(*)::BIGINT AS n_days,
@@ -3025,8 +3014,7 @@ object EventsQueries {
          |FROM j""".stripMargin),
 
     locally {
-      val dim = 24
-      val topN = 8
+      val (dim, topN) = (24, 8) // hour bins per profile, users compared
       QueryDef("events_dtw_pairs", (s, dir) => {
         // dynamic-time-warping similarity between user activity SHAPES:
         // each of the 8 most-active users gets a 24-bin hour-of-day
@@ -3043,13 +3031,13 @@ object EventsQueries {
           .groupBy(col("user_id"))
           .agg(
             count(lit(1)).as("n_events"),
-            array((0 until 24).map(h =>
+            array((0 until dim).map(h =>
               sum(when(hour(col("ts")) === h, 1L).otherwise(0L))): _*)
               .as("prof"))
         // materialize the 8-row top frame: both pair-join sides read it,
         // and an uncut plan would run the full profile scan TWICE
         val top = prof.orderBy(col("n_events").desc, col("user_id"))
-          .limit(8).select(col("user_id"), col("prof"))
+          .limit(topN).select(col("user_id"), col("prof"))
           .localCheckpoint(true)
         top.select(col("user_id").as("user_a"), col("prof").as("pa"))
           .join(

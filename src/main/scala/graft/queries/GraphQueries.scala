@@ -171,14 +171,7 @@ object GraphQueries {
          |WHERE d.degree >= 2""".stripMargin),
 
     locally {
-      val minCos = 0.2
-      val k = 3
-      val nTables = 8
-      val targetBucket = 128
-      val minBits = 4
-      val maxBits = 16
-      val dim = 64
-      val seed = 42L
+      import MutualKnn._
       QueryDef("graph_link_predict", (s, dir) => {
         // Resource-Allocation link prediction (Zhou et al. 2009) on the
         // mutual-kNN embedding graph: non-adjacent two-hop pairs scored
@@ -439,7 +432,7 @@ object GraphQueries {
 
     locally {
       val nSeeds = 4
-      val L = 4 // BFS levels
+      val levels = 4 // BFS levels
       QueryDef("graph_betweenness", (s, dir) => {
         // k-source depth-bounded BETWEENNESS (Brandes 2001; Brandes &
         // Pich 2007 for the sampled-sources form): from the 4 smallest
@@ -469,7 +462,7 @@ object GraphQueries {
           .select(col("id").as("s"), col("id").as("node"),
             lit(1L).as("sig")).localCheckpoint(true))
         var visited = lvl(0).select("s", "node").localCheckpoint(true)
-        for (_ <- 1 to L) {
+        for (_ <- 1 to levels) {
           val nxt = lvl.last
             .join(edges, lvl.last("node") === edges("esrc"))
             .select(col("s"), col("edst").as("node"), col("sig"))
@@ -480,9 +473,9 @@ object GraphQueries {
           visited = visited.unionByName(nxt.select("s", "node"))
             .localCheckpoint(true)
         }
-        var delta = lvl(L).withColumn("delta_e6", lit(0L))
+        var delta = lvl(levels).withColumn("delta_e6", lit(0L))
         var acc = delta
-        for (l <- L to 1 by -1) {
+        for (l <- levels to 1 by -1) {
           val u = lvl(l - 1)
           val terms = u
             .join(edges, u("node") === edges("esrc"))
@@ -500,7 +493,7 @@ object GraphQueries {
             .localCheckpoint(true) // next backward level + final union
           if (l > 1) acc = acc.unionByName(delta)
         }
-        // acc holds levels 1..L; the loop's last delta is the level-0
+        // acc holds levels 1..levels; the loop's last delta is the level-0
         // (source) frame, unioned then dropped by the s-filter below
         acc.unionByName(delta)
           .filter(col("node") =!= col("s")) // sources carry no dependency
@@ -514,7 +507,6 @@ object GraphQueries {
         // set), then the backward dependency fold with the engine's exact
         // per-term e6 integral truncation. Every level CTE is MATERIALIZED
         // (sequential chain, multi-referenced).
-        val levels = L
         val sb = new StringBuilder
         sb ++=
           s"""WITH ${tokenHashCtes()},
@@ -683,7 +675,7 @@ object GraphQueries {
         // the graph_modularity formula) is >= label prop's on the
         // bridge-glue fixture.
         val pairs = nearDupPairs(s, dir)
-        Graph.louvainLocalMove(pairs, "id_a", "id_b", rounds = 2)
+        Graph.louvainLocalMove(pairs, "id_a", "id_b", rounds)
       }, {
         // Oracle for `graph_louvain`: the deterministic synchronous
         // modularity local move replayed — per round, each node's candidate
@@ -739,8 +731,7 @@ object GraphQueries {
     },
 
     locally {
-      val rounds1 = 2
-      val rounds2 = 2
+      val (rounds1, rounds2) = (2, 2)
       QueryDef("graph_louvain_multilevel", (s, dir) => {
         // the MULTI-LEVEL member (VERDICT r11 #4): phase-1 sweeps, then
         // Blondel's community-aggregation phase 2 — communities become
@@ -754,8 +745,7 @@ object GraphQueries {
         // bit-identical. The oracle replays the aggregation and the
         // weighted sweep in SQL.
         val pairs = nearDupPairs(s, dir)
-        Graph.louvainMultilevel(pairs, "id_a", "id_b",
-          rounds1 = 2, rounds2 = 2)
+        Graph.louvainMultilevel(pairs, "id_a", "id_b", rounds1, rounds2)
       }, {
         // Oracle for `graph_louvain_multilevel`: the phase-1 sweep CTEs of
         // [[graphLouvain]], then Blondel's community aggregation (inter
@@ -873,7 +863,7 @@ object GraphQueries {
         // 2 mutual-reinforcement rounds in exact integers, L∞-normalized
         // by integer division each round.
         val pairs = nearDupPairs(s, dir)
-        Graph.hits(pairs, "id_a", "id_b", iters = 2)
+        Graph.hits(pairs, "id_a", "id_b", iters)
       }, {
         // Oracle for `graph_hits`: the canonical a<b candidate pairs as a
         // DIRECTED edge list, `iters` exact-integer HITS rounds — each side
@@ -936,7 +926,7 @@ object GraphQueries {
         val d = "decimal(38,0)"
         val pairs = nearDupPairs(s, dir)
           .localCheckpoint(false) // communities + edge rollups read it
-        val comm = Graph.labelPropagation(pairs, "id_a", "id_b", rounds = 3)
+        val comm = Graph.labelPropagation(pairs, "id_a", "id_b", rounds)
           .localCheckpoint(false) // joined twice + degree rollup
         val und = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
         val mstat = und.agg(count(lit(1)).as("m"))
@@ -1017,8 +1007,7 @@ object GraphQueries {
     },
 
     locally {
-      val steps = 4
-      val nSeeds = 5
+      val (steps, nSeeds) = (4, 5)
       QueryDef("graph_random_walks", (s, dir) => {
         // deterministic random-walk corpus over the near-dup graph (the
         // node2vec/DeepWalk data-generation step, hash-derandomized):
@@ -1036,12 +1025,12 @@ object GraphQueries {
             col("id_a").as("dst")))
           .distinct().localCheckpoint(true)
         val seeds = e.select(col("src").as("id")).distinct()
-          .orderBy("id").limit(5)
+          .orderBy("id").limit(nSeeds)
           .select(col("id").as("walk_id"), col("id").as("node"))
           .localCheckpoint(true)
         var cur = seeds
         var frames = Seq(seeds.withColumn("step", lit(0)))
-        for (t <- 1 to 4) {
+        for (t <- 1 to steps) {
           val cand = e
             .join(cur.withColumnRenamed("node", "src"), Seq("src"))
             .select(col("walk_id"), col("dst"))

@@ -126,17 +126,27 @@ object QueryKit {
           " y -> named_struct('pa', x, 'pb', y))))")).as("p"))
       .select(col("l_orderkey"), col("p.pa"), col("p.pb"))
 
-  /** Reciprocal top-3 cosine neighbors over the LSH-banded embedding
+  /** The mutual-kNN graph's settings: the cosine floor, the neighbors
+    * each vector keeps, and the hyperplane-LSH candidate search.
+    * [[mutualKnnPairs]] builds the graph with them; the oracles of the
+    * queries that walk it replay them.
+    */
+  private[queries] object MutualKnn {
+    val (minCos, k, dim, seed) = (0.2, 3, 64, 42L)
+    val (nTables, targetBucket, minBits, maxBits) = (8, 128, 4, 16)
+  }
+
+  /** Reciprocal top-k cosine neighbors over the LSH-banded embedding
     * candidate graph — shared by `dedup_mutual_knn` (which emits it)
     * and `graph_link_predict` (which scores the holes it leaves: a
     * degree-capped kNN graph is non-transitive by construction, so
     * two-hop pairs genuinely missing their direct edge exist).
     */
   private[queries] def mutualKnnPairs(s: SparkSession, dir: String): DataFrame = {
+    import MutualKnn._
     val pairs = graft.functions.Similarity.embeddingNearDupsLshAuto(
-        t(s, dir, "embeddings"), "vec_id", "embedding", minCos = 0.2,
-        dim = 64, targetBucketSize = 128, nTables = 8, minBits = 4,
-        maxBits = 16)
+        t(s, dir, "embeddings"), "vec_id", "embedding", minCos, dim,
+        targetBucket, nTables, minBits, maxBits, seed)
       .localCheckpoint(false) // lazy: action fusion (r15)
     val sym = pairs
       .select(col("id_a").as("a"), col("id_b").as("b"), col("cos"))
@@ -145,7 +155,7 @@ object QueryKit {
     val w = Window.partitionBy("a")
       .orderBy(col("cos").desc, col("b").asc)
     val topk = sym.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
+      .filter(col("rnk") <= k)
     topk.as("x")
       .join(topk.as("y"),
         col("x.a") === col("y.b") && col("x.b") === col("y.a"))

@@ -18,17 +18,8 @@ object SimilarityQueries {
 
   val defs: Seq[QueryDef] = Seq(
     locally {
-      val minCos = 0.2
-      val k = 3
-      val nTables = 8
-      val targetBucket = 128
-      val minBits = 4
-      val maxBits = 16
-      val dim = 64
-      val seed = 42L
-      val beam = 8
-      val outK = 5
-      val entryMod = 500
+      import MutualKnn._
+      val (beam, outK, entryMod) = (8, 5, 500)
       QueryDef("sim_graph_topk", (s, dir) => {
         // graph-walk ANN (the HNSW/NSG family, Spark-native): greedy
         // beam search over the mutual-kNN graph — fixed entry points,
@@ -64,20 +55,20 @@ object SimilarityQueries {
             .filter(col("rn") <= b)
             .select("query_id", "cand", "rn")
         }
-        def expand(beam: DataFrame): DataFrame =
-          beam.select("query_id", "cand")
-            .unionByName(beam.select(col("query_id"),
+        def expand(front: DataFrame): DataFrame =
+          front.select("query_id", "cand")
+            .unionByName(front.select(col("query_id"),
                 col("cand").as("src"))
               .join(sym, Seq("src"))
               .select(col("query_id"), col("dst").as("cand")))
             .distinct()
-        val ent = emb.filter(pmod(col("vec_id"), lit(500)) === 0)
+        val ent = emb.filter(pmod(col("vec_id"), lit(entryMod)) === 0)
           .select(col("vec_id").as("cand"))
         val b0 = topB(queries.select("query_id").crossJoin(broadcast(ent)),
-          8).localCheckpoint(false) // lazy: action fusion (r15)
-        val b1 = topB(expand(b0), 8).localCheckpoint(false)
-        val b2 = topB(expand(b1), 8)
-        b2.filter(col("rn") <= 5)
+          beam).localCheckpoint(false) // lazy: action fusion (r15)
+        val b1 = topB(expand(b0), beam).localCheckpoint(false)
+        val b2 = topB(expand(b1), beam)
+        b2.filter(col("rn") <= outK)
           .select(col("query_id"), col("rn").cast("int").as("rank"),
             col("cand").as("neighbor_id"))
       }, {

@@ -596,12 +596,12 @@ object TextQueries {
         |FROM rk WHERE rk <= 5 AND score > 0""".stripMargin),
 
     locally {
-      val minCount = 5
-      val topK = 50
+      val (minCount, topK) = (5L, 50)
       QueryDef("text_collocations", (s, dir) => {
         // phrase mining: top-50 adjacent pairs by lift (monotone PMI),
         // exact integer counts, one division, bounded TakeOrdered top-k
-        TextFunctions.collocations(t(s, dir, "documents"), "text")
+        TextFunctions.collocations(t(s, dir, "documents"), "text",
+          minCount, topK)
       },
         // Oracle for `text_collocations`: bigram lift over exact integer
         // counts, one IEEE division, TOTAL-ordered top-k (lift desc, then
@@ -637,7 +637,6 @@ object TextQueries {
         // multiplicative-mix formula below, reproduced by the oracle) —
         // a trained model would ship its real weight array through the
         // same parameter
-        val dim = 4096
         val weights = Array.tabulate(dim)(b =>
           ((b.toLong * 2654435761L) % 2001L).toInt - 1000)
         TextFunctions.classifierScore(t(s, dir, "documents"),
@@ -689,16 +688,14 @@ object TextQueries {
         |GROUP BY d.doc_id""".stripMargin),
 
     locally {
-      val k = 10
-      val k1 = 1.2
-      val b = 0.75
+      val (k, k1, b) = (10, 1.2, 0.75)
       QueryDef("bm25_topk", (s, dir) => {
         // lexical retrieval: BM25 top-10 per keyword query — the
         // complement to the embedding ANN family (hybrid retrieval fuses
         // both). Winners via the bounded top-k aggregate; score fold is
         // order-defined (sorted terms, left-to-right), so the oracle
         // reproduces the doubles bit-for-bit before the 4-decimal round.
-        Retrieval.bm25TopK(s, t(s, dir, "documents"), Bm25Queries, k = 10)
+        Retrieval.bm25TopK(s, t(s, dir, "documents"), Bm25Queries, k, k1, b)
       }, {
         // Oracle for `bm25_topk`: same tf/df/len aggregations, the SAME
         // IEEE double operations in the same association order (the engine
@@ -706,33 +703,28 @@ object TextQueries {
         // `list_reduce(list(x ORDER BY term), +)` reproduces it — the fold's
         // `0.0 + s1` seed is bit-transparent for positive scores), ranking
         // on the 4-decimal Spark-rounded score with a doc-id tie-break.
-        val queries = Bm25Queries
-        s"WITH ${bm25Ctes(queries, k1, b)}\n" +
+        s"WITH ${bm25Ctes(Bm25Queries, k1, b)}\n" +
           s"SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= $k"
       })
     },
 
     locally {
-      val k = 10
-      val c = 60
-      val k1 = 1.2
-      val b = 0.75
+      val (k, c, k1, b) = (10, 60, 1.2, 0.75)
       QueryDef("hybrid_retrieval_rrf", (s, dir) => {
         // hybrid retrieval: reciprocal-rank fusion of BM25 and boolean
         // term-overlap rankings — fixed-order reciprocal sum, bounded
         // top-k winners, all deterministic => exact oracle
         val docs = t(s, dir, "documents")
         Retrieval.rrfFuse(
-          Retrieval.bm25TopK(s, docs, Bm25Queries, k),
-          Retrieval.booleanOverlapTopK(s, docs, Bm25Queries, k), k)
+          Retrieval.bm25TopK(s, docs, Bm25Queries, k, k1, b),
+          Retrieval.booleanOverlapTopK(s, docs, Bm25Queries, k), k, c)
       }, {
         // Oracle for `hybrid_retrieval_rrf`: reciprocal-rank fusion of the
         // BM25 ranking (shared CTEs) and a boolean term-overlap ranking.
         // The fused score `coalesce(1/(c+rank_a), 0) + coalesce(1/(c+rank_b),
         // 0)` is two IEEE divisions and one addition in fixed order — exact
         // cross-engine — then Spark-rounded for the rank key.
-        val queries = Bm25Queries
-        s"""WITH ${bm25Ctes(queries, k1, b)},
+        s"""WITH ${bm25Ctes(Bm25Queries, k1, b)},
            |bm AS (SELECT query_id, doc_id, rank FROM rk WHERE rank <= $k),
            |ov AS (SELECT qt.query_id, tf.doc_id, count(*) AS overlap
            |       FROM tf JOIN qt USING (term) GROUP BY 1, 2),
@@ -763,9 +755,7 @@ object TextQueries {
     },
 
     locally {
-      val k = 10
-      val k1 = 1.2
-      val b = 0.75
+      val (k, k1, b) = (10, 1.2, 0.75)
       QueryDef("retrieval_metrics", (s, dir) => {
         // retrieval evaluation: recall/MRR/nDCG@10 of the BM25 ranking
         // against boolean-AND qrels (doc contains every query term) —
@@ -777,9 +767,8 @@ object TextQueries {
         // every distinct query term), BM25 ranking via the shared CTEs, and
         // recall/MRR/nDCG with the same ascending-order folds and the same
         // embedded ln2 literal as the engine.
-        val queries = Bm25Queries
         val ln2 = math.log(2.0)
-        s"""WITH ${bm25Ctes(queries, k1, b)},
+        s"""WITH ${bm25Ctes(Bm25Queries, k1, b)},
            |bmk AS (SELECT query_id, doc_id, rank FROM rk WHERE rank <= $k),
            |dt AS (SELECT DISTINCT doc_id, term FROM t),
            |nq AS (SELECT query_id, count(*) AS nq FROM qt GROUP BY 1),
