@@ -387,8 +387,7 @@ object MlQueries {
          |FROM m""".stripMargin),
 
     locally {
-      val k = 5
-      val dim = 64
+      val (k, dim) = (5, 64)
       QueryDef("ml_knn_classify", (s, dir) => {
         // k-NN classification harness over the int8-quantized codes:
         // a FIXED eval set (every 5th id below 2500 — an eval harness
@@ -489,8 +488,7 @@ object MlQueries {
     },
 
     locally {
-      val (iters, targetClusterSize, minK) = (3, 256, 8)
-      val dim = 64
+      val (iters, targetClusterSize, minK, dim) = (3, 256, 8, 64)
       QueryDef("cluster_kmeans", (s, dir) => {
         // cosine k-means (3 Lloyd rounds, lowest-id seeds): per-round
         // cost = one broadcast-literal map pass + a (cluster, dim) agg —
@@ -510,8 +508,7 @@ object MlQueries {
     },
 
     locally {
-      val k = 4
-      val dim = 64
+      val (k, dim) = (4, 64)
       QueryDef("cluster_farthest_first", (s, dir) => {
         // Gonzalez farthest-first traversal (1985): k-CENTER coverage
         // over int8-quantized embedding codes — the greedy
@@ -915,8 +912,7 @@ object MlQueries {
         |FROM e""".stripMargin),
 
     locally {
-      val folds = 3
-      val iters = 3
+      val (folds, iters) = (3, 3)
       QueryDef("ml_logreg_cv", (s, dir) => {
         // k-fold cross-validation of the in-engine logistic regression:
         // 3 folds by doc_id % 3; per fold, 3 full-batch GD rounds train
@@ -930,7 +926,7 @@ object MlQueries {
         val toks = Dedup.tokens(col("text"))
         val feat = t(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
-          .select(pmod(col("doc_id"), lit(3)).cast("int").as("fold"),
+          .select(pmod(col("doc_id"), lit(folds)).cast("int").as("fold"),
             (length(col("text")).cast("double") / 1000.0).as("x1"),
             (size(toks).cast("double") / 100.0).as("x2"),
             (size(array_distinct(toks)).cast("double") /
@@ -938,11 +934,11 @@ object MlQueries {
             (col("lang") === "en").cast("int").cast("double").as("y"))
           .localCheckpoint(true) // 3 folds × (3 GD rounds + eval)
         val lr = 0.1
-        val results = (0 until 3).map { f =>
+        val results = (0 until folds).map { f =>
           val tr = feat.filter(col("fold") =!= f)
           val n = tr.count()
           var w = Array(0.0, 0.0, 0.0, 0.0)
-          for (_ <- 1 to 3) {
+          for (_ <- 1 to iters) {
             val z = lit(w(0)) + lit(w(1)) * col("x1") +
               lit(w(2)) * col("x2") + lit(w(3)) * col("x3")
             val p = lit(1.0) / (lit(1.0) + exp(-z))
@@ -1165,7 +1161,7 @@ object MlQueries {
         |FROM test GROUP BY 1, 2, 3, 4""".stripMargin),
 
     locally {
-      val sched = Seq(1, 1, 1, 2, 4, 8)
+      val sched = Seq(1L, 1L, 1L, 2L, 4L, 8L)
       QueryDef("ml_quantile_regression", (s, dir) => {
         // τ = 0.9 QUANTILE regression (Koenker–Bassett pinball loss) of
         // line revenue on quantity, per return flag — the P90 cost
@@ -1206,7 +1202,7 @@ object MlQueries {
               s" as long)").as("w0_e6"))
           .withColumn("w_e6", col("w0_e6"))
           .localCheckpoint(false)
-        for (div <- Seq(1L, 1L, 1L, 2L, 4L, 8L)) {
+        for (div <- sched) {
           val g = base.join(broadcast(w), "flag").groupBy("flag").agg(
             max("sx").as("sx"), max("n").as("n"),
             max("w0_e6").as("w0_e6"), max("w_e6").as("w_prev"),
@@ -2038,7 +2034,7 @@ object MlQueries {
           .select(col("i"), coalesce(col("w"), lit(0L)).as("w"))
           .localCheckpoint(true)
         var str = items.withColumn("s", lit(1000000L))
-        for (_ <- 1 to 3) {
+        for (_ <- 1 to iters) {
           val dsum = opp
             .join(str.select(col("i"), col("s").as("si")), Seq("i"))
             .join(str.select(col("i").as("j"), col("s").as("sj")),
@@ -2120,8 +2116,7 @@ object MlQueries {
     },
 
     locally {
-      val rounds = 2
-      val lam = 100000L
+      val (rounds, lam) = (2, 100000L) // λ = 0.1 in e6
       QueryDef("recs_als_rank1", (s, dir) => {
         // rank-1 Alternating Least Squares (Zhou et al., AAIM'08 — the
         // canonical distributed matrix-factorization recommender) over
@@ -2167,11 +2162,10 @@ object MlQueries {
           .localCheckpoint(false) // both v half-steps + p-distinct read it
         val ratingsC = ratingsP.repartition(col("c"))
           .localCheckpoint(true) // both u half-steps + eval slices read it
-        val lam = 100000L // λ = 0.1 in e6
         var v = ratingsP.select("p").distinct()
           .withColumn("v_e6", lit(1000000L))
         var u: DataFrame = null
-        for (_ <- 1 to 2) {
+        for (_ <- 1 to rounds) {
           u = ratingsP.join(v, Seq("p"))
             .groupBy("c")
             .agg(sum(col("r") * col("v_e6")).as("num"),
@@ -2281,8 +2275,7 @@ object MlQueries {
     },
 
     locally {
-      val rounds = 2
-      val lam = 100000L
+      val (rounds, lam) = (2, 100000L) // λ = 0.1 in e6
       QueryDef("recs_als_rank2", (s, dir) => {
         // rank-2 ALS (Zhou et al., AAIM'08) — the TRUE latent-factor
         // member: rank-1 is popularity×affinity (one global axis);
@@ -2326,7 +2319,6 @@ object MlQueries {
         val ratingsC = ratingsP.repartition(col("c"))
           .localCheckpoint(true)
         val ratings = ratingsC
-        val lam = 100000L // λ = 0.1 in e6
         // closed-form 2×2 solve: (f1, f2) from the five Gram sums
         def cramer(keyCol: String): Seq[Column] = Seq(
           col(keyCol),
@@ -2360,7 +2352,7 @@ object MlQueries {
           .withColumn("f2",
             expr("(p * 2654435761) % 2000001 - 1000000"))
         var u: DataFrame = null
-        for (_ <- 1 to 2) {
+        for (_ <- 1 to rounds) {
           u = gram(v, "p", "c")
           v = gram(u, "c", "p")
         }
@@ -2465,8 +2457,7 @@ object MlQueries {
     },
 
     locally {
-      val rounds = 2
-      val lam = 100L
+      val (rounds, lam) = (2, 100L) // λ = 0.1 in e3
       QueryDef("recs_als_rank4", (s, dir) => {
         // rank-4 ALS (VERDICT r11 #8 / r12 #7 stretch): the rank-2
         // Cramer machinery generalized — each alternation is ONE join +
@@ -2504,7 +2495,6 @@ object MlQueries {
         val ratingsC = ratingsP.repartition(col("c"))
           .localCheckpoint(true)
         val ratings = ratingsC
-        val lam = 100L // λ = 0.1 in e3
         def mA(i: Int, j: Int) =
           s"cast(${OracleSql.gram4Name(i, j)} as $d)"
         // r15: the Spark side evaluates the determinants in the
@@ -2575,7 +2565,7 @@ object MlQueries {
           .withColumn("f3", expr("(p * 2246822519) % 2001 - 1000"))
           .withColumn("f4", expr("(p * 3266489917) % 2001 - 1000"))
         var u: DataFrame = null
-        for (_ <- 1 to 2) {
+        for (_ <- 1 to rounds) {
           u = gram4(v, "p", "c")
           v = gram4(u, "c", "p")
         }

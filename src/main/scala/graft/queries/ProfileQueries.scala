@@ -178,7 +178,6 @@ object ProfileQueries {
         // outlier mass, modality) a datasheet needs beyond min/max.
         // All rows share one IEEE width division, so binning is
         // bit-reproducible; the top edge folds into the last bin
-        val nBins = 20
         val mm = t(s, dir, "orders").agg(
           min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"))
@@ -817,8 +816,7 @@ object ProfileQueries {
       // discrete-Laplace noise — the same xxhash64(7, key) chain through
       // the emulated XXH64, reduced mod 2⁴⁰ and mapped through the SAME
       // inverse-CDF threshold literals the engine broadcasts.
-      val rows = dpGeomThresholds
-      val vals = rows
+      val vals = dpGeomThresholds
         .map { case (k, lo, hi) => s"($k, ${lo}::HUGEINT, ${hi}::HUGEINT)" }
         .mkString(", ")
       val ch = new Chain("dp",

@@ -319,8 +319,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val k = 5
-      val dim = 64
+      val (k, dim) = (5, 64)
       QueryDef("sim_quantized_topk", (s, dir) => {
         // brute-force top-k over int8-quantized vectors: 4x smaller
         // corpus for the memory-bound regime; integer dot/norms accumulate
@@ -380,8 +379,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val k = 5
-      val dim = 64
+      val (k, dim) = (5, 64)
       QueryDef("sim_binary_topk", (s, dir) => {
         // 1-BIT embedding quantization ANN: each 64-dim float vector
         // compresses to a single sign-bit long — 32× smaller than
@@ -440,8 +438,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val (k, nProbe) = (5, 3)
-      val dim = 64
+      val (k, nProbe, dim) = (5, 3, 64)
       QueryDef("sim_ivf_topk", (s, dir) => {
         // ROLE (measured, BENCH_NOTES r5 recall table): metadata-cell
         // IVF is the SHARD-PRUNING form — correct when cells correlate
@@ -671,8 +668,7 @@ object SimilarityQueries {
         |FROM a, b""".stripMargin),
 
     locally {
-      val (iters, targetClusterSize, minK, zThresh) = (3, 256, 8, 2.0)
-      val dim = 64
+      val (iters, targetClusterSize, minK, zThresh, dim) = (3, 256, 8, 2.0, 64)
       QueryDef("embed_outliers", (s, dir) => {
         // per-cluster cohesion z-score: integer-exact moments over the
         // scaled cosine, so the flag set is aggregation-order independent
@@ -769,8 +765,7 @@ object SimilarityQueries {
         |FROM w2, m2""".stripMargin),
 
     locally {
-      val trees = 16
-      val depth = 8
+      val (trees, depth) = (16, 8)
       QueryDef("embed_isolation_forest", (s, dir) => {
         // Isolation Forest (Liu–Ting–Zhou, ICDM'08) — the model-based
         // anomaly detector the distance family (embed_outliers = centroid
@@ -793,8 +788,6 @@ object SimilarityQueries {
         // anomalies out. Scale: ×16 trees ×8 levels is a map-side
         // constant; the only shuffles are the node rollup and the final
         // TakeOrdered(50).
-        val T = 16
-        val D = 8
         val pts = t(s, dir, "embeddings")
           .select(Seq(col("vec_id")) ++ (0 until 4).map(f =>
             floor(col("embedding").getItem(f).cast("double")
@@ -806,11 +799,11 @@ object SimilarityQueries {
           (0 until 4).flatMap(f => Seq(min(col(s"x$f")).as(s"mn$f"),
             max(col(s"x$f")).as(s"mx$f"))).tail: _*)
         var walk = pts
-          .withColumn("t", explode(array((0 until T).map(i =>
+          .withColumn("t", explode(array((0 until trees).map(i =>
             lit(i.toLong)): _*)))
           .crossJoin(broadcast(ranges))
           .withColumn("n0", lit(1L))
-        for (l <- 1 to D) {
+        for (l <- 1 to depth) {
           walk = walk
             .withColumn("h", xxhash64(col("t") * lit(1048576L) +
               col(s"n${l - 1}")))
@@ -829,7 +822,7 @@ object SimilarityQueries {
             .drop("h", "f", "u", "thr", "xv")
         }
         val paths = walk.select(col("vec_id"), col("t"),
-            explode(array((1 to D).map(l => struct(lit(l).as("l"),
+            explode(array((1 to depth).map(l => struct(lit(l).as("l"),
               col(s"n$l").as("node"))): _*)).as("e"))
           .select(col("vec_id"), col("t"), col("e.l"), col("e.node"))
           .localCheckpoint(true) // population rollup + re-join read it
@@ -843,10 +836,10 @@ object SimilarityQueries {
         val perTree = paths.join(pops, Seq("t", "l", "node"))
           .groupBy("vec_id", "t")
           .agg(min(when(col("cnt") === 1, col("l"))).as("iso_l"),
-            max(when(col("l") === D, col("cnt"))).as("leafm"))
+            max(when(col("l") === depth, col("cnt"))).as("leafm"))
           .select(col("vec_id"),
             when(col("iso_l").isNotNull, col("iso_l") * 1000000L)
-              .otherwise(lit(D * 1000000L) +
+              .otherwise(lit(depth * 1000000L) +
                 round(cOf(col("leafm")) * 1000000.0, 0).cast("long"))
               .as("h_e6"))
         // c(n) stays in the expression domain (Spark log ≡ DuckDB ln on
@@ -855,7 +848,7 @@ object SimilarityQueries {
         val cnFrame = pts.agg(count(lit(1)).as("nn"))
           .select(cOf(col("nn")).as("cn"))
         perTree.groupBy("vec_id")
-          .agg(expr(s"sum(h_e6) div $T").as("avg_path_e6"))
+          .agg(expr(s"sum(h_e6) div $trees").as("avg_path_e6"))
           .crossJoin(broadcast(cnFrame))
           .withColumn("score_e6",
             round(pow(lit(2.0), -(col("avg_path_e6").cast("double") /
