@@ -3,10 +3,15 @@ package graft
 import graft.expressions.TextHashImpl
 import graft.functions.Similarity
 
-/** Generated DuckDB oracle SQL for the queries whose Spark implementation
-  * rests on 64-bit hashing (MinHash / SimHash / shingle hashes) or on
-  * seeded random projections (hyperplane LSH) — none of which DuckDB has
-  * natively.
+/** The DuckDB oracle SQL that more than one query shares: the xxHash64
+  * emulation, the CTE builders (token/shingle hashes, MinHash bands,
+  * near-dup edges and components, BM25, k-means, PQ, id hashes), the
+  * oracles that queries of different families call, and the determinant
+  * texts of the rank-4 ALS query. Each query's own oracle sits beside its
+  * builder in its `graft.queries` family object; these pieces exist
+  * because the Spark side rests on 64-bit hashing (MinHash / SimHash /
+  * shingle hashes) or seeded random projections (hyperplane LSH), none of
+  * which DuckDB has natively.
   *
   * The xxHash64 family is emulated exactly: 64-bit wrapping arithmetic is
   * done in HUGEINT (int128) modulo 2^64 — a 64×64 multiply is split into
@@ -295,9 +300,10 @@ object OracleSql {
        |FROM g JOIN d USING (doc_id)""".stripMargin
   }
 
-  /** Shared CTE body for [[bm25TopK]] and [[hybridRrf]]: tokenization,
-    * tf/df/len, the query-term VALUES table, per-(query, doc) scores,
-    * and the `rk` ranking.
+  /** Shared CTE body of the `bm25_topk`, `hybrid_retrieval_rrf` and
+    * `retrieval_metrics` oracles: tokenization, tf/df/len, the
+    * query-term VALUES table, per-(query, doc) scores, and the `rk`
+    * ranking.
     */
   private[graft] def bm25Ctes(queries: Seq[(Int, String)],
                        k1: Double, b: Double): String = {

@@ -64,9 +64,9 @@ object CurationQueries {
     },
       // Oracle for `split_leakage_safe`: component closure (the
       // `dedup_components` CTEs), singleton docs their own rep, the REP id
-      // hashed through the XXH64 chain into the same 0.9/0.05/0.05 buckets
-      // as [[assignSplit]] — so every member of a near-dup cluster lands
-      // in the same split.
+      // hashed through the XXH64 chain into the same 0.9/0.05/0.05 buckets as
+      // the `split_train_val_test` oracle — so every member of a near-dup
+      // cluster lands in the same split.
       s"""WITH RECURSIVE ${tokenHashCtes()},
          |${shingleHashCtes()},
          |${minhashCtes(NumHashes, RowsPerBand)},
@@ -270,35 +270,35 @@ object CurationQueries {
           budgetTokens, shardSize)
           .select("doc_id", "keep_prob", "n_tokens", "shard",
             "pack_in_shard", "pack_offset")
-      },
-        {
-          // Oracle for `training_mix_semantic`: the composed embedding-side
-          // mix — `semSql` (the dedup_semantic oracle) names the dropped
-          // vec_ids, `QualityGateOracle` (the curate_quality_gate oracle) supplies
-          // keep_prob, and the survivors pack with the same shard-local cumsum
-          // as `pack_training`.
-          val semSql = OracleSql.dedupSemantic(targetClusterSize, minK, iters, dim = 64, minCos)
-          s"""WITH sem AS ($semSql),
-             |gate AS ($QualityGateOracle),
-             |keepd AS (
-             |  SELECT d.doc_id, g.keep_prob,
-             |    CAST(len(regexp_extract_all(d.text,
-             |      '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens,
-             |    CAST(d.doc_id // $shardSize AS BIGINT) AS shard
-             |  FROM documents d JOIN gate g ON g.doc_id = d.doc_id
-             |  WHERE g.keep_prob >= 0.5
-             |    AND d.doc_id NOT IN (SELECT vec_id FROM sem)),
-             |c AS (
-             |  SELECT doc_id, keep_prob, n_tokens, shard,
-             |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-             |      - n_tokens AS strt
-             |  FROM keepd)
-             |SELECT doc_id, keep_prob, n_tokens, shard,
-             |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
-             |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
-             |    AS pack_offset
-             |FROM c""".stripMargin
-        })
+      }, {
+        // Oracle for `training_mix_semantic`: the composed embedding-side mix
+        // — `semSql` (the dedup_semantic oracle) names the dropped vec_ids,
+        // `QualityGateOracle` (the curate_quality_gate oracle) supplies
+        // keep_prob, and the survivors pack with the same shard-local cumsum
+        // as `pack_training`.
+        val semSql = OracleSql.dedupSemantic(targetClusterSize, minK, iters,
+          dim = 64, minCos)
+        s"""WITH sem AS ($semSql),
+           |gate AS ($QualityGateOracle),
+           |keepd AS (
+           |  SELECT d.doc_id, g.keep_prob,
+           |    CAST(len(regexp_extract_all(d.text,
+           |      '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens,
+           |    CAST(d.doc_id // $shardSize AS BIGINT) AS shard
+           |  FROM documents d JOIN gate g ON g.doc_id = d.doc_id
+           |  WHERE g.keep_prob >= 0.5
+           |    AND d.doc_id NOT IN (SELECT vec_id FROM sem)),
+           |c AS (
+           |  SELECT doc_id, keep_prob, n_tokens, shard,
+           |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
+           |      - n_tokens AS strt
+           |  FROM keepd)
+           |SELECT doc_id, keep_prob, n_tokens, shard,
+           |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
+           |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
+           |    AS pack_offset
+           |FROM c""".stripMargin
+      })
     },
 
     QueryDef("pack_length_batches", (s, dir) => {
@@ -356,48 +356,47 @@ object CurationQueries {
           TextFunctions.subwordCount(col("text")), budgetTokens, shardSize)
           .select("doc_id", "lang_pred", "quality", "n_tokens", "shard",
             "pack_in_shard", "pack_offset")
-      },
-        {
-          // Oracle for `training_mix` — the composed pipeline: quality filter,
-          // near-dup removal (cluster non-representatives dropped), stratified
-          // hash sampling over the language strata, then shard-local sequence
-          // packing of the survivors. Every stage reuses the independently
-          // verified oracle formulation.
-          val enThreshold = (enRate * 1000000).toLong
-          val defaultThreshold = (defaultRate * 1000000).toLong
-          s"""WITH RECURSIVE ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${componentCtes(NumHashes)},
-             |drops AS (SELECT doc_id FROM comp WHERE rep_id <> doc_id),
-             |lang AS ($LangIdOracle),
-             |qual AS ($QualityOracle),
-             |${idHashCtes()},
-             |surv AS (
-             |  SELECT d.doc_id, l.lang_pred, q.quality,
-             |    CAST(len(regexp_extract_all(d.text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]'))
-             |      AS BIGINT) AS n_tokens
-             |  FROM documents d
-             |  JOIN lang l ON l.doc_id = d.doc_id
-             |  JOIN qual q ON q.doc_id = d.doc_id
-             |  WHERE q.quality >= $minQuality
-             |    AND d.doc_id NOT IN (SELECT doc_id FROM drops)),
-             |samp AS (
-             |  SELECT s.* FROM surv s JOIN hashed h ON h.doc_id = s.doc_id
-             |  WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
-             |    CASE WHEN s.lang_pred = 'en' THEN $enThreshold
-             |         ELSE $defaultThreshold END),
-             |pk AS (
-             |  SELECT *, CAST(doc_id // $shardSize AS BIGINT) AS shard,
-             |    sum(n_tokens) OVER (PARTITION BY doc_id // $shardSize
-             |      ORDER BY doc_id) - n_tokens AS strt
-             |  FROM samp)
-             |SELECT doc_id, lang_pred, quality, n_tokens, shard,
-             |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
-             |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
-             |    AS pack_offset
-             |FROM pk""".stripMargin
-        })
+      }, {
+        // Oracle for `training_mix` — the composed pipeline: quality filter,
+        // near-dup removal (cluster non-representatives dropped), stratified
+        // hash sampling over the language strata, then shard-local sequence
+        // packing of the survivors. Every stage reuses the independently
+        // verified oracle formulation.
+        val enThreshold = (enRate * 1000000).toLong
+        val defaultThreshold = (defaultRate * 1000000).toLong
+        s"""WITH RECURSIVE ${tokenHashCtes()},
+           |${shingleHashCtes()},
+           |${minhashCtes(NumHashes, RowsPerBand)},
+           |${componentCtes(NumHashes)},
+           |drops AS (SELECT doc_id FROM comp WHERE rep_id <> doc_id),
+           |lang AS ($LangIdOracle),
+           |qual AS ($QualityOracle),
+           |${idHashCtes()},
+           |surv AS (
+           |  SELECT d.doc_id, l.lang_pred, q.quality,
+           |    CAST(len(regexp_extract_all(d.text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]'))
+           |      AS BIGINT) AS n_tokens
+           |  FROM documents d
+           |  JOIN lang l ON l.doc_id = d.doc_id
+           |  JOIN qual q ON q.doc_id = d.doc_id
+           |  WHERE q.quality >= $minQuality
+           |    AND d.doc_id NOT IN (SELECT doc_id FROM drops)),
+           |samp AS (
+           |  SELECT s.* FROM surv s JOIN hashed h ON h.doc_id = s.doc_id
+           |  WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
+           |    CASE WHEN s.lang_pred = 'en' THEN $enThreshold
+           |         ELSE $defaultThreshold END),
+           |pk AS (
+           |  SELECT *, CAST(doc_id // $shardSize AS BIGINT) AS shard,
+           |    sum(n_tokens) OVER (PARTITION BY doc_id // $shardSize
+           |      ORDER BY doc_id) - n_tokens AS strt
+           |  FROM samp)
+           |SELECT doc_id, lang_pred, quality, n_tokens, shard,
+           |  CAST(strt // $budgetTokens AS BIGINT) AS pack_in_shard,
+           |  CAST(strt - (strt // $budgetTokens) * $budgetTokens AS BIGINT)
+           |    AS pack_offset
+           |FROM pk""".stripMargin
+      })
     },
 
     locally {
@@ -516,22 +515,21 @@ object CurationQueries {
         Sampling.sampleStratified(withLang, "doc_id", col("lang_pred"),
           Map("en" -> enRate), defaultRate, eagerStratum = true)
           .select("doc_id", "lang_pred")
-      },
-        {
-          // Oracle for `sample_stratified`: the deterministic hash gate
-          // (xxhash64(doc_id) pmod 1e6 under a per-language threshold) over the
-          // language-ID strata; `LangIdOracle` is the text_langid oracle, reused
-          // verbatim as a CTE so both queries share one definition of the
-          // stratum.
-          val enThreshold = (enRate * 1000000).toLong
-          val defaultThreshold = (defaultRate * 1000000).toLong
-          s"""WITH lang AS ($LangIdOracle),
-             |${idHashCtes()}
-             |SELECT h.doc_id, l.lang_pred
-             |FROM hashed h JOIN lang l ON l.doc_id = h.doc_id
-             |WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
-             |  CASE WHEN l.lang_pred = 'en' THEN $enThreshold ELSE $defaultThreshold END""".stripMargin
-        })
+      }, {
+        // Oracle for `sample_stratified`: the deterministic hash gate
+        // (xxhash64(doc_id) pmod 1e6 under a per-language threshold) over the
+        // language-ID strata; `LangIdOracle` is the text_langid oracle,
+        // reused verbatim as a CTE so both queries share one definition of
+        // the stratum.
+        val enThreshold = (enRate * 1000000).toLong
+        val defaultThreshold = (defaultRate * 1000000).toLong
+        s"""WITH lang AS ($LangIdOracle),
+           |${idHashCtes()}
+           |SELECT h.doc_id, l.lang_pred
+           |FROM hashed h JOIN lang l ON l.doc_id = h.doc_id
+           |WHERE ((h.hv % 1000000) + 1000000) % 1000000 <
+           |  CASE WHEN l.lang_pred = 'en' THEN $enThreshold ELSE $defaultThreshold END""".stripMargin
+      })
     },
 
     QueryDef("sample_temperature", (s, dir) => {
@@ -733,8 +731,8 @@ object CurationQueries {
         Sampling.budgetFill(t(s, dir, "documents"), "doc_id", "source",
           length(col("text")), budget, shardBits), {
             // Oracle for `sample_budget_fill`: one global per-source window
-            // cumsum in (shard, hash, id) order — provably the same order as the
-            // engine's two-phase shard-offset + intra-shard prefix sum.
+            // cumsum in (shard, hash, id) order — provably the same order as
+            // the engine's two-phase shard-offset + intra-shard prefix sum.
             val shift = 64 - shardBits
             val mask = (1L << shardBits) - 1
             s"""WITH ${idHashCtes()},

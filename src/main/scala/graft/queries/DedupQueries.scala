@@ -25,19 +25,18 @@ object DedupQueries {
         |FROM documents
         |GROUP BY 1""".stripMargin),
 
-    QueryDef("dedup_minhash", nearDupPairs,
-      {
-        // Oracle for `dedup_minhash`: LSH candidates with signature-agreement
-        // estimate >= 0.5.
-        val est = estJaccardE4(NumHashes)
-        s"""WITH ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)}
-           |SELECT c.id_a, c.id_b, $est AS est_jaccard
-           |FROM cand c JOIN sigv sa ON sa.doc_id = c.id_a
-           |            JOIN sigv sb ON sb.doc_id = c.id_b
-           |WHERE $est >= 0.5""".stripMargin
-      }),
+    QueryDef("dedup_minhash", nearDupPairs, {
+      // Oracle for `dedup_minhash`: LSH candidates with signature-agreement
+      // estimate >= 0.5.
+      val est = estJaccardE4(NumHashes)
+      s"""WITH ${tokenHashCtes()},
+         |${shingleHashCtes()},
+         |${minhashCtes(NumHashes, RowsPerBand)}
+         |SELECT c.id_a, c.id_b, $est AS est_jaccard
+         |FROM cand c JOIN sigv sa ON sa.doc_id = c.id_a
+         |            JOIN sigv sb ON sb.doc_id = c.id_b
+         |WHERE $est >= 0.5""".stripMargin
+    }),
 
     locally {
       val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
@@ -62,14 +61,14 @@ object DedupQueries {
           shingleN, NumHashes, RowsPerBand, hotThreshold)
         pairs.withColumn("route", lit(route))
       }, {
-        // Oracle for `dedup_auto_route` (VERDICT r9 #6): recomputes the
-        // routing statistic — the size-biased mean shingle df Σdf²/Σdf —
-        // in SQL and gates BOTH full path replays on it (the banded
-        // [[dedupMinhash]] chain where load ≥ threshold, the exact
-        // [[dedupPrefixFilter]] chain where load < threshold; prefix-side
-        // CTEs are p-prefixed to avoid colliding with the minhash chain's
-        // names), so the hash compare proves the routing decision AND the
-        // routed pair set per fixture.
+        // Oracle for `dedup_auto_route` (VERDICT r9 #6): recomputes the routing
+        // statistic — the size-biased mean shingle df Σdf²/Σdf — in SQL and
+        // gates BOTH full path replays on it (the banded the `dedup_minhash`
+        // oracle chain where load ≥ threshold, the exact the
+        // `dedup_prefix_filter` oracle chain where load < threshold;
+        // prefix-side CTEs are p-prefixed to avoid colliding with the minhash
+        // chain's names), so the hash compare proves the routing decision AND
+        // the routed pair set per fixture.
         val minPpm = math.round(minSim * 1000000)
         val n = shingleN
         val est = estJaccardE4(NumHashes)
@@ -213,7 +212,7 @@ object DedupQueries {
           sampleCutoff, sampleMod)
       }, {
         // Oracle for `dedup_auto_route_dual` (ADVICE r11): the per-source
-        // dial and BOTH path replays of [[dedupAutoRouteBySource]], run
+        // dial and BOTH path replays of `autoRouteBySourceOracle`, run
         // over the synthetic dual-route corpus derived in-query from the
         // documents table — 'tpl' groups of 16 identical docs (hot →
         // banded), 'o_pair' unique-vocabulary boundary pairs at jaccard
@@ -748,7 +747,7 @@ object DedupQueries {
           shingleN = 3, minCont, NumHashes, RowsPerBand)
       },
         // Oracle for `dedup_containment`: MinHash-LSH candidate pairs (same
-        // CTEs as [[dedupMinhash]]), exact containment of the smaller
+        // CTEs as the `dedup_minhash` oracle), exact containment of the smaller
         // distinct-shingle-hash set in the larger —
         // `|A∩B| / min(|A|,|B|)` — computed over the `shash` hash domain the
         // engine's [[graft.expressions.SortedArrayOverlap]] merges.
@@ -880,7 +879,8 @@ object DedupQueries {
         // the engine — per-table banded rows, equality bucket join, DISTINCT
         // pairs, exact cosine refine. The round goes through VARCHAR→DECIMAL
         // to reproduce Spark's shortest-decimal HALF_UP semantics.
-        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)}
+        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits,
+            maxBits, dim, seed)}
            |SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos""".stripMargin
       })
     },
@@ -905,7 +905,8 @@ object DedupQueries {
         // is MUTUAL iff each endpoint ranks the other within its own top-k
         // — the reciprocal-nearest-neighbor filter that strips asymmetric
         // hub links from a near-dup graph before clustering.
-        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)},
+        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits,
+            maxBits, dim, seed)},
            |thr AS (SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos),
            |sym AS (
            |  SELECT id_a AS a, id_b AS b, cos FROM thr

@@ -2672,8 +2672,8 @@ object EventsQueries {
             .as("did_cents"))
     },
       // Oracle for `events_diff_in_diff`: the same arm hash and pre/post
-      // per-user revenue as [[eventsAbCuped]], four mean divisions, the
-      // DiD contrast as the identical IEEE chain.
+      // per-user revenue as the `events_ab_cuped` oracle, four mean divisions,
+      // the DiD contrast as the identical IEEE chain.
       s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",
            "user_id")},
          |arm AS (SELECT user_id, ((hv % 2) + 2) % 2 AS arm FROM hashed),
@@ -2971,7 +2971,7 @@ object EventsQueries {
             .as("var_reduction"))
     },
       // Oracle for `events_ab_cuped`: the same arm hash as
-      // [[eventsAbTest]], pre/post per-user revenue, pooled exact
+      // the `events_ab_test` oracle, pre/post per-user revenue, pooled exact
       // moments, θ/adjusted-mean/variance-reduction as the identical
       // IEEE chains over those integers.
       s"""WITH ${idHashCtes("(SELECT DISTINCT user_id FROM events)",

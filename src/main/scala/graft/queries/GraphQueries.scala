@@ -70,9 +70,9 @@ object GraphQueries {
         Graph.personalizedPageRank(pairs, "id_a", "id_b",
           id => id % seedMod === 0, iters, dampingPct)
       }, {
-        // Oracle for `graph_personalized_pagerank`: [[graphPagerank]] with
-        // the initial mass and the per-round teleport gated to the seed set
-        // (`id % seedMod = 0`) — mirroring
+        // Oracle for `graph_personalized_pagerank`: the `graph_pagerank` oracle
+        // with the initial mass and the per-round teleport gated to the seed
+        // set (`id % seedMod = 0`) — mirroring
         // [[graft.functions.Graph.personalizedPageRank]] exactly.
         val tele = (100L - dampingPct) * 10000L
         val sb = new StringBuilder
@@ -190,7 +190,8 @@ object GraphQueries {
         // existing edges removed by NOT EXISTS. Mirrors
         // [[graft.functions.Dedup.linkPrediction]] over the reciprocal
         // top-k graph.
-        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)},
+        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits,
+            maxBits, dim, seed)},
            |thr AS (SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos),
            |symc AS (
            |  SELECT id_a AS a, id_b AS b, cos FROM thr
@@ -747,8 +748,8 @@ object GraphQueries {
         val pairs = nearDupPairs(s, dir)
         Graph.louvainMultilevel(pairs, "id_a", "id_b", rounds1, rounds2)
       }, {
-        // Oracle for `graph_louvain_multilevel`: the phase-1 sweep CTEs of
-        // [[graphLouvain]], then Blondel's community aggregation (inter
+        // Oracle for `graph_louvain_multilevel`: the phase-1 sweep CTEs of the
+        // `graph_louvain` oracle, then Blondel's community aggregation (inter
         // weights = cross-edge counts, doubled intra self-loops), the SAME
         // weighted synchronous local move on the supernode graph, and the
         // two-level label unfold. Mirrors
@@ -956,7 +957,7 @@ object GraphQueries {
               "AS bigint)").as("q_e9"))
       }, {
         // Oracle for `graph_modularity`: the label-propagation communities
-        // ([[graphLabelProp]] CTEs), then Newman modularity of the
+        // (the `graph_label_prop` oracle CTEs), then Newman modularity of the
         // partition as ONE exact integer ratio — Q·4m² = Σ_c (4m·e_c −
         // d_c²), reported in e9 fixed point.
         val sb = new StringBuilder
@@ -1091,11 +1092,11 @@ object GraphQueries {
   /** The neighborhood builders unroll three hops (columns n1..n3). */
   private val NeighborhoodHops = 3
 
-  /** Oracle for `graph_neighborhood`: recursive ≤`NeighborhoodHops` walk over the
-    * self-looped near-dup edge set, min-hop dedup, then per-vertex
-    * reach counts at each hop — the exact ground truth the engine's
-    * bitmap-state propagation must reproduce. Mirrors the
-    * `graph_neighborhood` bitmap loop in [[graft.queries.GraphQueries]].
+  /** Oracle for `graph_neighborhood` (and `graph_harmonic` on top of
+    * it): recursive ≤`NeighborhoodHops` walk over the self-looped
+    * near-dup edge set, min-hop dedup, then per-vertex reach counts at
+    * each hop — the exact ground truth the engine's bitmap-state
+    * propagation must reproduce.
     */
   private def graphNeighborhood: String =
     s"""WITH RECURSIVE ${tokenHashCtes()},

@@ -438,8 +438,8 @@ object MlQueries {
             col("win.l").as("pred_label"), (-col("win.nv")).as("votes"),
             (col("win.l") === col("true_label")).as("correct"))
       }, {
-        // Oracle for `ml_knn_classify`: the same int8 quantization CTE as
-        // [[simQuantizedTopK]] (with the label carried), exact BIGINT
+        // Oracle for `ml_knn_classify`: the same int8 quantization CTE as the
+        // `sim_quantized_topk` oracle (with the label carried), exact BIGINT
         // squared distances, per-query rank window (d2 ASC, neighbor ASC),
         // 5-vote majority with ties toward the smaller label.
         val d2 = s"list_sum(list_transform(range(1, ${dim + 1}), " +
@@ -549,14 +549,14 @@ object MlQueries {
           .agg(count(lit(1)).as("n_assigned"),
             max(col("best.dd")).as("radius_sq"))
       }, {
-        // Oracle for `cluster_farthest_first`: the Gonzalez traversal
-        // unrolled — the int8 quantization CTE (same formulation as
-        // [[simQuantizedTopK]]), then per round an argmax-of-min-distance
-        // selection (ORDER BY dmin DESC, vec_id ASC LIMIT 1, matching the
-        // engine's TakeOrdered tie-break) with exact BIGINT squared
-        // distances, then the nearest-center assignment rollup. Every CTE
-        // in the sequential chain is MATERIALIZED (per-reference inlining
-        // re-evaluates the whole prefix otherwise).
+        // Oracle for `cluster_farthest_first`: the Gonzalez traversal unrolled
+        // — the int8 quantization CTE (same formulation as the
+        // `sim_quantized_topk` oracle), then per round an
+        // argmax-of-min-distance selection (ORDER BY dmin DESC, vec_id ASC
+        // LIMIT 1, matching the engine's TakeOrdered tie-break) with exact
+        // BIGINT squared distances, then the nearest-center assignment rollup.
+        // Every CTE in the sequential chain is MATERIALIZED (per-reference
+        // inlining re-evaluates the whole prefix otherwise).
         def dist(a: String, b: String) =
           s"list_sum(list_transform(range(1, ${dim + 1}), " +
             s"i -> ($a[i] - $b[i])::BIGINT * ($a[i] - $b[i])::BIGINT))::BIGINT"
@@ -755,19 +755,17 @@ object MlQueries {
          |FROM bins JOIN fit USING (bin)""".stripMargin),
 
     QueryDef("ml_auc_exact", (s, dir) => {
-      // EXACT tie-aware ROC AUC of "pre-period activity predicts a
-      // FINAL-WEEK purchase" (day >= 28 — the label must not be
-      // saturated: every fixture user purchases over the full month,
-      // but only ~60%% do in the last days), by the rank formula AUC = (Σ_pos rank −
-      // P(P+1)/2) / (P·N) with average ranks over ties — entirely in
-      // integer arithmetic (average ranks are .5-rationals, so
-      // everything is carried ×2: rank2 = 2·cum_lower + ties + 1;
-      // auc_ppm = (Σ_pos rank2 − P(P+1))·10⁶ div (2·P·N)). No float
-      // threshold sweep, no trapezoid — the Mann–Whitney identity
-      // makes the answer exact and oracle-checkable. The ranking
-      // window runs on the SCORE-DOMAIN frame (distinct activity
-      // counts), not per-user rows — the domain-bounded-window
-      // discipline of profile_ks_test.
+      // EXACT tie-aware ROC AUC of "pre-period activity predicts a FINAL-WEEK
+      // purchase" (day >= 28 — the label must not be saturated: every fixture
+      // user purchases over the full month, but only ~60%% do in the last
+      // days), by the rank formula AUC = (Σ_pos rank − P(P+1)/2) / (P·N) with
+      // average ranks over ties — entirely in integer arithmetic (average ranks
+      // are .5-rationals, so everything is carried ×2: rank2 = 2·cum_lower +
+      // ties + 1; auc_ppm = (Σ_pos rank2 − P(P+1))·10⁶ div (2·P·N)). No float
+      // threshold sweep, no trapezoid — the Mann–Whitney identity makes the
+      // answer exact and oracle-checkable. The ranking window runs on the
+      // SCORE-DOMAIN frame (distinct activity counts), not per-user rows — the
+      // domain-bounded-window discipline of profile_ks_test.
       val ev = t(s, dir, "events").select(col("user_id"),
         datediff(col("ts").cast("date"),
           lit("2024-01-01").cast("date")).as("day"),
@@ -968,9 +966,10 @@ object MlQueries {
         }
         results.reduce(_ unionByName _)
       }, {
-        // Oracle for `ml_logreg_cv`: [[mlLogregTrain]] unrolled per fold —
-        // train CTEs filtered to fold <> f, the eval pass to fold = f,
-        // 3-row UNION ALL result. Mirrors the `ml_logreg_cv` builder loop exactly.
+        // Oracle for `ml_logreg_cv`: the `ml_logreg_train` oracle unrolled per
+        // fold — train CTEs filtered to fold <> f, the eval pass to fold = f,
+        // 3-row UNION ALL result. Mirrors the `ml_logreg_cv` builder loop
+        // exactly.
         def z(w: String) =
           s"($w.b + $w.w1*f.x1 + $w.w2*f.x2 + $w.w3*f.x3)"
         def p(w: String) = s"(1.0/(1.0 + exp(-${z(w)})))"

@@ -73,7 +73,7 @@ object SimilarityQueries {
             col("cand").as("neighbor_id"))
       }, {
         // Oracle for `sim_graph_topk`: the mutual-kNN edge CTEs (shared
-        // with [[graphLinkPredict]]) plus the two-round beam search
+        // with the `graph_link_predict` oracle) plus the two-round beam search
         // unrolled — entries, expand-by-edges, exact-cosine re-rank to beam
         // 8 each round, top-5 out. Mirrors the `sim_graph_topk` query.
         def rank(candCte: String, name: String) =
@@ -86,7 +86,8 @@ object SimilarityQueries {
              |  JOIN qv q ON q.query_id = c.query_id
              |  WHERE c.cand <> c.query_id)
              |  WHERE rn <= $beam)""".stripMargin
-        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits, maxBits, dim, seed)},
+        s"""WITH ${embLshPairsCtes(nTables, targetBucket, minBits,
+            maxBits, dim, seed)},
            |thr AS (SELECT id_a, id_b, cos FROM pairs WHERE cos >= $minCos),
            |symc AS (
            |  SELECT id_a AS a, id_b AS b, cos FROM thr

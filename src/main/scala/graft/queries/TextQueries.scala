@@ -1329,21 +1329,20 @@ object TextQueries {
             .as("n_tokens"))
       }, {
         // Oracle for `text_bpe_encode`: re-derives the top-`nMerges` merge
-        // table exactly like [[textBpePairs]], then emulates the engine's
-        // rank-ordered left-to-right merge passes WITHOUT recursion. Each
-        // token is wrapped in its OWN delimiter pair (`D tok D`, D =
+        // table exactly like the `text_bpe_pairs` oracle, then emulates the
+        // engine's rank-ordered left-to-right merge passes WITHOUT recursion.
+        // Each token is wrapped in its OWN delimiter pair (`D tok D`, D =
         // chr(31), never inside an `[a-z0-9]` word), so a word starts as
-        // `Dc1DDc2D...DcnD` and one merge pass is ONE SQL
-        // `replace(DaDDbD → DabD)`. Each match consumes exactly two
-        // complete self-contained token wrappers — adjacent candidate pairs
-        // share NO characters (an interleaved `Dc1Dc2D` encoding would make
-        // neighboring matches share a delimiter, and `replace`'s
-        // non-overlapping scan would skip every other merge: "bbbb" with
-        // (b,b) must give 2 tokens, not 3). Left-to-right non-overlapping
-        // `replace` is then bit-for-bit the engine's token-level pass
-        // ([[graft.expressions.BpeOps.wordTokens]]). Token count =
-        // delimiter count / 2. Missing ranks (tiny corpora) fall back to
-        // an unmatchable chr(1) pair.
+        // `Dc1DDc2D...DcnD` and one merge pass is ONE SQL `replace(DaDDbD →
+        // DabD)`. Each match consumes exactly two complete self-contained token
+        // wrappers — adjacent candidate pairs share NO characters (an
+        // interleaved `Dc1Dc2D` encoding would make neighboring matches share a
+        // delimiter, and `replace`'s non-overlapping scan would skip every
+        // other merge: "bbbb" with (b,b) must give 2 tokens, not 3).
+        // Left-to-right non-overlapping `replace` is then bit-for-bit the
+        // engine's token-level pass ([[graft.expressions.BpeOps.wordTokens]]).
+        // Token count = delimiter count / 2. Missing ranks (tiny corpora) fall
+        // back to an unmatchable chr(1) pair.
         val d = "chr(31)"
         val enc = (1 to nMerges).foldLeft(
           s"regexp_replace(w, '(.)', $d || '\\1' || $d, 'g')") { (prev, i) =>
