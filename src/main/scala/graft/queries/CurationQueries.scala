@@ -8,7 +8,7 @@ import graft.functions.{Clustering, Curation, Dedup, ExactGrid, Graph,
   Importance, Packing, Sampling, TextFunctions}
 import graft.multimodal.Multimodal
 import graft.OracleSql.{adaptiveKSql, componentCtes, idHashCtes, kmeansCtes,
-  minhashCtes, roundSpark, shingleHashCtes, tokenHashCtes}
+  roundSpark, tokenHashCtes}
 import graft.queries.QueryKit._
 
 /** Training-data curation: quality gates, sampling, leakage-safe splits,
@@ -67,9 +67,7 @@ object CurationQueries {
       // hashed through the XXH64 chain into the same 0.9/0.05/0.05 buckets as
       // the `split_train_val_test` oracle — so every member of a near-dup
       // cluster lands in the same split.
-      s"""WITH RECURSIVE ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)},
+      s"""WITH RECURSIVE ${nearDupCtes},
          |${componentCtes(NumHashes)},
          |full_docs AS (
          |  SELECT d.doc_id, coalesce(c.rep_id, d.doc_id) AS rep
@@ -105,9 +103,7 @@ object CurationQueries {
       // Oracle for `curate_canonical_docs`: the component closure joined
       // to the quality oracle; per cluster the (quality desc, doc_id asc)
       // winner — mirroring the bounded top-1-by aggregate.
-      s"""WITH RECURSIVE ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)},
+      s"""WITH RECURSIVE ${nearDupCtes},
          |${componentCtes(NumHashes)},
          |q AS ($QualityOracle),
          |j AS (SELECT c.rep_id, c.doc_id, q.quality
@@ -364,9 +360,7 @@ object CurationQueries {
         // verified oracle formulation.
         val enThreshold = (enRate * 1000000).toLong
         val defaultThreshold = (defaultRate * 1000000).toLong
-        s"""WITH RECURSIVE ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)},
+        s"""WITH RECURSIVE ${nearDupCtes},
            |${componentCtes(NumHashes)},
            |drops AS (SELECT doc_id FROM comp WHERE rep_id <> doc_id),
            |lang AS ($LangIdOracle),

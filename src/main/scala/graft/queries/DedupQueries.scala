@@ -29,9 +29,7 @@ object DedupQueries {
       // Oracle for `dedup_minhash`: LSH candidates with signature-agreement
       // estimate >= 0.5.
       val est = estJaccardE4(NumHashes)
-      s"""WITH ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)}
+      s"""WITH ${nearDupCtes}
          |SELECT c.id_a, c.id_b, $est AS est_jaccard
          |FROM cand c JOIN sigv sa ON sa.doc_id = c.id_a
          |            JOIN sigv sb ON sb.doc_id = c.id_b
@@ -72,9 +70,7 @@ object DedupQueries {
         val minPpm = math.round(minSim * 1000000)
         val n = shingleN
         val est = estJaccardE4(NumHashes)
-        s"""WITH ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)},
+        s"""WITH ${nearDupCtes},
            |ptoks AS (
            |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+')
            |    AS a
@@ -271,9 +267,7 @@ object DedupQueries {
         val est = estJaccardE4(NumHashes)
         val aNew = s"(c.id_a % $newMod >= $newFrom)"
         val bNew = s"(c.id_b % $newMod >= $newFrom)"
-        s"""WITH ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)}
+        s"""WITH ${nearDupCtes}
            |SELECT
            |  CASE WHEN $aNew AND NOT $bNew THEN c.id_a ELSE c.id_b END AS doc_id,
            |  CASE WHEN $aNew AND NOT $bNew THEN c.id_b ELSE c.id_a END AS dup_of,
@@ -339,9 +333,7 @@ object DedupQueries {
       // shingle-hash sets, restricted to the LSH candidate pairs.
       val jac = eRatioE("coalesce(i.ic, 0)",
         "za.sz + zb.sz - coalesce(i.ic, 0)", 10000L)
-      s"""WITH ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)},
+      s"""WITH ${nearDupCtes},
          |sset AS MATERIALIZED (SELECT DISTINCT doc_id, shu FROM shash),
          |ssz AS MATERIALIZED (SELECT doc_id, count(*) AS sz FROM sset GROUP BY doc_id),
          |inter AS (
@@ -751,9 +743,7 @@ object DedupQueries {
         // distinct-shingle-hash set in the larger —
         // `|A∩B| / min(|A|,|B|)` — computed over the `shash` hash domain the
         // engine's [[graft.expressions.SortedArrayOverlap]] merges.
-        s"""WITH ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)},
+        s"""WITH ${nearDupCtes},
            |ssz AS MATERIALIZED (
            |  SELECT doc_id, count(DISTINCT shu) AS sz FROM shash GROUP BY doc_id),
            |ov AS (

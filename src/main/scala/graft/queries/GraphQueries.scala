@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, Graph}
-import graft.OracleSql.{Chain, edgeCtes, embLshPairsCtes, eRatioE, estJaccardE4,
-  hashLong, minhashCtes, shingleHashCtes, tokenHashCtes}
+import graft.OracleSql.{Chain, embLshPairsCtes, eRatioE, estJaccardE4,
+  hashLong}
 import graft.queries.QueryKit._
 
 /** Graph algorithms over the near-duplicate and embedding-neighbor graphs.
@@ -30,10 +30,7 @@ object GraphQueries {
         // constant teleport in millionths).
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
              |r0 AS (SELECT id, 1000000::BIGINT AS rank FROM verts)""".stripMargin
         for (i <- 1 to iters) {
@@ -77,10 +74,7 @@ object GraphQueries {
         val tele = (100L - dampingPct) * 10000L
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
              |r0 AS (SELECT id, CASE WHEN id % $seedMod = 0
              |  THEN 1000000 ELSE 0 END::BIGINT AS rank FROM verts)""".stripMargin
@@ -117,10 +111,7 @@ object GraphQueries {
       // Oracle for `graph_triangles`: canonical a<b near-dup edges,
       // wedges closed by the (a, c) edge, per-vertex membership counts —
       // mirrors [[graft.functions.Graph.triangleCounts]].
-      s"""WITH ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)},
-         |${edgeCtes(NumHashes)},
+      s"""WITH ${nearDupEdgeCtes},
          |ce AS MATERIALIZED (SELECT DISTINCT id_a AS a, id_b AS b FROM fcand),
          |tri AS (
          |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -143,10 +134,7 @@ object GraphQueries {
       // Oracle for `graph_clustering_coeff`: same candidate-edge closure
       // as `graph_triangles`; degrees from the exploded edge list, cc =
       // exact-integer `2·T / (deg·(deg−1))` with one IEEE division.
-      s"""WITH ${tokenHashCtes()},
-         |${shingleHashCtes()},
-         |${minhashCtes(NumHashes, RowsPerBand)},
-         |${edgeCtes(NumHashes)},
+      s"""WITH ${nearDupEdgeCtes},
          |ce AS MATERIALIZED (SELECT DISTINCT id_a AS a, id_b AS b FROM fcand),
          |tri AS (
          |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -368,10 +356,7 @@ object GraphQueries {
         // mirroring [[graft.functions.Graph.kCore]]'s bounded-round loop.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |e0 AS (SELECT src, dst FROM edges)""".stripMargin
         for (i <- 1 to rounds) {
           sb ++=
@@ -416,10 +401,7 @@ object GraphQueries {
         // reachable from a seed within `rounds` hops, and `min(hops)` per
         // vertex IS the BFS distance — the frontier discipline is an
         // engine-side efficiency, not a semantic difference.
-        s"""WITH RECURSIVE ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)},
-           |${edgeCtes(NumHashes)},
+        s"""WITH RECURSIVE ${nearDupEdgeCtes},
            |seeds AS MATERIALIZED (
            |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
            |reach(id, d) AS (
@@ -510,10 +492,7 @@ object GraphQueries {
         // (sequential chain, multi-referenced).
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |bseeds AS MATERIALIZED (
              |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
              |bl0 AS MATERIALIZED (
@@ -594,9 +573,7 @@ object GraphQueries {
         // `min(total weight)` per vertex IS the Bellman–Ford result after
         // `rounds` relaxation rounds ([[graft.functions.Graph.ssspFromSeeds]]).
         val est = estJaccardE4(NumHashes)
-        s"""WITH RECURSIVE ${tokenHashCtes()},
-           |${shingleHashCtes()},
-           |${minhashCtes(NumHashes, RowsPerBand)},
+        s"""WITH RECURSIVE ${nearDupCtes},
            |fw AS MATERIALIZED (
            |  SELECT c.id_a, c.id_b,
            |    CAST(10000 - round($est * 10000) AS BIGINT) * 100 AS w
@@ -634,10 +611,7 @@ object GraphQueries {
         // mirroring [[graft.functions.Graph.labelPropagation]] exactly.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |l0 AS (SELECT id AS node, id AS label FROM verts)""".stripMargin
         for (i <- 1 to rounds) {
           sb ++=
@@ -687,10 +661,7 @@ object GraphQueries {
         // graph.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |ldeg AS MATERIALIZED (
              |  SELECT src AS node, count(*)::BIGINT AS ki
              |  FROM edges GROUP BY 1),
@@ -756,10 +727,7 @@ object GraphQueries {
         // [[graft.functions.Graph.louvainMultilevel]].
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |ldeg AS MATERIALIZED (
              |  SELECT src AS node, count(*)::BIGINT AS ki
              |  FROM edges GROUP BY 1),
@@ -873,10 +841,7 @@ object GraphQueries {
         // [[graft.functions.Graph.hits]] bit-for-bit.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |de AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM fcand),
              |vv AS MATERIALIZED (
              |  SELECT DISTINCT src AS id FROM de
@@ -962,10 +927,7 @@ object GraphQueries {
         // d_c²), reported in e9 fixed point.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |l0 AS (SELECT id AS node, id AS label FROM verts)""".stripMargin
         for (i <- 1 to rounds) {
           sb ++=
@@ -1055,10 +1017,7 @@ object GraphQueries {
         // chain, ties by neighbor id.
         val sb = new StringBuilder
         sb ++=
-          s"""WITH ${tokenHashCtes()},
-             |${shingleHashCtes()},
-             |${minhashCtes(NumHashes, RowsPerBand)},
-             |${edgeCtes(NumHashes)},
+          s"""WITH ${nearDupEdgeCtes},
              |seeds AS MATERIALIZED (
              |  SELECT id FROM verts ORDER BY id LIMIT $nSeeds),
              |s0 AS (SELECT id AS walk_id, id AS node FROM seeds)""".stripMargin
@@ -1099,10 +1058,7 @@ object GraphQueries {
     * propagation must reproduce.
     */
   private def graphNeighborhood: String =
-    s"""WITH RECURSIVE ${tokenHashCtes()},
-       |${shingleHashCtes()},
-       |${minhashCtes(NumHashes, RowsPerBand)},
-       |${edgeCtes(NumHashes)},
+    s"""WITH RECURSIVE ${nearDupEdgeCtes},
        |es AS (SELECT src, dst FROM edges
        |       UNION SELECT id, id FROM verts),
        |walk(src, dst, h) AS (
@@ -1143,10 +1099,7 @@ object GraphQueries {
     val lnCase = (1 to Hll.M)
       .map(v => s"WHEN $v THEN ${Hll.LnTable(v - 1)}")
       .mkString("\n|            ")
-    s"""WITH RECURSIVE ${tokenHashCtes()},
-       |${shingleHashCtes()},
-       |${minhashCtes(NumHashes, RowsPerBand)},
-       |${edgeCtes(NumHashes)},
+    s"""WITH RECURSIVE ${nearDupEdgeCtes},
        |es AS (SELECT src, dst FROM edges
        |       UNION SELECT id, id FROM verts),
        |walk(src, dst, h) AS (

@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Cleaning, IncrementalAgg, Joins, Merge, Split, Stamping}
-import graft.functions.{Dedup, Graph, Packing}
+import graft.functions.{Graph, Packing}
 import graft.OracleSql.{Chain, eRatioE, hashLong, idHashCtes, sig}
 import graft.queries.QueryKit._
 

@@ -65,6 +65,18 @@ object QueryKit {
   private[queries] val NumHashes = 16
   private[queries] val RowsPerBand = 2
 
+  /** Oracle twin of [[nearDupPairs]]: the token-hash, shingle-hash and
+    * MinHash-band CTEs of the same banding, ending in the `cand` pairs
+    * and `sigv` signatures.
+    */
+  private[queries] def nearDupCtes: String =
+    s"${OracleSql.tokenHashCtes()},\n${OracleSql.shingleHashCtes()},\n" +
+      OracleSql.minhashCtes(NumHashes, RowsPerBand)
+
+  /** [[nearDupCtes]] plus the near-dup graph's `edges` and `verts`. */
+  private[queries] def nearDupEdgeCtes: String =
+    s"$nearDupCtes,\n${OracleSql.edgeCtes(NumHashes)}"
+
   /** Near-duplicate document pairs: MinHash-LSH candidates with
     * estimated Jaccard >= 0.5 — the graph the graph queries and the
     * component dedups walk.
