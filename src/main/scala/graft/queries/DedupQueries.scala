@@ -1059,15 +1059,16 @@ object DedupQueries {
         |FROM agg JOIN canon USING (rep) JOIN segmode USING (rep)""".stripMargin)
   )
 
-  // Oracle for `dedup_auto_route_mixed` and `dedup_auto_route_dual`
-  // (VERDICT r10 #7): the
-  // per-SOURCE routing dial — size-biased mean shingle df recomputed
-  // per source with a per-source sampling modulus — gating BOTH full
-  // path replays per source, restricted to within-source pairs. The
-  // banded/prefix chains run over the full corpus (signatures are
-  // per-doc and the prefix filter is lossless under any global df
-  // order, so the full-corpus candidate superset restricted to
-  // same-source routed pairs equals the engine's subset-union runs).
+  /** Oracle for `dedup_auto_route_mixed` and `dedup_auto_route_dual`
+    * (VERDICT r10 #7): the per-SOURCE routing dial — size-biased mean
+    * shingle df recomputed per source with a per-source sampling
+    * modulus — gating BOTH full path replays per source, restricted to
+    * within-source pairs. The banded/prefix chains run over the full
+    * corpus (signatures are per-doc and the prefix filter is lossless
+    * under any global df order, so the full-corpus candidate superset
+    * restricted to same-source routed pairs equals the engine's
+    * subset-union runs).
+    */
   private def autoRouteBySourceOracle(minSim: Double, shingleN: Int,
       hotThreshold: Double, sampleCutoff: Long, sampleMod: Int,
       docsRel: String): String = {
