@@ -1035,7 +1035,6 @@ object EventsQueries {
       // single-partition window discipline as the daily KPI frames),
       // identical in both engines. Terminal times with d = n (S would
       // hit 0, ln −∞) are excluded and documented.
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate")
       val od = t(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderdate").cast("date")
           .as("od"))

@@ -1404,7 +1404,6 @@ object MlQueries {
         .select(col("l_quantity").cast("long").as("x"),
           (floor(col("l_extendedprice")) * 100).as("y_e2"))
         .localCheckpoint(true) // re-read once per boosting round
-      val n = feat.count()
       val f0 = feat.agg(expr("sum(y_e2) div count(1)").as("f0"))
         .head().getLong(0)
       val cands = (5 to 45 by 5)

@@ -1641,7 +1641,6 @@ object SqlQueries {
       val natS = t(s, dir, "nation").select(col("n_nationkey").as("s_nk"),
         col("n_name").as("supp_nation"))
       val reg = t(s, dir, "region").filter(col("r_name") === "EUROPE")
-      val vol = col("l_extendedprice") * (lit(1) - col("l_discount"))
       li.join(ord, li("l_orderkey") === ord("o_orderkey"))
         .join(broadcast(part), li("l_partkey") === part("p_partkey"))
         .join(cust, ord("o_custkey") === cust("c_custkey"))

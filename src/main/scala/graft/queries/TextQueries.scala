@@ -761,7 +761,7 @@ object TextQueries {
         // against boolean-AND qrels (doc contains every query term) —
         // system-independent judgments both engines recompute exactly
         Retrieval.retrievalMetrics(s, t(s, dir, "documents"),
-          Bm25Queries, k)
+          Bm25Queries, k, k1, b)
       }, {
         // Oracle for `retrieval_metrics`: boolean-AND qrels (doc contains
         // every distinct query term), BM25 ranking via the shared CTEs, and

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobCount, SparkEntry, SparkSpec}
 
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
@@ -201,5 +201,19 @@ class RetrievalSpec extends SparkSpec {
     assert(ranked(Retrieval.rrfFuse(a, b, k = 2, c = 7)) ==
       Seq((1, 1, 30L, 0.225), (1, 2, 10L, 0.125), (2, 1, 40L, 0.125),
         (3, 1, 60L, 0.125), (3, 2, 61L, 0.111111)))
+  }
+
+  // The job floor of the two BM25 queries: one postings shuffle, the
+  // corpus-constant aggregate and its broadcast, one top-k shuffle per
+  // ranking, and the result job (they ran 29 and 31 jobs when every
+  // statistic re-read the token table and each top-k joined back to
+  // its own input).
+  test("hybrid_retrieval_rrf and retrieval_metrics stay within their job ceilings") {
+    val ceilings = Seq("hybrid_retrieval_rrf" -> 6, "retrieval_metrics" -> 5)
+    for ((name, ceiling) <- ceilings) {
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      val jobs = JobCount(spark)(df.queryExecution.toRdd.count())
+      assert(jobs <= ceiling, s"$name started $jobs jobs, ceiling $ceiling")
+    }
   }
 }
