@@ -245,9 +245,9 @@ object Retrieval {
     * per query via the bounded aggregate on the packed grid key.
     *
     * Inputs need columns (query_id, doc_id, rank), at most one row per
-    * (query_id, doc_id) each, as a ranking has. Both are shuffled once,
-    * together, by query_id: that one partitioning serves the per-doc
-    * merge and the per-query top-k.
+    * (query_id, doc_id) each, as a ranking has. Rankings from the
+    * top-k retrievers here arrive partitioned by query_id, which serves
+    * both the per-doc merge and the per-query top-k without a shuffle.
     */
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Int = 60,
               idCol: String = "doc_id"): DataFrame = {
@@ -255,7 +255,6 @@ object Retrieval {
       df.select(col("query_id"), col(idCol), col("rank"),
         lit(fromA).as("from_a"))
     val fused = side(a, fromA = true).unionByName(side(b, fromA = false))
-      .repartition(col("query_id"))
       .groupBy("query_id", idCol)
       .agg(max(when(col("from_a"), col("rank"))).as("rank_a"),
         max(when(!col("from_a"), col("rank"))).as("rank_b"))
