@@ -203,6 +203,15 @@ class RetrievalSpec extends SparkSpec {
         (3, 1, 60L, 0.125), (3, 2, 61L, 0.111111)))
   }
 
+  test("a query list must be non-empty, with distinct ids") {
+    val docs = Seq((1L, "alpha beta")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException](
+      Retrieval.bm25TopK(spark, docs, Seq.empty, k = 5))
+    intercept[IllegalArgumentException](
+      Retrieval.booleanOverlapTopK(spark, docs, Seq(1 -> "alpha", 1 -> "beta"),
+        k = 5))
+  }
+
   // The job floor of the two BM25 queries: one postings shuffle, the
   // corpus-constant aggregate and its broadcast, one top-k shuffle per
   // ranking, and the result job (they ran 29 and 31 jobs when every
