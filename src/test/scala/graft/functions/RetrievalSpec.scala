@@ -214,9 +214,8 @@ class RetrievalSpec extends SparkSpec {
 
   // The job floor of the two BM25 queries: one postings shuffle, the
   // corpus-constant aggregate and its broadcast, one top-k shuffle per
-  // ranking, and the result job (they ran 29 and 31 jobs when every
-  // statistic re-read the token table and each top-k joined back to
-  // its own input).
+  // ranking, and the result job. A statistic that re-reads the corpus,
+  // or a top-k joined back to its input, shows up here as extra jobs.
   test("hybrid_retrieval_rrf and retrieval_metrics stay within their job ceilings") {
     val ceilings = Seq("hybrid_retrieval_rrf" -> 6, "retrieval_metrics" -> 5)
     for ((name, ceiling) <- ceilings) {
