@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.types.{Decimal, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.expressions.{BloomAgg, BloomContains, BloomMergeAgg, Cms, CmsAgg, CmsEstimate, CosineSim, DotProduct, HllAgg, HllMergeAgg, HllStateAgg, KmvDistinctAgg, KmvMergeAgg, KmvStateAgg, KqMergeAgg, KqQuantile, KqStateAgg, MinHashSig, PushdownBarrier, ShingleHashes, SimHash64, SortedArrayJaccard, SortedArrayOverlap, TopKByAgg, UnicodeNormalize, UnicodeNormalizeImpl, ZOrderKey}
+import graft.expressions.{BloomAgg, BloomContains, Cms, CmsAgg, CmsEstimate, CosineSim, DotProduct, HllAgg, KmvAgg, KqAgg, KqQuantile, MinHashSig, PushdownBarrier, ShingleHashes, SimHash64, SortedArrayJaccard, SortedArrayOverlap, TopKByAgg, UnicodeNormalize, UnicodeNormalizeImpl, ZOrderKey}
 
 /** The engine's native SQL functions, one row per name. Each builder
   * validates arity and parses optional integer-literal parameters — a
@@ -76,17 +76,23 @@ private[graft] object GraftBuilders {
     fn("dot_product", 2, 2)(a => DotProduct(a(0), a(1))),
     fn("top_k_by", 3, 3)(a => TopKByAgg(a(0), a(1), a.int(2))),
     fn("pushdown_barrier", 1, 1)(a => PushdownBarrier(a(0))),
-    fn("kmv_distinct", 2, 2)(a => KmvDistinctAgg(xx(a(0)), a.int(1))),
-    fn("kmv_state", 2, 2)(a => KmvStateAgg(xx(a(0)), a.int(1))),
-    fn("kmv_merge_est", 1, 1)(a => KmvMergeAgg(a(0))),
-    fn("hll_distinct", 1, 1)(a => HllAgg(xx(a(0)))),
-    fn("hll_state", 1, 1)(a => HllStateAgg(xx(a(0)))),
-    fn("hll_merge_est", 1, 1)(a => HllMergeAgg(a(0))),
+    fn("kmv_distinct", 2, 2)(a =>
+      KmvAgg(xx(a(0)), a.int(1), fromState = false, toState = false)),
+    fn("kmv_state", 2, 2)(a =>
+      KmvAgg(xx(a(0)), a.int(1), fromState = false, toState = true)),
+    fn("kmv_merge_est", 1, 1)(a =>
+      KmvAgg(a(0), 0, fromState = true, toState = false)),
+    fn("hll_distinct", 1, 1)(a =>
+      HllAgg(xx(a(0)), fromState = false, toState = false)),
+    fn("hll_state", 1, 1)(a =>
+      HllAgg(xx(a(0)), fromState = false, toState = true)),
+    fn("hll_merge_est", 1, 1)(a =>
+      HllAgg(a(0), fromState = true, toState = false)),
     fn("bloom_agg", 3, 3)(a =>
-      BloomAgg(xx(a(0)), xx(a(0), 43L), a.int(1), a.int(2))),
+      BloomAgg(Seq(xx(a(0)), xx(a(0), 43L)), a.int(1), a.int(2))),
     fn("bloom_contains", 2, 2)(a =>
       BloomContains(a(0), CreateArray(Seq(xx(a(1)), xx(a(1), 43L))))),
-    fn("bloom_merge", 1, 1)(a => BloomMergeAgg(a(0))),
+    fn("bloom_merge", 1, 1)(a => BloomAgg(Seq(a(0)), 64, 1)),
     fn("cms_state", 3, 3)(a =>
       CmsAgg(Cms.rowHashExprsOf(a(0), a.int(1)), a.int(2))),
     fn("cms_estimate", 3, 3)(a =>
@@ -95,10 +101,10 @@ private[graft] object GraftBuilders {
       ZOrderKey(CreateArray(a.exprs.tail.map(e => Cast(e, LongType))),
         a.int(0))),
     fn("kq_state", 3, 8)(a =>
-      KqStateAgg(XxHash64(a.exprs.drop(2), 42L), Cast(a(0), DoubleType),
+      KqAgg(Seq(XxHash64(a.exprs.drop(2), 42L), Cast(a(0), DoubleType)),
         a.int(1))),
     fn("kq_quantile", 2, 2)(a => KqQuantile(a(0), a.double(1))),
-    fn("kq_merge", 1, 1)(a => KqMergeAgg(a(0))),
+    fn("kq_merge", 1, 1)(a => KqAgg(Seq(a(0)), 1)),
     fn("unicode_normalize", 1, 2)(a => UnicodeNormalize(a(0),
       UnicodeNormalizeImpl.formOrdinal(a.optString(1, "NFC")))))
 }

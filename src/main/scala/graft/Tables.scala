@@ -77,8 +77,8 @@ object Tables {
       // the fixture has also shipped as TIMESTAMP(µs) without UTC
       // adjustment, which Spark reads as TIMESTAMP_NTZ; sessions pin
       // timeZone=UTC, so the NTZ→LTZ cast reinterprets the wall clock
-      // at the same instant. Streaming watermarks (and the Event
-      // encoders) require TimestampType, so normalize here once.
+      // at the same instant. Normalize to TimestampType here once, so
+      // every reader sees one `ts` type whichever way the fixture shipped.
       df.withColumn("ts", col("ts").cast(TimestampType))
     } else df
   }

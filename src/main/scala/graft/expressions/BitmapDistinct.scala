@@ -30,155 +30,68 @@ import org.apache.spark.sql.types._
   * state is proportional to the number of OCCUPIED pages, not to the
   * row count. Not for hashed/sparse 64-bit values — a uniformly
   * hashed key occupies one page per value and the array containers
-  * degrade to 10 bytes/key; use [[KmvDistinctAgg]]/[[HllAgg]] there.
+  * degrade to 10 bytes/key; use [[KmvAgg]]/[[HllAgg]] there.
+  *
+  * One class serves the four functions. Per row it adds a long key
+  * (`bitmap_distinct`, `bitmap_state`) or ORs a stored serialized bitmap
+  * (`bitmap_merge_count`, `bitmap_merge_state`). At the end it returns
+  * the exact count or the SERIALIZED bitmap — the persistable state:
+  * store one per (fine grain, group), answer any coarser distinct count
+  * EXACTLY later without re-reading raw data. Unlike sketch merges there
+  * is no resolution to mismatch — bitmap union is exact by construction.
+  * Merging states into a state is the round step of iterated set
+  * propagation (e.g. the HyperANF neighborhood loop: each round ORs
+  * every vertex's neighbors' round-(h−1) sets). The function name fixes
+  * the mode, so the plan text leaves it out.
   */
-case class BitmapDistinctAgg(child: Expression,
-                             mutableAggBufferOffset: Int = 0,
-                             inputAggBufferOffset: Int = 0)
+case class BitmapAgg(child: Expression, fromState: Boolean,
+                     toState: Boolean,
+                     mutableAggBufferOffset: Int = 0,
+                     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[RoaringBuffer]
     with ImplicitCastInputTypes {
   override def children: Seq[Expression] = Seq(child)
   // Declared input type: narrower integrals implicit-cast to LONG at
-  // analysis; a non-integral child is an analysis error, not a runtime
+  // analysis; a non-integral key is an analysis error, not a runtime
   // ClassCastException in update().
-  override def inputTypes = Seq(LongType)
+  override def inputTypes = Seq(if (fromState) BinaryType else LongType)
   override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bitmap_distinct"
+  override def dataType: DataType = if (toState) BinaryType else LongType
+  override def prettyName: String = (fromState, toState) match {
+    case (false, false) => "bitmap_distinct"
+    case (false, true) => "bitmap_state"
+    case (true, false) => "bitmap_merge_count"
+    case (true, true) => "bitmap_merge_state"
+  }
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
   override def createAggregationBuffer(): RoaringBuffer = new RoaringBuffer
   override def update(buf: RoaringBuffer, in: InternalRow): RoaringBuffer = {
     val v = child.eval(in)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
+    if (v == null) buf
+    else if (fromState)
+      merge(buf, RoaringBuffer.fromBytes(v.asInstanceOf[Array[Byte]]))
+    else { buf.add(v.asInstanceOf[Long]); buf }
   }
   override def merge(a: RoaringBuffer, b: RoaringBuffer): RoaringBuffer = {
     a.or(b); a
   }
-  override def eval(buf: RoaringBuffer): Any = buf.cardinality
+  override def eval(buf: RoaringBuffer): Any =
+    if (toState) buf.toBytes else buf.cardinality
   override def serialize(buf: RoaringBuffer): Array[Byte] = buf.toBytes
   override def deserialize(b: Array[Byte]): RoaringBuffer =
     RoaringBuffer.fromBytes(b)
-  override def withNewMutableAggBufferOffset(o: Int): BitmapDistinctAgg =
+  override def withNewMutableAggBufferOffset(o: Int): BitmapAgg =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapDistinctAgg =
+  override def withNewInputAggBufferOffset(o: Int): BitmapAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BitmapDistinctAgg = copy(child = c(0))
-}
-
-/** [[BitmapDistinctAgg]] evaluating to the SERIALIZED bitmap — the
-  * persistable per-partition state. Store one per (fine grain, group),
-  * answer any coarser distinct-count EXACTLY later via
-  * [[BitmapMergeAgg]] without re-reading raw data.
-  */
-case class BitmapStateAgg(child: Expression,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[RoaringBuffer]
-    with ImplicitCastInputTypes {
-  override def children: Seq[Expression] = Seq(child)
-  override def inputTypes = Seq(LongType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bitmap_state"
-  override def createAggregationBuffer(): RoaringBuffer = new RoaringBuffer
-  override def update(buf: RoaringBuffer, in: InternalRow): RoaringBuffer = {
-    val v = child.eval(in)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
-  }
-  override def merge(a: RoaringBuffer, b: RoaringBuffer): RoaringBuffer = {
-    a.or(b); a
-  }
-  override def eval(buf: RoaringBuffer): Any = buf.toBytes
-  override def serialize(buf: RoaringBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(b: Array[Byte]): RoaringBuffer =
-    RoaringBuffer.fromBytes(b)
-  override def withNewMutableAggBufferOffset(o: Int): BitmapStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BitmapStateAgg = copy(child = c(0))
-}
-
-/** ORs serialized [[BitmapStateAgg]] bitmaps into the exact combined
-  * distinct count. Unlike sketch merges there is no resolution to
-  * mismatch — bitmap union is exact by construction.
-  */
-case class BitmapMergeAgg(state: Expression,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[RoaringBuffer]
-    with ImplicitCastInputTypes {
-  override def children: Seq[Expression] = Seq(state)
-  override def inputTypes = Seq(BinaryType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bitmap_merge_count"
-  override def createAggregationBuffer(): RoaringBuffer = new RoaringBuffer
-  override def update(buf: RoaringBuffer, in: InternalRow): RoaringBuffer = {
-    val raw = state.eval(in)
-    if (raw != null) buf.or(RoaringBuffer.fromBytes(
-      raw.asInstanceOf[Array[Byte]]))
-    buf
-  }
-  override def merge(a: RoaringBuffer, b: RoaringBuffer): RoaringBuffer = {
-    a.or(b); a
-  }
-  override def eval(buf: RoaringBuffer): Any = buf.cardinality
-  override def serialize(buf: RoaringBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(b: Array[Byte]): RoaringBuffer =
-    RoaringBuffer.fromBytes(b)
-  override def withNewMutableAggBufferOffset(o: Int): BitmapMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BitmapMergeAgg = copy(state = c(0))
-}
-
-/** ORs serialized [[BitmapStateAgg]] bitmaps into a NEW serialized
-  * state — the round step of iterated set propagation (e.g. the
-  * HyperANF neighborhood loop: each round ORs every vertex's
-  * neighbors' round-(h−1) sets). [[BitmapMergeAgg]] is the terminal
-  * count form; this is the composable state form.
-  */
-case class BitmapMergeStateAgg(state: Expression,
-                               mutableAggBufferOffset: Int = 0,
-                               inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[RoaringBuffer]
-    with ImplicitCastInputTypes {
-  override def children: Seq[Expression] = Seq(state)
-  override def inputTypes = Seq(BinaryType)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bitmap_merge_state"
-  override def createAggregationBuffer(): RoaringBuffer = new RoaringBuffer
-  override def update(buf: RoaringBuffer, in: InternalRow): RoaringBuffer = {
-    val raw = state.eval(in)
-    if (raw != null) buf.or(RoaringBuffer.fromBytes(
-      raw.asInstanceOf[Array[Byte]]))
-    buf
-  }
-  override def merge(a: RoaringBuffer, b: RoaringBuffer): RoaringBuffer = {
-    a.or(b); a
-  }
-  override def eval(buf: RoaringBuffer): Any = buf.toBytes
-  override def serialize(buf: RoaringBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(b: Array[Byte]): RoaringBuffer =
-    RoaringBuffer.fromBytes(b)
-  override def withNewMutableAggBufferOffset(o: Int): BitmapMergeStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BitmapMergeStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BitmapMergeStateAgg = copy(state = c(0))
+      c: IndexedSeq[Expression]): BitmapAgg = copy(child = c(0))
 }
 
 /** Scalar cardinality of ONE serialized bitmap state — reads a stored
   * state without an aggregation (the per-row probe for per-key stored
-  * sets; [[BitmapMergeAgg]] answers the grouped form).
+  * sets; `bitmap_merge_count` answers the grouped form).
   */
 case class BitmapCardinality(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -407,29 +320,34 @@ object RoaringBuffer {
 object Bitmaps {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
+  private def agg(child: Column, fromState: Boolean,
+                  toState: Boolean): Column =
+    column(BitmapAgg(expression(child), fromState, toState)
+      .toAggregateExpression())
+
   /** `bitmap_distinct(key)` → BIGINT EXACT distinct count of a long
-    * key column. Dense-id domains only (see [[BitmapDistinctAgg]]).
+    * key column. Dense-id domains only (see [[BitmapAgg]]).
     */
   def bitmap_distinct(key: Column): Column =
-    column(BitmapDistinctAgg(expression(key)).toAggregateExpression())
+    agg(key, fromState = false, toState = false)
 
   /** `bitmap_state(key)` → BINARY serialized bitmap (persistable;
     * merge later with [[bitmap_merge_count]] at zero error).
     */
   def bitmap_state(key: Column): Column =
-    column(BitmapStateAgg(expression(key)).toAggregateExpression())
+    agg(key, fromState = false, toState = true)
 
   /** `bitmap_merge_count(state)` → BIGINT exact distinct of the union
     * of stored bitmaps.
     */
   def bitmap_merge_count(state: Column): Column =
-    column(BitmapMergeAgg(expression(state)).toAggregateExpression())
+    agg(state, fromState = true, toState = false)
 
   /** `bitmap_merge_state(state)` → BINARY union of stored bitmaps —
     * the iterable round step for set-propagation loops.
     */
   def bitmap_merge_state(state: Column): Column =
-    column(BitmapMergeStateAgg(expression(state)).toAggregateExpression())
+    agg(state, fromState = true, toState = true)
 
   /** `bitmap_cardinality(state)` → BIGINT exact count of one stored
     * bitmap (scalar, no aggregation).

@@ -95,36 +95,58 @@ object BloomBuffer {
   }
 }
 
-/** `bloom_agg(h1, h2, numBits, numHashes)` → BINARY serialized filter.
-  * Map-side partials are each a full-width filter; merge is a bitwise OR,
-  * so the aggregate shuffles `numBits/8` bytes per partition, never raw
-  * keys. Build it over the SMALL (already filtered) side only.
+/** The Bloom aggregate, one class for both functions; it always returns
+  * the serialized filter. Over `Seq(h1, h2)` it adds each key's hash pair
+  * to a `numBits`/`numHashes` filter (`bloom_agg`): map-side partials are
+  * each a full-width filter and merge is a bitwise OR, so the aggregate
+  * shuffles `numBits/8` bytes per partition, never raw keys. Build it
+  * over the SMALL (already filtered) side only. Over `Seq(state)` it ORs
+  * stored filters (`bloom_merge`) — the sketch-store rollup (e.g. per-day
+  * ingest-key filters merged into a month filter without re-touching raw
+  * keys). OR-merge is exact for membership: the union filter reports a
+  * key iff some input filter would (same bit positions — shapes must
+  * match). A merge starts from the empty 64-bit, 1-hash placeholder,
+  * adopts the first state's shape and rejects a mismatch; its plan text
+  * leaves the placeholder shape out.
   */
-case class BloomAgg(h1Expr: Expression, h2Expr: Expression,
-                    numBits: Int, numHashes: Int,
+case class BloomAgg(inputs: Seq[Expression], numBits: Int, numHashes: Int,
                     mutableAggBufferOffset: Int = 0,
                     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[BloomBuffer] {
+  private def fromState: Boolean = inputs.length == 1
 
-  override def children: Seq[Expression] = Seq(h1Expr, h2Expr)
+  override def children: Seq[Expression] = inputs
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "bloom_agg"
+  override def prettyName: String =
+    if (fromState) "bloom_merge" else "bloom_agg"
+  override protected def stringArgs: Iterator[Any] =
+    if (!fromState) super.stringArgs
+    else Iterator(inputs, mutableAggBufferOffset, inputAggBufferOffset)
 
   override def createAggregationBuffer(): BloomBuffer =
     new BloomBuffer(numBits, numHashes)
 
-  override def update(buf: BloomBuffer, input: InternalRow): BloomBuffer = {
-    val a = h1Expr.eval(input)
-    val b = h2Expr.eval(input)
-    if (a != null && b != null)
-      buf.add(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    buf
-  }
+  override def update(buf: BloomBuffer, input: InternalRow): BloomBuffer =
+    if (fromState) {
+      val raw = inputs(0).eval(input)
+      if (raw == null) buf
+      else merge(buf, BloomBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
+    } else {
+      val a = inputs(0).eval(input)
+      val b = inputs(1).eval(input)
+      if (a != null && b != null)
+        buf.add(a.asInstanceOf[Long], b.asInstanceOf[Long])
+      buf
+    }
 
-  override def merge(a: BloomBuffer, b: BloomBuffer): BloomBuffer = {
-    a.mergeWith(b); a
-  }
+  private def isPlaceholder(b: BloomBuffer): Boolean =
+    b.numBits == 64 && b.numHashes == 1 && b.words(0) == 0L
+  override def merge(a: BloomBuffer, b: BloomBuffer): BloomBuffer =
+    if (isPlaceholder(b)) a
+    else if (isPlaceholder(a)) {
+      val n = new BloomBuffer(b.numBits, b.numHashes); n.mergeWith(b); n
+    } else { a.mergeWith(b); a } // mergeWith rejects mismatched shapes
 
   override def eval(buf: BloomBuffer): Any = buf.toBytes
   override def serialize(buf: BloomBuffer): Array[Byte] = buf.toBytes
@@ -136,8 +158,7 @@ case class BloomAgg(h1Expr: Expression, h2Expr: Expression,
   override def withNewInputAggBufferOffset(o: Int): BloomAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BloomAgg =
-    copy(h1Expr = c(0), h2Expr = c(1))
+      c: IndexedSeq[Expression]): BloomAgg = copy(inputs = c)
 }
 
 /** `bloom_contains(filter, [h1, h2])` → BOOLEAN. The filter side is a
@@ -183,48 +204,6 @@ case class BloomContains(filter: Expression, hashes: Expression)
       l: Expression, r: Expression): BloomContains = copy(filter = l, hashes = r)
 }
 
-/** `bloom_merge(state)` → BINARY: bitwise-OR of stored filters — the
-  * sketch-store rollup for blooms (e.g. per-day ingest-key filters
-  * merged into a month filter without re-touching raw keys). OR-merge
-  * is exact for membership: the union filter reports a key iff some
-  * input filter would (same bit positions — shapes must match).
-  */
-case class BloomMergeAgg(state: Expression,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BloomBuffer] {
-  override def children: Seq[Expression] = Seq(state)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bloom_merge"
-  // shape unknown until the first state arrives: 64-bit sentinel
-  override def createAggregationBuffer(): BloomBuffer = new BloomBuffer(64, 1)
-  private def isSentinel(b: BloomBuffer): Boolean =
-    b.numBits == 64 && b.numHashes == 1 && b.words(0) == 0L
-  private def combine(a: BloomBuffer, b: BloomBuffer): BloomBuffer =
-    if (isSentinel(b)) a
-    else if (isSentinel(a)) {
-      val n = new BloomBuffer(b.numBits, b.numHashes); n.mergeWith(b); n
-    } else { a.mergeWith(b); a } // mergeWith rejects mismatched shapes
-  override def update(buf: BloomBuffer, input: InternalRow): BloomBuffer = {
-    val raw = state.eval(input)
-    if (raw == null) buf
-    else combine(buf, BloomBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
-  }
-  override def merge(a: BloomBuffer, b: BloomBuffer): BloomBuffer =
-    combine(a, b)
-  override def eval(buf: BloomBuffer): Any = buf.toBytes
-  override def serialize(buf: BloomBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): BloomBuffer =
-    BloomBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): BloomMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): BloomMergeAgg = copy(state = c(0))
-}
-
 object Blooms {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
   import org.apache.spark.sql.catalyst.expressions.CreateArray
@@ -240,7 +219,8 @@ object Blooms {
     */
   def bloom_agg(value: Column, numBits: Int, numHashes: Int): Column = {
     val (h1, h2) = hashPair(value)
-    column(BloomAgg(h1, h2, numBits, numHashes).toAggregateExpression())
+    column(BloomAgg(Seq(h1, h2), numBits, numHashes)
+      .toAggregateExpression())
   }
 
   /** `bloom_contains(filter, value)` → BOOLEAN; no false negatives. */
@@ -251,5 +231,5 @@ object Blooms {
 
   /** `bloom_merge(state)` → BINARY rolled-up filter (exact union). */
   def bloom_merge(state: Column): Column =
-    column(BloomMergeAgg(expression(state)).toAggregateExpression())
+    column(BloomAgg(Seq(expression(state)), 64, 1).toAggregateExpression())
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * (collisions only add), within `ε·N` with the textbook
   * `w = ⌈e/ε⌉, d = ⌈ln 1/δ⌉`.
   *
-  * Like [[KmvDistinctAgg]], every step is integer arithmetic on builtin
+  * Like [[KmvAgg]], every step is integer arithmetic on builtin
   * xxhash64 values: row hashes are `xxhash64(xxhash64(item, 42), seed_r)`
   * (string hashed once, then cheap long re-hashes per row — the oracle
   * emulates both bit-exactly), and `w` is a power of two so the unsigned

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *    scaled-integer table ([[Hll.LnTable]]) compiled into BOTH the
   *    aggregate and the oracle SQL.
   *
-  * Why keep KMV ([[KmvDistinctAgg]]) too: KMV's state is 8·k bytes for
+  * Why keep KMV ([[KmvAgg]]) too: KMV's state is 8·k bytes for
   * ~1/√(k−2) error; HLL reaches the same accuracy family in 64 BYTES
   * (m=64 → ~13% rel. error, exact under ~160 distinct via linear
   * counting) and its registers merge by elementwise max — the cheapest
@@ -122,27 +122,47 @@ object HllBuffer {
   }
 }
 
-/** `hll_distinct(hashed)` → BIGINT estimate. Input must already be
-  * xxhash64-hashed (use [[Sketches.hll_distinct]]).
+/** The HLL aggregate, one class for the four functions. Per row it
+  * adds an xxhash64-hashed value (`hll_distinct`, `hll_state`; use
+  * [[HllSketches]]) or elementwise-max-merges a stored 64-byte register
+  * array (`hll_merge_est`, `hll_merge_state`). At the end it returns the
+  * BIGINT estimate or the BINARY registers, the persistable form for
+  * sketch stores. HLL merges losslessly (max of per-part maxes IS the
+  * global max), so a rolled-up estimate equals the single-pass estimate
+  * exactly — one oracle covers both. Merging states into a state is the
+  * round step of ITERATED sketch dataflows (HyperANF: merge neighbor
+  * states, keep the STATE for the next hop; only the final hop
+  * estimates). The function name fixes the mode, so the plan text
+  * leaves it out.
   */
-case class HllAgg(hashed: Expression,
+case class HllAgg(child: Expression, fromState: Boolean, toState: Boolean,
                   mutableAggBufferOffset: Int = 0,
                   inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[HllBuffer] {
-  override def children: Seq[Expression] = Seq(hashed)
+  override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_distinct"
+  override def dataType: DataType = if (toState) BinaryType else LongType
+  override def prettyName: String = (fromState, toState) match {
+    case (false, false) => "hll_distinct"
+    case (false, true) => "hll_state"
+    case (true, false) => "hll_merge_est"
+    case (true, true) => "hll_merge_state"
+  }
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
   override def createAggregationBuffer(): HllBuffer = new HllBuffer
   override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val h = hashed.eval(input)
-    if (h != null) buf.add(h.asInstanceOf[Long])
-    buf
+    val v = child.eval(input)
+    if (v == null) buf
+    else if (fromState)
+      merge(buf, HllBuffer.fromBytes(v.asInstanceOf[Array[Byte]]))
+    else { buf.add(v.asInstanceOf[Long]); buf }
   }
   override def merge(a: HllBuffer, b: HllBuffer): HllBuffer = {
     a.mergeWith(b); a
   }
-  override def eval(buf: HllBuffer): Any = buf.estimate
+  override def eval(buf: HllBuffer): Any =
+    if (toState) buf.toBytes else buf.estimate
   override def serialize(buf: HllBuffer): Array[Byte] = buf.toBytes
   override def deserialize(bytes: Array[Byte]): HllBuffer =
     HllBuffer.fromBytes(bytes)
@@ -151,110 +171,7 @@ case class HllAgg(hashed: Expression,
   override def withNewInputAggBufferOffset(o: Int): HllAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): HllAgg = copy(hashed = c(0))
-}
-
-/** `hll_state(hashed)` → BINARY 64-byte register array — the
-  * persistable form for sketch stores; merge with [[HllMergeAgg]].
-  */
-case class HllStateAgg(hashed: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuffer] {
-  override def children: Seq[Expression] = Seq(hashed)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hll_state"
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val h = hashed.eval(input)
-    if (h != null) buf.add(h.asInstanceOf[Long])
-    buf
-  }
-  override def merge(a: HllBuffer, b: HllBuffer): HllBuffer = {
-    a.mergeWith(b); a
-  }
-  override def eval(buf: HllBuffer): Any = buf.toBytes
-  override def serialize(buf: HllBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): HllBuffer =
-    HllBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): HllStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): HllStateAgg = copy(hashed = c(0))
-}
-
-/** `hll_merge_est(state)` → BIGINT estimate from elementwise-max-merged
-  * stored registers. HLL merges losslessly (max of per-part maxes IS
-  * the global max), so a rolled-up estimate equals the single-pass
-  * estimate exactly — one oracle covers both.
-  */
-case class HllMergeAgg(state: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuffer] {
-  override def children: Seq[Expression] = Seq(state)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_merge_est"
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val raw = state.eval(input)
-    if (raw != null)
-      buf.mergeWith(HllBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
-    buf
-  }
-  override def merge(a: HllBuffer, b: HllBuffer): HllBuffer = {
-    a.mergeWith(b); a
-  }
-  override def eval(buf: HllBuffer): Any = buf.estimate
-  override def serialize(buf: HllBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): HllBuffer =
-    HllBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): HllMergeAgg = copy(state = c(0))
-}
-
-/** `hll_merge_state(state)` → BINARY 64-byte elementwise-max-merged
-  * register array — the round-to-round state for ITERATED sketch
-  * dataflows (HyperANF: merge neighbor states, keep the STATE for the
-  * next hop; only the final hop estimates). Lossless like
-  * [[HllMergeAgg]]: max of per-part maxes IS the global max.
-  */
-case class HllMergeStateAgg(state: Expression,
-                            mutableAggBufferOffset: Int = 0,
-                            inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HllBuffer] {
-  override def children: Seq[Expression] = Seq(state)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hll_merge_state"
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val raw = state.eval(input)
-    if (raw != null)
-      buf.mergeWith(HllBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
-    buf
-  }
-  override def merge(a: HllBuffer, b: HllBuffer): HllBuffer = {
-    a.mergeWith(b); a
-  }
-  override def eval(buf: HllBuffer): Any = buf.toBytes
-  override def serialize(buf: HllBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): HllBuffer =
-    HllBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): HllMergeStateAgg = copy(state = c(0))
+      c: IndexedSeq[Expression]): HllAgg = copy(child = c(0))
 }
 
 /** Scalar `hll_estimate(state)` → BIGINT: the shared estimator applied
@@ -280,26 +197,31 @@ case class HllEstimate(child: Expression)
 object HllSketches {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
+  private def hashed(value: Column): Expression =
+    XxHash64(Seq(expression(value)), 42L)
+
+  private def agg(child: Expression, fromState: Boolean,
+                  toState: Boolean): Column =
+    column(HllAgg(child, fromState, toState).toAggregateExpression())
+
   /** `hll_distinct(value)` → BIGINT approximate distinct count (m=64
     * registers, xxhash64 seed 42 — covered end-to-end by the oracle's
     * bit-exact XXH64 emulation).
     */
   def hll_distinct(value: Column): Column =
-    column(HllAgg(XxHash64(Seq(expression(value)), 42L))
-      .toAggregateExpression())
+    agg(hashed(value), fromState = false, toState = false)
 
   /** `hll_state(value)` → BINARY 64-byte persistable register array. */
   def hll_state(value: Column): Column =
-    column(HllStateAgg(XxHash64(Seq(expression(value)), 42L))
-      .toAggregateExpression())
+    agg(hashed(value), fromState = false, toState = true)
 
   /** `hll_merge_est(state)` → BIGINT estimate from merged registers. */
   def hll_merge_est(state: Column): Column =
-    column(HllMergeAgg(expression(state)).toAggregateExpression())
+    agg(expression(state), fromState = true, toState = false)
 
   /** `hll_merge_state(state)` → BINARY merged register array. */
   def hll_merge_state(state: Column): Column =
-    column(HllMergeStateAgg(expression(state)).toAggregateExpression())
+    agg(expression(state), fromState = true, toState = true)
 
   /** Scalar `hll_estimate(state)` → BIGINT. */
   def hll_estimate(state: Column): Column =

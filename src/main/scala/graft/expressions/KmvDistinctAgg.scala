@@ -29,46 +29,76 @@ import org.apache.spark.sql.types._
   * Below k distinct inputs the sketch IS the distinct set, so the count
   * is exact — the estimator only engages past k.
   *
-  * The input must already be uniformly hashed; use
-  * [[Sketches.kmv_distinct]] which wraps the column in `xxhash64`
-  * (seed 42) — keeping the hot-path hash a codegen'd builtin and this
-  * aggregate a pure bounded-set fold.
+  * One class serves the three functions. Per row it adds a uniformly
+  * hashed value (`kmv_distinct`, `kmv_state`; use [[Sketches]], which
+  * wraps the column in `xxhash64` seed 42 — keeping the hot-path hash a
+  * codegen'd builtin and this aggregate a pure bounded-set fold) or
+  * merges a stored sketch (`kmv_merge_est`). At the end it returns the
+  * estimate, or for `kmv_state` the SERIALIZED sketch — the persistable
+  * form. The 100 TB pattern: pre-aggregate a sketch per (day, group)
+  * partition once, STORE the ≤8k-byte states, and answer any
+  * coarser-grained distinct-count query later by merging states without
+  * touching raw data. KMV merges losslessly: the k smallest of a union
+  * of per-part k-mins IS the global k-min, so a rolled-up estimate
+  * equals the single-pass estimate exactly — one oracle covers both.
+  *
+  * A merge starts from the `k = 0` placeholder buffer, adopts the first
+  * state's k and rejects a mismatch (merging sketches of different
+  * resolution silently degrades accuracy, so it's an error, not a
+  * coercion). The function name fixes the mode, so the plan text leaves
+  * it out, and a merge's `k` with it.
   */
-case class KmvDistinctAgg(hashed: Expression, k: Int,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
+case class KmvAgg(child: Expression, k: Int, fromState: Boolean,
+                  toState: Boolean,
+                  mutableAggBufferOffset: Int = 0,
+                  inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[KmvBuffer] {
-  require(k >= 2, s"kmv_distinct needs k >= 2, got $k")
+  require(fromState || k >= 2, s"$prettyName needs k >= 2, got $k")
 
-  override def children: Seq[Expression] = Seq(hashed)
+  override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "kmv_distinct"
+  override def dataType: DataType = if (toState) BinaryType else LongType
+  // no function merges stored sketches into a sketch
+  override def prettyName: String =
+    if (fromState) "kmv_merge_est"
+    else if (toState) "kmv_state"
+    else "kmv_distinct"
+  override protected def stringArgs: Iterator[Any] = {
+    val offsets = Iterator(mutableAggBufferOffset, inputAggBufferOffset)
+    if (fromState) Iterator(child) ++ offsets else Iterator(child, k) ++ offsets
+  }
 
   override def createAggregationBuffer(): KmvBuffer = new KmvBuffer(k)
 
   override def update(buf: KmvBuffer, input: InternalRow): KmvBuffer = {
-    val h = hashed.eval(input)
-    if (h != null) buf.add(h.asInstanceOf[Long])
-    buf
+    val v = child.eval(input)
+    if (v == null) buf
+    else if (fromState)
+      merge(buf, KmvBuffer.fromBytes(v.asInstanceOf[Array[Byte]]))
+    else { buf.add(v.asInstanceOf[Long]); buf }
   }
 
-  override def merge(a: KmvBuffer, b: KmvBuffer): KmvBuffer = {
-    a.mergeWith(b); a
-  }
+  override def merge(a: KmvBuffer, b: KmvBuffer): KmvBuffer =
+    if (b.k == 0) a
+    else if (a.k == 0) { val n = new KmvBuffer(b.k); n.mergeWith(b); n }
+    else if (a.k != b.k)
+      throw new IllegalArgumentException(
+        s"kmv_merge_est: mixed sketch resolutions k=${a.k} vs k=${b.k}")
+    else { a.mergeWith(b); a }
 
-  override def eval(buf: KmvBuffer): Any = buf.estimate
+  override def eval(buf: KmvBuffer): Any =
+    if (toState) buf.toBytes else buf.estimate
 
   override def serialize(buf: KmvBuffer): Array[Byte] = buf.toBytes
   override def deserialize(bytes: Array[Byte]): KmvBuffer =
     KmvBuffer.fromBytes(bytes)
 
-  override def withNewMutableAggBufferOffset(o: Int): KmvDistinctAgg =
+  override def withNewMutableAggBufferOffset(o: Int): KmvAgg =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvDistinctAgg =
+  override def withNewInputAggBufferOffset(o: Int): KmvAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KmvDistinctAgg = copy(hashed = c(0))
+      c: IndexedSeq[Expression]): KmvAgg = copy(child = c(0))
 }
 
 /** Bounded distinct set of the k unsigned-smallest longs. TreeSet with
@@ -131,88 +161,11 @@ object KmvBuffer {
   }
 }
 
-/** [[KmvDistinctAgg]] that evaluates to the SERIALIZED sketch (binary)
-  * instead of the estimate — the persistable form. The 100 TB pattern:
-  * pre-aggregate a sketch per (day, group) partition once, STORE the
-  * ≤8k-byte states, and answer any coarser-grained distinct-count query
-  * later by merging states ([[KmvMergeAgg]]) without touching raw data.
-  * KMV merges losslessly: the k smallest of a union of per-part k-mins
-  * IS the global k-min, so a rolled-up estimate equals the single-pass
-  * estimate exactly — one oracle covers both.
-  */
-case class KmvStateAgg(hashed: Expression, k: Int,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvBuffer] {
-  require(k >= 2, s"kmv_state needs k >= 2, got $k")
-  override def children: Seq[Expression] = Seq(hashed)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "kmv_state"
-  override def createAggregationBuffer(): KmvBuffer = new KmvBuffer(k)
-  override def update(buf: KmvBuffer, input: InternalRow): KmvBuffer = {
-    val h = hashed.eval(input)
-    if (h != null) buf.add(h.asInstanceOf[Long])
-    buf
-  }
-  override def merge(a: KmvBuffer, b: KmvBuffer): KmvBuffer = {
-    a.mergeWith(b); a
-  }
-  override def eval(buf: KmvBuffer): Any = buf.toBytes
-  override def serialize(buf: KmvBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): KmvBuffer =
-    KmvBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): KmvStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KmvStateAgg = copy(hashed = c(0))
-}
-
-/** Merges serialized [[KmvStateAgg]] sketches (binary column) into the
-  * combined distinct-count estimate. All inputs must share one k — the
-  * buffer adopts the first state's k and rejects mismatches (merging
-  * sketches of different resolution silently degrades accuracy, so it's
-  * an error, not a coercion).
-  */
-case class KmvMergeAgg(state: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvBuffer] {
-  override def children: Seq[Expression] = Seq(state)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-  override def prettyName: String = "kmv_merge_est"
-  // k unknown until the first state arrives: sentinel buffer k=0
-  override def createAggregationBuffer(): KmvBuffer = new KmvBuffer(0)
-  private def combine(a: KmvBuffer, b: KmvBuffer): KmvBuffer =
-    if (b.k == 0) a
-    else if (a.k == 0) { val n = new KmvBuffer(b.k); n.mergeWith(b); n }
-    else if (a.k != b.k)
-      throw new IllegalArgumentException(
-        s"kmv_merge_est: mixed sketch resolutions k=${a.k} vs k=${b.k}")
-    else { a.mergeWith(b); a }
-  override def update(buf: KmvBuffer, input: InternalRow): KmvBuffer = {
-    val raw = state.eval(input)
-    if (raw == null) buf
-    else combine(buf, KmvBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
-  }
-  override def merge(a: KmvBuffer, b: KmvBuffer): KmvBuffer = combine(a, b)
-  override def eval(buf: KmvBuffer): Any = buf.estimate
-  override def serialize(buf: KmvBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): KmvBuffer =
-    KmvBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KmvMergeAgg = copy(state = c(0))
-}
-
 object Sketches {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+
+  private def hashed(value: Column): Expression =
+    XxHash64(Seq(expression(value)), 42L)
 
   /** Column API: `kmv_distinct(value, k)` → BIGINT approximate distinct
     * count; exact below k distinct. Hashes with the builtin xxhash64
@@ -220,19 +173,20 @@ object Sketches {
     * covers the sketch end-to-end.
     */
   def kmv_distinct(value: Column, k: Int): Column =
-    column(KmvDistinctAgg(XxHash64(Seq(expression(value)), 42L), k)
+    column(KmvAgg(hashed(value), k, fromState = false, toState = false)
       .toAggregateExpression())
 
   /** `kmv_state(value, k)` → BINARY serialized sketch (persistable;
     * merge later with [[kmv_merge_est]]).
     */
   def kmv_state(value: Column, k: Int): Column =
-    column(KmvStateAgg(XxHash64(Seq(expression(value)), 42L), k)
+    column(KmvAgg(hashed(value), k, fromState = false, toState = true)
       .toAggregateExpression())
 
   /** `kmv_merge_est(state)` → BIGINT estimate from merged stored
     * sketches. Lossless vs a single-pass sketch over the union.
     */
   def kmv_merge_est(state: Column): Column =
-    column(KmvMergeAgg(expression(state)).toAggregateExpression())
+    column(KmvAgg(expression(state), 0, fromState = true, toState = false)
+      .toAggregateExpression())
 }

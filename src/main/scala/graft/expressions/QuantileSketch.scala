@@ -100,44 +100,64 @@ object KqBuffer {
     fromBytes(bytes).quantile(q)
 }
 
-/** `kq_state(rowHash, value, k)` → BINARY serialized bottom-k sample. */
-case class KqStateAgg(rowHash: Expression, value: Expression, k: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
+/** The bottom-k sample aggregate, one class for both functions; it
+  * always returns the serialized sample. Over `Seq(rowHash, value)` it
+  * folds each row into a k-sample (`kq_state`). Over `Seq(state)` it
+  * merges stored samples (`kq_merge`, lossless — equals the single-pass
+  * sketch over the union): the buffer starts as the empty `k = 1`
+  * placeholder, adopts the first real state's k and rejects a mismatch.
+  * The plan text of a merge leaves that placeholder out.
+  */
+case class KqAgg(inputs: Seq[Expression], k: Int,
+                 mutableAggBufferOffset: Int = 0,
+                 inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[KqBuffer] {
   require(k >= 1, s"kq_state needs k >= 1, got $k")
+  private def fromState: Boolean = inputs.length == 1
 
-  override def children: Seq[Expression] = Seq(rowHash, value)
+  override def children: Seq[Expression] = inputs
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "kq_state"
+  override def prettyName: String = if (fromState) "kq_merge" else "kq_state"
+  override protected def stringArgs: Iterator[Any] =
+    if (!fromState) super.stringArgs
+    else Iterator(inputs, mutableAggBufferOffset, inputAggBufferOffset)
 
   override def createAggregationBuffer(): KqBuffer = new KqBuffer(k)
 
-  override def update(buf: KqBuffer, input: InternalRow): KqBuffer = {
-    val h = rowHash.eval(input)
-    val v = value.eval(input)
-    if (h != null && v != null)
-      buf.add(h.asInstanceOf[Long], v.asInstanceOf[Double])
-    buf
-  }
+  override def update(buf: KqBuffer, input: InternalRow): KqBuffer =
+    if (fromState) {
+      val raw = inputs(0).eval(input)
+      if (raw == null) buf
+      else merge(buf, KqBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
+    } else {
+      val h = inputs(0).eval(input)
+      val v = inputs(1).eval(input)
+      if (h != null && v != null)
+        buf.add(h.asInstanceOf[Long], v.asInstanceOf[Double])
+      buf
+    }
 
-  override def merge(a: KqBuffer, b: KqBuffer): KqBuffer = {
-    a.mergeWith(b); a
-  }
+  override def merge(a: KqBuffer, b: KqBuffer): KqBuffer =
+    if (b.map.isEmpty && b.k == 1) a
+    else if (a.map.isEmpty && a.k == 1) { // adopt the first real state's k
+      val n = new KqBuffer(b.k); n.mergeWith(b); n
+    } else if (a.k != b.k)
+      throw new IllegalArgumentException(
+        s"kq_merge: mixed sample sizes k=${a.k} vs k=${b.k}")
+    else { a.mergeWith(b); a }
 
   override def eval(buf: KqBuffer): Any = buf.toBytes
   override def serialize(buf: KqBuffer): Array[Byte] = buf.toBytes
   override def deserialize(bytes: Array[Byte]): KqBuffer =
     KqBuffer.fromBytes(bytes)
 
-  override def withNewMutableAggBufferOffset(o: Int): KqStateAgg =
+  override def withNewMutableAggBufferOffset(o: Int): KqAgg =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KqStateAgg =
+  override def withNewInputAggBufferOffset(o: Int): KqAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KqStateAgg =
-    copy(rowHash = c(0), value = c(1))
+      c: IndexedSeq[Expression]): KqAgg = copy(inputs = c)
 }
 
 /** `kq_quantile(state, q)` → DOUBLE positional quantile of the sample. */
@@ -161,45 +181,6 @@ case class KqQuantile(state: Expression, q: Double)
     copy(state = c)
 }
 
-/** `kq_merge(state)` → BINARY: merge stored samples (lossless — equals
-  * the single-pass sketch over the union), the sketch-store rollup
-  * companion to [[KqStateAgg]].
-  */
-case class KqMergeAgg(state: Expression,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KqBuffer] {
-  override def children: Seq[Expression] = Seq(state)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "kq_merge"
-  override def createAggregationBuffer(): KqBuffer = new KqBuffer(1)
-  private def combine(a: KqBuffer, b: KqBuffer): KqBuffer =
-    if (b.map.isEmpty && b.k == 1) a
-    else if (a.map.isEmpty && a.k == 1) { // adopt the first real state's k
-      val n = new KqBuffer(b.k); n.mergeWith(b); n
-    } else if (a.k != b.k)
-      throw new IllegalArgumentException(
-        s"kq_merge: mixed sample sizes k=${a.k} vs k=${b.k}")
-    else { a.mergeWith(b); a }
-  override def update(buf: KqBuffer, input: InternalRow): KqBuffer = {
-    val raw = state.eval(input)
-    if (raw == null) buf
-    else combine(buf, KqBuffer.fromBytes(raw.asInstanceOf[Array[Byte]]))
-  }
-  override def merge(a: KqBuffer, b: KqBuffer): KqBuffer = combine(a, b)
-  override def eval(buf: KqBuffer): Any = buf.toBytes
-  override def serialize(buf: KqBuffer): Array[Byte] = buf.toBytes
-  override def deserialize(bytes: Array[Byte]): KqBuffer =
-    KqBuffer.fromBytes(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): KqMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KqMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KqMergeAgg = copy(state = c(0))
-}
-
 object Kq {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
@@ -211,9 +192,8 @@ object Kq {
     * deterministic duplicate rule — the sample is per distinct key).
     */
   def kq_state(value: Column, k: Int, rowKeys: Column*): Column =
-    column(KqStateAgg(
-      XxHash64(rowKeys.map(expression), 42L),
-      expression(value.cast("double")), k).toAggregateExpression())
+    column(KqAgg(Seq(XxHash64(rowKeys.map(expression), 42L),
+      expression(value.cast("double"))), k).toAggregateExpression())
 
   /** `kq_quantile(state, q)` → DOUBLE. */
   def kq_quantile(state: Column, q: Double): Column =
@@ -221,5 +201,5 @@ object Kq {
 
   /** `kq_merge(state)` → BINARY rolled-up sample (lossless). */
   def kq_merge(state: Column): Column =
-    column(KqMergeAgg(expression(state)).toAggregateExpression())
+    column(KqAgg(Seq(expression(state)), 1).toAggregateExpression())
 }

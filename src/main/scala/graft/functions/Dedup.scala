@@ -481,6 +481,13 @@ object Dedup {
         col("jac_ppm")) ++ blkRef: _*)
   }
 
+  /** Above this many docs the df profile ([[sizeBiasedMeanDf]] and its
+    * per-source form) runs on a 1/[[ProfileSampleMod]] slice; the
+    * profile-sampling defaults, which the auto-route oracles read too.
+    */
+  val ProfileSampleCutoff: Long = 8192L
+  val ProfileSampleMod: Int = 16
+
   /** The measured dial behind [[similarityPairsAuto]] (VERDICT r9 #6):
     * the SIZE-BIASED mean shingle document frequency Σdf²/Σdf — the
     * expected bucket population seen by a random posting, i.e. the
@@ -505,16 +512,11 @@ object Dedup {
     * (mod 1 — the same formula, exactly).
     */
   def sizeBiasedMeanDf(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int = 3, sampleCutoff: Long = 8192L,
-                       sampleMod: Int = 16,
-                       knownCount: Option[Long] = None): Double = {
-    // the corpus size only picks the sampling modulus — callers that
-    // know it (catalog row count, a prior stage's count) pass it via
-    // `knownCount` so the dial costs ONE scan (the 1/mod profile
-    // slice), not a count scan plus the profile scan (ADVICE r10)
-    val qMod =
-      if (knownCount.getOrElse(docs.count()) <= sampleCutoff) 1
-      else sampleMod
+                       shingleN: Int = 3,
+                       sampleCutoff: Long = ProfileSampleCutoff,
+                       sampleMod: Int = ProfileSampleMod): Double = {
+    // the corpus size only picks the sampling modulus
+    val qMod = if (docs.count() <= sampleCutoff) 1 else sampleMod
     // per-doc shingle dedup is row-local (optimization r14): the global
     // (doc_id, token) distinct shuffle becomes an in-row array_distinct
     val tk = docs
@@ -546,11 +548,9 @@ object Dedup {
                           textCol: String, minSim: Double = 0.5,
                           shingleN: Int = 3, numHashes: Int = 16,
                           rowsPerBand: Int = 2,
-                          hotBucketThreshold: Double = 8.0,
-                          knownCount: Option[Long] = None)
+                          hotBucketThreshold: Double = 8.0)
       : (String, DataFrame) = {
-    val load = sizeBiasedMeanDf(docs, idCol, textCol, shingleN,
-      knownCount = knownCount)
+    val load = sizeBiasedMeanDf(docs, idCol, textCol, shingleN)
     if (load >= hotBucketThreshold) {
       val minEst = math.round(minSim * 10000).toDouble / 10000
       ("banded", minHashCandidates(docs, idCol, textCol, shingleN,
@@ -590,8 +590,9 @@ object Dedup {
   def sizeBiasedMeanDfBySource(docs: DataFrame, idCol: String,
                                textCol: String, sourceCol: String,
                                shingleN: Int = 3,
-                               sampleCutoff: Long = 8192L,
-                               sampleMod: Int = 16): DataFrame = {
+                               sampleCutoff: Long = ProfileSampleCutoff,
+                               sampleMod: Int = ProfileSampleMod)
+      : DataFrame = {
     // sources-sized (bounded enum) — checkpointed (lazily, r15: the
     // caller's collect materializes it) so the two consumers below
     // (modulus broadcast + full source list) share ONE scan of `docs`
@@ -659,8 +660,9 @@ object Dedup {
                                   shingleN: Int = 3, numHashes: Int = 16,
                                   rowsPerBand: Int = 2,
                                   hotBucketThreshold: Double = 8.0,
-                                  sampleCutoff: Long = 8192L,
-                                  sampleMod: Int = 16): DataFrame = {
+                                  sampleCutoff: Long = ProfileSampleCutoff,
+                                  sampleMod: Int = ProfileSampleMod)
+      : DataFrame = {
     // ONE sources-sized collect: the dial frame carries every source
     // (load 0.0 for empty sampled slices), so no second full-corpus
     // distinct() scan is needed for the source list (ADVICE r11)

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,21 +32,6 @@ import org.apache.spark.sql.types._
   * separately from the blobs.
   */
 object Multimodal {
-
-  /** Typed metadata carried alongside every media blob. */
-  val MediaMetaType: StructType = StructType(Seq(
-    StructField("kind", StringType),         // image | audio | video
-    StructField("mime", StringType),
-    StructField("width", IntegerType),       // images/video
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType), // audio
-    StructField("duration_ms", LongType)))   // audio/video
-
-  /** The canonical multimodal table schema. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media", BinaryType),
-    StructField("meta", MediaMetaType)))
 
   /** Build a media table from the documents fixture: each doc's UTF-8
     * bytes stand in for an encoded blob (deterministic, real binary

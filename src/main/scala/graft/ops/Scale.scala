@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale utilities: skew-salted joins and co-located (bucketed) joins.
@@ -50,7 +50,7 @@ object Scale {
     * profile is engine-reproducible. The exact `percentile` buffers the
     * count frame in the final reducer — fine to ~10⁸ distinct keys;
     * beyond that swap in the mergeable bottom-k sketch
-    * ([[graft.expressions.KqStateAgg]]) and accept approximate
+    * ([[graft.expressions.KqAgg]]) and accept approximate
     * quantiles.
     */
   def keySkewProfile(df: DataFrame, keyCol: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Zoned lake layout (SURVEY.md §1.1): raw → staging → transform, with

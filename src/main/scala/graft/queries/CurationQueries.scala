@@ -273,7 +273,7 @@ object CurationQueries {
         // keep_prob, and the survivors pack with the same shard-local cumsum
         // as `pack_training`.
         val semSql = OracleSql.dedupSemantic(targetClusterSize, minK, iters,
-          dim = 64, minCos)
+          dim = EmbeddingDim, minCos)
         s"""WITH sem AS ($semSql),
            |gate AS ($QualityGateOracle),
            |keepd AS (
@@ -471,7 +471,8 @@ object CurationQueries {
     }),
 
     locally {
-      val (iters, targetClusterSize, minK, quota, dim) = (3, 256, 8, 16, 64)
+      val (iters, targetClusterSize, minK, quota, dim) =
+        (3, 256, 8, 16, EmbeddingDim)
       QueryDef("curate_cluster_quota", (s, dir) => {
         // semantic-diversity pruning: at most 16 members per k-means
         // cluster, chosen by deterministic id-hash — winner ids from the

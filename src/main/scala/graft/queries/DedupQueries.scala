@@ -39,7 +39,8 @@ object DedupQueries {
     locally {
       val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
       // the df-profile sampling the engine's profile pass defaults to
-      val (sampleCutoff, sampleMod) = (8192L, 16)
+      val (sampleCutoff, sampleMod) =
+        (Dedup.ProfileSampleCutoff, Dedup.ProfileSampleMod)
       QueryDef("dedup_auto_route", (s, dir) => {
         // the measured dedup-path dial as a first-class query
         // (VERDICT r9 #6): one cheap df-profile pre-pass (size-biased
@@ -138,7 +139,8 @@ object DedupQueries {
 
     locally {
       val (minSim, shingleN, hotThreshold) = (0.5, 3, 8.0)
-      val (sampleCutoff, sampleMod) = (8192L, 16)
+      val (sampleCutoff, sampleMod) =
+        (Dedup.ProfileSampleCutoff, Dedup.ProfileSampleMod)
       QueryDef("dedup_auto_route_mixed", (s, dir) => {
         // the dial's THIRD outcome (VERDICT r10 #7): per-SOURCE routing
         // for mixed corpora. The realistic crawl shape is a closed-vocab
@@ -921,8 +923,8 @@ object DedupQueries {
         // ~constant as the corpus grows; no O(n^2) cross join)
         Clustering.semanticDedupAdaptive(t(s, dir, "embeddings"),
           "vec_id", "embedding", iters, minCos, targetClusterSize, minK)
-      }, OracleSql.dedupSemantic(targetClusterSize, minK, iters, dim = 64,
-        minCos))
+      }, OracleSql.dedupSemantic(targetClusterSize, minK, iters,
+        dim = EmbeddingDim, minCos))
     },
 
     QueryDef("link_jaro_winkler", (s, dir) => {

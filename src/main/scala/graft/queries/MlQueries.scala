@@ -387,7 +387,7 @@ object MlQueries {
          |FROM m""".stripMargin),
 
     locally {
-      val (k, dim) = (5, 64)
+      val (k, dim) = (5, EmbeddingDim)
       QueryDef("ml_knn_classify", (s, dir) => {
         // k-NN classification harness over the int8-quantized codes:
         // a FIXED eval set (every 5th id below 2500 — an eval harness
@@ -488,7 +488,7 @@ object MlQueries {
     },
 
     locally {
-      val (iters, targetClusterSize, minK, dim) = (3, 256, 8, 64)
+      val (iters, targetClusterSize, minK, dim) = (3, 256, 8, EmbeddingDim)
       QueryDef("cluster_kmeans", (s, dir) => {
         // cosine k-means (3 Lloyd rounds, lowest-id seeds): per-round
         // cost = one broadcast-literal map pass + a (cluster, dim) agg —
@@ -508,7 +508,7 @@ object MlQueries {
     },
 
     locally {
-      val (k, dim) = (4, 64)
+      val (k, dim) = (4, EmbeddingDim)
       QueryDef("cluster_farthest_first", (s, dir) => {
         // Gonzalez farthest-first traversal (1985): k-CENTER coverage
         // over int8-quantized embedding codes — the greedy

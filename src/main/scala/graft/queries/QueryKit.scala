@@ -138,13 +138,18 @@ object QueryKit {
           " y -> named_struct('pa', x, 'pb', y))))")).as("p"))
       .select(col("l_orderkey"), col("p.pa"), col("p.pb"))
 
+  /** Width of the fixture's `embeddings.embedding` vectors, which the
+    * embedding builders and their oracles read.
+    */
+  private[queries] val EmbeddingDim: Int = 64
+
   /** The mutual-kNN graph's settings: the cosine floor, the neighbors
     * each vector keeps, and the hyperplane-LSH candidate search.
     * [[mutualKnnPairs]] builds the graph with them; the oracles of the
     * queries that walk it replay them.
     */
   private[queries] object MutualKnn {
-    val (minCos, k, dim, seed) = (0.2, 3, 64, 42L)
+    val (minCos, k, dim, seed) = (0.2, 3, EmbeddingDim, 42L)
     val (nTables, targetBucket, minBits, maxBits) = (8, 128, 4, 16)
   }
 

@@ -205,7 +205,7 @@ object SimilarityQueries {
       // 12 tables × 3 bits: recall@5 >= 0.9 asserted in FunctionsSpec
       // (measured 1.0 on this corpus); more bits + more tables at larger
       // corpus sizes
-      val (k, dim, nBits, nTables, seed) = (5, 64, 3, 12, 42L)
+      val (k, dim, nBits, nTables, seed) = (5, EmbeddingDim, 3, 12, 42L)
       QueryDef("sim_lsh_topk", (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val queries = emb.filter(col("vec_id") < 8)
@@ -257,7 +257,7 @@ object SimilarityQueries {
         |FROM embeddings""".stripMargin),
 
     locally {
-      val (k, dim, seed) = (8, 64, 7L)
+      val (k, dim, seed) = (8, EmbeddingDim, 7L)
       QueryDef("embed_project", (s, dir) => {
         // JL random projection 64 -> 8 dims: map-only, seed-derived
         // matrix (no training pass, no artifact), norm-preserving in
@@ -320,7 +320,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val (k, dim) = (5, 64)
+      val (k, dim) = (5, EmbeddingDim)
       QueryDef("sim_quantized_topk", (s, dir) => {
         // brute-force top-k over int8-quantized vectors: 4x smaller
         // corpus for the memory-bound regime; integer dot/norms accumulate
@@ -380,7 +380,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val (k, dim) = (5, 64)
+      val (k, dim) = (5, EmbeddingDim)
       QueryDef("sim_binary_topk", (s, dir) => {
         // 1-BIT embedding quantization ANN: each 64-dim float vector
         // compresses to a single sign-bit long — 32× smaller than
@@ -439,7 +439,7 @@ object SimilarityQueries {
     },
 
     locally {
-      val (k, nProbe, dim) = (5, 3, 64)
+      val (k, nProbe, dim) = (5, 3, EmbeddingDim)
       QueryDef("sim_ivf_topk", (s, dir) => {
         // ROLE (measured, BENCH_NOTES r5 recall table): metadata-cell
         // IVF is the SHARD-PRUNING form — correct when cells correlate
@@ -504,8 +504,8 @@ object SimilarityQueries {
         val emb = t(s, dir, "embeddings")
         Similarity.ivfKmeansTopK(emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", k, nProbe, iters, targetClusterSize, minK)
-      }, simIvfKmeansTopK(nProbe, k, iters, dim = 64, targetClusterSize,
-        minK))
+      }, simIvfKmeansTopK(nProbe, k, iters, dim = EmbeddingDim,
+        targetClusterSize, minK))
     },
 
     locally {
@@ -525,14 +525,14 @@ object SimilarityQueries {
         ProductQuantization.adcTopK(s, emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", m, k, iters, topK,
           trainBudget = trainBudget)
-      }, simPqTopK(m, k, iters, dim = 64, topK,
+      }, simPqTopK(m, k, iters, dim = EmbeddingDim, topK,
         trainBudget))
     },
 
     locally {
       val (m, k, iters, topK, shortlist, trainBudget) =
         (16, 32, 2, 5, 150, 512)
-      val dim = 64
+      val dim = EmbeddingDim
       QueryDef("sim_pq_refined", (s, dir) => {
         // the production PQ pattern: ADC shortlist (4x over-fetch) then
         // exact rerank on candidates only — recovers PQ's recall loss
@@ -594,8 +594,8 @@ object SimilarityQueries {
         // persisted-index variants (VERDICT r13 #7): the oracle is the
         // IN-SESSION training recipe — a green row proves the committed
         // VersionedTable artifact round-trips bit-exactly
-        simIvfKmeansTopK(nProbe, k, iters, dim = 64, targetClusterSize,
-          minK))
+        simIvfKmeansTopK(nProbe, k, iters, dim = EmbeddingDim,
+          targetClusterSize, minK))
     },
 
     locally {
@@ -615,7 +615,8 @@ object SimilarityQueries {
         val loaded = AnnIndex.loadCodebooks(s, root)
         ProductQuantization.adcTopK(s, emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", m, k, iters, topK, books = Some(loaded))
-      }, simPqTopK(m, k, iters, dim = 64, topK, trainBudget))
+      }, simPqTopK(m, k, iters, dim = EmbeddingDim, topK,
+        trainBudget))
     },
 
     QueryDef("embed_drift", (s, dir) => {
@@ -669,7 +670,8 @@ object SimilarityQueries {
         |FROM a, b""".stripMargin),
 
     locally {
-      val (iters, targetClusterSize, minK, zThresh, dim) = (3, 256, 8, 2.0, 64)
+      val (iters, targetClusterSize, minK, zThresh, dim) =
+        (3, 256, 8, 2.0, EmbeddingDim)
       QueryDef("embed_outliers", (s, dir) => {
         // per-cluster cohesion z-score: integer-exact moments over the
         // scaled cosine, so the flag set is aggregation-order independent
@@ -723,7 +725,7 @@ object SimilarityQueries {
             .as("qv"))
         .localCheckpoint(true) // 2 power rounds re-read it
       val dec = "decimal(38,0)"
-      val dim = 64
+      val dim = EmbeddingDim
       var v: Array[Long] = Array.fill(dim)(1000000L)
       for (_ <- 1 to 2) {
         val vlit = array(v.map(lit(_)): _*)

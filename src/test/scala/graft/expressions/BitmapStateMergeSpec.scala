@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.{col, pmod}
 
 import graft.SparkSpec
 
-/** [[BitmapMergeStateAgg]] (state → state union) and
+/** `bitmap_merge_state` ([[BitmapAgg]] merging states into a state) and
   * [[BitmapCardinality]] (scalar count of one stored state) — the two
   * pieces that make bitmap set-propagation iterable.
   */
