@@ -481,9 +481,10 @@ object Dedup {
         col("jac_ppm")) ++ blkRef: _*)
   }
 
-  /** Above this many docs the df profile ([[sizeBiasedMeanDf]] and its
-    * per-source form) runs on a 1/[[ProfileSampleMod]] slice; the
-    * profile-sampling defaults, which the auto-route oracles read too.
+  /** The df-profile sampling defaults: a corpus (per source, a source)
+    * above `ProfileSampleCutoff` docs is profiled on a
+    * 1/`ProfileSampleMod` xxhash64(doc_id) slice. The auto-route
+    * oracles read these names too.
     */
   val ProfileSampleCutoff: Long = 8192L
   val ProfileSampleMod: Int = 16
