@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,8 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * while keeping hash values IDENTICAL to the `xxhash64` builtin
   * (`XXH64.hashUTF8String`, seed 42) so results are reproducible.
   *
-  * `CodegenFallback` still keeps surrounding operators in whole-stage
-  * codegen; only this expression's eval is a virtual call.
+  * Each expression has one kernel: a static method (in [[TextHashImpl]]
+  * or [[HashedLinearOps]]) that `nullSafeEval` calls and generated code
+  * calls directly, so the interpreted and codegen paths agree by
+  * construction.
   */
 object TextHash {
 
@@ -112,6 +114,71 @@ object TextHashImpl {
       i += 1
     }
     new GenericArrayData(mins)
+  }
+
+  /** Intersection size of two sorted long arrays by linear merge. */
+  def sortedOverlap(l: ArrayData, r: ArrayData): Long = {
+    val a = l.toLongArray()
+    val b = r.toLongArray()
+    var i = 0
+    var j = 0
+    var inter = 0L
+    while (i < a.length && j < b.length) {
+      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    inter
+  }
+
+  /** |A∩B| / |A∪B| of two sorted long arrays; 1.0 when both are empty. */
+  def sortedJaccard(l: ArrayData, r: ArrayData): Double = {
+    val na = l.numElements()
+    val nb = r.numElements()
+    if (na == 0 && nb == 0) 1.0
+    else {
+      val inter = sortedOverlap(l, r)
+      inter.toDouble / (na + nb - inter)
+    }
+  }
+
+  /** Cosine of two float vectors over their min-length overlap,
+    * accumulated in double left to right; 0.0 when either norm is zero.
+    */
+  def cosine(l: ArrayData, r: ArrayData): Double = {
+    val a = l.toFloatArray()
+    val b = r.toFloatArray()
+    val n = math.min(a.length, b.length)
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom > 0) dot / denom else 0.0
+  }
+
+  /** Inner product of two float vectors over their min-length overlap,
+    * accumulated in double left to right.
+    */
+  def dot(l: ArrayData, r: ArrayData): Double = {
+    val a = l.toFloatArray()
+    val b = r.toFloatArray()
+    val n = math.min(a.length, b.length)
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      dot += a(i).toDouble * b(i).toDouble
+      i += 1
+    }
+    dot
   }
 
   /** splitmix64-derived affine permutation constants, fixed seed. */
@@ -231,50 +298,16 @@ case class SortedArrayJaccard(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sorted_array_jaccard"
 
+  override def nullSafeEval(l: Any, r: Any): Any =
+    java.lang.Double.valueOf(TextHashImpl.sortedJaccard(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]))
+
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      s"""
-         |long[] $a = $l.toLongArray();
-         |long[] $b = $r.toLongArray();
-         |if ($a.length == 0 && $b.length == 0) {
-         |  ${ev.value} = 1.0;
-         |} else {
-         |  int $i = 0; int $j = 0; int $inter = 0;
-         |  while ($i < $a.length && $j < $b.length) {
-         |    if ($a[$i] == $b[$j]) { $inter++; $i++; $j++; }
-         |    else if ($a[$i] < $b[$j]) { $i++; } else { $j++; }
-         |  }
-         |  ${ev.value} =
-         |    (double) $inter / ($a.length + $b.length - $inter);
-         |}
-       """.stripMargin
-    })
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    if (a.isEmpty && b.isEmpty) return java.lang.Double.valueOf(1.0)
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    val union = a.length + b.length - inter
-    java.lang.Double.valueOf(inter.toDouble / union)
-  }
+    defineCodeGen(ctx, ev,
+      (l, r) => s"graft.expressions.TextHashImpl.sortedJaccard($l, $r)")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SortedArrayJaccard = copy(l, r)
@@ -293,43 +326,16 @@ case class SortedArrayOverlap(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_array_overlap"
 
+  override def nullSafeEval(l: Any, r: Any): Any =
+    java.lang.Long.valueOf(TextHashImpl.sortedOverlap(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]))
+
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      s"""
-         |long[] $a = $l.toLongArray();
-         |long[] $b = $r.toLongArray();
-         |int $i = 0; int $j = 0; long $inter = 0L;
-         |while ($i < $a.length && $j < $b.length) {
-         |  if ($a[$i] == $b[$j]) { $inter++; $i++; $j++; }
-         |  else if ($a[$i] < $b[$j]) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $inter;
-       """.stripMargin
-    })
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    var i = 0
-    var j = 0
-    var inter = 0L
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    java.lang.Long.valueOf(inter)
-  }
+    defineCodeGen(ctx, ev,
+      (l, r) => s"graft.expressions.TextHashImpl.sortedOverlap($l, $r)")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SortedArrayOverlap = copy(l, r)
@@ -345,57 +351,16 @@ case class CosineSim(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
+  override def nullSafeEval(l: Any, r: Any): Any =
+    java.lang.Double.valueOf(TextHashImpl.cosine(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]))
+
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val fa = ctx.freshName("fa")
-      val fb = ctx.freshName("fb")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val denom = ctx.freshName("denom")
-      s"""
-         |float[] $fa = $l.toFloatArray();
-         |float[] $fb = $r.toFloatArray();
-         |int $n = Math.min($fa.length, $fb.length);
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $fa[$i];
-         |  double $y = (double) $fb[$i];
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $denom = Math.sqrt($na) * Math.sqrt($nb);
-         |${ev.value} = $denom > 0 ? $dot / $denom : 0.0;
-       """.stripMargin
-    })
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toFloatArray()
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toFloatArray()
-    val n = math.min(a.length, b.length)
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a(i).toDouble
-      val y = b(i).toDouble
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    java.lang.Double.valueOf(if (denom > 0) dot / denom else 0.0)
-  }
+    defineCodeGen(ctx, ev,
+      (l, r) => s"graft.expressions.TextHashImpl.cosine($l, $r)")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CosineSim = copy(l, r)
@@ -404,8 +369,8 @@ case class CosineSim(left: Expression, right: Expression)
 /** Inner product of two float-vector columns, accumulated in double
   * left-to-right — the ADC primitive for product-quantized search
   * (and the numerator of [[CosineSim]] when inputs are pre-normalized).
-  * Same determinism contract: identical fold order in interpreted and
-  * codegen paths, so cross-engine comparisons are bit-exact.
+  * Same determinism contract: one fold order, [[TextHashImpl.dot]]'s,
+  * on the interpreted and codegen paths alike.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -413,42 +378,16 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
 
+  override def nullSafeEval(l: Any, r: Any): Any =
+    java.lang.Double.valueOf(TextHashImpl.dot(
+      l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData]))
+
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val fa = ctx.freshName("fa")
-      val fb = ctx.freshName("fb")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |float[] $fa = $l.toFloatArray();
-         |float[] $fb = $r.toFloatArray();
-         |int $n = Math.min($fa.length, $fb.length);
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $fa[$i] * (double) $fb[$i];
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toFloatArray()
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toFloatArray()
-    val n = math.min(a.length, b.length)
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += a(i).toDouble * b(i).toDouble
-      i += 1
-    }
-    java.lang.Double.valueOf(dot)
-  }
+    defineCodeGen(ctx, ev,
+      (l, r) => s"graft.expressions.TextHashImpl.dot($l, $r)")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DotProduct = copy(l, r)

@@ -86,6 +86,18 @@ object Dedup {
       .withColumnRenamed("col", "band_hash")
   }
 
+  /** Joins `side`'s `value` column, keyed by its `doc_id`, onto both
+    * ends of an (id_a, id_b) pair frame as `<value>_a` and `<value>_b`:
+    * the wide column crosses the wire once per pair side, keyed by id.
+    */
+  private[functions] def joinPairSides(pairs: DataFrame, side: DataFrame,
+                                       value: String): DataFrame =
+    pairs
+      .join(side.select(col("doc_id").as("id_a"),
+        col(value).as(value + "_a")), Seq("id_a"))
+      .join(side.select(col("doc_id").as("id_b"),
+        col(value).as(value + "_b")), Seq("id_b"))
+
   /** LSH banding: candidate pairs = docs sharing at least one band hash
     * (bands of `rowsPerBand` signature entries). Output one row per
     * candidate pair (id_a < id_b), with the signature-estimated Jaccard.
@@ -144,14 +156,11 @@ object Dedup {
     val a = banded.select(aCols: _*)
     val b = banded.select(bCols: _*)
     val blkOut = blockCol.map(_ => col("__blk")).toSeq
-    a.join(b, joinKeys)
+    val pairs = a.join(b, joinKeys)
       .filter(col("id_a") < col("id_b"))
       .select(Seq(col("id_a"), col("id_b")) ++ blkOut: _*)
       .distinct()
-      .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sig_a")),
-        Seq("id_a"))
-      .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sig_b")),
-        Seq("id_b"))
+    joinPairSides(pairs, sig, "sig")
       .select(Seq(col("id_a"), col("id_b"),
         estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard")) ++
         blkOut: _*)
@@ -236,11 +245,7 @@ object Dedup {
       numHashes, rowsPerBand).select("id_a", "id_b")
     val sets = docs.select(col(idCol).as("doc_id"),
       exprs.shingle_hashes(col(textCol), shingleN).as("sh"))
-    cands
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
+    joinPairSides(cands, sets, "sh")
       // exact-grid 4-dp Jaccard from the integer overlap (OVERFLOW_AUDIT
       // r14): ic and the set sizes are exact ints, so the quantization
       // is integer half-up + one exact division — no round(DOUBLE, n)
@@ -313,11 +318,7 @@ object Dedup {
       numHashes, rowsPerBand).select("id_a", "id_b")
     val sets = docs.select(col(idCol).as("doc_id"),
       exprs.shingle_hashes(col(textCol), shingleN).as("sh"))
-    cands
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
+    joinPairSides(cands, sets, "sh")
       .withColumn("containment", ExactGrid.eRatio(
         exprs.sorted_array_overlap(col("sh_a"), col("sh_b")),
         least(size(col("sh_a")), size(col("sh_b"))), 10000L))
@@ -467,11 +468,7 @@ object Dedup {
     val sets = docp.select(col("doc_id"),
       expr("transform(arr, e -> e.token)").as("sh"))
     val minPpm = math.round(minSim * 1000000).toString
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
+    joinPairSides(cand, sets, "sh")
       .withColumn("ic",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("jac_ppm",
@@ -489,95 +486,39 @@ object Dedup {
   val ProfileSampleCutoff: Long = 8192L
   val ProfileSampleMod: Int = 16
 
-  /** The measured dial behind [[similarityPairsAuto]] (VERDICT r9 #6):
-    * the SIZE-BIASED mean shingle document frequency Σdf²/Σdf — the
-    * expected bucket population seen by a random posting, i.e. the
-    * direct driver of prefix-bucket candidate mass. On a CLOSED
-    * vocabulary the type count plateaus while postings grow, so this
-    * statistic grows ~linearly with the corpus (measured on the driver
-    * fixture: 2.1 at 500 docs → 10.7 at 5k; candidates quadratic —
-    * the r6 adversarial floor, 44.9M pairs at 50k). On an OPEN
-    * (natural, Zipf-tailed) vocabulary types grow with the corpus and
-    * the statistic stays flat (measured 3.2 at the 50k open-vocab
+  /** The measured routing dial (VERDICT r9 #6), per source: the
+    * SIZE-BIASED mean shingle document frequency Σdf²/Σdf of every
+    * source in ONE sampled profile pass — `(source, load)` out. The
+    * statistic is the expected bucket population seen by a random
+    * posting, i.e. the direct driver of prefix-bucket candidate mass.
+    * On a CLOSED vocabulary the type count plateaus while postings
+    * grow, so it grows ~linearly with the corpus (measured on the
+    * driver fixture: 2.1 at 500 docs → 10.7 at 5k; candidates
+    * quadratic — the r6 adversarial floor, 44.9M pairs at 50k). On an
+    * OPEN (natural, Zipf-tailed) vocabulary types grow with the corpus
+    * and the statistic stays flat (measured 3.2 at the 50k open-vocab
     * fixture, stable across the 5k→500k decades where the prefix path
-    * tracks true pair mass). The default threshold 8 sits between the
+    * tracks true pair mass). The routing threshold 8 sits between the
     * two measured regimes, and because the trends DIVERGE with scale,
     * misrouting risk shrinks exactly where the corpora get big.
-    * Cost: above `sampleCutoff` docs the profile runs on a
-    * DETERMINISTIC 1/`sampleMod` xxhash64(doc_id) slice and inverts
-    * the expectation exactly — under doc-sampling at rate q,
+    *
+    * Cost: a source above `sampleCutoff` docs is profiled on a
+    * DETERMINISTIC 1/`sampleMod` xxhash64(doc_id) slice and the
+    * expectation inverted exactly — under doc-sampling at rate q,
     * E[Σdf_s²/Σdf_s] = q·sbm + (1−q), so est = 1 + (s−1)·mod — which
     * keeps the dial at gate-fixture cost at any corpus size (measured:
     * the full profile was 48 s of a 50 s routed run at 50k docs; the
     * slice is ~2 s). At or below the cutoff the full profile runs
-    * (mod 1 — the same formula, exactly).
-    */
-  def sizeBiasedMeanDf(docs: DataFrame, idCol: String, textCol: String,
-                       shingleN: Int = 3,
-                       sampleCutoff: Long = ProfileSampleCutoff,
-                       sampleMod: Int = ProfileSampleMod): Double = {
-    // the corpus size only picks the sampling modulus
-    val qMod = if (docs.count() <= sampleCutoff) 1 else sampleMod
-    // per-doc shingle dedup is row-local (optimization r14): the global
-    // (doc_id, token) distinct shuffle becomes an in-row array_distinct
-    val tk = docs
-      .filter(pmod(xxhash64(col(idCol)), lit(qMod.toLong)) === 0)
-      .filter(length(trim(col(textCol))) > 0)
-      .select(col(idCol).as("doc_id"),
-        explode(array_distinct(shingles(col(textCol), shingleN)))
-          .as("token"))
-    val r = tk.groupBy("token").agg(count(lit(1)).as("df"))
-      .agg(sum("df").as("p"), sum(col("df") * col("df")).as("sq"))
-      .head()
-    val p = r.getLong(0)
-    if (p == 0L) 0.0
-    else 1.0 + (r.getLong(1).toDouble / p - 1.0) * qMod
-  }
-
-  /** Auto-routed similarity pairs (VERDICT r9 #6): picks the EXACT
-    * prefix-filter path ([[prefixFilterPairs]], zero false negatives)
-    * when the measured df profile says buckets are cold, and the
-    * MinHash-LSH banded path ([[minHashCandidates]], bucket sizes
-    * capped by banding at a measured ~2.5% miss rate) when the
-    * vocabulary is closed/dense and the exact path's candidate mass
-    * would go quadratic. Returns (route, pairs) with a uniform
-    * (id_a, id_b, sim_ppm) schema — exact Jaccard ppm on the prefix
-    * path, signature-estimated ppm on the banded path (each path's
-    * underlying function is what the per-path oracle queries gate).
-    */
-  def similarityPairsAuto(docs: DataFrame, idCol: String,
-                          textCol: String, minSim: Double = 0.5,
-                          shingleN: Int = 3, numHashes: Int = 16,
-                          rowsPerBand: Int = 2,
-                          hotBucketThreshold: Double = 8.0)
-      : (String, DataFrame) = {
-    val load = sizeBiasedMeanDf(docs, idCol, textCol, shingleN)
-    if (load >= hotBucketThreshold) {
-      val minEst = math.round(minSim * 10000).toDouble / 10000
-      ("banded", minHashCandidates(docs, idCol, textCol, shingleN,
-          numHashes, rowsPerBand)
-        .filter(col("est_jaccard") >= lit(minEst))
-        .select(col("id_a"), col("id_b"),
-          round(col("est_jaccard") * 1000000).cast("long")
-            .as("sim_ppm")))
-    } else {
-      ("prefix", prefixFilterPairs(docs, idCol, textCol, minSim,
-          shingleN)
-        .select(col("id_a"), col("id_b"),
-          col("jac_ppm").as("sim_ppm")))
-    }
-  }
-
-  /** Per-source routing dial: [[sizeBiasedMeanDf]] computed for EVERY
-    * source in ONE sampled profile pass — `(source, load)` out. The
-    * realistic crawl shape is MIXED: a closed-vocabulary core (forum
-    * boilerplate, templated listings) plus an open-vocabulary tail,
-    * and a single corpus-global dial mis-serves one half. Per-source
-    * sampling modulus: sources at or below `sampleCutoff` docs profile
-    * in full (mod 1), bigger sources on the deterministic
-    * 1/`sampleMod` xxhash64(doc_id) slice with the same exact
-    * expectation inversion — the per-source doc counts come from one
-    * narrow rollup (sources are a bounded enum; the frame broadcasts).
+    * (mod 1 — the same formula, exactly). The per-source doc counts
+    * come from one narrow rollup (sources are a bounded enum; the
+    * frame broadcasts).
+    *
+    * The realistic crawl shape is MIXED: a closed-vocabulary core
+    * (forum boilerplate, templated listings) plus an open-vocabulary
+    * tail, and a single corpus-global dial mis-serves one half. The
+    * corpus-global dial is this one over a single constant source
+    * column.
+    *
     * EVERY source emits a row — a source whose sampled slice is empty
     * (or whose docs are all blank) comes back with load 0.0 (cold →
     * the exact path), so callers read the full source list AND the
@@ -611,7 +552,9 @@ object Dedup {
       .filter(length(trim(col(textCol))) > 0)
       .select(col("__src").as("source"), col("__m"),
         col(idCol).as("doc_id"),
-        // in-row per-doc dedup (optimization r14, see sizeBiasedMeanDf)
+        // per-doc shingle dedup is row-local (optimization r14): the
+        // global (doc_id, token) distinct shuffle is an in-row
+        // array_distinct
         explode(array_distinct(shingles(col(textCol), shingleN)))
           .as("token"))
       .groupBy("source", "__m", "token")
@@ -730,11 +673,7 @@ object Dedup {
     */
   def linkPrediction(pairs: DataFrame, aCol: String,
                      bCol: String): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
+    val e = Graph.undirectedEdges(pairs, aCol, bCol)
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = sym.groupBy(col("src").as("y"))
@@ -823,11 +762,7 @@ object Dedup {
     val sets = ranked.select(col("doc_id"),
       array_distinct(shingles(col("text_c"), shingleN)).as("sh"))
     val minPpm = math.round(minSim * 1000000)
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
-        Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-        Seq("id_b"))
+    joinPairSides(cand, sets, "sh")
       .withColumn("ic",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
       .withColumn("jac_ppm", expr(
@@ -928,8 +863,8 @@ object Dedup {
         explode(array(probeKeys: _*)).as("k"))
       .select(col("blk"), col("id"),
         col("k.si").as("si"), col("k.sg").as("sg"))
-    val titles = t.select(col("id"), col("title"))
-    val longPairs = pr.select(col("blk"), col("si"), col("sg"),
+    val titles = t.select(col("id").as("doc_id"), col("title"))
+    val longCands = pr.select(col("blk"), col("si"), col("sg"),
         col("id").as("pid"))
       .join(ix.select(col("blk"), col("si"), col("sg"),
         col("id").as("xid")), Seq("blk", "si", "sg"))
@@ -937,10 +872,7 @@ object Dedup {
       .select(least(col("pid"), col("xid")).as("id_a"),
         greatest(col("pid"), col("xid")).as("id_b"))
       .distinct()
-      .join(titles.select(col("id").as("id_a"),
-        col("title").as("title_a")), Seq("id_a"))
-      .join(titles.select(col("id").as("id_b"),
-        col("title").as("title_b")), Seq("id_b"))
+    val longPairs = joinPairSides(longCands, titles, "title")
     // short-key tail: pairs where at least one side is truncated —
     // brute force against the block, |Δlen| <= maxDist pre-filter
     // the short side is a small tail by construction (truncated keys),

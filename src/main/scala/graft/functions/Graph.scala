@@ -76,6 +76,17 @@ object Graph {
         col(aCol).cast("long").as("dst")))
       .distinct()
 
+  /** The canonical undirected edge set of a pair list: each pair once,
+    * as distinct longs (a, b) with a < b; self-pairs dropped.
+    */
+  private[functions] def undirectedEdges(pairs: DataFrame, aCol: String,
+                                         bCol: String): DataFrame =
+    pairs
+      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
+        greatest(col(aCol), col(bCol)).cast("long").as("b"))
+      .filter(col("a") < col("b"))
+      .distinct()
+
   /** One-task union-find over a bounded, already materialized (src,
     * dst) edge frame: every endpoint labeled with its component
     * MINIMUM, in O(E α(E)) inside a single executor task. coalesce(1)
@@ -204,66 +215,32 @@ object Graph {
 
   // ---------------- graph algorithms ----------------
 
-  /** Deterministic integer PageRank over an undirected pair graph
-    * (near-dup candidates, citation/link pairs): authority scores for
-    * quality weighting — a document endorsed by many well-connected
-    * near-dups/links ranks high, the CommonCrawl-host-rank idea applied
-    * per document.
+  /** Deterministic integer personalized PageRank over an undirected
+    * pair graph (near-dup candidates, citation/link pairs): teleport
+    * mass returns ONLY to the seed set (a predicate over vertex ids), so
+    * rank measures proximity to the seeds — the standard "contamination
+    * spread" / "related docs" ranking ([[bfsDepths]] gives hop
+    * distance; this weighs ALL paths, not just the shortest). With
+    * every vertex a seed (`_ => lit(true)`) it is plain PageRank:
+    * authority scores for quality weighting — a document endorsed by
+    * many well-connected near-dups/links ranks high, the
+    * CommonCrawl-host-rank idea applied per document.
     *
     * All arithmetic is EXACT INTEGER: ranks live in millionths,
     * per-edge contributions are `floor(rank·damping% / (100·outdeg))`,
-    * and the per-vertex reduce sums longs — so the fixpoint iteration
-    * is reproducible under any partitioning or aggregation order
-    * (float PageRank is not). No normalization pass: the teleport
-    * constant keeps scores in a stable integer range, and downstream
-    * use is ordinal. The symmetric edge set means no dangling vertices.
+    * the teleport `(100−d)·10⁴` is gated per vertex, and the per-vertex
+    * reduce sums longs — so the fixpoint iteration is reproducible
+    * under any partitioning or aggregation order (float PageRank is
+    * not) and bit-reproducible by the SQL oracle. No normalization
+    * pass: the teleport constant keeps scores in a stable integer
+    * range, and downstream use is ordinal. The symmetric edge set means
+    * no dangling vertices.
     *
     * Scale shape: per round, one narrow (src, rank, deg) join plus one
     * map-side-combined sum — the connected-components discipline
     * ([[components]]), including the per-round (lazy, r15)
     * `localCheckpoint` that drops lineage and caches nothing past the
     * return.
-    */
-  def pageRank(pairs: DataFrame, aCol: String, bCol: String,
-               iters: Int = 3, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && dampingPct > 0 && dampingPct < 100)
-    val e = symmetricEdges(pairs, aCol, bCol).localCheckpoint(false)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val verts = e.select(col("src").as("id")).distinct()
-    var r = verts.withColumn("rank", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(r.withColumnRenamed("id", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("id"),
-          floor(col("rank") * dampingPct / (lit(100) * col("deg")))
-            .cast("long").as("c"))
-      // teleport mass in millionths: (1 - damping) · 10⁶, consistent
-      // with the damping factor for ANY dampingPct (not just 85)
-      val teleport = (100L - dampingPct) * 10000L
-      r = verts
-        .join(contrib.groupBy("id").agg(sum("c").as("in")), Seq("id"),
-          "left")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("in"), lit(0L))).as("rank"))
-        .localCheckpoint(false)
-    }
-    r.select(col("id").as("doc_id"), col("rank"))
-  }
-
-  /** Personalized PageRank over the undirected near-dup graph:
-    * teleport mass returns ONLY to the seed set (a predicate over
-    * vertex ids) instead of uniformly, so rank measures proximity to
-    * the seeds — the standard "contamination spread" / "related docs"
-    * ranking ([[bfsDepths]] gives hop distance; this weighs ALL paths,
-    * not just the shortest). Same exact-integer discipline as
-    * [[pageRank]]: ranks in millionths, floor-divided contributions,
-    * teleport `(100−d)·10⁴` gated per vertex — deterministic under
-    * any execution order, bit-reproducible by the SQL oracle.
-    *
-    * Scale shape identical to [[pageRank]]: per round one narrow
-    * (src, rank, deg) join + one map-side-combined sum, per-round
-    * lazy (r15) `localCheckpoint`, nothing cached past the return.
     */
   def personalizedPageRank(pairs: DataFrame, aCol: String, bCol: String,
                            seed: Column => Column, iters: Int = 3,
@@ -303,14 +280,14 @@ object Graph {
     * any partitioning, unlike float L2). On the canonical a<b
     * near-dup edge orientation, authorities are the "most duplicated
     * targets" and hubs the "most duplicating sources" — a different
-    * ranking than [[pageRank]]'s undirected authority, and the
-    * classic web-graph dual.
+    * ranking than [[personalizedPageRank]]'s undirected authority, and
+    * the classic web-graph dual.
     *
     * Scale shape: per round two narrow (id, score) joins against the
     * checkpointed edge list + two map-side-combined sums; the max for
     * normalization is a 1-row broadcast, never a collect. Per-round
     * lazy (r15) `localCheckpoint` truncates the iterative lineage
-    * ([[pageRank]] discipline).
+    * ([[personalizedPageRank]] discipline).
     */
   def hits(pairs: DataFrame, aCol: String, bCol: String,
            iters: Int = 2): DataFrame = {
@@ -358,10 +335,10 @@ object Graph {
     * chains that exact-threshold pairing can't tell apart — the
     * canonical "keep one per clique, review the periphery" split.
     *
-    * Bounded rounds (like [[pageRank]]'s `iters`) keep the operator a
-    * fixed-depth DAG the oracle can unroll; on near-dup graphs the
-    * peel converges in a handful of rounds because cliques are stable
-    * under deletion.
+    * Bounded rounds (like [[personalizedPageRank]]'s `iters`) keep the
+    * operator a fixed-depth DAG the oracle can unroll; on near-dup
+    * graphs the peel converges in a handful of rounds because cliques
+    * are stable under deletion.
     *
     * Scale shape: each round is two semi-joins of the narrow (src,
     * dst) edge list against a key-only survivor set, plus one
@@ -555,11 +532,7 @@ object Graph {
                         rounds1: Int, rounds2: Int): DataFrame = {
     val c1 = louvainLocalMove(pairs, aCol, bCol, rounds1)
       .localCheckpoint(false)
-    val und = pairs
-      .select(least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
+    val und = undirectedEdges(pairs, aCol, bCol)
     val m1 = und
       .join(c1.select(col("doc_id").as("a"), col("community").as("ca")),
         Seq("a"))
@@ -698,11 +671,7 @@ object Graph {
     */
   def triangleCounts(pairs: DataFrame, aCol: String,
                      bCol: String): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
+    val e = undirectedEdges(pairs, aCol, bCol)
     // wedges x<y<z: e(x,y) ⋈ e(y,z); closed by the (x,z) edge
     val wedge = e
       .join(e.select(col("a").as("b"), col("b").as("c")), Seq("b"))
@@ -727,11 +696,7 @@ object Graph {
     */
   def clusteringCoefficient(pairs: DataFrame, aCol: String,
                             bCol: String): DataFrame = {
-    val e = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("a"),
-        greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
+    val e = undirectedEdges(pairs, aCol, bCol)
     val deg = e.select(explode(array(col("a"), col("b"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("degree"))
     val tri = triangleCounts(pairs, aCol, bCol)

@@ -38,6 +38,44 @@ object Similarity {
     when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
   }
 
+  /** The per-query rank tail of every top-k operator here: each query's
+    * top `k` rows of `scored` by (score desc, neighbor_id asc), as
+    * (query_id, rank, neighbor_id, `extra`…, score) with the score
+    * rounded to 4 places.
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int,
+                           extra: Column*): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("score").desc, col("neighbor_id").asc)
+    scored
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("query_id"), col("rank"), col("neighbor_id")) ++
+        extra :+ round(col("score"), 4).as("score"): _*)
+  }
+
+  /** The IVF probe: routes each query to its `nProbe` nearest `cent`
+    * (cell, centroid) rows by cosine (ties to the lower cell), then
+    * ranks exactly inside the probed (neighbor_id, c_vec, cell) `cells`
+    * only.
+    */
+  private def probeTopK(cells: DataFrame, cent: DataFrame,
+                        queries: DataFrame, idCol: String, vecCol: String,
+                        k: Int, nProbe: Int): DataFrame = {
+    val qCells = queries.select(col(idCol).as("query_id"),
+        col(vecCol).as("q_vec"))
+      .crossJoin(broadcast(cent))
+      .withColumn("cdist", exprs.cosine_sim(col("q_vec"), col("centroid")))
+    val wq = Window.partitionBy("query_id")
+      .orderBy(col("cdist").desc, col("cell").asc)
+    val probes = qCells.withColumn("pr", row_number().over(wq))
+      .filter(col("pr") <= nProbe)
+      .select(col("query_id"), col("q_vec"), col("cell"))
+    topKPerQuery(cells.join(broadcast(probes), Seq("cell"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("score", exprs.cosine_sim(col("q_vec"), col("c_vec"))), k)
+  }
+
   /** Exact brute-force top-k cosine neighbors for a set of query vectors.
     *
     * @param corpus   (idCol, vecCol) table — the full embedding corpus
@@ -54,13 +92,7 @@ object Similarity {
       .crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("score", exprs.cosine_sim(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    topKPerQuery(scored, k)
   }
 
   /** Hard-negative mining for contrastive training: for each query
@@ -88,13 +120,7 @@ object Similarity {
       .crossJoin(q)
       .filter(col("c_label") =!= col("q_label"))
       .withColumn("score", exprs.cosine_sim(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    topKPerQuery(scored, k)
   }
 
   /** Label-diversified top-k: per query, at most `perLabel` results from
@@ -121,15 +147,9 @@ object Similarity {
       .withColumn("score", exprs.cosine_sim(col("q_vec"), col("c_vec")))
     val wl = Window.partitionBy("query_id", "label")
       .orderBy(col("score").desc, col("neighbor_id").asc)
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored
+    topKPerQuery(scored
       .withColumn("label_rank", row_number().over(wl))
-      .filter(col("label_rank") <= perLabel)
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("label"), round(col("score"), 4).as("score"))
+      .filter(col("label_rank") <= perLabel), k, col("label"))
   }
 
   /** Embedding-cosine near-duplicate pairs: all (a<b) pairs with cosine
@@ -201,12 +221,8 @@ object Similarity {
       .distinct()
     // exact refine: join the vectors back on id (wide columns shuffle
     // once per side here, keyed by id — not ×nTables through the buckets)
-    val vecs = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
-    cands
-      .join(vecs.select(col("vid").as("id_a"), col("v").as("v_a")),
-        Seq("id_a"))
-      .join(vecs.select(col("vid").as("id_b"), col("v").as("v_b")),
-        Seq("id_b"))
+    Dedup.joinPairSides(cands,
+        corpus.select(col(idCol).as("doc_id"), col(vecCol).as("v")), "v")
       .withColumn("cos",
         round(exprs.cosine_sim(col("v_a"), col("v_b")), 4))
       .filter(col("cos") >= minCos)
@@ -283,32 +299,9 @@ object Similarity {
               centroids: Option[DataFrame] = None): DataFrame = {
     val cent = centroids.getOrElse(
       trainCentroids(corpus.filter(col(idCol) % 4 === 0), vecCol, labelCol))
-
-    // route queries to their nProbe nearest centroids
-    val qCells = queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cdist",
-        graft.expressions.exprs.cosine_sim(col("q_vec"), col("centroid")))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cdist").desc, col("cell").asc)
-    val probes = qCells.withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("cell"))
-
-    // exact ranking within probed cells only
     val cells = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("c_vec"), col(labelCol).as("cell"))
-    val scored = cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score",
-        graft.expressions.exprs.cosine_sim(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    probeTopK(cells, cent, queries, idCol, vecCol, k, nProbe)
   }
 
   /** IVF over LEARNED cells: the coarse quantizer is a sampled k-means
@@ -351,31 +344,9 @@ object Similarity {
       exprs.kmeans_assign(col(vecCol).cast("array<float>"),
         cents.toArray).getField("cluster").as("cell"))
 
-    // route each query to its nProbe nearest centroids
     val centDf = cents.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
-    val qCells = queries.select(col(idCol).as("query_id"),
-        col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(centDf))
-      .withColumn("cdist",
-        exprs.cosine_sim(col("q_vec"), col("centroid")))
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("cdist").desc, col("cell").asc)
-    val probes = qCells.withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("cell"))
-
-    // exact ranking within probed cells only
-    val scored = cells.join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score",
-        exprs.cosine_sim(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    probeTopK(cells, centDf, queries, idCol, vecCol, k, nProbe)
   }
 
   /** Symmetric int8 quantization of a float vector: per-vector scale
@@ -472,11 +443,6 @@ object Similarity {
       // a pair matching in several tables appears once per table; the
       // scores are identical, so collapse on the narrow triple
       .groupBy("query_id", "neighbor_id").agg(max("score").as("score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    topKPerQuery(scored, k)
   }
 }

@@ -55,10 +55,15 @@ object DedupQueries {
         // driver gate exercises the prefix branch (sf0.01: load 2.1),
         // sf0.1 exercises the banded branch (load 10.7; threshold 8
         // justified from the measured decade tables in BENCH_NOTES).
-        val (route, pairs) = Dedup.similarityPairsAuto(
-          tsp(s, dir, "documents", "doc_id"), "doc_id", "text", minSim,
-          shingleN, NumHashes, RowsPerBand, hotThreshold)
-        pairs.withColumn("route", lit(route))
+        // The corpus-wide route is the per-source router over one
+        // constant source: one block yields the same pairs, and its
+        // load is the corpus-wide statistic.
+        Dedup.similarityPairsAutoBySource(
+            tsp(s, dir, "documents", "doc_id")
+              .withColumn("__corpus", lit("corpus")),
+            "doc_id", "text", "__corpus", minSim, shingleN, NumHashes,
+            RowsPerBand, hotThreshold, sampleCutoff, sampleMod)
+          .select("id_a", "id_b", "sim_ppm", "route")
       }, {
         // Oracle for `dedup_auto_route` (VERDICT r9 #6): recomputes the routing
         // statistic — the size-biased mean shingle df Σdf²/Σdf — in SQL and

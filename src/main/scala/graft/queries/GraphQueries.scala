@@ -22,7 +22,8 @@ object GraphQueries {
         // 3 rounds — well-connected cluster members rank high (a quality/
         // canonicality weight for choosing cluster representatives)
         val pairs = nearDupPairs(s, dir)
-        Graph.pageRank(pairs, "id_a", "id_b", iters, dampingPct)
+        Graph.personalizedPageRank(pairs, "id_a", "id_b", _ => lit(true),
+          iters, dampingPct)
       }, {
         // Oracle for `graph_pagerank`: the same edge closure, outdegrees,
         // and `iters` unrolled integer-exact rank rounds
@@ -980,7 +981,7 @@ object GraphQueries {
         // sticky across runs/restarts, and replayable by the oracle's
         // XXH64 emulation. Per step ONE edge join on the 5-row frontier
         // + a frontier-partitioned argmin window; localCheckpoint per
-        // step (pageRank discipline).
+        // step (the PageRank discipline).
         val pairs = nearDupPairs(s, dir)
         val e = pairs
           .select(col("id_a").as("src"), col("id_b").as("dst"))

@@ -158,7 +158,8 @@ class PipelineOpsSpec extends SparkSpec {
     // r2: hub = 150000 + 3*floor(433333*85/(100*1)) = 1254999
     //     leaf = 150000 + floor(2700000*85/(100*3)) = 915000
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("id_a", "id_b")
-    val got = Graph.pageRank(pairs, "id_a", "id_b", iters = 2)
+    val got = Graph.personalizedPageRank(pairs, "id_a", "id_b",
+        _ => lit(true), iters = 2)
       .as[(Long, Long)].collect().toMap
     assert(got(0L) == 1254999L, s"hub: ${got(0L)}")
     assert(got(1L) == 915000L && got(2L) == 915000L && got(3L) == 915000L)
@@ -168,7 +169,8 @@ class PipelineOpsSpec extends SparkSpec {
     val pairs = (0L until 40L).map(i => (i, (i + 1) % 40))
       .toDF("id_a", "id_b")
     def run(d: org.apache.spark.sql.DataFrame) =
-      Graph.pageRank(d, "id_a", "id_b", iters = 3)
+      Graph.personalizedPageRank(d, "id_a", "id_b", _ => lit(true),
+        iters = 3)
         .as[(Long, Long)].collect().toSet
     val base = run(pairs.repartition(1))
     assert(base == run(pairs.repartition(7)))

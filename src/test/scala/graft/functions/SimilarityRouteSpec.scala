@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -31,9 +32,31 @@ class SimilarityRouteSpec extends SparkSpec {
     (i.toLong, (0 until 30).map(j => s"w${i}_$j").mkString(" "))
   }.toDF("doc_id", "text")
 
+  /** The corpus-wide dial and router: the per-source forms over one
+    * constant source column.
+    */
+  private def oneSource(docs: DataFrame): DataFrame =
+    docs.withColumn("__corpus", lit("corpus"))
+
+  private def corpusLoad(docs: DataFrame): Double = Dedup
+    .sizeBiasedMeanDfBySource(oneSource(docs), "doc_id", "text", "__corpus")
+    .head().getDouble(1)
+
+  /** The corpus's route (its load against the default threshold 8) and
+    * its routed (id_a, id_b, sim_ppm) pairs, every one on that route.
+    */
+  private def routeCorpus(docs: DataFrame): (String, DataFrame) = {
+    val route = if (corpusLoad(docs) >= 8.0) "banded" else "prefix"
+    val pairs = Dedup.similarityPairsAutoBySource(oneSource(docs),
+      "doc_id", "text", "__corpus").localCheckpoint()
+    assert(pairs.filter(col("route") =!= route).isEmpty,
+      s"pairs off the corpus route $route")
+    (route, pairs.select("id_a", "id_b", "sim_ppm"))
+  }
+
   test("size-biased mean df separates the two vocabulary classes") {
-    val closed = Dedup.sizeBiasedMeanDf(closedDocs, "doc_id", "text")
-    val open = Dedup.sizeBiasedMeanDf(openDocs, "doc_id", "text")
+    val closed = corpusLoad(closedDocs)
+    val open = corpusLoad(openDocs)
     assert(closed >= 8.0, s"closed-vocab load unexpectedly cold: $closed")
     assert(open < 8.0 && open >= 1.0,
       s"open-vocab load unexpectedly hot: $open")
@@ -41,11 +64,9 @@ class SimilarityRouteSpec extends SparkSpec {
 
   test("routing flips between the fixture classes and each path " +
       "reproduces its underlying function exactly") {
-    val (rClosed, pairsClosed) =
-      Dedup.similarityPairsAuto(closedDocs, "doc_id", "text")
+    val (rClosed, pairsClosed) = routeCorpus(closedDocs)
     assert(rClosed == "banded")
-    val (rOpen, pairsOpen) =
-      Dedup.similarityPairsAuto(openDocs, "doc_id", "text")
+    val (rOpen, pairsOpen) = routeCorpus(openDocs)
     assert(rOpen == "prefix")
     // banded route == minHashCandidates thresholded, uniform schema
     val wantBanded = Dedup
@@ -183,11 +204,11 @@ class SimilarityRouteSpec extends SparkSpec {
     // size-biased mean df 10.7 -> banded (the r6 table shows the
     // prefix path quadratic there: 409k -> 44.9M candidates).
     val big = spark.read.parquet(sf("sf0.1") + "/documents.parquet")
-    assert(Dedup.sizeBiasedMeanDf(big, "doc_id", "text") >= 8.0)
+    assert(corpusLoad(big) >= 8.0)
     // sf0.001 (50 docs): vocabulary not yet saturated, buckets cold,
     // the exact path is right (and cheap) -> prefix.
     val small = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    assert(Dedup.sizeBiasedMeanDf(small, "doc_id", "text") < 8.0)
+    assert(corpusLoad(small) < 8.0)
   }
 
   test("empty corpus routes to an empty pair frame, not an error") {
