@@ -70,7 +70,6 @@ object Cleaning {
     * (`nh-etl-universal-cleaning.py:81-83`). Catalyst collapses the three
     * projections into one.
     */
-  def universalClean(df: DataFrame,
-                     renames: Map[String, String] = RenameMap): DataFrame =
-    trimAll(renameColumns(normalizeColumnNames(df), renames))
+  def universalClean(df: DataFrame): DataFrame =
+    trimAll(renameColumns(normalizeColumnNames(df)))
 }

@@ -98,9 +98,8 @@ object CommitWriter {
     * ([[DriverSchema.parquet]]), so reading it starts no job.
     */
   def scd1InPlace(spark: SparkSession, path: String, updates: DataFrame,
-                  pk: String, broadcastUpdates: Boolean = false): Unit =
-    overwriteAtomic(
-      Merge.scd1(DriverSchema.parquet(spark, path), updates, pk, broadcastUpdates),
+                  pk: String): Unit =
+    overwriteAtomic(Merge.scd1(DriverSchema.parquet(spark, path), updates, pk),
       path)
 
   /** SCD2 merge of `updates` into the dimension stored at `path`,

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * No table format (Delta/Iceberg) is available, so the merge is expressed
   * as a pure DataFrame transform; callers persist via
   * write-to-temp-then-swap (SURVEY.md §7.4.5). At scale both sides shuffle
-  * on the pk once (sort-merge); if updates are batch-small relative to the
-  * dimension, pass `broadcastUpdates=true`.
+  * on the pk once (sort-merge).
   */
 object Merge {
 
@@ -25,8 +24,7 @@ object Merge {
     * new pks are appended; untouched target rows pass through.
     * Both frames must share the same schema.
     */
-  def scd1(target: DataFrame, updates: DataFrame, pk: String,
-           broadcastUpdates: Boolean = false): DataFrame = {
+  def scd1(target: DataFrame, updates: DataFrame, pk: String): DataFrame = {
     require(target.columns.sameElements(updates.columns),
       s"schema mismatch: ${target.columns.mkString(",")} vs " +
         updates.columns.mkString(","))
@@ -34,10 +32,9 @@ object Merge {
     // re-alias the update side (fresh exprIds) so target/updates may share
     // lineage (self-derived) without tripping the ambiguous-self-join check
     val uRenamed = updates.toDF(updates.columns.map("__u_" + _): _*)
-    val u0 = if (broadcastUpdates) broadcast(uRenamed) else uRenamed
     val uPk = col(s"__u_$pk")
     // full outer on pk; updates win per column
-    target.join(u0, col(pk) === uPk, "full_outer")
+    target.join(uRenamed, col(pk) === uPk, "full_outer")
       .select(
         coalesce(uPk, col(pk)).as(pk) +:
           valueCols.map { c =>

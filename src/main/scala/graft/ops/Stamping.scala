@@ -32,16 +32,9 @@ object Stamping {
   /** Deterministic dense ids via `row_number()` over a total order.
     * NOTE: a global (unpartitioned) window collapses to a single task —
     * correct but serial; use only for oracle-checked tests or small dims.
-    * At scale prefer [[Monotonic]] or [[ScalableDense]].
+    * At scale prefer [[Monotonic]].
     */
   final case class Deterministic(orderCols: Seq[String]) extends IdStrategy
-
-  /** Deterministic dense ids that stay distributed: sort by the key,
-    * then per-partition `zipWithIndex` offset by partition sizes (two
-    * passes, no single-task bottleneck). Equivalent result to
-    * [[Deterministic]] for a unique key order.
-    */
-  final case class ScalableDense(orderCols: Seq[String]) extends IdStrategy
 
   def withRowId(df: DataFrame, strategy: IdStrategy = Monotonic): DataFrame =
     strategy match {
@@ -56,19 +49,9 @@ object Stamping {
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"Stamping.Deterministic collapses $parts input partitions " +
               "into ONE task (global row_number window); use " +
-              "ScalableDense for large frames")
+              "Monotonic for large frames")
         val w = Window.orderBy(orderCols.map(col): _*)
         df.withColumn("row_id", (row_number().over(w) - 1).cast(LongType))
-      case ScalableDense(orderCols) =>
-        val sorted = df.repartitionByRange(orderCols.map(col): _*)
-          .sortWithinPartitions(orderCols.map(col): _*)
-        val schema = sorted.schema
-        val withId = sorted.rdd.zipWithIndex.map { case (row, idx) =>
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
-        }
-        val spark = df.sparkSession
-        spark.createDataFrame(withId,
-          schema.add("row_id", LongType, nullable = false))
     }
 
   /** P12: audit date. `clock=None` ⇒ reference-faithful `current_date()`;

@@ -20,24 +20,23 @@ import scala.util.{Failure, Success, Try}
   */
 object Ingest {
 
-  /** Routing table, reference `script/config.json:7-13` semantics. */
-  final case class Routing(mapping: Seq[(String, String)], default: String)
-
-  val ReferenceRouting: Routing = Routing(
-    Seq(
-      "ProviderInfo" -> "provider_info",
-      "Penalties" -> "penalties",
-      "SurveySummary" -> "survey_summary",
-      "QualityMDS" -> "qualitymsr_mds"),
-    default = "other")
+  /** Routing table, reference `script/config.json:7-13` semantics: the
+    * first pattern contained in the normalized name wins, `other`
+    * otherwise.
+    */
+  private val Routes: Seq[(String, String)] = Seq(
+    "ProviderInfo" -> "provider_info",
+    "Penalties" -> "penalties",
+    "SurveySummary" -> "survey_summary",
+    "QualityMDS" -> "qualitymsr_mds")
 
   /** F5: filename → domain. */
-  def route(fileName: String, routing: Routing = ReferenceRouting): String = {
+  def route(fileName: String): String = {
     val normalized =
       fileName.replace("NH_", "").replace("_", "").toLowerCase
-    routing.mapping
+    Routes
       .collectFirst { case (pat, dom) if normalized.contains(pat.toLowerCase) => dom }
-      .getOrElse(routing.default)
+      .getOrElse("other")
   }
 
   /** Manifest ledger entry (`sync-drive-to-s3.py:126-131`). */
@@ -100,14 +99,17 @@ object Ingest {
     }
   }
 
-  /** C4: bounded retry (`sync-drive-to-s3.py:50-57`: 3 tries, 5s). */
+  /** C4: bounded retry (`sync-drive-to-s3.py:50-57`): 3 tries, 100 ms
+    * apart (the reference waits 5 s between Drive downloads; a local
+    * copy needs no such back-off).
+    */
   @tailrec
-  def retry[T](tries: Int = 3, delayMs: Long = 5000)(op: () => T): T =
+  private def retry[T](op: () => T, tries: Int = 3): T =
     Try(op()) match {
       case Success(v) => v
-      case Failure(e) if tries > 1 =>
-        Thread.sleep(delayMs)
-        retry(tries - 1, delayMs)(op)
+      case Failure(_) if tries > 1 =>
+        Thread.sleep(100)
+        retry(op, tries - 1)
       case Failure(e) => throw new RuntimeException("Max retries exceeded", e)
     }
 
@@ -122,8 +124,7 @@ object Ingest {
     * exactly like the reference only ever sees the exported CSV.
     * Returns (from, to) name pairs.
     */
-  def convertInbox(inboxDir: String,
-                   dryRun: Boolean = false): Seq[(String, String)] = {
+  def convertInbox(inboxDir: String): Seq[(String, String)] = {
     val inbox = Paths.get(inboxDir)
     if (!Files.isDirectory(inbox)) return Seq.empty
     def csvField(f: String): String =
@@ -137,8 +138,7 @@ object Ingest {
       .flatMap { f =>
         val name = f.getFileName.toString
         val csvName = name.dropRight(4) + ".csv"
-        if (dryRun) Some(name -> csvName)
-        else Try {
+        Try {
           val converted = Files.readAllLines(f).asScala
             .map(_.split("\t", -1).map(csvField).mkString(","))
             .mkString("\n")
@@ -199,12 +199,10 @@ object Ingest {
   /** The full ingest stage: inbox → raw zone. File identity = name +
     * size + mtime (the local stand-in for the Drive file id).
     */
-  def run(inboxDir: String, lake: Lake, manifestPath: String,
-          routing: Routing = ReferenceRouting, dryRun: Boolean = false,
-          retryDelayMs: Long = 100): IngestReport = {
+  def run(inboxDir: String, lake: Lake, manifestPath: String): IngestReport = {
     // Sheets-export analogue first: routing/manifest must only ever see
     // the converted CSV artifact (no-op when nothing needs converting)
-    convertInbox(inboxDir, dryRun)
+    convertInbox(inboxDir)
     val manifest = Manifest.load(manifestPath)
     val known = manifest.map(_.fileId).toSet
     val inbox = Paths.get(inboxDir)
@@ -220,19 +218,16 @@ object Ingest {
 
     val synced = newFiles.map { f =>
       val name = f.getFileName.toString
-      val domain = route(name, routing)
+      val domain = route(name)
       val destKey = s"${lake.rawDomain(domain)}/$name"
-      if (!dryRun) {
-        retry(3, retryDelayMs) { () =>
-          Files.createDirectories(Paths.get(lake.rawDomain(domain)))
-          Files.copy(f, Paths.get(destKey),
-            StandardCopyOption.REPLACE_EXISTING)
-        }
+      retry { () =>
+        Files.createDirectories(Paths.get(lake.rawDomain(domain)))
+        Files.copy(f, Paths.get(destKey), StandardCopyOption.REPLACE_EXISTING)
       }
       ManifestEntry(fileId(f), name, destKey, Instant.now.toString)
     }
 
-    if (!dryRun) Manifest.save(manifestPath, manifest ++ synced)
+    Manifest.save(manifestPath, manifest ++ synced)
     IngestReport(synced, skipped.map(_.getFileName.toString))
   }
 

@@ -133,10 +133,14 @@ final class NursingHomePipeline(spark: SparkSession, lake: Lake,
     }
   }
 
+  /** The domains the archive step keeps (the rest go to the error zone)
+    * and the staging validation requires.
+    */
+  private val RequiredDomains =
+    Seq("provider_info", "qualitymsr_mds", "survey_summary", "penalties")
+
   /** The full DAG (§3.1), stage-for-stage with the Step Function. */
-  def run(inboxDir: String, manifestPath: String,
-          requiredDomains: Seq[String] = Seq("provider_info",
-            "qualitymsr_mds", "survey_summary", "penalties")): Runner.RunResult =
+  def run(inboxDir: String, manifestPath: String): Runner.RunResult =
     Runner.run(Seq(
       Runner.Single(Runner.Stage("sync_inbox", () => {
         val r = Ingest.run(inboxDir, lake, manifestPath)
@@ -145,10 +149,10 @@ final class NursingHomePipeline(spark: SparkSession, lake: Lake,
       Runner.Single(Runner.Stage("universal_cleaning", () =>
         universalCleaning().map { case (d, s) => s"$d:$s" }.mkString(","))),
       Runner.Single(Runner.Stage("move_source_files", () =>
-        Ingest.archiveRaw(lake, requiredDomains.toSet).toSeq.sorted
+        Ingest.archiveRaw(lake, RequiredDomains.toSet).toSeq.sorted
           .map { case (d, t) => s"$d->$t" }.mkString(","))),
       Runner.Single(Runner.Stage("validate_staging", () => {
-        val v = Catalog.validate(lake.staging, requiredDomains)
+        val v = Catalog.validate(lake.staging, RequiredDomains)
         if (!v.ok) throw new IllegalStateException(v.message)
         v.message
       })),

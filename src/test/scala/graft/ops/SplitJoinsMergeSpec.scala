@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SplitJoinsMergeSpec extends SparkSpec {
@@ -108,14 +107,5 @@ class SplitJoinsMergeSpec extends SparkSpec {
     val out = Stamping.withRowId(df, Stamping.Deterministic(Seq("k")))
       .orderBy("k").as[(Int, Long)].collect().toSeq
     assert(out == Seq((10, 0L), (20, 1L), (30, 2L)))
-  }
-
-  test("stamping: scalable dense ids match the window variant") {
-    val df = (1 to 100).toDF("k")
-    val a = Stamping.withRowId(df, Stamping.Deterministic(Seq("k")))
-      .orderBy("k").as[(Int, Long)].collect().toSeq
-    val b = Stamping.withRowId(df, Stamping.ScalableDense(Seq("k")))
-      .orderBy("k").as[(Int, Long)].collect().toSeq
-    assert(a == b)
   }
 }

@@ -40,15 +40,4 @@ class ConvertSpec extends AnyFunSuite {
     assert(again.synced.isEmpty)
     assert(again.skipped == Seq("NH_Penalties_May2025.csv"))
   }
-
-  test("dryRun leaves the tsv untouched") {
-    val root = Files.createTempDirectory("graft-convert-dry").toString
-    val inbox = s"$root/inbox"
-    Files.createDirectories(Paths.get(inbox))
-    Files.writeString(Paths.get(s"$inbox/data.tsv"), "a\tb\n1\t2")
-    val converted = Ingest.convertInbox(inbox, dryRun = true)
-    assert(converted == Seq("data.tsv" -> "data.csv"))
-    assert(Files.exists(Paths.get(s"$inbox/data.tsv")))
-    assert(!Files.exists(Paths.get(s"$inbox/data.csv")))
-  }
 }
