@@ -6,7 +6,6 @@ import graft.SparkSpec
 import graft.ops.Joins
 
 class BloomFilterSpec extends SparkSpec {
-  import spark.implicits._
 
   test("no false negatives: every inserted key passes bloom_contains") {
     val keys = spark.range(10000).select((col("id") * 7 + 3).as("k"))

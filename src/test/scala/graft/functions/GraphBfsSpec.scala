@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions.col
-
 import graft.SparkSpec
 
 class GraphBfsSpec extends SparkSpec {

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** The Louvain local move (VERDICT r10 tranche): the deterministic

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions.col
-
 import graft.SparkSpec
 
 /** [[Dedup.prefixFilterPairs]] — PPJoin prefix-filtered exact-Jaccard

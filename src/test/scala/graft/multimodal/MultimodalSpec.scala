@@ -105,7 +105,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("distributed JPEG render + fidelity decode over the fixture") {
-    import spark.implicits._
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val media = renderJpegImages(docs)
     assert(media.schema.fieldNames.toSeq == Seq("media_id", "media", "meta"))

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Borůvka single-linkage (VERDICT r11 #5): the engine's grid-graph
